@@ -725,9 +725,10 @@ private[sources] final class VersionedSqlTable(ident: String,
 
   override def truncateTable(): Boolean = {
     val spark = SparkSession.active
+    // the ledger's schema, metadata-only: no snapshot read is planned
     val empty = spark.createDataFrame(
       java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-      Versioned.read(spark, path).schema)
+      Versioned.schemaAt(spark, path, Versioned.latestVersion(path)))
     Versioned.commit(empty, path, overwrite = true): Unit
     true
   }

@@ -1629,10 +1629,39 @@ object Versioned {
   private def maskByPos(spark: SparkSession, path: String,
       dvDirs: Seq[String], withPos: DataFrame): DataFrame = {
     if (dvDirs.isEmpty) return withPos
-    val dv = spark.read.parquet(dvDirs.map(d => s"$path/dv/$d"): _*)
+    val dv = readMasks(spark, path, dvDirs)
     withPos.join(dv,
       withPos("__dv_rel") === dv("rel") && withPos("__dv_pos") === dv("pos"),
       "left_anti")
+  }
+
+  /** The `(rel, pos)` rows of mask dirs `dvIds`, read under the one
+    * schema [[stageMask]] writes — opening a mask infers nothing. */
+  private def readMasks(spark: SparkSession, path: String,
+      dvIds: Seq[String]): DataFrame = spark.read.schema(
+    "rel STRING, pos BIGINT").parquet(dvIds.map(d => s"$path/dv/$d"): _*)
+
+  /** A staged mask: its dir id, row count and distinct `rel` files. */
+  private final case class StagedMask(id: String, rows: Long, rels: Seq[String])
+
+  /** The one mask writer behind every DV DML: stage the `(__dv_rel,
+    * __dv_pos)` ids of `hits` as a fresh mask dir. Count and file set
+    * ride the write as an Observation (a fresh one per OCC attempt),
+    * so no job re-reads the mask, and they cannot drift from it under
+    * a nondeterministic predicate. None when nothing matched (the
+    * empty dir is dropped); a lost race is the caller's to drop. */
+  private def stageMask(path: String, hits: DataFrame): Option[StagedMask] = {
+    import org.apache.spark.sql.functions.{col, collect_set, count, lit}
+    val id = java.util.UUID.randomUUID().toString
+    val obs = org.apache.spark.sql.Observation()
+    hits.select(col("__dv_rel").as("rel"), col("__dv_pos").as("pos"))
+      .observe(obs, count(lit(1)).as("rows"),
+        collect_set(col("rel")).as("rels"))
+      .write.mode("errorifexists").parquet(s"$path/dv/$id")
+    val got = obs.get
+    val rows = got("rows").asInstanceOf[Long]
+    if (rows == 0L) { dropDirRec(Paths.get(path, "dv", id)); None }
+    else Some(StagedMask(id, rows, got("rels").asInstanceOf[Seq[String]]))
   }
 
   /** Deletion-vector dir ids referenced by `v`'s manifest
@@ -2124,7 +2153,7 @@ object Versioned {
         dvd => dvd -> (
           try {
             import org.apache.spark.sql.functions.{col, regexp_extract}
-            Some(spark.read.parquet(s"$path/dv/$dvd")
+            Some(readMasks(spark, path, Seq(dvd))
               .select(regexp_extract(col("rel"), "^([^/]+)/", 1).as("d"))
               .distinct().collect().map(_.getString(0)).toSet)
           } catch { case scala.util.control.NonFatal(_) => None })
@@ -3665,28 +3694,23 @@ object Versioned {
           s"row: ${viol.map(_.toString).getOrElse("")}")
       }
       // mask every LIVE target row whose key appears in the batch —
-      // ONE semi-join against the (small) distinct key set, reduced
-      // to (rel, pos) physical ids; the mask write is batch-matched-
-      // sized, never table-sized
+      // ONE semi-join against the (small) distinct key set, staged
+      // by [[stageMask]]: batch-matched-sized, never table-sized; a
+      // batch of all-new keys adds no mask dir
       val touched = updates.select(keys.map(col): _*).distinct()
       val live = maskByPos(spark, path, m.dvDirs,
         readDirs(spark, path, m, m.dataDirs, withIds = true))
-      val dvId = java.util.UUID.randomUUID().toString
-      live.join(touched, keys.toIndexedSeq, "left_semi")
-        .select(col("__dv_rel").as("rel"), col("__dv_pos").as("pos"))
-        .write.mode("errorifexists").parquet(s"$path/dv/$dvId")
-      val masked = spark.read.parquet(s"$path/dv/$dvId").count()
+      val mask = stageMask(path,
+        live.join(touched, keys.toIndexedSeq, "left_semi"))
       val dataId = java.util.UUID.randomUUID().toString
       toPhysical(m, upserts)
         .write.mode("errorifexists").parquet(s"$path/data/$dataId")
       val next = Manifest(base + 1, "merge-dv", m.dataDirs :+ dataId,
         txn, m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints,
-        dvDirs = if (masked == 0L) m.dvDirs else m.dvDirs :+ dvId,
+        constraints = m.constraints, dvDirs = m.dvDirs ++ mask.map(_.id),
         partSpecs = m.partSpecs, droppedCols = m.droppedCols,
         props = m.props, colMap = m.colMap)
       if (publishManifest(path, next)) {
-        if (masked == 0L) dropDirRec(Paths.get(path, "dv", dvId))
         publishMergeFeed(path, next.version, target, updates, keys,
           deleteWhen)
         // the merge's upsert dir inherits the head's indexes, so
@@ -3696,7 +3720,7 @@ object Versioned {
       } else {
         // a commit landed at base+1 first — drop BOTH staged dirs
         // (derived against a stale head) and re-derive
-        dropDirRec(Paths.get(path, "dv", dvId))
+        mask.foreach(k => dropDirRec(Paths.get(path, "dv", k.id)))
         dropDirRec(Paths.get(path, "data", dataId))
       }
     }
@@ -3915,14 +3939,9 @@ object Versioned {
       // tier 2 — DV mask over the KEPT dirs only (row-exact residue);
       // bloom-pruned to candidate files when the predicate carries an
       // indexed point lookup, like every DML mask scan
-      val dvId = java.util.UUID.randomUUID().toString
-      val maskedRows = if (kept.isEmpty) 0L else {
+      val mask = if (kept.isEmpty) None else stageMask(path,
         dmlLiveRows(spark, path, m.copy(dataDirs = kept), predicate)
-          .filter(coalesce(predicate, lit(false)))
-          .select(col("__dv_rel").as("rel"), col("__dv_pos").as("pos"))
-          .write.mode("errorifexists").parquet(s"$path/dv/$dvId")
-        spark.read.parquet(s"$path/dv/$dvId").count()
-      }
+          .filter(coalesce(predicate, lit(false))))
       // stage the batch under the table's partition POLICY, so the
       // re-landed scope keeps its layout (and its pruning)
       val dataId = java.util.UUID.randomUUID().toString
@@ -3937,14 +3956,12 @@ object Versioned {
       }
       val next = Manifest(base + 1, "replace", kept :+ dataId, txn,
         m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints,
-        dvDirs = if (maskedRows == 0L) m.dvDirs else m.dvDirs :+ dvId,
+        constraints = m.constraints, dvDirs = m.dvDirs ++ mask.map(_.id),
         partSpecs = m.specsFor(kept) ++ zoned.map(sp =>
           dataId -> renderPartSpec(sp.map(f =>
             f.copy(col = m.physOf(f.col))))),
         droppedCols = m.droppedCols, props = m.props, colMap = m.colMap)
       if (publishManifest(path, next)) {
-        if (maskedRows == 0L) dropDirRec(Paths.get(path, "dv", dvId))
         // classified feed: pre-image deletes (dropped dirs' LIVE rows
         // + the staged mask's rows) and the batch as inserts, read
         // BACK from the committed bytes so feed == committed content
@@ -3953,9 +3970,8 @@ object Versioned {
           maskByPos(spark, path, m.dvDirs,
             readDirs(spark, path, m, dropped, withIds = true))
             .select(cols.map(col): _*))
-        val delMasked = if (maskedRows == 0L) None
-          else Some(stagedMaskRows(spark, path, m, dvId)
-            .select(cols.map(col): _*))
+        val delMasked = mask.map(
+          stagedMaskRows(spark, path, m, _).select(cols.map(col): _*))
         val pst = physStruct(m, st)
         val insBack = zoned match {
           case None => toLogical(m, st,
@@ -3974,10 +3990,10 @@ object Versioned {
         // staging skips, like commitCore: pruning covers it)
         if (zoned.isEmpty) retrofitIndexes(spark, path, Some(m), dataId)
         return ReplaceResult(next.version, dropped.size, kept.size,
-          maskedRows)
+          mask.fold(0L)(_.rows))
       }
       // lost the race: both staged dirs derive from a stale head
-      dropDirRec(Paths.get(path, "dv", dvId))
+      mask.foreach(k => dropDirRec(Paths.get(path, "dv", k.id)))
       dropDirRec(Paths.get(path, "data", dataId))
     }
     sys.error("unreachable")
@@ -4227,21 +4243,13 @@ object Versioned {
       // the EXISTING mask applied (already-deleted rows must not be
       // re-masked and double-counted), filtered to matches, reduced
       // to (rel, pos) row ids — bloom-pruned to candidate files when
-      // the predicate carries an indexed point lookup (dmlLiveRows)
-      val dvId = java.util.UUID.randomUUID().toString
-      hitRows(m)
-        .select(col("__dv_rel").as("rel"), col("__dv_pos").as("pos"))
-        .write.mode("errorifexists").parquet(s"$path/dv/$dvId")
-      // count from the immutable staged mask (no recompute drift)
-      val deletedRows =
-        spark.read.parquet(s"$path/dv/$dvId").count()
-      if (deletedRows == 0L) {
-        dropDirRec(Paths.get(path, "dv", dvId)) // pure no-op: no commit
-        return DeleteResult(base, 0, m.dataDirs.size, 0L)
-      }
+      // the predicate carries an indexed point lookup (dmlLiveRows);
+      // the deleted-row count is observed on that same write
+      val mask = stageMask(path, hitRows(m)).getOrElse(
+        return DeleteResult(base, 0, m.dataDirs.size, 0L)) // no commit
       val next = Manifest(base + 1, "delete-dv", m.dataDirs, txn,
         m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints, dvDirs = m.dvDirs :+ dvId,
+        constraints = m.constraints, dvDirs = m.dvDirs :+ mask.id,
         partSpecs = m.partSpecs, droppedCols = m.droppedCols,
         props = m.props, colMap = m.colMap)
       if (publishManifest(path, next)) {
@@ -4252,39 +4260,37 @@ object Versioned {
         // committed mask even under a nondeterministic predicate.
         // Published AFTER the manifest (lost races never write a
         // stale feed); batch-sized like the deleted set.
-        val pre = stagedMaskRows(spark, path, m, dvId)
+        val pre = stagedMaskRows(spark, path, m, mask)
         val cols = pre.columns.toIndexedSeq
         publishWrittenFeed(
           pre.withColumn("ct", lit("delete"))
             .select((cols.map(col) :+ col("ct")): _*),
           path, next.version)
         return DeleteResult(next.version, 0, m.dataDirs.size,
-          deletedRows)
+          mask.rows)
       }
       // else: a commit landed at base+1 first — drop the staged mask
       // (it was derived against a stale head) and re-derive
-      dropDirRec(Paths.get(path, "dv", dvId))
+      dropDirRec(Paths.get(path, "dv", mask.id))
     }
     sys.error("unreachable")
   }
 
-  /** The LIVE pre-image rows a staged mask `dvId` names, under the
+  /** The LIVE pre-image rows a staged `mask` names, under the
     * manifest's LOGICAL column names: one bounded read of ONLY the
-    * files the mask touches (per-dir basePath for hive-partitioned
-    * dirs so the partition column re-derives from the path), semi-
-    * joined to the staged (rel, pos) pairs. Deriving from the staged
-    * mask instead of re-running the predicate makes the result
-    * provably consistent with the committed mask even under a
+    * files in its `rels` (per-dir basePath for hive-partitioned dirs
+    * so the partition column re-derives from the path), semi-joined
+    * to the staged (rel, pos) pairs. Deriving from the staged mask
+    * instead of re-running the predicate makes the result provably
+    * consistent with the committed mask even under a
     * nondeterministic predicate — the one sound row source for
     * delete feeds ([[deleteWhereDV]]) and update post-images
     * ([[updateWhereDV]]). Cost ∝ files-with-matches, never the
     * table. */
   private def stagedMaskRows(spark: SparkSession, path: String,
-      m: Manifest, dvId: String): DataFrame = {
+      m: Manifest, mask: StagedMask): DataFrame = {
     import org.apache.spark.sql.functions.col
-    val staged = spark.read.parquet(s"$path/dv/$dvId")
-    val touchedFiles = staged.select("rel").distinct()
-      .collect().map(_.getString(0)) // ≤ files-with-matches
+    val staged = readMasks(spark, path, Seq(mask.id))
     val logicalSt = m.schemaDdl.map(
       org.apache.spark.sql.types.StructType.fromDDL)
     val physSt = logicalSt.map(physStruct(m, _))
@@ -4294,7 +4300,7 @@ object Versioned {
     }
     // file bytes carry PHYSICAL names; one rename projection at the
     // end restores the logical view
-    val (partRels, plainRels) = touchedFiles.toIndexedSeq.sorted
+    val (partRels, plainRels) = mask.rels.sorted
       .partition(f => m.partSpecs.contains(f.takeWhile(_ != '/')))
     val plainFrames = if (plainRels.isEmpty) Seq.empty[DataFrame]
       else Seq(withRowId(reader.parquet(
@@ -4418,20 +4424,13 @@ object Versioned {
       }.toMap
       // stage the mask: live matching rows reduced to (rel, pos) —
       // identical first job to [[deleteWhereDV]], bloom-pruned the
-      // same way
-      val dvId = java.util.UUID.randomUUID().toString
-      hitRows(m)
-        .select(col("__dv_rel").as("rel"), col("__dv_pos").as("pos"))
-        .write.mode("errorifexists").parquet(s"$path/dv/$dvId")
-      val updatedRows = spark.read.parquet(s"$path/dv/$dvId").count()
-      if (updatedRows == 0L) {
-        dropDirRec(Paths.get(path, "dv", dvId)) // pure no-op: no commit
-        return DeleteResult(base, 0, m.dataDirs.size, 0L)
-      }
+      // same way, the updated-row count observed on the write
+      val mask = stageMask(path, hitRows(m)).getOrElse(
+        return DeleteResult(base, 0, m.dataDirs.size, 0L)) // no commit
       // post-image from the staged mask: assignments applied, casts
       // to the declared column types (SQL UPDATE semantics), staged
       // as this commit's data dir under PHYSICAL names
-      val postImage = stagedMaskRows(spark, path, m, dvId)
+      val postImage = stagedMaskRows(spark, path, m, mask)
         .select(st.fields.toIndexedSeq.map { f =>
           setFold.get(foldName(f.name))
             .map(_.cast(f.dataType)).getOrElse(col(f.name)).as(f.name)
@@ -4454,7 +4453,7 @@ object Versioned {
       }
       val next = Manifest(base + 1, "update-dv", m.dataDirs :+ dataId,
         txn, m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints, dvDirs = m.dvDirs :+ dvId,
+        constraints = m.constraints, dvDirs = m.dvDirs :+ mask.id,
         partSpecs = m.partSpecs, droppedCols = m.droppedCols,
         props = m.props, colMap = m.colMap)
       if (publishManifest(path, next)) {
@@ -4467,11 +4466,11 @@ object Versioned {
         // update-DV dir the r14 advice named)
         retrofitIndexes(spark, path, Some(m), dataId)
         return DeleteResult(next.version, 0, m.dataDirs.size,
-          updatedRows)
+          mask.rows)
       }
       // lost the race: both staged dirs were derived against a stale
       // head — drop them and re-derive
-      dropDirRec(Paths.get(path, "dv", dvId))
+      dropDirRec(Paths.get(path, "dv", mask.id))
       dropDirRec(Paths.get(path, "data", dataId))
     }
     sys.error("unreachable")

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** The DSv2 SQL front door ([[GraftCatalog]]): head, `VERSION AS OF`,
@@ -273,5 +273,28 @@ class GraftCatalogSpec extends SparkSpec {
     intercept[Exception] {
       spark.sql("SELECT * FROM g5.nope").collect()
     }
+  }
+
+  test("TRUNCATE TABLE empties a masked table under its ledger schema, inferring nothing") {
+    val wh = freshWarehouse()
+    val path = s"$wh/t"
+    Versioned.commit((1L to 30L).map(k => (k, s"v$k")).toDF("k", "v"),
+      path, overwrite = false)
+    Versioned.deleteWhereDV(spark, path, col("k") <= 10L) // masked
+    val schema = Versioned.schemaAt(spark, path, 1)
+    GraftCatalog.register(spark, "g_trunc", wh)
+    val (_, jobs) = JobCounter(spark) {
+      spark.sql("TRUNCATE TABLE g_trunc.t")
+    }
+    // the schema comes from the ledger, not from a snapshot read
+    assert(jobs.forall(!_.isReaderJob), jobs.mkString("\n"))
+    assert(Versioned.latestVersion(path) == 2)
+    assert(Versioned.read(spark, path).count() == 0L)
+    // the ledger schema carries over exactly, NOT NULL included (a
+    // snapshot read's schema is all-nullable)
+    assert(Versioned.schemaAt(spark, path, 2) == schema)
+    // history before the truncate still time-travels
+    assert(spark.sql("SELECT count(*) AS n FROM g_trunc.t VERSION AS OF 1")
+      .head.getLong(0) == 20L)
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** MERGE-ON-READ deletion vectors on the versioned table. The
@@ -71,10 +71,12 @@ class VersionedDvSpec extends SparkSpec {
     // NULL predicate keeps the row (SQL DELETE semantics) + pure
     // no-op publishes NO commit
     val head = Versioned.latestVersion(path)
+    val masks = dvEntries(path)
     val r3 = Versioned.deleteWhereDV(spark, path, col("k") > 999L)
     assert(r3.version == head && r3.deletedRows == 0L)
     assert(Versioned.latestVersion(path) == head)
     assert(Versioned.dvDirIds(path, head).size == 2) // no orphan grew in
+    assert(dvEntries(path) == masks, "the empty mask dir was not dropped")
   }
 
   test("appends after a DV delete carry the mask; deleted rows stay dead") {
@@ -145,14 +147,7 @@ class VersionedDvSpec extends SparkSpec {
     val dvA = Versioned.dvDirIds(path, 1).head
     val dvB = Versioned.dvDirIds(path, 3).head
     Versioned.vacuum(path, retainFrom = 2)
-    val left = {
-      val s = java.nio.file.Files.list(
-        java.nio.file.Paths.get(path, "dv"))
-      try s.iterator().asInstanceOf[java.util.Iterator[java.nio.file.Path]]
-        .asScala.map(_.getFileName.toString).toSet
-      catch { case _: Throwable => Set.empty[String] }
-      finally s.close()
-    }
+    val left = dvEntries(path)
     assert(left == Set(dvB), s"expected only $dvB to survive, got $left")
     assert(dvA != dvB)
     // the surviving snapshot still reads correctly
@@ -286,6 +281,70 @@ class VersionedDvSpec extends SparkSpec {
     assert(Versioned.repairChangeFeed(spark, dst, Seq("k")) == Seq(0))
     val feed = Versioned.readChanges(spark, dst, 0, 0)
     assert(feed.filter(col("_change_type") === "insert").count() == 10)
+  }
+
+  /** Entry names under the table's `dv/` dir. */
+  private def dvEntries(path: String): Set[String] = {
+    val s = java.nio.file.Files.list(java.nio.file.Paths.get(path, "dv"))
+    try s.iterator().asScala.map(_.getFileName.toString).toSet
+    finally s.close()
+  }
+
+  test("the count a DV delete/update returns is the committed mask, the feed and the snapshot change") {
+    // a nondeterministic predicate: a second evaluation would pick
+    // other rows, so every figure must come from the one mask write
+    val path = tmpTable()
+    Versioned.commit((1L to 400L).map(k => (k, 0L)).toDF("k", "v"),
+      path, overwrite = false)
+    Versioned.commit((401L to 800L).map(k => (k, 0L)).toDF("k", "v"),
+      path, overwrite = false)
+    def maskRows(v: Int): Long = spark.read
+      .parquet(s"$path/dv/${Versioned.dvDirIds(path, v).last}").count()
+    def feedRows(v: Int, ct: String): Long = Versioned
+      .readChanges(spark, path, v, v)
+      .filter(col("_change_type") === ct).count()
+    def snap(v: Int) = Versioned.read(spark, path, Some(v))
+
+    val d = Versioned.deleteWhereDV(spark, path, rand() < 0.5)
+    assert(d.deletedRows > 0L && d.deletedRows < 800L)
+    assert(maskRows(d.version) == d.deletedRows)
+    assert(feedRows(d.version, "delete") == d.deletedRows)
+    assert(snap(d.version - 1).count() - snap(d.version).count() ==
+      d.deletedRows)
+
+    val u = Versioned.updateWhereDV(spark, path, rand() < 0.5,
+      Seq("v" -> lit(1L)))
+    assert(u.deletedRows > 0L)
+    assert(maskRows(u.version) == u.deletedRows)
+    assert(feedRows(u.version, "update") == u.deletedRows)
+    assert(snap(u.version - 1).exceptAll(snap(u.version)).count() ==
+      u.deletedRows)
+    assert(snap(u.version).filter(col("v") === 1L).count() ==
+      u.deletedRows)
+  }
+
+  test("job budget: a masked read and a DV delete on a masked table; no mask read infers a schema") {
+    val path = tmpTable()
+    Versioned.commit((1L to 200L).map(k => (k, k % 5)).toDF("k", "m"),
+      path, overwrite = false)
+    Versioned.commit((201L to 400L).map(k => (k, k % 5)).toDF("k", "m"),
+      path, overwrite = false)
+    Versioned.deleteWhereDV(spark, path, col("m") === 0) // masked
+    val (rows, readJobs) = JobCounter(spark) {
+      Versioned.read(spark, path).collect()
+    }
+    assert(rows.length == 320)
+    val (r, deleteJobs) = JobCounter(spark) {
+      Versioned.deleteWhereDV(spark, path, col("m") === 1)
+    }
+    assert(r.deletedRows == 80L)
+    // measured: the read is the mask broadcast plus the collect; the
+    // delete is the mask write and the feed write, each with its
+    // broadcast — no job re-reads the staged mask
+    assert(readJobs.size <= 2, readJobs.mkString("\n"))
+    assert(deleteJobs.size <= 4, deleteJobs.mkString("\n"))
+    val inferring = (readJobs ++ deleteJobs).filter(_.isReaderJob)
+    assert(inferring.isEmpty, inferring.mkString("\n"))
   }
 
   private implicit class IterOps[A](it: java.util.Iterator[A]) {

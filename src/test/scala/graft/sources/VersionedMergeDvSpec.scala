@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.SparkSpec
+import graft.{JobCounter, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** MERGE with batch-proportional write amplification ([[Versioned
@@ -172,6 +172,37 @@ class VersionedMergeDvSpec extends SparkSpec {
       assert(Versioned.read(spark, path).as[(Long, String)]
         .collect().toSet == Set((1L, "a"), (2L, "merged")))
     } finally Versioned.prePublishHook = () => ()
+  }
+
+  test("mergeDV of all-new keys adds no mask dir") {
+    val path = tmpTable()
+    seed(path)
+    val v = Versioned.mergeDV(spark, path,
+      Seq((500L, "n500"), (501L, "n501")).toDF("k", "v"), Seq("k"))
+    assert(Versioned.dvDirIds(path, v).isEmpty)
+    val dv = java.nio.file.Paths.get(path, "dv")
+    assert(!java.nio.file.Files.exists(dv) || {
+      val s = java.nio.file.Files.list(dv)
+      try s.count() == 0L finally s.close()
+    }, "the empty mask dir was not dropped")
+    assert(Versioned.read(spark, path).count() == 102L)
+  }
+
+  test("job budget: mergeDV on a masked table; no mask read infers a schema") {
+    val path = tmpTable()
+    seed(path)
+    Versioned.deleteWhereDV(spark, path, col("k") <= 5L) // masked
+    val (v, jobs) = JobCounter(spark) {
+      Versioned.mergeDV(spark, path, batch(), Seq("k"),
+        deleteWhen = Some(col("v") === "DEAD"))
+    }
+    assert(Versioned.dvDirIds(path, v).size == 2)
+    // measured: the mask write (its scan, key shuffles and semi-join
+    // take four jobs), the upsert write, and the feed write (four);
+    // no job re-reads the staged mask
+    assert(jobs.size <= 9, jobs.mkString("\n"))
+    val inferring = jobs.filter(_.isReaderJob)
+    assert(inferring.isEmpty, inferring.mkString("\n"))
   }
 
   test("type drift in the batch fails loudly before staging") {
