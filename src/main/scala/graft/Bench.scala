@@ -1,29 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // allow joins to reuse a child partitioned on a PREFIX of the
-      // join keys (pre-3.3 behavior): a wide frame repartitioned by
-      // its primary key then joined on (key, subkey) keeps its
-      // partitioning instead of reshuffling the full width
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Whole-stage-codegen class cache: the default 100-entry LRU
-      // thrashes under a 299-query suite (thousands of codegen units),
-      // so every pass re-ran Janino + C2 on plans the warmup had
-      // already compiled (jit_ms 10-30s on the big rows). Static conf,
-      // scale-independent: a long-running production driver repeating
-      // query shapes wants the same cache.
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cores(32))
     spark.sparkContext.setLogLevel("WARN")
     // The driver grades the LAST ~2 KB of combined output; four rounds
     // of "parsed": null traced to end-of-run WARN chatter (WindowExec
@@ -40,73 +19,23 @@ object Bench {
         "org.apache.spark.scheduler.DAGScheduler").foreach(l =>
       org.apache.logging.log4j.core.config.Configurator.setLevel(l,
         org.apache.logging.log4j.Level.ERROR))
-    // Warm the JVM/codegen/scan paths once so the first timed query
-    // doesn't absorb session startup (~7s of JIT on a cold JVM).
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    // SHAPE-warmup: run the ENTIRE suite once at the smallest SF
-    // before timing anything. The generated whole-stage code is
-    // identical across SFs (same schemas, same plans), so the timed
-    // loop below hits the codegen cache and an already-JITed JVM
-    // instead of paying one-time Janino compilation + C2 JIT of the
-    // biggest plans MID-suite — the mechanism behind the r4/r5
-    // contiguous ×2+ window centered on q_rollup → q_pipeline_e2e
-    // (profile-confirmed: those queries are at par isolated-steady).
-    // Costs seconds at sf0.001; makes the timed numbers steady-state.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(warmDir))) {
-      SparkEntry.queries.foreach { case (_, fn) =>
-        try fn(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
-    }
-    // Burst ATTRIBUTION instruments: per-query GC-pause and JIT-
-    // compilation time deltas. The driver's single-pass channel spent
-    // three rounds unable to distinguish a position burst (GC pause,
-    // mid-suite C2 recompilation) from a real regression; with the
-    // pause/compile milliseconds recorded BESIDE each timing, a slow
-    // pass whose gc+jit delta covers the gap is self-explaining in
-    // the artifact — no local re-run needed to adjudicate.
-    import scala.jdk.CollectionConverters._
-    def gcMillis(): Long = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala
-      .map(b => math.max(0L, b.getCollectionTime)).sum
-    val jitBean = java.lang.management.ManagementFactory.getCompilationMXBean
-    def jitMillis(): Long =
-      if (jitBean != null && jitBean.isCompilationTimeMonitoringSupported)
-        jitBean.getTotalCompilationTime else 0L
-    // noop-datasource write: forces full evaluation of every output column
-    // (count() would let Catalyst prune the expression work away).
+    GraftSession.warm(spark, shapes = true)
     final case class Timing(name: String, sec: Double, ok: Boolean,
       gcMs: Long, jitMs: Long)
     def timedPass(): Seq[Timing] =
       SparkEntry.queries.toSeq.map { case (name, fn) =>
-        val (gc0, jit0) = (gcMillis(), jitMillis())
+        val (gc0, jit0) = (GraftSession.gcMillis(), GraftSession.jitMillis())
         val t0 = System.nanoTime()
         val ok =
-          try {
-            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-            true
-          } catch { case e: Throwable =>
+          try { GraftSession.drain(fn(spark, sfDir)); true }
+          catch { case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
           }
         val elapsed = (System.nanoTime() - t0) / 1e9
-        // Queries must not leak state into each other's measurements:
-        // drop any cached blocks a query materialized (cache debris
-        // accumulating in the shared local heap slowed the whole r3
-        // suite tail). localCheckpoint blocks (Staging.staged) are
-        // NOT catalog cache — they free only on driver GC of the RDD
-        // handle, so the iterative-graph queries would otherwise leak
-        // storage blocks into every later measurement.
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        Timing(name, elapsed, ok, gcMillis() - gc0, jitMillis() - jit0)
+        GraftSession.isolate(spark)
+        Timing(name, elapsed, ok, GraftSession.gcMillis() - gc0,
+          GraftSession.jitMillis() - jit0)
       }
     // TWO timed passes; the graded number per query is the MIN of the
     // two. One pass cannot distinguish a position burst (GC pause,

@@ -1,6 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import scala.jdk.CollectionConverters._
 
 /** Randomized-order bench: separates suite-POSITION effects (GC
   * debris, JIT recompilation, page-cache pressure from neighboring
@@ -33,37 +31,12 @@ import scala.jdk.CollectionConverters._
 object BenchOrder {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val nOrders = sys.env.getOrElse("SPARK_GRAFT_ORDERS", "4").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cores(32))
     spark.sparkContext.setLogLevel("WARN")
     val declared = SparkEntry.queries.keys.toVector
     val byName = SparkEntry.queries
-    // Same shape-warmup as Bench: whole suite once at the smallest SF
-    // so codegen + C2 JIT are paid before anything is timed.
-    val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
-      "/root/testdata/sf0.001")
-    if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get(warmDir))) {
-      declared.foreach { n =>
-        try byName(n)(spark, warmDir).write.format("noop").mode("overwrite").save()
-        catch { case _: Throwable => () }
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      }
-    }
-    val gcBeans = java.lang.management.ManagementFactory
-      .getGarbageCollectorMXBeans.asScala
-    def gcMillis: Long = gcBeans.map(_.getCollectionTime).sum
+    GraftSession.warm(spark, shapes = true)
     // runs(name) = list of (pass, position, sec, gcDeltaMs)
     val runs = scala.collection.mutable.Map
       .empty[String, List[(Int, Int, Double, Long)]].withDefaultValue(Nil)
@@ -73,20 +46,16 @@ object BenchOrder {
         if (pass == 0) declared
         else new scala.util.Random(pass.toLong).shuffle(declared)
       order.zipWithIndex.foreach { case (name, pos) =>
-        val g0 = gcMillis
+        val g0 = GraftSession.gcMillis()
         val t0 = System.nanoTime()
-        try byName(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+        try GraftSession.drain(byName(name)(spark, sfDir))
         catch { case e: Throwable =>
           failed ::= s"$name@$pass"
           System.err.println(s"[benchorder] $name pass=$pass failed: ${e.getMessage}")
         }
         val sec = (System.nanoTime() - t0) / 1e9
-        val gms = gcMillis - g0
-        spark.catalog.clearCache()
-        // free localCheckpoint blocks too (see Bench.scala) — they
-        // are not catalog cache and otherwise leak between timings
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        val gms = GraftSession.gcMillis() - g0
+        GraftSession.isolate(spark)
         runs(name) = (pass, pos, sec, gms) :: runs(name)
       }
       System.err.println(s"[benchorder] pass $pass done")

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ReusedExchangeExec, ShuffleExchangeLike}
@@ -41,18 +40,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outPath) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning for join-backs (see Bench.scala)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cores(8))
     spark.sparkContext.setLogLevel("ERROR")
     def count(p: String, needle: String): Int =
       needle.r.findAllIn(p).length
@@ -80,7 +68,7 @@ object PlanAudit {
       val shRows = shuffles.map(metric(_, "shuffleRecordsWritten")).sum
       val bcBytes = nodes.collect { case b: BroadcastExchangeLike => b }
         .map(metric(_, "dataSize")).sum
-      spark.catalog.clearCache()
+      GraftSession.isolate(spark)
       val mb = f"${shBytes / 1e6}%.1f"
       val bmb = f"${bcBytes / 1e6}%.1f"
       s"| $name | $exchanges | ${shuffles.size} | $mb | $shRows | $bcast | $bmb | $scans | $pushed | " +

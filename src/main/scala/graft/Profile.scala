@@ -22,21 +22,11 @@ object Profile {
       if (args.drop(2).toSeq == Seq("__all__"))
         SparkEntry.queries.keys.toSeq.sorted
       else args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning for join-backs (see Bench.scala)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cores(32))
     spark.sparkContext.setLogLevel("ERROR")
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    // entry warm-up only: the first of the `n` runs is the measured
+    // cold run, so no shape warm-up precedes it
+    GraftSession.warm(spark, shapes = false)
     // ambient-load + JVM-churn accounting per run, so a drifted
     // steady state is ADJUDICABLE: "load was high" is a recorded
     // loadavg, JIT warm-up is recorded compile ms, GC pressure is
@@ -45,36 +35,20 @@ object Profile {
       try java.nio.file.Files.readString(
         java.nio.file.Paths.get("/proc/loadavg")).split(" ")(0).toDouble
       catch { case _: Exception => -1.0 }
-    def gcMillis(): Long = {
-      import scala.jdk.CollectionConverters._
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
-        .asScala.map(_.getCollectionTime).filter(_ >= 0).sum
-    }
-    def jitMillis(): Long = {
-      val c = java.lang.management.ManagementFactory.getCompilationMXBean
-      if (c != null && c.isCompilationTimeMonitoringSupported)
-        c.getTotalCompilationTime
-      else -1L
-    }
     val results = names.map { name =>
       val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
         if (name.startsWith("__scan_"))
           (s, d) => Tables(s, d, name.stripPrefix("__scan_"))
         else SparkEntry.queries(name)
       val times = (1 to n).map { _ =>
-        val (load0, gc0, jit0) = (loadavg(), gcMillis(), jitMillis())
+        val (load0, gc0, jit0) =
+          (loadavg(), GraftSession.gcMillis(), GraftSession.jitMillis())
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+        GraftSession.drain(fn(spark, sfDir))
         val t = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache()
-        // localCheckpoint blocks (Staging.staged) are NOT catalog
-        // cache: they free only when the driver GCs the RDD handle.
-        // Back-to-back runs in one session otherwise pile storage
-        // blocks until eviction churn dominates the measurement
-        // (r11 profile: q_triangle 3.6→23→35s across its 3 runs).
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-        (t, load0, gcMillis() - gc0, jitMillis() - jit0)
+        GraftSession.isolate(spark)
+        (t, load0, GraftSession.gcMillis() - gc0,
+          GraftSession.jitMillis() - jit0)
       }
       println(f"[profile] $name%-24s " +
         times.map(t => f"${t._1}%.2f").mkString(" ") +

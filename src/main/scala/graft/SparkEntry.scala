@@ -131,7 +131,7 @@ object SparkEntry {
     * don't accumulate in the tmpdir. */
   private val stagedRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def deleteRec(f: java.io.File): Unit = {
+  private[graft] def deleteRec(f: java.io.File): Unit = {
     val kids = f.listFiles()
     if (kids != null) kids.foreach(deleteRec)
     f.delete(): Unit
@@ -10501,31 +10501,8 @@ object SparkEntry {
     // range-prune state per key. AvailableNow + append against the
     // identical batch self-join oracle. gap rides exact epoch
     // micros — both engines truncate the source nanos the same way.
-    "q_stream_join" -> ((s, dir) =>
-      withStreamStateWidth(s, pathBytes(s"$dir/events.parquet")) {
-      val views = eventsStream(s, dir)
-        .filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("v_ts"),
-          col("event_id").as("view_id"))
-      val purchases = eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"))
-      val joined = graft.streaming.StreamingOps.streamStreamJoin(
-        views, purchases, "user_id", "v_ts", "p_ts",
-        "0 seconds", "4 hours", "24 hours")
-      val sink = s"q_stream_join_${streamExecSeq.incrementAndGet()}"
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink)
-        .select(col("view_id"), col("purchase_id"),
-          (unix_micros(col("p_ts")) - unix_micros(col("v_ts")))
-            .as("gap_usec"))
-        .orderBy("view_id", "purchase_id")
-    }),
+    "q_stream_join" -> streamJoinRow("inner", "q_stream_join",
+      Seq(col("view_id"), col("purchase_id"))),
 
     // 259: LEFT-OUTER stream-stream join on the real engine — the
     // attribution shape with the "never converted" views kept:
@@ -10541,31 +10518,8 @@ object SparkEntry {
     // end-of-stream and must NOT appear —
     // the same bounded-state discipline as q_stream_join, now with
     // the outer-emission clock made part of the checked contract.
-    "q_stream_outer" -> ((s, dir) =>
-      withStreamStateWidth(s, pathBytes(s"$dir/events.parquet")) {
-      val views = eventsStream(s, dir)
-        .filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("v_ts"),
-          col("event_id").as("view_id"))
-      val purchases = eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"))
-      val joined = graft.streaming.StreamingOps.streamStreamJoinLeftOuter(
-        views, purchases, "user_id", "v_ts", "p_ts",
-        "0 seconds", "4 hours", "24 hours")
-      val sink = s"q_stream_outer_${streamExecSeq.incrementAndGet()}"
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink)
-        .select(col("view_id"), col("purchase_id"),
-          (unix_micros(col("p_ts")) - unix_micros(col("v_ts")))
-            .as("gap_usec"))
-        .orderBy("view_id", "purchase_id")
-    }),
+    "q_stream_outer" -> streamJoinRow("left_outer", "q_stream_outer",
+      Seq(col("view_id"), col("purchase_id"))),
 
     // 263: FULL-OUTER stream-stream join on the real engine — BOTH
     // sides' never-matched rows, each under its OWN eviction clock:
@@ -10576,35 +10530,11 @@ object SparkEntry {
     // horizons against the shared min-of-streams watermark — the
     // asymmetry IS the check (left and right state evict at
     // different clocks derived from the interval bounds).
-    "q_stream_full" -> ((s, dir) =>
-      withStreamStateWidth(s, pathBytes(s"$dir/events.parquet")) {
-      val views = eventsStream(s, dir)
-        .filter(col("event_type") === "view")
-        .select(col("user_id"), col("ts").as("v_ts"),
-          col("event_id").as("view_id"))
-      val purchases = eventsStream(s, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id"), col("ts").as("p_ts"),
-          col("event_id").as("purchase_id"))
-      val joined = graft.streaming.StreamingOps.streamStreamJoinFullOuter(
-        views, purchases, "user_id", "v_ts", "p_ts",
-        "0 seconds", "4 hours", "24 hours")
-      val sink = s"q_stream_full_${streamExecSeq.incrementAndGet()}"
-      val q = joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      try q.processAllAvailable() finally q.stop()
-      s.table(sink)
-        .select(col("view_id"), col("purchase_id"),
-          (unix_micros(col("p_ts")) - unix_micros(col("v_ts")))
-            .as("gap_usec"))
-        // NULLS LAST on both keys: Spark's ASC default is nulls
-        // FIRST, DuckDB's is nulls LAST — the right-only rows' NULL
-        // view_id would land at opposite ends of the dump
-        .orderBy(col("view_id").asc_nulls_last,
-          col("purchase_id").asc_nulls_last)
-    }),
+    // NULLS LAST on both keys: Spark's ASC default is nulls FIRST,
+    // DuckDB's is nulls LAST — the right-only rows' NULL view_id would
+    // land at opposite ends of the dump
+    "q_stream_full" -> streamJoinRow("full_outer", "q_stream_full",
+      Seq(col("view_id").asc_nulls_last, col("purchase_id").asc_nulls_last)),
 
     // 260: SESSION WINDOWS on the real streaming engine — the
     // merging-window stateful shape (fixed windows never exercise
@@ -10677,6 +10607,38 @@ object SparkEntry {
     else f.length()
   }
 
+  /** The stream-join rows (q_stream_join, q_stream_outer,
+    * q_stream_full): the view→purchase attribution shape joined as
+    * `joinType`, drained with AvailableNow + append into the memory
+    * sink `sinkPrefix`_n, read back as (view_id, purchase_id,
+    * gap_usec) ordered by `order`. */
+  private def streamJoinRow(joinType: String, sinkPrefix: String,
+      order: Seq[Column]): (SparkSession, String) => DataFrame = (s, dir) =>
+    withStreamStateWidth(s, pathBytes(s"$dir/events.parquet")) {
+      def side(eventType: String, ts: String, id: String) =
+        eventsStream(s, dir)
+          .filter(col("event_type") === eventType)
+          .select(col("user_id"), col("ts").as(ts), col("event_id").as(id))
+      val joined = graft.streaming.StreamingOps.streamStreamJoin(
+        side("view", "v_ts", "view_id"),
+        side("purchase", "p_ts", "purchase_id"), "user_id", "v_ts", "p_ts",
+        "0 seconds", "4 hours", "24 hours", joinType)
+      val sink = s"${sinkPrefix}_${streamExecSeq.incrementAndGet()}"
+      val q = joined.writeStream.format("memory").queryName(sink)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      s.table(sink)
+        .select(col("view_id"), col("purchase_id"),
+          (unix_micros(col("p_ts")) - unix_micros(col("v_ts")))
+            .as("gap_usec"))
+        .orderBy(order: _*)
+    }
+
+  /** Source bytes per streaming state partition. */
+  private val streamStateSlotBytes: Long = 512L << 10
+
   /** Run `body` — the build + start + drain of ONE streaming query —
     * with `spark.sql.shuffle.partitions` derived from the stream's
     * input size, restored afterwards. The session value is what fixes
@@ -10687,10 +10649,10 @@ object SparkEntry {
     * parallelism multiplies the per-batch fixed cost — a stream-stream
     * join keeps 4 store instances per partition, and at the session's
     * 32 that measured 7.1s vs 2.5s at an input-derived width on the
-    * identical query (ProbeStream, r18) with identical output. The
+    * identical query (OPTIMIZATION_r18.md) with identical output. The
     * width derives from INPUT SIZE (guide §2: scale-adaptive
     * partitioning, never a constant tuned for one machine): one state
-    * partition per `SPARK_GRAFT_STREAM_STATE_SLOT` (default 512 KB) of
+    * partition per [[streamStateSlotBytes]] (512 KB) of
     * source bytes, clamped to the session's configured parallelism —
     * a cluster-scale stream saturates the clamp and behaves exactly
     * as before. Restore is in `finally`; the suite runs queries
@@ -10700,8 +10662,7 @@ object SparkEntry {
       body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    val slot = sys.env.get("SPARK_GRAFT_STREAM_STATE_SLOT")
-      .map(_.toLong).getOrElse(512L << 10)
+    val slot = streamStateSlotBytes
     val width = math.min(prev.toLong,
       math.max(1L, (inputBytes + slot - 1) / slot))
     s.conf.set(key, width.toString)

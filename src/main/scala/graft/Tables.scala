@@ -142,12 +142,13 @@ object Tables {
       // partition per `slotBytes` of scan input, capped at the
       // session's core count. A 32-way round-robin exchange of a
       // few-MB table measured ~3× the cost of the work it spreads
-      // (ProbeFloor, r18): 32 task launches + 32 shuffle blocks + 32
-      // noop commits for slices whose per-slice work is sub-ms. The
-      // divisor encodes the caller's per-byte CPU density — corpora
-      // whose downstream work is tokenize/hash-per-row pass a small
-      // slot so they still fan wide at small sizes; columnar
-      // agg/join inputs use the default and stop over-fanning.
+      // (OPTIMIZATION_r18.md §1): 32 task launches + 32 shuffle
+      // blocks + 32 noop commits for slices whose per-slice work is
+      // sub-ms. The divisor encodes the caller's per-byte CPU
+      // density — corpora whose downstream work is tokenize/hash-
+      // per-row pass a small slot so they still fan wide at small
+      // sizes; columnar agg/join inputs use the default and stop
+      // over-fanning.
       val slots = ((bytes + slotBytes - 1) / slotBytes)
         .min(BigInt(target)).max(BigInt(1)).toInt
       val width = math.min(target, slots)
@@ -158,15 +159,13 @@ object Tables {
   }
 
   /** Default fan slot: 1 MB of estimated scan bytes per fanned
-    * partition (env-overridable for measurement). */
-  private def defaultSlotBytes: Long =
-    sys.env.get("SPARK_GRAFT_FAN_SLOT").map(_.toLong).getOrElse(1L << 20)
+    * partition. */
+  private val defaultSlotBytes: Long = 1L << 20
 
   /** Slot width for CPU-dense text corpora (tokenize / shingle / md5
-    * per row): per-byte cost is orders of magnitude above columnar
-    * agg work, so fan wide even when the file is small. */
-  private[graft] def textSlotBytes: Long =
-    sys.env.get("SPARK_GRAFT_TEXT_SLOT").map(_.toLong).getOrElse(16L << 10)
+    * per row), 16 KB: per-byte cost is orders of magnitude above
+    * columnar agg work, so fan wide even when the file is small. */
+  private[graft] val textSlotBytes: Long = 16L << 10
 
   /** Stage a table into `destDir` as csv or json with a schema DDL
     * sidecar, so [[apply]] reads it back schema-exact. csv cannot

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,28 +10,34 @@ object Verify {
     // optional trailing names: dump only those queries (iteration aid;
     // the driver always calls with two args → full contract)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // subset co-partitioning for join-backs (see Bench.scala)
-      .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.codegen.cache.maxEntries", "5000") // see Bench
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession(GraftSession.cores(32))
     spark.sparkContext.setLogLevel("WARN")
+    try run(spark, SparkEntry.queries
+      .filter { case (name, _) => only.isEmpty || only(name) }, sfDir, outDir)
+    finally spark.stop()
+  }
+
+  /** Dumps each row of `queries` to `<outDir>/<name>`, writes
+    * oracle_sql.json, then fails naming every row that failed. A row's
+    * earlier dump is deleted before the row runs, so a failing row
+    * leaves nothing for the oracle compare to grade as current. */
+  def run(spark: SparkSession,
+      queries: Map[String, (SparkSession, String) => DataFrame],
+      sfDir: String, outDir: String): Unit = {
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
+    val failed = queries.toSeq.flatMap { case (name, fn) =>
+      SparkEntry.deleteRec(new java.io.File(outDir, name))
+      val ok =
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          false
+        }
+      GraftSession.isolate(spark)
+      if (ok) None else Some(name)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -48,6 +54,7 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    require(failed.isEmpty,
+      s"verify had ${failed.size} failing queries: ${failed.sorted.mkString(", ")}")
   }
 }

@@ -28,9 +28,16 @@ import graft.ops.Staging._
   */
 object Ranking {
 
+  /** 32 KB/slice: rank slices are CPU-dense per byte (range-sample,
+    * checkpoint serialization, per-slice sort), so width pays for
+    * itself far below the columnar-agg slot — 1 MB/slice measured
+    * q_spearman 3.48s vs 2.53s at 32 KB (Profile, r18). Any real
+    * input saturates the clamp; only sub-32 KB frames narrow. */
+  private val rankSlotBytes: Long = 32L << 10
+
   /** Range-slice count derived from INPUT SIZE, not the session
     * constant (guide §2: scale-adaptive partitioning): one slice per
-    * `SPARK_GRAFT_RANK_SLOT` (default 32 KB) of estimated input,
+    * [[rankSlotBytes]] of estimated input,
     * clamped to [2, spark.sql.shuffle.partitions]. An explicit
     * repartitionByRange is never AQE-coalesced, so the old
     * session-constant width ran a full complement of near-empty
@@ -41,13 +48,7 @@ object Ranking {
   private def sizedParts(df: DataFrame): Int = {
     val confParts = math.max(
       df.sparkSession.sessionState.conf.numShufflePartitions, 2)
-    // 32 KB/slice: rank slices are CPU-dense per byte (range-sample,
-    // checkpoint serialization, per-slice sort), so width pays for
-    // itself far below the columnar-agg slot — 1 MB/slice measured
-    // q_spearman 3.48s vs 2.53s at 32 KB (Profile, r18). Any real
-    // input saturates the clamp; only sub-32 KB frames narrow.
-    val slot = BigInt(sys.env.get("SPARK_GRAFT_RANK_SLOT")
-      .map(_.toLong).getOrElse(32L << 10))
+    val slot = BigInt(rankSlotBytes)
     // analyzed-plan stats: forcing optimizedPlan here would run the
     // optimizer a second time per call on an arbitrarily deep input
     // (measured +0.8s on the double-rank q_spearman); the analyzed

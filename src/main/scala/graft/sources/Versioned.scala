@@ -2587,6 +2587,26 @@ object Versioned {
     .withColumnRenamed("cv", "_commit_version")
     .withColumnRenamed("ct", "_change_type")
 
+  /** Fails unless every version in `vFrom..vTo` has a published feed
+    * dir: a gap names the repair hook, a plain overwrite or restore
+    * names the contract. `fn` is the reader named in the error. */
+  private def requireFeed(fn: String, path: String, vFrom: Int,
+      vTo: Int): Unit =
+    (vFrom to vTo).foreach { v =>
+      if (!Files.isDirectory(changeDirPath(path, v))) {
+        val mode = readManifest(path, v).mode
+        if (mode == "overwrite" || mode == "restore") sys.error(
+          s"$fn: v$v at $path is a $mode commit — " +
+            "no stored row changes; land replacements via merge() " +
+            "(or compact() for rewrites), or backfill a key-diff " +
+            "feed with repairChangeFeed(keys)")
+        else sys.error(
+          s"$fn: v$v at $path has no published feed (crash " +
+            "between manifest publish and feed rename?) — run " +
+            "repairChangeFeed() to backfill")
+      }
+    }
+
   /** Batch read of the stored feed for versions `vFrom..vTo`
     * (inclusive): table columns + `_commit_version` + `_change_type`.
     * Validates every version in the range has a published feed
@@ -2597,20 +2617,7 @@ object Versioned {
   def readChanges(spark: SparkSession, path: String, vFrom: Int,
       vTo: Int): DataFrame = {
     require(vFrom >= 0 && vFrom <= vTo, s"readChanges: bad range $vFrom..$vTo")
-    (vFrom to vTo).foreach { v =>
-      if (!Files.isDirectory(changeDirPath(path, v))) {
-        val mode = readManifest(path, v).mode
-        if (mode == "overwrite" || mode == "restore") sys.error(
-          s"readChanges: v$v at $path is a $mode commit — " +
-            "no stored row changes; land replacements via merge() " +
-            "(or compact() for rewrites), or backfill a key-diff " +
-            "feed with repairChangeFeed(keys)")
-        else sys.error(
-          s"readChanges: v$v at $path has no published feed (crash " +
-            "between manifest publish and feed rename?) — run " +
-            "repairChangeFeed() to backfill")
-      }
-    }
+    requireFeed("readChanges", path, vFrom, vTo)
     import org.apache.spark.sql.functions.col
     renameFeedCols(logicalizeFeed(path,
       spark.read.schema(feedSchema(path))
@@ -2672,20 +2679,7 @@ object Versioned {
     }
     if (lo > vTo) return (emptyFrame(), 0)
     // same loud contract as readChanges, narrowed range only
-    (lo to vTo).foreach { v =>
-      if (!Files.isDirectory(changeDirPath(path, v))) {
-        val mode = readManifest(path, v).mode
-        if (mode == "overwrite" || mode == "restore") sys.error(
-          s"readChangesPruned: v$v at $path is a $mode commit — " +
-            "no stored row changes; land replacements via merge() " +
-            "(or compact() for rewrites), or backfill a key-diff " +
-            "feed with repairChangeFeed(keys)")
-        else sys.error(
-          s"readChangesPruned: v$v at $path has no published feed " +
-            "(crash between manifest publish and feed rename?) — " +
-            "run repairChangeFeed() to backfill")
-      }
-    }
+    requireFeed("readChangesPruned", path, lo, vTo)
     val ctWant = ct.map(_.map(foldName))
     val paths = (lo to vTo).flatMap { v =>
       val d = changeDirPath(path, v)

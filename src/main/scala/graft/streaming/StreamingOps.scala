@@ -78,84 +78,49 @@ object StreamingOps {
       .drop(k)
   }
 
-  /** Watermarked stream-stream inner join: each left event pairs with
-    * right events for the same key whose timestamp lies within
-    * [left.ts - before, left.ts + after]. Both sides carry watermarks
-    * so the join state is evictable — unbounded-state stream joins
-    * don't survive production. Column names must be disjoint except
-    * the key. */
+  /** Watermarked stream-stream join of `joinType` ("inner",
+    * "left_outer", "right_outer" or "full_outer"): each left event
+    * pairs with right events for the same key whose timestamp lies
+    * within [left.ts - before, left.ts + after]. Both sides carry
+    * watermarks so the join state is evictable — unbounded-state
+    * stream joins don't survive production. Column names must be
+    * disjoint except the key.
+    *
+    * An outer side's "never matched" rows emit ONCE, null-padded, but
+    * only after the watermark passes their join window, because that
+    * is the moment "no match yet" becomes "no match EVER" (late data
+    * inside the watermark could still pair them): an unmatched left
+    * event once the watermark passes left.ts + after, an unmatched
+    * right event once it passes the last left timestamp that could
+    * still pair it (right.ts itself under a [0, after] window). The
+    * time-interval condition + both watermarks are what make the
+    * outer emission decidable with EVICTABLE state — Structured
+    * Streaming rejects outer stream-stream joins without them, and an
+    * engine that accepted one would hold every row forever.
+    *
+    * The key survives from the side that is always present: the left
+    * for inner and left outer, the right for right outer. A full
+    * outer row may lack either, so its key is coalesce(left key,
+    * right key), landing as the LAST column. */
   def streamStreamJoin(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, before: String, after: String,
-      watermark: String): DataFrame = {
+      watermark: String, joinType: String): DataFrame = {
     val l = left.withWatermark(leftTs, watermark)
     val r = right.withWatermark(rightTs, watermark)
-    l.join(r, ssCond(l, r, key, leftTs, rightTs, before, after))
-      .drop(r(key))
-  }
-
-  /** Watermarked LEFT OUTER stream-stream join — [[streamStreamJoin]]
-    * plus the "never matched" rows: an unmatched left event emits
-    * ONCE with nulls on the right side, but only after the watermark
-    * passes its join window, because that is the moment "no match
-    * yet" becomes "no match EVER" (late right-side data inside the
-    * watermark could still pair it). The time-interval condition +
-    * both watermarks are what make the outer emission decidable with
-    * EVICTABLE state — Structured Streaming rejects outer
-    * stream-stream joins without them, and an engine that accepted
-    * one would hold every left row forever. */
-  def streamStreamJoinLeftOuter(left: DataFrame, right: DataFrame,
-      key: String, leftTs: String, rightTs: String, before: String,
-      after: String, watermark: String): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark)
-    l.join(r, ssCond(l, r, key, leftTs, rightTs, before, after),
-        "left_outer")
-      .drop(r(key))
-  }
-
-  /** Watermarked RIGHT OUTER stream-stream join — the mirror of
-    * [[streamStreamJoinLeftOuter]]: an unmatched RIGHT event emits
-    * once the watermark passes the last left timestamp that could
-    * still pair it (p_ts itself under a [0, after] window — left
-    * rows at or before p_ts may arrive until then). The key column
-    * survives from the right side (always present on a right-outer
-    * row). */
-  def streamStreamJoinRightOuter(left: DataFrame, right: DataFrame,
-      key: String, leftTs: String, rightTs: String, before: String,
-      after: String, watermark: String): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark)
-    l.join(r, ssCond(l, r, key, leftTs, rightTs, before, after),
-        "right_outer")
-      .drop(l(key))
-  }
-
-  /** Watermarked FULL OUTER stream-stream join — BOTH sides' "never
-    * matched" rows emit null-padded once the watermark closes their
-    * window (same eviction-moment semantics as
-    * [[streamStreamJoinLeftOuter]], applied symmetrically). The key
-    * survives as coalesce(left key, right key) — a right-only row has
-    * a NULL left key, so dropping one side would blank it; the
-    * coalesced key lands as the LAST column. */
-  def streamStreamJoinFullOuter(left: DataFrame, right: DataFrame,
-      key: String, leftTs: String, rightTs: String, before: String,
-      after: String, watermark: String): DataFrame = {
-    val l = left.withWatermark(leftTs, watermark)
-    val r = right.withWatermark(rightTs, watermark)
-    l.join(r, ssCond(l, r, key, leftTs, rightTs, before, after),
-        "full_outer")
-      .withColumn(s"__k_$key", coalesce(l(key), r(key)))
-      .drop(l(key)).drop(r(key))
-      .withColumnRenamed(s"__k_$key", key)
-  }
-
-  /** Shared equi-key + time-interval join condition of the
-    * stream-stream joins (the range bound is what lets the state
-    * store evict rows older than watermark − window). */
-  private def ssCond(l: DataFrame, r: DataFrame, key: String,
-      leftTs: String, rightTs: String, before: String,
-      after: String) =
-    l(key) === r(key) &&
+    val joined = l.join(r, l(key) === r(key) &&
+      // the range bound is what lets the state store evict rows
+      // older than watermark − window
       r(rightTs) >= l(leftTs) - expr(s"INTERVAL $before") &&
-      r(rightTs) <= l(leftTs) + expr(s"INTERVAL $after")
+      r(rightTs) <= l(leftTs) + expr(s"INTERVAL $after"), joinType)
+    joinType match {
+      case "inner" | "left_outer" => joined.drop(r(key))
+      case "right_outer" => joined.drop(l(key))
+      case "full_outer" =>
+        joined.withColumn(s"__k_$key", coalesce(l(key), r(key)))
+          .drop(l(key)).drop(r(key))
+          .withColumnRenamed(s"__k_$key", key)
+      case other => throw new IllegalArgumentException(
+        s"streamStreamJoin: unsupported join type $other")
+    }
+  }
 }

@@ -4,21 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
-/** Shared local session for operator specs. */
+/** Shared local session for operator specs: the drivers' own
+  * [[GraftSession]] config at 2 cores. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    // subset co-partitioning for join-backs (see Bench.scala)
-    .config("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // the advertised session setup: graft_* SQL functions, the native
-    // as-of strategy, SQL DML, and the streaming table-read rewrite
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    .appName(getClass.getSimpleName)
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession("2")
 
   override def afterAll(): Unit = {
     // shared across suites in one JVM; don't stop it per-suite

@@ -118,10 +118,10 @@ class RocksDbStateSpec extends SparkSpec {
       implicit val sq = spark.sqlContext
       val clicks = MemoryStream[(Timestamp, Long, String)]
       val views = MemoryStream[(Timestamp, Long, String)]
-      val q = StreamingOps.streamStreamJoinLeftOuter(
+      val q = StreamingOps.streamStreamJoin(
           clicks.toDF().toDF("cts", "user_id", "click"),
           views.toDF().toDF("vts", "user_id", "view"),
-          "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour")
+          "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour", "left_outer")
         .select("user_id", "click", "view")
         .writeStream.format("memory").queryName("rocks_outer")
         .outputMode("append").start()

@@ -96,7 +96,7 @@ class StreamingSpec extends SparkSpec {
     val q = StreamingOps.streamStreamJoin(
         clicks.toDF().toDF("cts", "user_id", "click"),
         views.toDF().toDF("vts", "user_id", "view"),
-        "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour")
+        "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour", "inner")
       .select("user_id", "click", "view")
       .writeStream.format("memory").queryName("ss_join")
       .outputMode("append").start()
@@ -117,10 +117,10 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val clicks = MemoryStream[(Timestamp, Long, String)]
     val views = MemoryStream[(Timestamp, Long, String)]
-    val q = StreamingOps.streamStreamJoinLeftOuter(
+    val q = StreamingOps.streamStreamJoin(
         clicks.toDF().toDF("cts", "user_id", "click"),
         views.toDF().toDF("vts", "user_id", "view"),
-        "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour")
+        "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour", "left_outer")
       .select("user_id", "click", "view")
       .writeStream.format("memory").queryName("ss_join_outer")
       .outputMode("append").start()
@@ -155,10 +155,10 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val clicks = MemoryStream[(Timestamp, Long, String)]
     val views = MemoryStream[(Timestamp, Long, String)]
-    val q = StreamingOps.streamStreamJoinRightOuter(
+    val q = StreamingOps.streamStreamJoin(
         clicks.toDF().toDF("cts", "user_id", "click"),
         views.toDF().toDF("vts", "user_id", "view"),
-        "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour")
+        "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour", "right_outer")
       .select("user_id", "click", "view")
       .writeStream.format("memory").queryName("ss_join_right")
       .outputMode("append").start()
@@ -183,10 +183,10 @@ class StreamingSpec extends SparkSpec {
     implicit val sq = spark.sqlContext
     val clicks = MemoryStream[(Timestamp, Long, String)]
     val views = MemoryStream[(Timestamp, Long, String)]
-    val q = StreamingOps.streamStreamJoinFullOuter(
+    val q = StreamingOps.streamStreamJoin(
         clicks.toDF().toDF("cts", "user_id", "click"),
         views.toDF().toDF("vts", "user_id", "view"),
-        "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour")
+        "user_id", "cts", "vts", "0 seconds", "30 minutes", "1 hour", "full_outer")
       .select("user_id", "click", "view")
       .writeStream.format("memory").queryName("ss_join_full")
       .outputMode("append").start()
