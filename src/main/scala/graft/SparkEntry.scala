@@ -5599,11 +5599,12 @@ object SparkEntry {
     // over the feed the v1 MERGE commit published; exactly-once per
     // feed file) emits keys + post-image values + _change_type; each
     // micro-batch is MERGEd by CdcSink.startVersioned as ONE atomic
-    // Versioned.merge overwrite commit into a VERSIONED mirror seeded
-    // from v0 — the mirror IS a versioned table (the lakehouse shape:
-    // the transaction ledger is the sink's log, the `appId:batchId`
-    // txn token dedupes foreachBatch replays exactly-once, and time
-    // travel across applied batches is free). After the stream drains
+    // Versioned.mergeDV commit (mask + batch dir) into a VERSIONED
+    // mirror seeded from v0 — the mirror IS a versioned table (the
+    // lakehouse shape: the transaction ledger is the sink's log, the
+    // `appId:batchId` txn token dedupes foreachBatch replays
+    // exactly-once, and time travel across applied batches is free).
+    // After the stream drains
     // the mirror's head must BE v1 — the oracle recomputes v1's
     // per-type aggregate from the base table, so the whole chain
     // (stored feed publish → stream → exactly-once MERGE commit) is
@@ -6122,16 +6123,6 @@ object SparkEntry {
           col("sum_value"))
     }),
 
-    // 199: DELETE WHERE driver-gated — dir-granular copy-on-write
-    // row deletion: two appends split orders by key parity, then
-    // deleteWhere(odd AND status 'F'); ONLY the odd dir is rewritten
-    // and the even dir carries into v2 BY REFERENCE (n_carried_dirs,
-    // computed from the manifests' dir-id intersection, gates the
-    // zero-rewrite claim — deleting one slice of a 100 TB table must
-    // not rewrite the rest). The deleted rows' PRE-IMAGE feed
-    // (`_changes/cv=2/ct=delete`) is read back as a distributed agg
-    // beside the post-delete snapshot, so the oracle gates the
-    // snapshot, the feed, and the ledger accounting in one row.
     // 225: PARTITION EVOLUTION driver-gated — the versioned table
     // staged as a MIXED-layout snapshot (one commit hive-partitioned
     // by priority, one plain append: the manifest records the spec
@@ -6165,42 +6156,11 @@ object SparkEntry {
         .orderBy("o_orderpriority")
     }),
 
-    "q_delete_where" -> ((s, dir) => {
-      val V = graft.sources.Versioned
-      val table = stagingRoot(dir) + "/versioned_delete"
-      if (V.latestVersion(table) < 0) {
-        val o = t(s, dir, "orders").select(col("o_orderkey"),
-          col("o_orderstatus"), cents(col("o_totalprice")).as("price_cents"))
-        V.commit(o.filter(col("o_orderkey") % 2 === 0), table,
-          overwrite = false): Unit
-        V.commit(o.filter(col("o_orderkey") % 2 === 1), table,
-          overwrite = false): Unit
-        V.deleteWhere(s, table,
-          col("o_orderkey") % 2 === 1 && col("o_orderstatus") === "F"): Unit
-      }
-      val head = V.latestVersion(table)
-      val carried = V.dataDirIds(table, head).toSet
-        .intersect(V.dataDirIds(table, head - 1).toSet).size
-      val feed = V.readChanges(s, table, head, head)
-        .filter(col("_change_type") === "delete")
-        .agg(count(lit(1)).as("n_deleted"),
-          money(sum(col("price_cents"))).as("sum_deleted"))
-      V.read(s, table)
-        .groupBy("o_orderstatus")
-        .agg(count(lit(1)).as("n_orders"),
-          money(sum(col("price_cents"))).as("sum_price"))
-        .crossJoin(broadcast(feed)) // intended: 1-row feed-agg carrier
-        .select(col("o_orderstatus"), col("n_orders"), col("sum_price"),
-          col("n_deleted"), col("sum_deleted"),
-          lit(head).as("head"), lit(carried).as("n_carried_dirs"))
-        .orderBy("o_orderstatus")
-    }),
-
     // 206: DELETE WHERE as MERGE-ON-READ deletion vectors,
-    // driver-gated: the same two-append orders table as
-    // q_delete_where, but the delete writes a (file, row-index) mask
-    // sidecar instead of rewriting dirs — the accounting gate extends
-    // n_carried_dirs with n_rewritten_files == 0: the head manifest's
+    // driver-gated: two appends split orders by key parity, then
+    // deleteWhereDV(odd AND status 'F') writes a (file, row-index)
+    // mask sidecar instead of rewriting dirs — the accounting gate is
+    // n_carried_dirs plus n_rewritten_files == 0: the head manifest's
     // data-dir set must EQUAL the parent's (both dirs carried BY
     // REFERENCE), and any dir new in head contributes its on-disk
     // parquet count (0 by construction — a 1-row delete on a 100 TB
@@ -6248,10 +6208,9 @@ object SparkEntry {
         .orderBy("o_orderstatus")
     }),
 
-    // 209: MERGE-ON-READ MERGE driver-gated (mergeDV): the classic
-    // merge rewrites the whole table per batch; this one MASKS the
-    // matched rows via a deletion-vector sidecar and appends the
-    // batch as ONE new dir — write amplification ∝ batch, never ∝
+    // 209: MERGE-ON-READ MERGE driver-gated (mergeDV): the merge
+    // MASKS the matched rows via a deletion-vector sidecar and appends
+    // the batch as ONE new dir — write amplification ∝ batch, never ∝
     // table. The batch derives deterministically from the table
     // itself (keys %97 price-bumped, %89 deleted, %101 re-inserted
     // under a fresh key as status 'N'), and the accounting columns
@@ -6327,7 +6286,7 @@ object SparkEntry {
       }
       if (V.latestVersion(cln) < 0) {
         V.cloneTable(src, cln): Unit
-        V.deleteWhere(s, cln, col("event_type") === "click"): Unit
+        V.deleteWhereDV(s, cln, col("event_type") === "click"): Unit
       }
       val linked = java.nio.file.Paths.get(
         cln, "data", V.dataDirIds(cln, 0).head)
@@ -7700,20 +7659,6 @@ object SparkEntry {
       FROM orders
       WHERE o_orderpriority IN ('1-URGENT', '2-HIGH')
       GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q_delete_where" -> """
-      WITH o AS (SELECT o_orderkey, o_orderstatus,
-                   CAST(round(o_totalprice * 100) AS BIGINT) AS pc
-                 FROM orders),
-      del AS (SELECT count(*) AS n_deleted,
-                CAST(sum(pc) AS DOUBLE) / 100.0 AS sum_deleted
-              FROM o WHERE o_orderkey % 2 = 1 AND o_orderstatus = 'F')
-      SELECT o_orderstatus, count(*) AS n_orders,
-             CAST(sum(pc) AS DOUBLE) / 100.0 AS sum_price,
-             n_deleted, sum_deleted, 2 AS head, 1 AS n_carried_dirs
-      FROM o CROSS JOIN del
-      WHERE NOT (o_orderkey % 2 = 1 AND o_orderstatus = 'F')
-      GROUP BY o_orderstatus, n_deleted, sum_deleted
-      ORDER BY o_orderstatus""",
     "q_delete_dv" -> """
       WITH o AS (SELECT o_orderkey, o_orderstatus,
                    CAST(round(o_totalprice * 100) AS BIGINT) AS pc

@@ -402,17 +402,6 @@ object Versioned {
       txn: Option[String]): Int =
     commitCore(df, path, overwrite, txn, expectedBase = None).get
 
-  /** [[commitTxn]] with an optimistic-concurrency precondition: the
-    * commit only publishes if the table head is still `base` (the
-    * version the caller derived `df` FROM). Returns None — with the
-    * staged data dir left orphaned for [[vacuum]] — when any other
-    * commit landed first, so a read-modify-write caller ([[merge]])
-    * re-derives from the new head instead of silently overwriting a
-    * concurrent append with stale data (write skew). */
-  private[graft] def commitIfBase(df: DataFrame, path: String,
-      overwrite: Boolean, txn: Option[String], base: Int): Option[Int] =
-    commitCore(df, path, overwrite, txn, expectedBase = Some(base))
-
   /** Commit `df` Z-CLUSTERED on two numeric columns as the next
     * version: the staged data dir is written in
     * [[Clustered.clusteredFrame]] layout with its min/max stats
@@ -1085,8 +1074,8 @@ object Versioned {
       if (expectedBase.exists(_ != head))
         return None // head moved under a read-modify-write: recompute
       // metadata (constraints) survives overwrites — only the data-dir
-      // chain and the schema baseline reset; a MERGE (an overwrite
-      // commit) must not silently drop the table's quality gates
+      // chain and the schema baseline reset; an overwrite commit must
+      // not silently drop the table's quality gates
       val parentMeta = if (head < 0) None else Some(readManifest(path, head))
       val parent = if (overwrite) None else parentMeta
       val parentDirs = parent.map(_.dataDirs).getOrElse(Seq.empty)
@@ -1317,8 +1306,7 @@ object Versioned {
         // COMPACTION rewrites bytes without changing the logical
         // content, so its feed is the committed empty dir. Plain
         // overwrites are not representable in a row-change feed and
-        // publish none ([[readChanges]] fails loudly on them);
-        // [[merge]] writes its own batch-sized feed post-publish.
+        // publish none ([[readChanges]] fails loudly on them).
         m.mode match {
           case "append" if partSpec.isEmpty =>
             publishInsertFeed(path, m.version, dataDir)
@@ -1988,7 +1976,7 @@ object Versioned {
     *
     * Concurrency: a compaction is a read-modify-write (it republishes
     * the snapshot it READ), so it runs under the same optimistic
-    * precondition as [[merge]] ([[commitIfBase]] — the head must
+    * re-derive loop as [[mergeDV]] (`expectedBase` — the head must
     * still be the version the rewrite was derived from): a concurrent
     * INSERT landing between the read and the publish fails the
     * precondition and the compaction re-reads the NEW head and
@@ -2256,7 +2244,7 @@ object Versioned {
     * manifest keeps the old data dirs it references alive. Like a
     * plain overwrite, a restore is not representable as a row-change
     * feed — feed readers crossing it fail loudly; land surgical
-    * corrections through [[merge]] instead. Concurrency: the same
+    * corrections through [[mergeDV]] instead. Concurrency: the same
     * create-exclusive manifest race as every commit — a racer
     * landing head+1 first wins and the restore retries against the
     * new head (restoring to `v` is idempotent against racers: the
@@ -2502,7 +2490,7 @@ object Versioned {
     *    changes no logical rows). Plain overwrite commits publish
     *    nothing and the readers fail loudly on them — a row-change
     *    feed cannot represent "the table is now something else";
-    *    land replacements through [[merge]].
+    *    land replacements through [[mergeDV]].
     *
     * Feed dirs are staged under `_changes/.stage-*` and published by
     * one atomic rename AFTER the manifest lands, so a feed dir is
@@ -2806,9 +2794,8 @@ object Versioned {
 
   /** FEED EPOCH of version `v`: the number of commits ≤ v that are
     * NOT representable as row changes — overwrite-family manifests
-    * (restore / plain overwrite; a MERGE also records mode
-    * `overwrite` but publishes a classified feed, so the feed dir's
-    * presence is the discriminator) WITHOUT a published feed.
+    * (restore / plain overwrite) WITHOUT a published feed; the feed
+    * dir's presence is the discriminator.
     * Derived from the ledger alone — no extra storage, no marker
     * files to crash between; manifests vacuumed below the retention
     * point no longer count, which is harmless because both sides of
@@ -3514,81 +3501,12 @@ object Versioned {
       .drop("__h_a", "__h_b")
   }
 
-  /** APPLYABLE change feed: like [[changes]] but each insert/update
-    * row carries the NEW (vTo-side) non-key values — what a
-    * downstream MERGE actually consumes — and `unchanged` rows are
-    * omitted (a feed that re-ships the whole table defeats CDC).
-    * Delete rows carry null non-key values; the key plus
-    * `change_type` is all a delete needs. Same single full-outer
-    * key join as [[changes]]; the vTo values ride the join, so the
-    * new snapshot is still read exactly once. Same key-uniqueness
-    * precondition as [[changes]]. */
-  /** MERGE INTO the versioned table: rows of the head snapshot whose
-    * key appears in `updates` are replaced, unmatched update rows are
-    * inserted, untouched rows persist — published as ONE overwrite
-    * commit, so readers flip atomically from the pre-merge snapshot
-    * to the post-merge one and history still time-travels. `txn`
-    * makes the merge idempotent under replay (a streaming CDC apply
-    * rides this — the manifest ledger is the sink's transaction log).
-    *
-    * Concurrency: a merge is a read-modify-write, so it runs under
-    * optimistic concurrency ([[commitIfBase]]): derive from head,
-    * attempt to publish at head+1, and if ANY other commit landed
-    * meanwhile, re-derive from the new head and try again — a
-    * concurrent append can never be silently overwritten by stale
-    * derived data. Same key-uniqueness precondition as [[changes]].
-    * `deleteWhen` (evaluated against `updates`) marks rows whose key
-    * is REMOVED instead of upserted — what a CDC delete needs; the
-    * non-key values of such rows are ignored. */
-  def merge(spark: SparkSession, path: String, updates: DataFrame,
-      keys: Seq[String], txn: Option[String] = None,
-      deleteWhen: Option[org.apache.spark.sql.Column] = None): Int = {
-    import org.apache.spark.sql.functions.col
-    var attempt = 0
-    while (true) {
-      require(attempt < 50, s"versioned merge: 50 lost races at $path")
-      attempt += 1
-      val base = latestVersion(path)
-      require(base >= 0, s"versioned merge: no committed version at $path")
-      val target = read(spark, path, Some(base))
-      // every key in the batch leaves the target (delete), then the
-      // surviving batch rows come back with their new values — MERGE
-      // WHEN MATCHED UPDATE/DELETE WHEN NOT MATCHED INSERT as one
-      // left-anti join plus a union; both sides shuffle once on the
-      // key, AQE picks the physical join
-      val touched = updates.select(keys.map(col): _*).distinct()
-      val upserts = deleteWhen
-        .map(d => updates.filter(!d))
-        .getOrElse(updates)
-        .select(target.columns.map(col).toIndexedSeq: _*)
-      val merged = target.join(touched, keys.toIndexedSeq, "left_anti")
-        .unionByName(upserts)
-      commitIfBase(merged, path, overwrite = true, txn, base) match {
-        case Some(v) =>
-          // stored change-data feed for this merge (see the
-          // change-data-feed section): classify the batch against the
-          // base snapshot's KEYS — existing key → update (post-image),
-          // new key → insert, deleteWhen + existing → delete (null
-          // non-keys), deleteWhen + absent → no-op (nothing was
-          // removed). Derived and written AFTER the publish from the
-          // immutable base snapshot, so a lost race never writes a
-          // stale feed; batch-sized, one key-join.
-          if (v > base) // v == base ⇒ txn replay hit: feed exists
-            publishMergeFeed(path, v, target, updates, keys, deleteWhen)
-          return v
-        case None => () // a commit landed first — re-derive and retry
-      }
-    }
-    -1 // unreachable
-  }
-
-  /** The classified merge change feed, shared by [[merge]] and
-    * [[mergeDV]]: each batch row against the base snapshot's KEYS —
-    * existing key → update (post-image), new key → insert, deleteWhen
-    * + existing → delete (null non-keys), deleteWhen + absent →
-    * no-op. Batch-sized, one key-join, derived from the immutable
-    * base snapshot AFTER the publish (a lost race never writes a
-    * stale feed). */
+  /** The classified change feed of a [[mergeDV]]: each batch row
+    * against the base snapshot's KEYS — existing key → update
+    * (post-image), new key → insert, deleteWhen + existing → delete
+    * (null non-keys), deleteWhen + absent → no-op. Batch-sized, one
+    * key-join, derived from the immutable base snapshot AFTER the
+    * publish (a lost race never writes a stale feed). */
   private def publishMergeFeed(path: String, v: Int, target: DataFrame,
       updates: DataFrame, keys: Seq[String],
       deleteWhen: Option[org.apache.spark.sql.Column]): Unit = {
@@ -3620,27 +3538,39 @@ object Versioned {
     publishWrittenFeed(upRows.unionByName(delRows), path, v)
   }
 
-  /** MERGE INTO with BATCH-PROPORTIONAL write amplification — the
-    * merge-on-read twin of [[merge]]: matched target rows are MASKED
-    * via a deletion-vector sidecar and the surviving batch rows
-    * APPEND as one new data dir, published together in ONE atomic
-    * manifest (mode `merge-dv`). Bytes WRITTEN ∝ |batch| + |matched
-    * row ids| — a 1000-row CDC batch into a 100 TB table stages
-    * kilobytes of mask plus the batch itself, where [[merge]]'s
-    * overwrite commit rewrites the full table. (The read side still
-    * scans the table once to FIND the matched positions — the
-    * unavoidable cost every merge pays — and later reads pay the
-    * usual mask anti-join until [[compact]] materializes it away.)
+  /** MERGE INTO the versioned table with BATCH-PROPORTIONAL write
+    * amplification: matched target rows are MASKED via a
+    * deletion-vector sidecar and the surviving batch rows APPEND as
+    * one new data dir, published together in ONE atomic manifest
+    * (mode `merge-dv`), so readers flip from the pre-merge snapshot to
+    * the post-merge one and history still time-travels. Bytes WRITTEN
+    * ∝ |batch| + |matched row ids| — a 1000-row CDC batch into a
+    * 100 TB table stages kilobytes of mask plus the batch itself.
+    * (The read side still scans the table once to FIND the matched
+    * positions — the unavoidable cost every merge pays — and later
+    * reads pay the usual mask anti-join until [[compact]]
+    * materializes it away.)
     *
-    * Semantics are [[merge]]'s exactly: matched keys replaced,
-    * `deleteWhen`'d keys removed, unmatched upserts inserted, batch
-    * key-uniqueness required. CHECK constraints enforce on the
-    * INCOMING rows only — carried rows proved themselves at their own
-    * commit, the same argument plain appends rely on. The batch's
-    * columns must match the table schema (column ADDS go through
-    * append commits). Same optimistic-concurrency loop, txn dedup,
-    * and classified change feed as [[merge]]; [[feedEpoch]] does not
-    * bump (the feed fully represents the change). */
+    * Semantics: rows of the head snapshot whose key appears in
+    * `updates` are replaced, unmatched update rows are inserted,
+    * untouched rows persist; `deleteWhen` (evaluated against
+    * `updates`) marks rows whose key is REMOVED instead of upserted —
+    * what a CDC delete needs; the non-key values of such rows are
+    * ignored. Same key-uniqueness precondition as [[changes]]. CHECK
+    * constraints enforce on the INCOMING rows only — carried rows
+    * proved themselves at their own commit, the same argument plain
+    * appends rely on. The batch's columns must match the table schema
+    * (column ADDS go through append commits).
+    *
+    * Concurrency: a merge is a read-modify-write, so it derives from
+    * the head, attempts to publish at head+1, and if ANY other commit
+    * landed meanwhile, drops its staged dirs and re-derives from the
+    * new head — a concurrent append can never be silently lost. `txn`
+    * makes the merge idempotent under replay (a streaming CDC apply
+    * rides this — the manifest ledger is the sink's transaction log).
+    * The classified change feed is written after the publish;
+    * [[feedEpoch]] does not bump (the feed fully represents the
+    * change). */
   def mergeDV(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], txn: Option[String] = None,
       deleteWhen: Option[org.apache.spark.sql.Column] = None): Int = {
@@ -3660,9 +3590,9 @@ object Versioned {
       }
       val m = readManifest(path, base)
       val target = read(spark, path, Some(base))
-      // same NULL-predicate edge as [[merge]]: a NULL deleteWhen row
-      // is dropped from the upserts (its key still deletes via the
-      // touched set) — the two merge paths must be interchangeable
+      // a NULL deleteWhen row is dropped from the upserts (its key
+      // still deletes via the touched set) — [[publishMergeFeed]]
+      // classifies it as a delete to match
       val upserts = deleteWhen
         .map(d => updates.filter(!d))
         .getOrElse(updates)
@@ -4018,118 +3948,11 @@ object Versioned {
       walk(dirPath, 0)
   }
 
-  /** Result of a [[deleteWhere]]: the committed version plus the
-    * dir-granular copy-on-write accounting (how many data dirs were
-    * rewritten vs carried by reference) — the evidence that a
-    * selective delete did NOT rewrite the table. */
-  final case class DeleteResult(version: Int, rewrittenDirs: Int,
-      carriedDirs: Int, deletedRows: Long)
-
-  /** Row-level DELETE WHERE as one versioned commit, copy-on-write at
-    * DATA-DIR granularity: one distributed probe job finds the dirs
-    * that contain any matching row (filter + distinct over the file
-    * path's dir segment — survivors-only collect, bounded by the dir
-    * count, never the data), ONLY those dirs are rewritten without
-    * their matching rows, and every untouched dir is carried into the
-    * new manifest BY REFERENCE — zero bytes moved for data the
-    * predicate never touches. That asymmetry is the whole point at
-    * 100 TB: deleting one tenant's rows from one region's dirs must
-    * not rewrite the other 99 regions. ([[merge]] with `deleteWhen`
-    * remains the keyed path; this is the predicate path — no key
-    * needed.)
-    *
-    * SQL DELETE semantics: rows where the predicate is NULL are KEPT
-    * (only TRUE deletes), mirroring every engine's DELETE WHERE.
-    *
-    * Concurrency: read-modify-write under the same optimistic loop as
-    * [[merge]] — derive from head, publish at head+1 via the
-    * create-exclusive link; any commit landing first fails the link
-    * and the delete re-probes against the new head (new appends may
-    * contain matching rows; they must not survive). `txn` dedupes
-    * replays through the manifest ledger like every commit here.
-    *
-    * Change feed: the deleted rows publish as `ct=delete` with their
-    * full PRE-IMAGE values (batch-sized write — proportional to what
-    * was deleted). This is richer than [[merge]]'s keyed deletes
-    * (null non-keys): a predicate delete has no key to carry, so the
-    * pre-image IS the identity of what left the table. */
-  def deleteWhere(spark: SparkSession, path: String,
-      predicate: org.apache.spark.sql.Column,
-      txn: Option[String] = None): DeleteResult = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not,
-      regexp_extract}
-    var attempt = 0
-    while (true) {
-      require(attempt < 50, s"versioned deleteWhere: 50 lost races at $path")
-      attempt += 1
-      val base = latestVersion(path)
-      require(base >= 0, s"versioned deleteWhere: no committed version at $path")
-      txn.flatMap(findTxn(path, _, base)) match {
-        case Some(v) =>
-          return DeleteResult(v, -1, -1, -1L) // replay: work already done
-        case None => ()
-      }
-      val m = readManifest(path, base)
-      val hit = coalesce(predicate, lit(false)) // NULL keeps the row
-      // probe: which dirs contain LIVE matching rows — one
-      // distributed filter over the mask-applied snapshot, distinct
-      // BEFORE the collect, result ≤ |dataDirs|. The dir id rides the
-      // scan-time `__dv_rel` column (projected at the source, so it
-      // survives whatever join shape the mask overlay plans —
-      // input_file_name() would go blank after a shuffle join).
-      val livePos = maskByPos(spark, path, m.dvDirs,
-        readDirs(spark, path, m, m.dataDirs, withIds = true))
-      val touched = livePos.filter(hit)
-        .select(regexp_extract(col("__dv_rel"), "^([^/]+)/", 1).as("d"))
-        .distinct().collect().map(_.getString(0)).toSet
-      if (touched.isEmpty)
-        return DeleteResult(base, 0, m.dataDirs.size, 0L)
-      val carried = m.dataDirs.filterNot(touched)
-      // rewrite ONLY the touched dirs, without their matching rows —
-      // via the layout-aware [[readDirs]] (manifest-schema null-fill
-      // for evolved columns, per-dir discovery for partitioned dirs;
-      // a flat explicit-schema read would silently null a partition
-      // column out of a hive-layout dir). The rewrite source applies
-      // the table's deletion-vector mask: rows an earlier
-      // merge-on-read delete masked must NOT be resurrected into the
-      // rewritten dir.
-      val touchedDf = maskByPos(spark, path, m.dvDirs,
-          readDirs(spark, path, m, touched.toSeq.sorted, withIds = true))
-        .drop("__dv_rel", "__dv_pos")
-      val deletedRows = touchedDf.filter(hit).count()
-      val dataId = java.util.UUID.randomUUID().toString
-      toPhysical(m, touchedDf.filter(not(hit)))
-        .write.mode("errorifexists").parquet(s"$path/data/$dataId")
-      // the carried dirs keep their mask entries (still live); mask
-      // rows pointing at the dropped dirs dangle harmlessly — their
-      // (rel,pos) keys can never match a file the manifest references
-      val next = Manifest(base + 1, "delete", carried :+ dataId, txn,
-        m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints, dvDirs = m.dvDirs,
-        // rewritten dirs drop their specs with their bytes (the
-        // staged replacement is plain); carried dirs keep theirs
-        partSpecs = m.specsFor(carried), droppedCols = m.droppedCols,
-        props = m.props, colMap = m.colMap)
-      if (publishManifest(path, next)) {
-        // stored feed: pre-image delete rows, derived from the
-        // immutable base snapshot AFTER the publish (a lost race
-        // never writes a stale feed)
-        val cols = touchedDf.columns.toIndexedSeq
-        publishWrittenFeed(
-          touchedDf.filter(hit).withColumn("ct", lit("delete"))
-            .select((cols.map(col) :+ col("ct")): _*),
-          path, next.version)
-        // rewrittenDirs counts the SOURCE dirs that were rewritten
-        // (they merge into one staged dir; the cost metric is how many
-        // dirs' bytes moved, not how many dirs were produced)
-        return DeleteResult(next.version, touched.size, carried.size,
-          deletedRows)
-      }
-      // else: a commit landed at base+1 first — the staged rewrite is
-      // orphaned (vacuum reclaims) and the delete re-derives
-    }
-    sys.error("unreachable")
-  }
+  /** Result of a row-level DML commit ([[deleteWhereDV]],
+    * [[deleteWhereDVJoin]], [[updateWhereDV]]): the committed version
+    * and the rows the committed mask covers (-1 on a txn replay, whose
+    * work was done by the original commit). */
+  final case class DeleteResult(version: Int, deletedRows: Long)
 
   /** TEST-ONLY race-injection point: invoked by [[publishManifest]]
     * immediately before EVERY publish attempt, so a spec can
@@ -4147,19 +3970,21 @@ object Versioned {
     * SAME data dirs plus the grown mask chain, and every read overlays
     * the mask as an anti-join (broadcast when the mask is small — the
     * normal case). ZERO data files are rewritten: deleting one hot row
-    * from a 100 TB table costs one mask row plus one manifest — the
-    * write amplification [[deleteWhere]]'s dir-granular copy-on-write
-    * cannot avoid when a matching row sits in every dir. The read-side
-    * overhead grows with the accumulated mask; [[compact]]
-    * materializes it away (it stages the MASKED snapshot under an
-    * overwrite manifest, which resets `dvDirs`).
+    * from a 100 TB table costs one mask row plus one manifest, even
+    * when a matching row sits in every dir. The read-side overhead
+    * grows with the accumulated mask; [[compact]] materializes it away
+    * (it stages the MASKED snapshot under an overwrite manifest, which
+    * resets `dvDirs`).
     *
-    * Same SQL NULL-keeps-the-row semantics, optimistic-concurrency
-    * loop, txn dedup, and pre-image `ct=delete` change feed as
-    * [[deleteWhere]] — the two are interchangeable per-commit (a DV
-    * delete composes on top of a copy-on-write delete and vice
-    * versa). Returns rewrittenDirs == 0 and carriedDirs ==
-    * |dataDirs|: the accounting IS the zero-rewrite claim. */
+    * SQL DELETE semantics: rows where the predicate is NULL are KEPT
+    * (only TRUE deletes). Concurrency: derive from head, publish at
+    * head+1 via the create-exclusive link; any commit landing first
+    * fails the link and the delete re-derives against the new head
+    * (new appends may contain matching rows; they must not survive).
+    * `txn` dedupes replays through the manifest ledger. Change feed:
+    * the deleted rows publish as `ct=delete` with their full
+    * PRE-IMAGE values — a predicate delete has no key to carry, so
+    * the pre-image IS the identity of what left the table. */
   def deleteWhereDV(spark: SparkSession, path: String,
       predicate: org.apache.spark.sql.Column,
       txn: Option[String] = None): DeleteResult = {
@@ -4229,7 +4054,7 @@ object Versioned {
         s"versioned deleteWhereDV: no committed version at $path")
       txn.flatMap(findTxn(path, _, base)) match {
         case Some(v) =>
-          return DeleteResult(v, -1, -1, -1L) // replay: already done
+          return DeleteResult(v, -1L) // replay: already done
         case None => ()
       }
       val m = readManifest(path, base)
@@ -4240,7 +4065,7 @@ object Versioned {
       // the predicate carries an indexed point lookup (dmlLiveRows);
       // the deleted-row count is observed on that same write
       val mask = stageMask(path, hitRows(m)).getOrElse(
-        return DeleteResult(base, 0, m.dataDirs.size, 0L)) // no commit
+        return DeleteResult(base, 0L)) // no commit
       val next = Manifest(base + 1, "delete-dv", m.dataDirs, txn,
         m.schemaDdl, ts = Some(System.currentTimeMillis()),
         constraints = m.constraints, dvDirs = m.dvDirs :+ mask.id,
@@ -4260,8 +4085,7 @@ object Versioned {
           pre.withColumn("ct", lit("delete"))
             .select((cols.map(col) :+ col("ct")): _*),
           path, next.version)
-        return DeleteResult(next.version, 0, m.dataDirs.size,
-          mask.rows)
+        return DeleteResult(next.version, mask.rows)
       }
       // else: a commit landed at base+1 first — drop the staged mask
       // (it was derived against a stale head) and re-derive
@@ -4328,10 +4152,8 @@ object Versioned {
     * new data dir, both published in ONE atomic manifest (mode
     * `update-dv`). Bytes written ∝ matched rows — updating one
     * tenant's rows in a 100 TB table stages the mask plus the
-    * rewritten rows, never the table (the overwrite-commit shape
-    * [[merge]] uses would). ZERO existing files rewritten; the
-    * accounting returns rewrittenDirs == 0 and deletedRows = rows
-    * updated.
+    * rewritten rows, never the table. ZERO existing files rewritten;
+    * deletedRows counts the rows updated.
     *
     * SQL UPDATE semantics: rows where the predicate is NULL are
     * untouched (only TRUE updates); assignment values cast to the
@@ -4400,7 +4222,7 @@ object Versioned {
         s"versioned updateWhereDV: no committed version at $path")
       txn.flatMap(findTxn(path, _, base)) match {
         case Some(v) =>
-          return DeleteResult(v, -1, -1, -1L) // replay: already done
+          return DeleteResult(v, -1L) // replay: already done
         case None => ()
       }
       val m = readManifest(path, base)
@@ -4420,7 +4242,7 @@ object Versioned {
       // identical first job to [[deleteWhereDV]], bloom-pruned the
       // same way, the updated-row count observed on the write
       val mask = stageMask(path, hitRows(m)).getOrElse(
-        return DeleteResult(base, 0, m.dataDirs.size, 0L)) // no commit
+        return DeleteResult(base, 0L)) // no commit
       // post-image from the staged mask: assignments applied, casts
       // to the declared column types (SQL UPDATE semantics), staged
       // as this commit's data dir under PHYSICAL names
@@ -4459,8 +4281,7 @@ object Versioned {
         // the post-image dir inherits the head's indexes (the
         // update-DV dir the r14 advice named)
         retrofitIndexes(spark, path, Some(m), dataId)
-        return DeleteResult(next.version, 0, m.dataDirs.size,
-          mask.rows)
+        return DeleteResult(next.version, mask.rows)
       }
       // lost the race: both staged dirs were derived against a stale
       // head — drop them and re-derive
@@ -4694,33 +4515,30 @@ object Versioned {
 
   /** Apply one batch of an APPLYABLE change feed ([[changeFeed]]
     * rows: keys + new non-key values + `change_type`) as one
-    * [[merge]] commit — insert/update rows upsert, delete rows
-    * remove their key. With a txn token this is the exactly-once
-    * streaming CDC apply: the mirror IS a versioned table, every
-    * micro-batch one atomic snapshot, replays deduplicated by the
-    * manifest ledger. */
+    * [[mergeDV]] commit — insert/update rows upsert, delete rows
+    * remove their key. Each batch lands as a mask plus one batch-sized
+    * dir, so frequent micro-batches into a large mirror write
+    * megabytes, not the table; [[compact]] the mirror periodically to
+    * fold the accumulated masks and dirs. With a txn token this is
+    * the exactly-once streaming CDC apply: the mirror IS a versioned
+    * table, every micro-batch one atomic snapshot, replays
+    * deduplicated by the manifest ledger. */
   def applyChangeFeed(spark: SparkSession, path: String, feed: DataFrame,
       keys: Seq[String], txn: Option[String] = None): Int = {
-    import org.apache.spark.sql.functions.col
-    merge(spark, path, feed, keys, txn,
-      deleteWhen = Some(col("change_type") === "delete"))
-  }
-
-  /** [[applyChangeFeed]] with [[mergeDV]]'s cost model: each batch
-    * lands as one mask-plus-batch-dir commit instead of a full-table
-    * rewrite — THE apply path for frequent micro-batches into a large
-    * mirror (a thousand 1k-row batches into a 100 TB mirror write
-    * megabytes, not 100 PB); [[compact]] the mirror periodically to
-    * fold the accumulated masks and dirs. Exactly-once under replay
-    * via the same txn ledger. */
-  def applyChangeFeedDV(spark: SparkSession, path: String,
-      feed: DataFrame, keys: Seq[String],
-      txn: Option[String] = None): Int = {
     import org.apache.spark.sql.functions.col
     mergeDV(spark, path, feed, keys, txn,
       deleteWhen = Some(col("change_type") === "delete"))
   }
 
+  /** APPLYABLE change feed: like [[changes]] but each insert/update
+    * row carries the NEW (vTo-side) non-key values — what a
+    * downstream MERGE actually consumes — and `unchanged` rows are
+    * omitted (a feed that re-ships the whole table defeats CDC).
+    * Delete rows carry null non-key values; the key plus
+    * `change_type` is all a delete needs. Same single full-outer
+    * key join as [[changes]]; the vTo values ride the join, so the
+    * new snapshot is still read exactly once. Same key-uniqueness
+    * precondition as [[changes]]. */
   def changeFeed(spark: SparkSession, path: String, vFrom: Int, vTo: Int,
       keys: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions._

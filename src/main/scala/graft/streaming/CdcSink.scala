@@ -1,89 +1,42 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Streaming CDC APPLY: consumes an applyable change feed
   * ([[graft.sources.Versioned.changeFeed]] rows — key columns, new
   * non-key values, `change_type` ∈ insert/update/delete) and MERGEs
-  * each micro-batch into a keyed parquet mirror, so a downstream
+  * each micro-batch into a keyed VERSIONED mirror, so a downstream
   * serving table tracks the versioned source without ever re-reading
   * its snapshots.
   *
   * Semantics per batch: rows whose key appears in the batch leave
   * the mirror (delete), then the batch's insert/update rows come
-  * back with their new values — i.e. `MERGE ... WHEN MATCHED
-  * UPDATE/DELETE WHEN NOT MATCHED INSERT`, expressed as one
-  * left-anti join plus a union. The apply is IDEMPOTENT (re-applying
-  * a feed to a converged mirror is a fixpoint), which is what makes
-  * foreachBatch's at-least-once replay safe here. Mirror mechanics
-  * (full rewrite + atomic directory swap) are shared with
-  * [[UpsertSink]] — at warehouse scale a table format's MERGE
-  * replaces the rewrite; this object is the seam.
+  * back with their new values — `MERGE ... WHEN MATCHED
+  * UPDATE/DELETE WHEN NOT MATCHED INSERT` as one
+  * [[graft.sources.Versioned.applyChangeFeed]] commit: the matched
+  * rows are masked and the batch appends as one dir, so each
+  * micro-batch writes bytes ∝ the batch, never the mirror.
   */
 object CdcSink {
 
-  /** Start the apply stream. The mirror at `targetDir` must exist
-    * (seed it from the snapshot the feed starts at). */
-  def start(feed: DataFrame, keys: Seq[String], targetDir: String,
-      checkpointDir: String): StreamingQuery =
-    feed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyBatch(batch, keys, targetDir)
-      }
-      .outputMode("append")
-      .start()
-
-  /** Start the apply stream against a VERSIONED mirror: every
-    * micro-batch of the change feed becomes one atomic
-    * [[Versioned.merge]] overwrite commit carrying the idempotence
-    * token `<appId>:<batchId>` — so the mirror is a real versioned
-    * table (time travel across applied batches comes free), replays
-    * are deduplicated by the manifest ledger (exactly-once, not just
+  /** Start the apply stream against a versioned mirror (seed it from
+    * the snapshot the feed starts at): every micro-batch becomes one
+    * atomic commit carrying the idempotence token `<appId>:<batchId>`
+    * — so the mirror is a real versioned table (time travel across
+    * applied batches comes free), foreachBatch replays are
+    * deduplicated by the manifest ledger (exactly-once, not just
     * idempotent-converging), and a concurrent committer on the mirror
-    * is handled by merge's optimistic re-derive instead of the
-    * rewrite-and-swap race window. This is how a lakehouse CDC
-    * pipeline actually lands; [[start]]'s plain-parquet mirror
-    * remains the format-less seam. */
+    * is handled by the merge's optimistic re-derive. `compact` the
+    * mirror on a cadence to fold the accumulated masks and dirs. */
   def startVersioned(feed: DataFrame, keys: Seq[String], tablePath: String,
-      appId: String, checkpointDir: String,
-      mergeOnRead: Boolean = false): StreamingQuery =
+      appId: String, checkpointDir: String): StreamingQuery =
     feed.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // mergeOnRead flips the per-batch cost model: classic merge
-        // rewrites the whole mirror each micro-batch (fine small,
-        // fatal at 100 TB); the DV apply stages only the batch + a
-        // row mask (Versioned.applyChangeFeedDV) — compact() the
-        // mirror on a cadence to fold masks and dirs back down
-        if (mergeOnRead)
-          graft.sources.Versioned.applyChangeFeedDV(batch.sparkSession,
-            tablePath, batch, keys, txn = Some(s"$appId:$batchId")): Unit
-        else
-          graft.sources.Versioned.applyChangeFeed(batch.sparkSession,
-            tablePath, batch, keys, txn = Some(s"$appId:$batchId")): Unit
+        graft.sources.Versioned.applyChangeFeed(batch.sparkSession,
+          tablePath, batch, keys, txn = Some(s"$appId:$batchId")): Unit
       }
       .outputMode("append")
       .start()
-
-  /** One micro-batch MERGE — also directly usable for batch CDC
-    * catch-up so stream and backfill share one code path. */
-  def applyBatch(batch: DataFrame, keys: Seq[String],
-      targetDir: String): Unit = {
-    require(Files.exists(Paths.get(targetDir)),
-      s"CdcSink: mirror $targetDir must be seeded before applying")
-    val spark = batch.sparkSession
-    val touched = batch.select(keys.map(col): _*).distinct()
-    val upserts = batch
-      .filter(col("change_type").isin("insert", "update"))
-      .drop("change_type")
-    val merged = spark.read.parquet(targetDir)
-      .join(touched, keys.toIndexedSeq, "left_anti")
-      .unionByName(upserts)
-    UpsertSink.swapInto(merged, targetDir)
-  }
 }

@@ -22,7 +22,7 @@ import graft.sources.Versioned
   * max, count-distinct) and needs no update pre-images, which this
   * feed (documented) does not carry.
   *
-  * Exactly-once: both merges are [[Versioned.merge]] commits carrying
+  * Exactly-once: both merges are [[Versioned.mergeDV]] commits carrying
   * distinct txn tokens (`<appId>:m:<batchId>` / `<appId>:a:<batchId>`).
   * A crash between the two replays the batch: the mirror merge
   * dedupes on its token, and the aggregate recompute re-derives the
@@ -49,7 +49,7 @@ object MaterializedAgg {
     // keys belonged to BEFORE the merge — a delete row carries null
     // non-keys (this feed stores no pre-images), so the vanished
     // row's group is only recoverable from the pre-batch mirror.
-    // Time travel makes that crash-safe: merge publishes at base+1,
+    // Time travel makes that crash-safe: mergeDV publishes at base+1,
     // so version vm-1 IS the state the batch applied against — and a
     // REPLAYED batch (txn dedup returns the original vm) reads the
     // same vm-1, keeping the recompute idempotent across the
@@ -79,7 +79,7 @@ object MaterializedAgg {
     // aggregate — the left join marks them with a null n_rows
     val updates = affected
       .join(recomputed, groupCols.toIndexedSeq, "left")
-    Versioned.merge(spark, aggPath, updates, groupCols,
+    Versioned.mergeDV(spark, aggPath, updates, groupCols,
       txn = Some(s"$appId:a:$batchId"),
       deleteWhen = Some(col("n_rows").isNull)): Unit
   }

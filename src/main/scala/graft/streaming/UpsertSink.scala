@@ -52,10 +52,10 @@ object UpsertSink {
     swapInto(merged, targetDir)
   }
 
-  /** Atomic directory swap shared with [[CdcSink]]: write `df` to a
-    * staging dir, then rename over `targetDir` — readers see the old
-    * table or the new one, never a half-written directory. */
-  private[streaming] def swapInto(df: DataFrame, targetDir: String): Unit = {
+  /** Atomic directory swap: write `df` to a staging dir, then rename
+    * over `targetDir` — readers see the old table or the new one,
+    * never a half-written directory. */
+  private def swapInto(df: DataFrame, targetDir: String): Unit = {
     val target = Paths.get(targetDir)
     val tmp = Paths.get(targetDir + ".__staging")
     rm(tmp)
@@ -67,7 +67,7 @@ object UpsertSink {
     rm(old)
   }
 
-  private[streaming] def rm(p: Path): Unit =
+  private def rm(p: Path): Unit =
     if (Files.exists(p)) {
       def loop(f: java.io.File): Unit = {
         Option(f.listFiles()).foreach(_.foreach(loop)); f.delete(); ()

@@ -84,12 +84,11 @@ class PlanSpec extends SparkSpec {
       // q_knn_classify rides bruteTopK — the same labeled brute-force
       // ANN baseline join as q_embed_topk
       "q_knn_classify",
-      // q_delete_where threads the 1-row deleted-stats aggregate of
-      // the change feed onto the 3-row summary via
+      // q_delete_dv threads the 1-row deleted-stats aggregate of the
+      // change feed onto the 3-row summary via
       // crossJoin(broadcast(feed)) — the standard fenced 1-row
-      // scalar-carrier (IdentityBroadcastMode over one row);
-      // q_delete_dv is its merge-on-read twin with the same carrier
-      "q_delete_where", "q_delete_dv",
+      // scalar-carrier (IdentityBroadcastMode over one row)
+      "q_delete_dv",
       // q_theilsen self-joins the calendar-bounded ≤181-row daily
       // frame on xa < xb (≤16k pairs) — a bounded frame×frame
       // carrier, never the fact table
@@ -178,6 +177,23 @@ class PlanSpec extends SparkSpec {
 
   test("every oracle query has a matching queries entry and vice versa") {
     assert(SparkEntry.oracleSql.keySet == SparkEntry.queries.keySet)
+  }
+
+  test("SURVEY §2 rows and PLANAUDIT.md rows name exactly the registry") {
+    // the row regexes of scripts/selfcheck.py's survey/planaudit syncs
+    def rows(file: String, re: String): Set[String] = re.r
+      .findAllMatchIn(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(file)))
+      .map(_.group(1)).toSet
+    val shipped = SparkEntry.queries.keySet
+    for ((file, re) <- Seq(
+        "SURVEY.md" -> """(?m)^\|\s*\d+\s*\|\s*`(q_?\w+)`""",
+        "PLANAUDIT.md" -> """(?m)^\|\s*(q(?:_\w+|\d+\w*))\s*\|""")) {
+      val documented = rows(file, re)
+      assert(documented == shipped, s"$file: rows not shipped " +
+        s"${(documented -- shipped).toSeq.sorted}, shipped rows missing " +
+        s"${(shipped -- documented).toSeq.sorted}")
+    }
   }
 
   // -------- r5/r6 row fences: the shapes their scale stories claim --------

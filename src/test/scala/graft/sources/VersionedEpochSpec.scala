@@ -38,8 +38,8 @@ class VersionedEpochSpec extends SparkSpec {
       overwrite = false) // v0 append
     Versioned.commit(Seq((2L, "b")).toDF("k", "v"), path,
       overwrite = false) // v1 append
-    Versioned.merge(spark, path, Seq((2L, "b2")).toDF("k", "v"),
-      Seq("k")) // v2 merge (overwrite-mode commit but feed-published)
+    Versioned.mergeDV(spark, path, Seq((2L, "b2")).toDF("k", "v"),
+      Seq("k")) // v2 merge (feed-published)
     assert(Versioned.feedEpoch(path, 2) == 0)
     Versioned.restore(path, 1) // v3: epoch bump
     assert(Versioned.feedEpoch(path, 3) == 1)
@@ -87,7 +87,7 @@ class VersionedEpochSpec extends SparkSpec {
     // v0 append + v1 merge (insert/update/delete all exercised)
     Versioned.commit(Seq((1L, "a"), (2L, "b"), (3L, "c"))
       .toDF("k", "v"), path, overwrite = false)
-    Versioned.merge(spark, path,
+    Versioned.mergeDV(spark, path,
       Seq((2L, "b2"), (3L, "dead"), (4L, "d")).toDF("k", "v"),
       Seq("k"), deleteWhen = Some(col("v") === "dead"))
     val b1 = Versioned.readChangesOrReseed(spark, path, 0, 1)

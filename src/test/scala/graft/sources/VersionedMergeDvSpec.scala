@@ -4,13 +4,13 @@ import graft.{JobCounter, SparkSpec}
 import org.apache.spark.sql.functions._
 
 /** MERGE with batch-proportional write amplification ([[Versioned
-  * .mergeDV]]). Load-bearing claims: bit-identical END STATE to the
-  * classic full-rewrite [[Versioned.merge]] on the same inputs, ZERO
-  * pre-existing data files rewritten (all carried dirs byte-
-  * identical; one new batch-sized dir + one mask sidecar), the same
-  * classified change feed, txn dedup, constraint enforcement on
-  * incoming rows, compact materializing the mask away, and the
-  * deterministic lost-race retry. */
+  * .mergeDV]]). Load-bearing claims: the exact expected END STATE
+  * (matched keys updated, deleteWhen'd keys removed, new keys
+  * inserted, the rest untouched), ZERO pre-existing data files
+  * rewritten (all carried dirs byte-identical; one new batch-sized
+  * dir + one mask sidecar), the classified change feed, txn dedup,
+  * constraint enforcement on incoming rows, compact materializing the
+  * mask away, and the deterministic lost-race retry. */
 class VersionedMergeDvSpec extends SparkSpec {
   import spark.implicits._
 
@@ -43,29 +43,28 @@ class VersionedMergeDvSpec extends SparkSpec {
       finally s.close()
     }.toSet
 
-  test("mergeDV end state is bit-identical to classic merge; zero files rewritten") {
-    val a = tmpTable(); val b = tmpTable()
-    seed(a); seed(b)
-    val beforeDirs = Versioned.dataDirIds(a, 1)
-    val before = dataFiles(a, beforeDirs)
-    Versioned.merge(spark, a, batch(), Seq("k"),
-      deleteWhen = Some(col("v") === "DEAD"))
+  test("mergeDV end state is the expected snapshot; zero files rewritten") {
+    val b = tmpTable()
+    seed(b)
+    val beforeDirs = Versioned.dataDirIds(b, 1)
+    val before = dataFiles(b, beforeDirs)
     val vb = Versioned.mergeDV(spark, b, batch(), Seq("k"),
       deleteWhen = Some(col("v") === "DEAD"))
-    val sa = Versioned.read(spark, a).as[(Long, String)].collect().toSet
     val sb = Versioned.read(spark, b).as[(Long, String)].collect().toSet
-    assert(sa == sb)
-    assert(sb.contains((10L, "updated10")) && sb.contains((200L, "new200")))
-    assert(!sb.exists(_._1 == 20L) && !sb.exists(_._1 == 70L))
+    // the six batch rows: 10 and 60 updated, 200 inserted, 20 and 70
+    // deleted, 300 (absent + deleteWhen) a no-op; the rest untouched
+    val want = (1L to 100L).filterNot(Set(10L, 60L, 20L, 70L))
+      .map(k => (k, s"v$k")).toSet ++
+      Set((10L, "updated10"), (60L, "updated60"), (200L, "new200"))
+    assert(sb == want)
+    // the pre-merge snapshot still time-travels
+    assert(Versioned.read(spark, b, Some(1)).as[(Long, String)]
+      .collect().toSet == (1L to 100L).map(k => (k, s"v$k")).toSet)
     // accounting: both seed dirs carried BY REFERENCE, byte-identical;
     // exactly one new (batch-sized) dir; one mask dir
     val afterDirs = Versioned.dataDirIds(b, vb)
-    assert(afterDirs.take(2) == beforeDirs.toList ||
-      afterDirs.toSet.intersect(
-        Versioned.dataDirIds(b, 1).toSet).size == 2)
-    assert(dataFiles(b, Versioned.dataDirIds(b, 1))
-      == dataFiles(b, afterDirs.filter(
-        Versioned.dataDirIds(b, 1).contains)))
+    assert(afterDirs.take(2) == beforeDirs)
+    assert(dataFiles(b, afterDirs.filter(beforeDirs.contains)) == before)
     assert(afterDirs.size == 3)
     assert(Versioned.dvDirIds(b, vb).size == 1)
   }
@@ -93,27 +92,22 @@ class VersionedMergeDvSpec extends SparkSpec {
     // its key still leaves via the touched set — the row is DELETED;
     // the feed must say so (a ct=update here silently diverged any
     // mirror applying the feed). Absent-key NULL rows are no-ops.
-    def check(path: String,
-        doMerge: (String, org.apache.spark.sql.DataFrame) => Int): Unit = {
-      Versioned.commit(Seq((1L, Option("a")), (2L, Option("b")))
-        .toDF("k", "v"), path, overwrite = false)
-      // del flag: NULL for existing k=2 and absent k=9; true for k=1
-      val batch = Seq((1L, Option("x"), Option(true)),
-        (2L, Option("y"), Option.empty[Boolean]),
-        (9L, Option("z"), Option.empty[Boolean]))
-        .toDF("k", "v", "del")
-      val v = doMerge(path, batch)
-      // table: both existing keys deleted, nothing inserted
-      assert(Versioned.read(spark, path).count() == 0)
-      val feed = Versioned.readChanges(spark, path, v, v)
-        .select("k", "_change_type").as[(Long, String)].collect().toSet
-      assert(feed == Set((1L, "delete"), (2L, "delete")),
-        s"feed must match the data path, got $feed")
-    }
-    check(tmpTable(), (p, b) => Versioned.merge(spark, p, b, Seq("k"),
-      deleteWhen = Some(col("del"))))
-    check(tmpTable(), (p, b) => Versioned.mergeDV(spark, p, b, Seq("k"),
-      deleteWhen = Some(col("del"))))
+    val path = tmpTable()
+    Versioned.commit(Seq((1L, Option("a")), (2L, Option("b")))
+      .toDF("k", "v"), path, overwrite = false)
+    // del flag: NULL for existing k=2 and absent k=9; true for k=1
+    val batch = Seq((1L, Option("x"), Option(true)),
+      (2L, Option("y"), Option.empty[Boolean]),
+      (9L, Option("z"), Option.empty[Boolean]))
+      .toDF("k", "v", "del")
+    val v = Versioned.mergeDV(spark, path, batch, Seq("k"),
+      deleteWhen = Some(col("del")))
+    // table: both existing keys deleted, nothing inserted
+    assert(Versioned.read(spark, path).count() == 0)
+    val feed = Versioned.readChanges(spark, path, v, v)
+      .select("k", "_change_type").as[(Long, String)].collect().toSet
+    assert(feed == Set((1L, "delete"), (2L, "delete")),
+      s"feed must match the data path, got $feed")
   }
 
   test("mergeDV chains with DV deletes, compact materializes everything away") {

@@ -51,14 +51,14 @@ class VersionedMetaSpec extends SparkSpec {
     // a clean append passes
     Versioned.commit(Seq((3L, "c", 30L)).toDF("k", "name", "amt"),
       path, overwrite = false)
-    // a violating merge (an OVERWRITE commit) is rejected too — the
-    // constraint metadata survived the overwrite path
+    // a violating merge is rejected too — the merge gates its
+    // incoming rows on the ledger's constraints
     val mErr = intercept[IllegalArgumentException](
-      Versioned.merge(spark, path,
+      Versioned.mergeDV(spark, path,
         Seq((2L, "b", -1L)).toDF("k", "name", "amt"), Seq("k")))
     assert(mErr.getMessage.contains("amt >= 0"))
     // a clean merge carries the ledger forward
-    Versioned.merge(spark, path,
+    Versioned.mergeDV(spark, path,
       Seq((2L, "b", 25L)).toDF("k", "name", "amt"), Seq("k"))
     assert(Versioned.constraints(path) == Seq("amt >= 0"))
     Versioned.compact(spark, path, targetFiles = 1)

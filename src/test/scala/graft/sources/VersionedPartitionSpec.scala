@@ -12,9 +12,8 @@ import scala.jdk.CollectionConverters._
   * row-exact (the partition column re-derives from directory names —
   * a flat explicit-schema read would silently null it),
   * readPartitionPruned skips whole partition directories BEFORE IO
-  * yet stays row-exact across mixed layouts, row-level deletes (both
-  * copy-on-write and deletion-vector) compose, and
-  * restore/clone/time-travel carry the specs. */
+  * yet stays row-exact across mixed layouts, deletion-vector deletes
+  * compose, and restore/clone/time-travel carry the specs. */
 class VersionedPartitionSpec extends SparkSpec {
   import spark.implicits._
 
@@ -85,32 +84,11 @@ class VersionedPartitionSpec extends SparkSpec {
     assert(grpDf.count() == (1L to 90L).count(k => k % 3 == 0))
   }
 
-  test("deleteWhere rewrites a partitioned dir correctly (copy-on-write)") {
-    val path = tmpTable()
-    Versioned.commitPartitioned(rows(1, 60), path, "grp")
-    Versioned.commit(rows(61, 100), path, overwrite = false)
-    val r = Versioned.deleteWhere(spark, path,
-      col("grp") === "g1" && col("k") <= 60L)
-    assert(r.deletedRows == (1L to 60L).count(_ % 3 == 1).toLong)
-    // the rewritten (ex-partitioned) dir lost its spec; content exact
-    assert(Versioned.partSpecIds(path, r.version).isEmpty
-      || !Versioned.partSpecIds(path, r.version).values.exists(_ == "grp"))
-    val got = Versioned.read(spark, path)
-      .as[(Long, String, Long)].collect().toSet
-    val want = (1L to 100L).map(k => (k, s"g${k % 3}", k * 10))
-      .filterNot { case (k, g, _) => g == "g1" && k <= 60 }.toSet
-    assert(got == want)
-    // pre-image feed rows carry the partition column's values
-    val feed = Versioned.readChanges(spark, path, r.version, r.version)
-    assert(feed.filter(col("_change_type") === "delete")
-      .select("grp").as[String].collect().toSet == Set("g1"))
-  }
-
   test("deletion vectors mask rows inside a partitioned dir; feed keeps the column") {
     val path = tmpTable()
     Versioned.commitPartitioned(rows(1, 60), path, "grp")
     val r = Versioned.deleteWhereDV(spark, path, col("k") === 7L)
-    assert(r.version == 1 && r.rewrittenDirs == 0 && r.deletedRows == 1L)
+    assert(r.version == 1 && r.deletedRows == 1L)
     val got = Versioned.read(spark, path).select("k")
       .as[Long].collect().toSet
     assert(!got.contains(7L) && got.size == 59)

@@ -94,17 +94,17 @@ class VersionedRepairSpec extends SparkSpec {
 
   test("deletion vectors work for a table rooted under a '/data/' path") {
     // files land at <root>/data/t/data/<dir>/<file> — a first-match
-    // '/data/' regex would yield rel 't/data/<dir>/<file>' and
-    // deleteWhere's touched-dir / file reconstruction would miss
+    // '/data/' regex would yield rel 't/data/<dir>/<file>' and the
+    // mask's file keys would miss
     val root = Files.createTempDirectory("graft_data").toString
     val path = s"$root/data/t"
     Versioned.commit(rows(1, 20), path, overwrite = false)
     val r = Versioned.deleteWhereDV(spark, path, col("k") === 7L)
-    assert(r.deletedRows == 1L && r.rewrittenDirs == 0)
+    assert(r.deletedRows == 1L)
     val got = Versioned.read(spark, path).select("k").as[Long].collect().toSet
     assert(!got.contains(7L) && got.size == 19)
-    // copy-on-write delete exercises the touched-dir extraction
-    val r2 = Versioned.deleteWhere(spark, path, col("k") === 8L)
+    // a second delete reads through the first mask and grows the chain
+    val r2 = Versioned.deleteWhereDV(spark, path, col("k") === 8L)
     assert(r2.deletedRows == 1L)
     assert(Versioned.read(spark, path).count() == 18)
   }

@@ -379,20 +379,6 @@ class VersionedSpec extends SparkSpec {
     assert(err.getMessage.contains("restore"))
   }
 
-  test("merge upserts matched keys, inserts new ones, keeps the rest; one overwrite commit") {
-    val path = tmpTable()
-    Versioned.commit(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v"),
-      path, overwrite = false)
-    val v = Versioned.merge(spark, path,
-      Seq((2L, "B"), (9L, "Z")).toDF("k", "v"), Seq("k"))
-    assert(v == 1)
-    assert(Versioned.read(spark, path).as[(Long, String)].collect()
-      .toSet == Set((1L, "a"), (2L, "B"), (3L, "c"), (9L, "Z")))
-    // pre-merge snapshot still time-travels
-    assert(Versioned.read(spark, path, Some(0)).as[(Long, String)]
-      .collect().toSet == Set((1L, "a"), (2L, "b"), (3L, "c")))
-  }
-
   test("applyChangeFeed converges a versioned mirror to the source head") {
     // source: v0 -> v1 with an update, a delete, and an insert
     val src = tmpTable()
@@ -422,20 +408,26 @@ class VersionedSpec extends SparkSpec {
   test("merge never drops a concurrent append: stale base aborts, retry re-derives") {
     val path = tmpTable()
     Versioned.commit(Seq((1L, "a")).toDF("k", "v"), path, overwrite = false)
-    val base = Versioned.latestVersion(path)
-    // a racer lands an append AFTER the merge-side caller read base
-    Versioned.commit(Seq((5L, "racer")).toDF("k", "v"), path,
-      overwrite = false)
-    // the stale read-modify-write must be REJECTED, not published
-    val stale = Versioned.read(spark, path, Some(base))
-      .unionByName(Seq((2L, "m")).toDF("k", "v"))
-    assert(Versioned.commitIfBase(stale, path, overwrite = true,
-      txn = None, base = base).isEmpty)
-    // the public merge re-derives internally: both the racer's row
-    // and the merge effect survive
-    Versioned.merge(spark, path, Seq((2L, "m")).toDF("k", "v"), Seq("k"))
-    assert(Versioned.read(spark, path).as[(Long, String)].collect()
-      .toSet == Set((1L, "a"), (5L, "racer"), (2L, "m")))
+    // a racer lands an append INSIDE the merge's derive→publish
+    // window: the first publish must lose, and the retry re-derives
+    // from the new head instead of publishing stale work
+    var fired = false
+    Versioned.prePublishHook = () => {
+      if (!fired) {
+        fired = true
+        Versioned.commit(Seq((5L, "racer")).toDF("k", "v"), path,
+          overwrite = false): Unit
+      }
+    }
+    try {
+      val v = Versioned.mergeDV(spark, path,
+        Seq((2L, "m")).toDF("k", "v"), Seq("k"))
+      assert(fired, "race hook never fired")
+      assert(v == 2)
+      // both the racer's row and the merge effect survive
+      assert(Versioned.read(spark, path).as[(Long, String)].collect()
+        .toSet == Set((1L, "a"), (5L, "racer"), (2L, "m")))
+    } finally Versioned.prePublishHook = () => ()
   }
 
   test("clustered commits carry their index: time travel with file skipping") {

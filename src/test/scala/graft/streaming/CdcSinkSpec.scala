@@ -2,7 +2,6 @@ package graft.streaming
 
 import graft.SparkSpec
 import graft.sources.Versioned
-import org.apache.spark.sql.functions._
 
 class CdcSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -10,48 +9,13 @@ class CdcSinkSpec extends SparkSpec {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  test("applyBatch merges insert/update/delete into a seeded mirror") {
-    val mirror = tmp("graft_cdc_mirror")
-    Seq((1L, "a", 10), (2L, "b", 20), (3L, "c", 30)).toDF("k", "v", "n")
-      .write.mode("overwrite").parquet(mirror)
-    val batch = Seq(
-      (2L, Some("B"), Some(99), "update"),
-      (3L, Option.empty[String], Option.empty[Int], "delete"),
-      (4L, Some("d"), Some(40), "insert")).toDF("k", "v", "n", "change_type")
-    CdcSink.applyBatch(batch, Seq("k"), mirror)
-    val got = spark.read.parquet(mirror)
-      .as[(Long, String, Int)].collect().toSet
-    assert(got == Set((1L, "a", 10), (2L, "B", 99), (4L, "d", 40)))
-  }
-
-  test("applyBatch is idempotent: re-applying a feed is a fixpoint") {
-    val mirror = tmp("graft_cdc_mirror")
-    Seq((1L, "a"), (2L, "b")).toDF("k", "v")
-      .write.mode("overwrite").parquet(mirror)
-    val batch = Seq((2L, Some("B"), "update"),
-      (1L, Option.empty[String], "delete"),
-      (5L, Some("e"), "insert")).toDF("k", "v", "change_type")
-    CdcSink.applyBatch(batch, Seq("k"), mirror)
-    val once = spark.read.parquet(mirror).as[(Long, String)].collect().toSet
-    CdcSink.applyBatch(batch, Seq("k"), mirror)
-    val twice = spark.read.parquet(mirror).as[(Long, String)].collect().toSet
-    assert(once == Set((2L, "B"), (5L, "e")))
-    assert(twice == once, "replayed micro-batch must converge")
-  }
-
-  test("applyBatch refuses an unseeded mirror") {
-    val batch = Seq((1L, Some("a"), "insert")).toDF("k", "v", "change_type")
-    intercept[IllegalArgumentException] {
-      CdcSink.applyBatch(batch, Seq("k"), tmp("graft_cdc_gone") + "/nope")
-    }
-  }
-
   test("merge-on-read streamed apply: versioned mirror converges with batch-proportional commits") {
-    // same end-to-end shape as the classic test below, but the mirror
-    // is a VERSIONED table and every micro-batch lands through
-    // mergeDV: one new data dir + (maybe) one mask dir per batch, the
-    // seed dir NEVER rewritten — and a checkpoint replay adds nothing
-    // (txn ledger exactly-once)
+    // end-to-end: versioned commits → applyable feed staged as a log
+    // dir → file-source readStream → CdcSink → versioned mirror == v1
+    // exactly. Every micro-batch lands through mergeDV: one new data
+    // dir + (maybe) one mask dir per batch, the seed dir NEVER
+    // rewritten — and a checkpoint replay adds nothing (txn ledger
+    // exactly-once)
     val table = tmp("graft_cdcdv_table")
     Versioned.commit((0L until 40L).map(k => (k, k % 5, s"r$k"))
       .toDF("k", "grp", "v"), table, overwrite = false)
@@ -74,8 +38,7 @@ class CdcSinkSpec extends SparkSpec {
       val q = CdcSink.startVersioned(
         spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(feedDir),
-        Seq("k"), mirror, appId = "cdcdv", checkpointDir = ckpt,
-        mergeOnRead = true)
+        Seq("k"), mirror, appId = "cdcdv", checkpointDir = ckpt)
       try q.processAllAvailable() finally q.stop()
     }
     run()
@@ -102,37 +65,5 @@ class CdcSinkSpec extends SparkSpec {
       Versioned.dataDirIds(mirror, vc).size == 1)
     assert(Versioned.read(spark, mirror)
       .as[(Long, Long, String)].collect().toSet == want)
-  }
-
-  test("streamed changeFeed apply converges the mirror to the target snapshot") {
-    // end-to-end: versioned commits → applyable feed staged as a log
-    // dir → file-source readStream → CdcSink → mirror == v1 exactly
-    val table = tmp("graft_cdc_table")
-    Versioned.commit((0L until 50L).map(k => (k, k % 7, s"r$k"))
-      .toDF("k", "grp", "v"), table, overwrite = false)
-    // v1: drop grp 0, revalue grp 1, insert 10 fresh keys
-    val v1 = (0L until 50L).filter(_ % 7 != 0)
-      .map(k => (k, k % 7, if (k % 7 == 1) s"R$k" else s"r$k")) ++
-      (100L until 110L).map(k => (k, 9L, s"new$k"))
-    Versioned.commit(v1.toDF("k", "grp", "v"), table, overwrite = true)
-
-    val feedDir = tmp("graft_cdc_feed")
-    Versioned.changeFeed(spark, table, 0, 1, Seq("k"))
-      .write.mode("overwrite").parquet(feedDir)
-    val mirror = tmp("graft_cdc_m2") + "/mirror"
-    Versioned.read(spark, table, Some(0))
-      .write.mode("overwrite").parquet(mirror)
-
-    val schema = spark.read.parquet(feedDir).schema
-    val q = CdcSink.start(
-      spark.readStream.schema(schema).parquet(feedDir),
-      Seq("k"), mirror, tmp("graft_cdc_ckpt"))
-    try q.processAllAvailable() finally q.stop()
-
-    val got = spark.read.parquet(mirror)
-      .as[(Long, Long, String)].collect().toSet
-    val want = Versioned.read(spark, table, Some(1))
-      .as[(Long, Long, String)].collect().toSet
-    assert(got == want, "mirror after CDC apply must BE v1")
   }
 }
