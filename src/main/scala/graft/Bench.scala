@@ -33,9 +33,10 @@ object Bench {
             false
           }
         val elapsed = (System.nanoTime() - t0) / 1e9
+        val timing = Timing(name, elapsed, ok,
+          GraftSession.gcMillis() - gc0, GraftSession.jitMillis() - jit0)
         GraftSession.isolate(spark)
-        Timing(name, elapsed, ok, GraftSession.gcMillis() - gc0,
-          GraftSession.jitMillis() - jit0)
+        timing
       }
     // TWO timed passes; the graded number per query is the MIN of the
     // two. One pass cannot distinguish a position burst (GC pause,

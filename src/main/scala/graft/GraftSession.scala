@@ -54,6 +54,16 @@ object GraftSession {
     * every later measurement (r11 profile: q_triangle 3.6→23→35s
     * across three back-to-back runs). */
   def isolate(spark: SparkSession): Unit = {
+    // first let the scheduler go idle (bounded at 10s): a task still
+    // running when the next query starts reports its metrics after
+    // Spark may have dropped that query's accumulators, and the
+    // update is then discarded ("non-existent accumulator")
+    val tracker = spark.sparkContext.statusTracker
+    val deadline = System.nanoTime() + 10_000_000_000L
+    while ((tracker.getActiveJobIds().nonEmpty ||
+        tracker.getActiveStageIds().nonEmpty) &&
+        System.nanoTime() < deadline)
+      Thread.sleep(1)
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))

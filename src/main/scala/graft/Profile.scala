@@ -46,9 +46,10 @@ object Profile {
         val t0 = System.nanoTime()
         GraftSession.drain(fn(spark, sfDir))
         val t = (System.nanoTime() - t0) / 1e9
-        GraftSession.isolate(spark)
-        (t, load0, GraftSession.gcMillis() - gc0,
+        val timing = (t, load0, GraftSession.gcMillis() - gc0,
           GraftSession.jitMillis() - jit0)
+        GraftSession.isolate(spark)
+        timing
       }
       println(f"[profile] $name%-24s " +
         times.map(t => f"${t._1}%.2f").mkString(" ") +

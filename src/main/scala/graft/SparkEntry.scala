@@ -39,6 +39,20 @@ object SparkEntry {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.fanned(t(s, dir, "documents"), slotBytes = Tables.textSlotBytes)
 
+  /** The full name `q_name_split` and `q_comprobar` derive from a
+    * document: its first 2-5 tokens (by `doc_id`), with the
+    * reference's particles injected (the → de, a → la, of → del,
+    * to → los) so every dispatch arm of the name split is exercised,
+    * upper-cased and space-joined. */
+  private def docFullName: Column = {
+    val toks = TF.tokens(col("text"))
+    val k = (col("doc_id") % 4 + 2).cast("int")
+    val mapped = transform(slice(toks, lit(1), k), t =>
+      when(t === "the", "de").when(t === "a", "la")
+        .when(t === "of", "del").when(t === "to", "los").otherwise(t))
+    upper(array_join(mapped, " "))
+  }
+
   /** The embeddings corpus with a SIZE-FLOORED [[Tables.fanned]] scan
     * fan-out: the ANN paths broadcast the query side against the
     * corpus scan, so a single-split file serializes all vector
@@ -5349,12 +5363,7 @@ object SparkEntry {
     // are derived from document tokens with the reference's particles
     // injected so every dispatch arm is exercised.
     "q_name_split" -> ((s, dir) => {
-      val toks = TF.tokens(col("text"))
-      val k = (col("doc_id") % 4 + 2).cast("int")
-      val mapped = transform(slice(toks, lit(1), k), t =>
-        when(t === "the", "de").when(t === "a", "la")
-          .when(t === "of", "del").when(t === "to", "los").otherwise(t))
-      val name = upper(array_join(mapped, " "))
+      val name = docFullName
       val d = docs(s, dir)
         .select(col("doc_id"), name.as("nombre_completo"))
         .withColumn("p", Names.splitFullName(col("nombre_completo")))
@@ -5373,12 +5382,7 @@ object SparkEntry {
     // lookup is orders keyed by customer (dedup-first before the
     // join, like the reference's drop_duplicates(subset='documento')).
     "q_comprobar" -> ((s, dir) => {
-      val toks = TF.tokens(col("text"))
-      val k = (col("doc_id") % 4 + 2).cast("int")
-      val mapped = transform(slice(toks, lit(1), k), t =>
-        when(t === "the", "de").when(t === "a", "la")
-          .when(t === "of", "del").when(t === "to", "los").otherwise(t))
-      val name = upper(array_join(mapped, " "))
+      val name = docFullName
       val capital = docs(s, dir)
         .select(col("doc_id").as("doc"), name.as("nombre_completo"))
       // partial-coverage lookup (reference: dfBases covers only some
@@ -7010,7 +7014,7 @@ object SparkEntry {
     // the nested field under the explicit read schema); the next
     // INSERT populates it; and `UPDATE … SET meta.flag = …` exercises
     // nested-field assignment (GraftSqlDml.composeSet — a struct
-    // rebuild via withField, so merge-on-read masks/feed/constraints
+    // rebuild via UpdateFields, so merge-on-read masks/feed/constraints
     // see a plain whole-column update). The `evolved` flag gates the
     // REAL evidence: v0's struct provably lacking the field plus
     // exactly one 'meta' ledger mode. Oracle reconstructs the final
@@ -7052,10 +7056,10 @@ object SparkEntry {
 
     // 281: SQL DELETE WHERE … IN (subquery) driver-gated — the GDPR
     // erasure shape, the loudest former limit of the DML front door:
-    // the subplan (purchasing users with event_id % 10 = 0) executes
-    // DISTRIBUTED, its distinct key set replaces the IN as a native
-    // Catalyst In (bounded-or-loud driver materialization,
-    // GraftSqlDml.rewritePredicateSubqueries), and the delete lands
+    // the subplan (purchasing users with event_id % 10 = 0) plans as
+    // Catalyst's own distributed semi-join inside the mask write (the
+    // statement's resolved condition bound to the live rows by exprId,
+    // GraftSqlDml.hits — no key set is collected), and the delete lands
     // merge-on-read (one mask sidecar, zero dirs rewritten — the
     // ledger facts ride the checked output). The oracle reconstructs
     // the post-delete snapshot with the same NOT IN complement.

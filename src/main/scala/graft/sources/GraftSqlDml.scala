@@ -1,15 +1,17 @@
 package graft.sources
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, GraftBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, Cast, Coalesce, EqualTo, Exists, Expression, In, InSubquery, ListQuery, Literal, OuterReference, PredicateHelper, ScalarSubquery, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, AttributeSet, CaseWhen, Cast, Coalesce, EqualTo, Expression, GetStructField, GreaterThanOrEqual, In, Literal, NamedExpression, PredicateHelper, ScalarSubquery, UpdateFields, WithField}
+import org.apache.spark.sql.catalyst.optimizer.{PullupCorrelatedPredicates, RewriteCorrelatedScalarSubquery}
+import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti}
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.streaming.StreamingRelationV2
 import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
-import org.apache.spark.sql.functions.{coalesce, col, lit, when}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, StructField, StructType}
 
 /** SQL row-level DML for [[GraftCatalog]] tables — `DELETE FROM`,
   * `UPDATE`, and `MERGE INTO` as plain query text, each mapped onto
@@ -17,8 +19,8 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
   * write amplification — a 10-row UPDATE against a 100 TB table
   * stages a kilobyte mask plus ten rows, never the table):
   *
-  *  - `DELETE FROM g.t WHERE p`  → [[Versioned.deleteWhereDV]]
-  *  - `UPDATE g.t SET … WHERE p` → [[Versioned.updateWhereDV]]
+  *  - `DELETE FROM g.t WHERE p`  → the [[Versioned.deleteWhereDV]] core
+  *  - `UPDATE g.t SET … WHERE p` → the [[Versioned.updateWhereDV]] core
   *  - `MERGE INTO g.t USING s …` → [[Versioned.mergeDV]]
   *
   * Mechanism: Spark 4 analyzes these statements into fully-resolved
@@ -29,21 +31,26 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
   * .extraStrategies`, self-registered by [[GraftCatalog.register]]
   * and by every `loadTable`, or build-time via
   * [[graft.plans.GraftExtensions]]) intercepts the commands first and
-  * executes them through the engine. The resolved condition /
-  * assignment expressions are replayed against the engine's logical
-  * snapshot frames by NAME (attribute references rewritten to
-  * unresolved names — the engine frames carry exactly the manifest's
-  * logical columns), so every guard the Scala API enforces — CHECK
-  * constraints, type drift, column mapping, txn ledger, change feed —
-  * applies identically to SQL DML; nothing is re-implemented here.
+  * executes them through the engine, so every guard the Scala API
+  * enforces — CHECK constraints, type drift, column mapping, txn
+  * ledger, change feed — applies identically to SQL DML.
   *
-  * DELETE/UPDATE predicates may carry `IN (subquery)` / `EXISTS
-  * (subquery)` — the GDPR-erasure shape: the subplan executes
-  * distributed, its DISTINCT key set (bounded, loud past
-  * [[MaxInSetKeys]]) replaces the subquery as a native [[In]], and
-  * SQL's three-valued NOT-IN-with-NULLs semantics ride Catalyst's
-  * own In evaluation. Correlated EXISTS decorrelates when its
-  * correlation is one outer = inner equality.
+  * ONE binding rule carries the statement into the engine: the frame
+  * a primitive evaluates on (the live rows for DELETE/UPDATE scope,
+  * the staged pre-images for UPDATE post-images, the snapshot for
+  * MERGE) is wrapped in a Project that re-aliases its logical columns
+  * to the TARGET attributes' exprIds ([[bound]]; the `__dv_rel` /
+  * `__dv_pos` row ids pass through). The command's resolved
+  * expressions — condition, assignment values, clause conditions,
+  * and every subquery inside them with its OuterReferences — then
+  * bind unchanged, and Catalyst plans the subqueries as it would in
+  * any query: IN / NOT IN (three-valued), correlated EXISTS over any
+  * mix of equalities and ranges, correlated aggregates with the
+  * count bug handled, multi-column IN — as distributed joins, with
+  * nothing collected first. The scope is `Filter(condition, frame)`:
+  * only TRUE rows are hit, NULL keeps the row. The whole condition is
+  * also the live-rows prune hint, so a top-level `k = literal` still
+  * bloom-prunes the mask scan.
   *
   * `MERGE … WITH SCHEMA EVOLUTION` is supported end-to-end: the
   * table declares `AUTOMATIC_SCHEMA_EVOLUTION`, so the analyzer's
@@ -53,62 +60,19 @@ import org.apache.spark.sql.functions.{coalesce, col, lit, when}
   * guarded metadata commit — null-filled history, fresh physical
   * names, off-ladder drift loud) before the merge resolves.
   *
-  * Scalar subqueries are supported in DELETE/UPDATE WHERE, in UPDATE
-  * SET values, and in MERGE assignment values: UNCORRELATED ones
-  * execute once (distributed) and land as a literal (loud past one
-  * row); CORRELATED aggregate-shaped ones (`SET v = (SELECT max(x)
-  * FROM s WHERE s.k = t.k)`) decorrelate through [[scalarChainOf]] —
-  * the aggregate re-groups by the correlation keys, the per-key
-  * values become a bounded CASE chain, and the ELSE arm is the SAME
-  * aggregate over zero rows (NULL for max/sum but 0 for count — the
-  * classic count-bug — and the answer for NULL/unmatched keys).
-  *
-  * DELETE and UPDATE WHERE additionally carry a DISTRIBUTED
-  * SEMI-JOIN fallback ([[Versioned.deleteWhereDVJoin]] /
-  * [[Versioned.updateWhereDVJoin]] — nothing key-set-sized on the
-  * driver) for the subquery shapes the bounded IN-set rewrite
-  * cannot: an uncorrelated IN whose key set overflows
-  * [[MaxInSetKeys]] (the >1M-id GDPR erasure), correlated EXISTS
-  * with ANY number of outer = inner equality correlations, and
-  * correlated single-column IN — composite keys join as structs
-  * with null key fields filtered from both sides.
-  *
-  * MERGE clause conditions and ON source-only prefilters ride the
-  * SAME bounded rewrites (`WHEN MATCHED AND t.v IN (SELECT …)`):
-  * uncorrelated single-column IN as a native [[In]] set, correlated
-  * EXISTS over one OR MANY outer = inner equalities (composite keys
-  * probe as a struct-IN over the null-free inner tuple set — exact,
-  * because a NULL outer field witnesses nothing), and correlated /
-  * multi-column IN as an exact OR-of-ANDs literal chain
-  * ([[inChainOf]] — three-valued IN semantics preserved; bounded by
-  * [[MaxInChainKeys]], loud past it with the MERGE workaround
-  * named).
-  *
   * UPDATE and MERGE SET clauses assign NESTED struct fields
   * (`SET meta.flag = …`, any depth): [[composeSet]] rebuilds the top
-  * column via withField, so the merge-on-read primitives see a plain
+  * column via UpdateFields, so the merge-on-read primitives see a plain
   * whole-column update — masks, feed, and constraints unchanged.
   *
-  * NON-EQUALITY correlations (outer ranges, inequalities) ride the
-  * bounded EXISTS/IN chains: mixed conjuncts substitute each
-  * collected inner tuple's values (COALESCE-false wrapped — a NULL
-  * evaluation witnesses nothing), so `EXISTS (… WHERE s.th < t.v)`
-  * and range-correlated IN work everywhere the chain does. Those
-  * chains collect PRE-aggregation tuples, which is what makes the
-  * substitution sound. SCALAR subqueries aggregate first, so an
-  * outer-row-dependent conjunct cannot be applied to the per-key
-  * aggregate after the fact — [[scalarChainOf]] keeps non-equality
-  * correlations LOUD (equality + inner-only conjuncts only). Only
-  * the UNBOUNDED semi-join path is equality-only (a range cannot
-  * equi-join); past [[MaxInChainKeys]] tuples the chain is loud.
-  *
   * Loud, documented limits (each throws with the workaround named):
-  * non-aggregate correlated scalar subqueries, chain-context
-  * subqueries past [[MaxInChainKeys]] tuples (expression-size
-  * bound — a set that big is a join), MERGE conditions that are not
-  * (target-column = source-expression) equalities plus source-only
-  * prefilters, MERGE clauses that reassign an ON key column (or a
-  * field of one), and assignment targets inside arrays/maps.
+  * correlated scalar subqueries without an aggregate, MERGE ON
+  * conditions that are not (target-column = source-expression)
+  * equalities plus source-only prefilters, MERGE clauses that
+  * reassign an ON key column (or a field of one), more than one
+  * source row matching a target row when a WHEN MATCHED clause
+  * exists, duplicate SET targets, and assignment targets inside
+  * arrays/maps.
   */
 object GraftSqlDml extends PredicateHelper {
 
@@ -140,571 +104,63 @@ object GraftSqlDml extends PredicateHelper {
     throw new UnsupportedOperationException(
       s"GraftCatalog DML: $what is not supported — $fix")
 
-  private def requireNoSubquery(e: Expression, what: String): Unit =
-    e.foreach {
-      case _: SubqueryExpression => unsupported(s"$what with a subquery",
-        "materialize the subquery as a table (CREATE TABLE … AS " +
-          "SELECT) and MERGE/join against it")
+  private def fold(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
+
+  /** `plan`'s columns named like `out`'s attributes (folded), aliased
+    * to those attributes' exprIds — the re-aliasing half of the
+    * binding rule, shared with [[GraftStreamRewrite]]. */
+  private[sources] def aliasTo(plan: LogicalPlan,
+      out: Seq[Attribute]): Seq[NamedExpression] = {
+    val byFold = plan.output.map(a => fold(a.name) -> a).toMap
+    out.map(o => Alias(byFold(fold(o.name)), o.name)(exprId = o.exprId))
+  }
+
+  /** The binding rule: `frame` with its logical columns carrying the
+    * target attributes' exprIds; the `__dv_*` row ids pass through. */
+  private def bound(frame: DataFrame, out: Seq[Attribute]): LogicalPlan = {
+    val plan = frame.queryExecution.analyzed
+    Project(aliasTo(plan, out) ++
+      plan.output.filter(_.name.startsWith("__dv_")), plan)
+  }
+
+  /** A frame over a plan built from the command's resolved
+    * expressions. The optimizer has already run on the command, so a
+    * correlated scalar subquery arrives with its correlation pulled up
+    * into the subquery's grouping — a form analysis rejects — and
+    * Catalyst's own rewrite turns it into a join first; every other
+    * subquery analyzes as it is. */
+  private def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    GraftBridge.ofRows(spark, RewriteCorrelatedScalarSubquery(
+      PullupCorrelatedPredicates(plan)))
+
+  /** The DELETE/UPDATE scope over the live rows: the rows where the
+    * resolved condition is TRUE (Catalyst plans its subqueries). */
+  private def hits(spark: SparkSession, out: Seq[Attribute],
+      cond: Expression)(live: DataFrame): DataFrame =
+    frame(spark, Filter(cond, bound(live, out)))
+
+  /** `e` cast to the column type `dt`, named `name`. */
+  private def typed(e: Expression, dt: DataType,
+      name: String): NamedExpression = Alias(Cast(e, dt), name)()
+
+  /** Correlated scalar subqueries must aggregate: Catalyst would plan
+    * a non-aggregate one as a single join that fails only when a row
+    * meets two matches, a feature kept out of graft's DML. */
+  private def requireAggregatedScalars(es: Seq[Expression]): Unit = {
+    def aggregated(p: LogicalPlan): Boolean = p match {
+      case _: Aggregate => true
+      case Project(_, c) => aggregated(c)
+      case Filter(_, c) => aggregated(c)
+      case SubqueryAlias(_, c) => aggregated(c)
+      case _ => false
+    }
+    es.foreach(_.foreach {
+      case s: ScalarSubquery if (s.outerAttrs.nonEmpty ||
+          s.joinCond.nonEmpty) && !aggregated(s.plan) => unsupported(
+        "a correlated scalar subquery without an aggregate",
+        "aggregate it (max, min, first, …) so each row gets one value, " +
+          "or MERGE against the subquery as a keyed source")
       case _ => ()
-    }
-
-  /** Upper bound on the driver-materialized IN-set a DML predicate
-    * subquery may produce. The rewrite executes the subplan
-    * DISTRIBUTED and collects only its DISTINCT key set (the GDPR
-    * erasure list, the quarantined-id table — thousands, not
-    * billions); a set past this bound means the statement is really
-    * a big join and must run as one, so the collect is refused loudly
-    * with the MERGE workaround named — bounded-or-loud, like every
-    * driver-side materialization in this repo. */
-  private val MaxInSetKeys = 1 << 20
-
-  /** Rewrite `IN (subquery)` / `EXISTS (subquery)` inside a
-    * DELETE/UPDATE WHERE into a row-local predicate the merge-on-read
-    * primitives can evaluate: the subplan executes ONCE (distributed;
-    * only the distinct key set returns to the driver, capped by
-    * [[MaxInSetKeys]]) and the subquery expression is replaced by a
-    * Catalyst [[In]] over the collected keys — whose native
-    * three-valued semantics keep `NOT IN (… NULL …)` exactly right.
-    * Correlated EXISTS with one outer-column = inner-expression
-    * equality decorrelates into the same IN shape (EXISTS is
-    * two-valued, so the IN wraps in COALESCE(…, false)); both the
-    * OuterReference-in-plan and the pulled-up joinCond analyzer
-    * shapes are handled. Runs at EXECUTION time (inside the command
-    * exec), never at planning. */
-  private def rewritePredicateSubqueries(spark: SparkSession,
-      e: Expression, what: String): Expression = e.transformUp {
-    case InSubquery(values, lq: ListQuery) =>
-      if (values.size == 1 && lq.outerAttrs.isEmpty &&
-          lq.joinCond.isEmpty)
-        inSetOf(spark, values.head, lq.plan, what)
-      else
-        // correlated and/or multi-column IN: the exact bounded
-        // OR-of-ANDs chain (three-valued semantics preserved — see
-        // [[inChainOf]]); top-level DML WHERE conjuncts never reach
-        // here (the distributed semi-join path in
-        // [[rewriteWhereOrJoin]] takes them first, unbounded)
-        inChainOf(spark, values, lq, what)
-    case ex: Exists => existsOf(spark, ex, what)
-    // uncorrelated scalar subquery → its one value as a literal
-    // (also what the optimizer's RewriteNonCorrelatedExists turns an
-    // uncorrelated EXISTS into: IsNotNull(ScalarSubquery(LIMIT 1)))
-    case s: ScalarSubquery
-        if s.outerAttrs.isEmpty && s.joinCond.isEmpty =>
-      val rows = GraftBridge.ofRows(spark, s.plan).limit(2).collect()
-      if (rows.length > 1) throw new IllegalStateException(
-        s"GraftCatalog DML: scalar subquery in $what returned more " +
-          "than one row")
-      if (rows.isEmpty || rows.head.isNullAt(0))
-        Literal.create(null, s.dataType)
-      else Literal.create(rows.head.get(0), s.dataType)
-    // CORRELATED scalar subquery (the groupwise lookup:
-    // `SET v = (SELECT max(x) FROM s WHERE s.k = t.k)`) → a bounded
-    // CASE chain over the per-key aggregates
-    case s: ScalarSubquery => scalarChainOf(spark, s, what)
-  }
-
-  /** Decorrelate an aggregate-shaped correlated scalar subquery into
-    * a bounded CASE chain: the subplan must be
-    * `Aggregate(global, [one agg], Filter(corr ∧ inner-only, base))`
-    * (optionally under aliases) with EQUALITY-only correlations. The
-    * aggregate re-groups BY the correlation keys and executes once
-    * (distributed); the distinct (key…, value) rows collect (capped
-    * by [[MaxInChainKeys]], loud past it, null-key groups dropped —
-    * an equality can never reach them) and the subquery becomes
-    *
-    *   CASE WHEN outer₁ <=> k₁ᵢ AND … THEN vᵢ … ELSE <empty-agg> END
-    *
-    * where `<empty-agg>` is the SAME aggregate evaluated over ZERO
-    * rows — the value the original subquery answers for an outer key
-    * matching nothing (NULL for max/sum, 0 for count — NOT simply
-    * NULL), and also what a NULL outer key answers (its equality
-    * matches nothing). Exact. */
-  private def scalarChainOf(spark: SparkSession, s: ScalarSubquery,
-      what: String): Expression = {
-    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LocalRelation}
-    def peelA(p: LogicalPlan): LogicalPlan = p match {
-      case SubqueryAlias(_, child) => peelA(child)
-      case other => other
-    }
-    // the PULLED-UP analyzer/optimizer shape: the subplan is already
-    // grouped by its correlation columns and joinCond carries the
-    // outer = inner-output equalities; output.head is the scalar
-    // value. The original IN-PLAN shape (OuterReferences inside a
-    // global aggregate's filter) re-groups first, then lands in the
-    // same tail. Mixed (non-equality) correlation conjuncts are LOUD
-    // here (classifyCorrelation's default): the aggregate runs over
-    // the whole group, so an outer-row-dependent predicate — which
-    // mathematically filters BELOW the aggregate, per outer row —
-    // cannot be applied to the per-key aggregate value afterwards;
-    // the EXISTS/IN chains (pre-aggregation tuples) are the sound
-    // home for mixed correlations.
-    val (plan, eqs, valueAgg, aggChild) =
-      if (s.joinCond.nonEmpty) {
-        val (eqs, innerOnly, _) = classifyCorrelation(s.joinCond,
-          s.plan, s"$what scalar subquery")
-        val base = if (innerOnly.isEmpty) s.plan
-          else Filter(innerOnly.reduce(And), s.plan)
-        peelA(s.plan) match {
-          case Aggregate(_, aggList, aggChild, _) =>
-            val va = aggList.collectFirst {
-              case ne if ne.exprId == s.plan.output.head.exprId => ne }
-            (base, eqs, va, Some(aggChild))
-          case _ => (base, eqs, None, None)
-        }
-      } else peelA(s.plan) match {
-        case Aggregate(Seq(), aggs, c, _) if aggs.sizeIs == 1 =>
-          val (conds, base) = peelA(c) match {
-            case Filter(cnd, b) => (splitConjunctivePredicates(cnd), b)
-            case other => (Seq.empty[Expression], other)
-          }
-          val (eqs, innerOnly, _) = classifyCorrelation(conds,
-            base, s"$what scalar subquery")
-          val filtered = if (innerOnly.isEmpty) base
-            else Filter(innerOnly.reduce(And), base)
-          val keyAliases = eqs.map(_._2).zipWithIndex.map {
-            case (e, i) => Alias(e, s"__graft_g$i")() }
-          val grouped = Aggregate(eqs.map(_._2),
-            (aggs ++ keyAliases).toSeq, filtered)
-          val eqs2 = eqs.zip(keyAliases).map { case ((outer, _), ka) =>
-            (outer, ka.toAttribute: Expression) }
-          (grouped: LogicalPlan, eqs2, aggs.headOption,
-            Some(filtered))
-        case other => unsupported(
-          s"$what with a correlated scalar subquery of shape " +
-            s"${other.nodeName}",
-          "supported: a single aggregate over correlated equality " +
-            "conjuncts — materialize the subquery as a keyed table " +
-            "and MERGE/join against it otherwise")
-      }
-    if (eqs.isEmpty) unsupported(
-      s"$what with a scalar subquery correlated only through " +
-        "non-equality conjuncts",
-      "a groupwise aggregate decorrelates over outer = inner " +
-        "equalities; materialize the subquery and join against it")
-    // collect the per-key rows: value, equality keys
-    val valueExpr: Expression = plan.output.head
-    val cols: Seq[Expression] = valueExpr +: eqs.map(_._2)
-    val proj = Project(cols.zipWithIndex.map { case (e, i) =>
-      Alias(e, s"__graft_s$i")() }.toSeq, plan)
-    var df = GraftBridge.ofRows(spark, proj)
-    (1 to eqs.size).foreach(i =>
-      df = df.filter(col(s"__graft_s$i").isNotNull))
-    val rows = df.limit(MaxInChainKeys + 1).collect()
-    if (rows.length > MaxInChainKeys) unsupported(
-      s"$what scalar subquery with more than $MaxInChainKeys " +
-        "distinct correlation keys",
-      "the rewrite builds one CASE branch per key; a set this large " +
-        "is a join — materialize the grouped subquery as a table and " +
-        "MERGE/join against it")
-    val types = proj.output.map(_.dataType)
-    // the empty-group answer: the SAME aggregate over ZERO rows —
-    // NULL for max/sum but 0 for count (the classic count-bug), and
-    // also what a NULL or unmatched outer key answers
-    val elseLit = (valueAgg, aggChild) match {
-      case (Some(va), Some(ac)) =>
-        val r = GraftBridge.ofRows(spark, Aggregate(Seq(), Seq(va),
-          LocalRelation(ac.output.map(_.asInstanceOf[
-            org.apache.spark.sql.catalyst.expressions
-              .AttributeReference])))).collect()(0)
-        if (r.isNullAt(0)) Literal.create(null, s.dataType)
-        else Literal.create(r.get(0), s.dataType)
-      case _ => unsupported(
-        s"$what with a correlated scalar subquery whose empty-group " +
-          "default cannot be derived",
-        "the subplan is not a recognizable aggregate — materialize " +
-          "the subquery as a keyed table and MERGE/join against it")
-    }
-    val branches = rows.toIndexedSeq.map { r =>
-      val eqConds = eqs.zipWithIndex.map { case ((outer, _), i) =>
-        org.apache.spark.sql.catalyst.expressions.EqualNullSafe(
-          outer, Literal.create(r.get(i + 1), types(i + 1)))
-          : Expression
-      }
-      (eqConds.reduce(And),
-        (if (r.isNullAt(0)) Literal.create(null, s.dataType)
-         else Literal.create(r.get(0), types(0))): Expression)
-    }
-    if (branches.isEmpty) elseLit
-    else org.apache.spark.sql.catalyst.expressions.CaseWhen(
-      branches, Some(elseLit))
-  }
-
-  /** `value IN (<plan's first column>)` as a literal-set [[In]] when
-    * the DISTINCT key set fits [[MaxInSetKeys]] (keeping SQL's exact
-    * three-valued IN — a NULL in the set makes non-matches NULL so
-    * NOT IN matches nothing, an empty set is FALSE even for a NULL
-    * probe), or Left(the distributed distinct-key frame) when it
-    * does not — the caller either falls back to a semi-join mask
-    * (DELETE) or fails loudly ([[inSetOf]]). */
-  private def inSetOrKeys(spark: SparkSession, value: Expression,
-      plan: LogicalPlan)
-      : Either[org.apache.spark.sql.DataFrame, Expression] = {
-    // the distinct frame CACHES before the overflow probe, so the
-    // subplan executes once whichever path wins: the probe is a
-    // bounded count (a long to the driver, never 2^20 rows), small
-    // sets collect from cache and unpersist, and an overflowing set
-    // hands the CACHED frame to the semi-join (the join's caller
-    // unpersists after the DML lands — see [[Strategy]])
-    val distinctKeys = GraftBridge.ofRows(spark, plan).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val n = distinctKeys.limit(MaxInSetKeys + 1).count()
-    if (n > MaxInSetKeys) return Left(distinctKeys)
-    val rows = distinctKeys.collect()
-    distinctKeys.unpersist()
-    val dt = plan.output.head.dataType
-    val hasNull = rows.exists(_.isNullAt(0))
-    val lits = rows.toIndexedSeq.filterNot(_.isNullAt(0))
-      .map(r => Literal.create(r.get(0), dt))
-    Right(
-      if (lits.isEmpty && !hasNull) Literal.FalseLiteral
-      else In(value,
-        lits ++ (if (hasNull) Seq(Literal.create(null, dt)) else Nil)))
-  }
-
-  private def inSetOf(spark: SparkSession, value: Expression,
-      plan: LogicalPlan, what: String): Expression =
-    inSetOrKeys(spark, value, plan) match {
-      case Right(e) => e
-      case Left(_) => unsupported(
-        s"$what subquery with more than $MaxInSetKeys distinct keys",
-        "the rewrite broadcasts the key set from the driver; a set " +
-          "this large is a join — DELETE falls back to a distributed " +
-          "semi-join mask automatically, elsewhere materialize the " +
-          "subquery as a table and MERGE (or anti-join + overwrite) " +
-          "against it")
-    }
-
-  /** Classify correlation conjuncts against inner plan `base`:
-    * (outer-expression, inner-expression) equality pairs, inner-only
-    * predicates, and — when `allowMixed` — MIXED conjuncts (any
-    * shape referencing both sides: outer ranges, inequalities;
-    * OuterReferences stripped so outer attrs appear bare). Mixed
-    * conjuncts can only ride the BOUNDED chain rewrites (per-tuple
-    * literal substitution), never the unbounded semi-join, so the
-    * strict call sites keep them loud. */
-  private def classifyCorrelation(conjuncts: Seq[Expression],
-      base: LogicalPlan, what: String, allowMixed: Boolean = false)
-      : (Seq[(Expression, Expression)], Seq[Expression],
-        Seq[Expression]) = {
-    val baseOut = base.outputSet
-    def hasOuter(x: Expression): Boolean =
-      x.exists(_.isInstanceOf[OuterReference]) ||
-        !x.references.subsetOf(baseOut)
-    def stripOuterRef(x: Expression): Expression =
-      x.transform { case OuterReference(a) => a }
-    val outerEqs =
-      scala.collection.mutable.ArrayBuffer.empty[(Expression, Expression)]
-    val innerOnly = scala.collection.mutable.ArrayBuffer.empty[Expression]
-    val mixed = scala.collection.mutable.ArrayBuffer.empty[Expression]
-    conjuncts.foreach {
-      case EqualTo(l, r) if hasOuter(l) && !hasOuter(r) =>
-        outerEqs += ((stripOuterRef(l), r))
-      case EqualTo(l, r) if hasOuter(r) && !hasOuter(l) =>
-        outerEqs += ((stripOuterRef(r), l))
-      case p if !hasOuter(p) => innerOnly += p
-      case p if allowMixed => mixed += stripOuterRef(p)
-      case p => unsupported(s"$what correlation conjunct `${p.sql}`",
-        "this position supports conjuncts of outer-column = " +
-          "inner-expression equalities plus inner-only predicates " +
-          "(non-equality correlations ride the bounded clause-context " +
-          "rewrites only)")
-    }
-    (outerEqs.toSeq, innerOnly.toSeq, mixed.toSeq)
-  }
-
-  /** Decompose a CORRELATED EXISTS into its outer=inner equality
-    * pairs and the inner base plan with inner-only predicates applied
-    * (both the OuterReference-in-plan and pulled-up joinCond analyzer
-    * shapes). EXISTS ignores the subquery's projection, so Projects
-    * peel off. */
-  private def existsEqs(ex: Exists, what: String)
-      : (Seq[(Expression, Expression)], Seq[Expression], LogicalPlan) = {
-    def peelP(p: LogicalPlan): LogicalPlan = p match {
-      case Project(_, child) => peelP(child)
-      case SubqueryAlias(_, child) => peelP(child)
-      case other => other
-    }
-    val (conjuncts, base) =
-      if (ex.joinCond.nonEmpty) (ex.joinCond, ex.plan)
-      else peelP(ex.plan) match {
-        case Filter(cond, child) =>
-          (splitConjunctivePredicates(cond), child)
-        case other => (Seq.empty[Expression], other)
-      }
-    val (eqs, innerOnly, mixed) = classifyCorrelation(conjuncts, base,
-      s"$what EXISTS", allowMixed = true)
-    (eqs, mixed, if (innerOnly.isEmpty) base
-      else Filter(innerOnly.reduce(And), base))
-  }
-
-  /** Per-tuple LITERAL SUBSTITUTION of a mixed correlation conjunct:
-    * inner attribute references (resolved against `cols`' positions)
-    * become the collected row's values, outer references stay
-    * symbolic, and the whole conjunct wraps in COALESCE(…, false) —
-    * a subquery row enters the set iff its condition is TRUE, so a
-    * NULL evaluation must contribute nothing, exactly like a
-    * non-matching row. */
-  private def substMixed(m: Expression,
-      colIdx: Map[org.apache.spark.sql.catalyst.expressions.ExprId, Int],
-      r: org.apache.spark.sql.Row,
-      types: Seq[org.apache.spark.sql.types.DataType]): Expression =
-    Coalesce(Seq(m.transform {
-      case a: AttributeReference if colIdx.contains(a.exprId) =>
-        val i = colIdx(a.exprId)
-        Literal.create(r.get(i), types(i))
-    }, Literal.FalseLiteral))
-
-  /** Decompose a (possibly correlated, possibly multi-column)
-    * `values IN (subquery)` into its correlation equality pairs, the
-    * subquery's value expressions (positionally matching `values`),
-    * and the filtered inner base — the shape the DELETE/UPDATE
-    * semi-join fallback AND the bounded OR-chain rewrite both
-    * consume (for a TOP-LEVEL DML conjunct, IN TRUE ⟺ EXISTS of the
-    * conjoined equalities; NULL and FALSE both keep the row, so the
-    * IN/EXISTS distinction is immaterial there). None when the plan
-    * shape is not the analyzer's Project-over-optional-Filter (or
-    * the pulled-up joinCond form). */
-  private def inParts(values: Seq[Expression], lq: ListQuery,
-      what: String, allowMixed: Boolean = false)
-      : Option[(Seq[(Expression, Expression)], Seq[Expression],
-        Seq[Expression], LogicalPlan)] = {
-    def peelA(p: LogicalPlan): LogicalPlan = p match {
-      case SubqueryAlias(_, child) => peelA(child)
-      case other => other
-    }
-    if (lq.joinCond.nonEmpty) {
-      val (eqs, innerOnly, mixed) = classifyCorrelation(lq.joinCond,
-        lq.plan, s"$what IN", allowMixed)
-      val base = if (innerOnly.isEmpty) lq.plan
-        else Filter(innerOnly.reduce(And), lq.plan)
-      // the pulled-up plan's output lists the VALUE columns first,
-      // then any appended correlation columns — take the value prefix
-      if (lq.plan.output.size < values.size) None
-      else Some((eqs, mixed,
-        lq.plan.output.take(values.size).toIndexedSeq, base))
-    } else peelA(lq.plan) match {
-      case Project(projList, child) if projList.size == values.size =>
-        val (cond, base) = peelA(child) match {
-          case Filter(c, b) => (splitConjunctivePredicates(c), b)
-          case other => (Seq.empty[Expression], other)
-        }
-        val (eqs, innerOnly, mixed) =
-          classifyCorrelation(cond, base, s"$what IN", allowMixed)
-        val filtered = if (innerOnly.isEmpty) base
-          else Filter(innerOnly.reduce(And), base)
-        val valueExprs = projList.toIndexedSeq.map {
-          case a: Alias => a.child
-          case e => e
-        }
-        Some((eqs, mixed, valueExprs, filtered))
-      case p if lq.outerAttrs.isEmpty && lq.joinCond.isEmpty &&
-          p.output.size == values.size =>
-        // uncorrelated multi-column IN over a non-Project shape
-        // (aggregate, distinct, union): the outputs ARE the values
-        Some((Seq.empty, Seq.empty, p.output.toIndexedSeq, p))
-      case _ => None
-    }
-  }
-
-  /** Cap on the OR-of-ANDs chain [[inChainOf]] builds: each collected
-    * tuple becomes one conjunction in a literal expression tree, so
-    * the bound is EXPRESSION size (codegen), not driver memory — far
-    * below [[MaxInSetKeys]]. Clause-condition sets (quarantine lists,
-    * category pairs) are typically tiny; anything bigger is a join
-    * and the error names the MERGE workaround. */
-  private val MaxInChainKeys = 1000
-
-  /** EXACT bounded rewrite for correlated and/or multi-column
-    * `values IN (subquery)` in a row-local context (MERGE clause
-    * conditions, non-top-level WHERE shapes): the subplan's DISTINCT
-    * (value…, correlation-key…) tuples collect (bounded by
-    * [[MaxInChainKeys]], loud past it), inner tuples with a NULL
-    * correlation key drop (they can never witness a correlated
-    * match), and the IN becomes
-    *
-    *   OR_i ( AND_j(value_j = v_ij) AND AND_k(outer_k <=> key_ik) )
-    *
-    * — plain `=` on the VALUE columns keeps SQL's three-valued IN
-    * exactly (NULL values/probes propagate NULL), while null-SAFE
-    * `<=>` on the correlation keys makes a NULL outer key yield
-    * FALSE — the empty-set semantics of a correlation that matches
-    * nothing. An empty set is FALSE even for a NULL probe. */
-  private def inChainOf(spark: SparkSession, values: Seq[Expression],
-      lq: ListQuery, what: String): Expression = {
-    val (corrEqs, mixed, valueExprs, base) =
-      inParts(values, lq, what, allowMixed = true).getOrElse(
-        unsupported(
-          s"$what with this correlated IN subquery plan shape",
-          "supported shapes are SELECT <exprs> FROM … WHERE " +
-            "<correlated conjuncts AND inner-only predicates>; " +
-            "materialize the subquery and MERGE against it otherwise"))
-    // the collected tuple: value exprs, equality-correlation inner
-    // exprs, then every inner column a MIXED conjunct references
-    val baseOut = base.outputSet
-    val mixedRefs = mixed.flatMap(_.references.toSeq)
-      .filter(baseOut.contains).distinct
-    val cols = valueExprs ++ corrEqs.map(_._2) ++ mixedRefs
-    val proj = Project(cols.zipWithIndex.map { case (e, i) =>
-      Alias(e, s"__graft_c$i")() }.toSeq, base)
-    var df = GraftBridge.ofRows(spark, proj).distinct()
-    // null EQUALITY-correlation keys can never witness: drop them
-    // inner-side (mixed-conjunct refs stay — their NULL evaluation
-    // is handled by the per-term COALESCE)
-    (values.size until values.size + corrEqs.size).foreach(i =>
-      df = df.filter(col(s"__graft_c$i").isNotNull))
-    val rows = df.limit(MaxInChainKeys + 1).collect()
-    if (rows.length > MaxInChainKeys) unsupported(
-      s"$what IN subquery with more than $MaxInChainKeys distinct " +
-        "tuples",
-      "the rewrite builds a literal predicate per tuple; a set this " +
-        "large is a join — materialize the subquery as a table and " +
-        "MERGE (or anti-join + overwrite) against it")
-    val types = proj.output.map(_.dataType)
-    val refIdx = mixedRefs.zipWithIndex.map { case (a, j) =>
-      a.exprId -> (values.size + corrEqs.size + j) }.toMap
-    val terms = rows.toIndexedSeq.map { r =>
-      val valueEqs = values.zipWithIndex.map { case (v, i) =>
-        EqualTo(v, Literal.create(r.get(i), types(i)))
-          : Expression }
-      val corrSafe = corrEqs.zipWithIndex.map { case ((outer, _), j) =>
-        val i = values.size + j
-        org.apache.spark.sql.catalyst.expressions.EqualNullSafe(
-          outer, Literal.create(r.get(i), types(i))): Expression
-      }
-      val mixedSubst = mixed.map(m => substMixed(m, refIdx, r, types))
-      (valueEqs ++ corrSafe ++ mixedSubst).reduce(And)
-    }
-    terms.reduceOption(org.apache.spark.sql.catalyst.expressions
-      .Or(_, _)).getOrElse(Literal.FalseLiteral)
-  }
-
-  /** EXISTS rewrite: uncorrelated probes the subplan once (LIMIT 1);
-    * one outer = inner equality decorrelates to `outer IN (SELECT
-    * inner …)` wrapped in COALESCE(…, false) — EXISTS is two-valued,
-    * a NULL outer value witnesses nothing. N-equality correlations
-    * (the composite-key erasure) decorrelate the same way over a
-    * STRUCT key: inner tuples with any NULL key field drop (they can
-    * never witness an equality match) and the probe is
-    * `struct(outer…) IN (tuple literals)` — Catalyst's struct
-    * equality over the null-free set is exact, and a NULL outer
-    * field simply never equals any literal tuple (FALSE, the EXISTS
-    * answer). Both arms are bounded-or-loud like every driver-side
-    * materialization here; top-level DML WHERE conjuncts never reach
-    * this (the unbounded semi-join path takes them first). */
-  private def existsOf(spark: SparkSession, ex: Exists,
-      what: String): Expression = {
-    if (ex.outerAttrs.isEmpty && ex.joinCond.isEmpty)
-      return Literal(
-        GraftBridge.ofRows(spark, ex.plan).limit(1).count() > 0L)
-    val (outerEqs, mixed, filtered) = existsEqs(ex, what)
-    if (outerEqs.isEmpty && mixed.isEmpty)
-      unsupported(s"$what EXISTS with no correlated conjunct",
-        "supported correlations are conjuncts over outer and inner " +
-          "columns — materialize the subquery and MERGE against it " +
-          "otherwise")
-    if (mixed.nonEmpty)
-      // NON-EQUALITY correlations (outer ranges, inequalities): the
-      // bounded chain — distinct inner tuples collect (capped), each
-      // conjunct substitutes the tuple's values (COALESCE-false
-      // wrapped: a NULL evaluation witnesses nothing, like a
-      // non-matching row), EXISTS = OR over tuples. Equality
-      // conjuncts ride the same terms as coalesce(=), exact.
-      return existsChainOf(spark, outerEqs, mixed, filtered, what)
-    if (outerEqs.size == 1) {
-      val proj = Project(Seq(Alias(outerEqs.head._2, "__graft_in")()),
-        filtered)
-      return Coalesce(Seq(inSetOf(spark, outerEqs.head._1, proj, what),
-        Literal.FalseLiteral))
-    }
-    // composite key: collect the DISTINCT null-free inner key tuples
-    val proj = Project(outerEqs.map(_._2).zipWithIndex.map {
-      case (e, i) => Alias(e, s"__graft_k$i")() }.toSeq, filtered)
-    var df = GraftBridge.ofRows(spark, proj).distinct()
-    outerEqs.indices.foreach(i =>
-      df = df.filter(col(s"__graft_k$i").isNotNull))
-    df = df.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val n = df.limit(MaxInSetKeys + 1).count()
-      if (n > MaxInSetKeys) unsupported(
-        s"$what EXISTS subquery with more than $MaxInSetKeys " +
-          "distinct key tuples",
-        "the rewrite broadcasts the tuple set from the driver; a set " +
-          "this large is a join — DELETE/UPDATE WHERE fall back to a " +
-          "distributed semi-join mask automatically, elsewhere " +
-          "materialize the subquery as a table and MERGE against it")
-      val rows = df.collect()
-      val structType = org.apache.spark.sql.types.StructType(
-        proj.output.map(a => org.apache.spark.sql.types.StructField(
-          a.name, a.dataType)))
-      val probe = org.apache.spark.sql.catalyst.expressions
-        .CreateStruct(outerEqs.map(_._1).toSeq)
-      if (rows.isEmpty) Literal.FalseLiteral
-      else Coalesce(Seq(In(probe, rows.toIndexedSeq.map(r =>
-        Literal.create(r, structType))), Literal.FalseLiteral))
-    } finally { df.unpersist(): Unit }
-  }
-
-  /** The bounded EXISTS chain for correlations carrying MIXED
-    * (non-equality) conjuncts: distinct (eq-inner…, mixed-ref…)
-    * tuples collect under [[MaxInChainKeys]] (loud past it), and
-    * EXISTS becomes OR over tuples of
-    * `AND(coalesce(outer = eqLit, false)…, coalesce(mixed[refs→lits],
-    * false)…)` — every term is two-valued (COALESCE), a NULL outer
-    * or a NULL-evaluating conjunct witnesses nothing, exactly the
-    * EXISTS answer. */
-  private def existsChainOf(spark: SparkSession,
-      outerEqs: Seq[(Expression, Expression)], mixed: Seq[Expression],
-      base: LogicalPlan, what: String): Expression = {
-    val baseOut = base.outputSet
-    val mixedRefs = mixed.flatMap(_.references.toSeq)
-      .filter(baseOut.contains).distinct
-    val cols: Seq[Expression] = outerEqs.map(_._2) ++ mixedRefs
-    val proj = Project(cols.zipWithIndex.map { case (e, i) =>
-      Alias(e, s"__graft_e$i")() }.toSeq, base)
-    val rows = GraftBridge.ofRows(spark, proj).distinct()
-      .limit(MaxInChainKeys + 1).collect()
-    if (rows.length > MaxInChainKeys) unsupported(
-      s"$what EXISTS subquery with more than $MaxInChainKeys " +
-        "distinct correlated tuples",
-      "the rewrite builds a literal predicate per tuple; a set this " +
-        "large is a join — materialize the subquery as a table and " +
-        "MERGE (or anti-join + overwrite) against it")
-    val types = proj.output.map(_.dataType)
-    val refIdx = mixedRefs.zipWithIndex.map { case (a, j) =>
-      a.exprId -> (outerEqs.size + j) }.toMap
-    val terms = rows.toIndexedSeq.map { r =>
-      val eqTerms = outerEqs.zipWithIndex.map { case ((outer, _), i) =>
-        Coalesce(Seq(EqualTo(outer, Literal.create(r.get(i), types(i))),
-          Literal.FalseLiteral)): Expression
-      }
-      val mixedSubst = mixed.map(m => substMixed(m, refIdx, r, types))
-      (eqTerms ++ mixedSubst).reduce(And)
-    }
-    terms.reduceOption(org.apache.spark.sql.catalyst.expressions
-      .Or(_, _)).getOrElse(Literal.FalseLiteral)
-  }
-
-  /** Resolved single-relation expression → a Column that re-resolves
-    * by NAME against the engine's logical snapshot frame (which
-    * carries exactly the manifest's logical columns). */
-  private def bareCol(e: Expression, what: String): Column = {
-    requireNoSubquery(e, what)
-    GraftBridge.column(e.transform {
-      case a: AttributeReference => UnresolvedAttribute(Seq(a.name))
-    })
-  }
-
-  /** Resolved two-relation expression → a Column against the aliased
-    * target ⨝ source join (target attrs qualify under `tAl`,
-    * everything else under `sAl`). */
-  private def sidedCol(e: Expression, tOut: AttributeSet, tAl: String,
-      sAl: String, what: String): Column = {
-    requireNoSubquery(e, what)
-    GraftBridge.column(e.transform {
-      case a: AttributeReference if tOut.contains(a) =>
-        UnresolvedAttribute(Seq(tAl, a.name))
-      case a: AttributeReference => UnresolvedAttribute(Seq(sAl, a.name))
     })
   }
 
@@ -714,7 +170,7 @@ object GraftSqlDml extends PredicateHelper {
   private def assignPath(a: Assignment): Seq[String] = {
     def go(e: Expression): Seq[String] = e match {
       case ar: AttributeReference => Seq(ar.name)
-      case g: org.apache.spark.sql.catalyst.expressions.GetStructField =>
+      case g: GetStructField =>
         go(g.child) :+ g.extractFieldName
       case other => unsupported(s"assignment to $other",
         "assign a top-level column or a struct field (t.meta.flag)")
@@ -731,199 +187,59 @@ object GraftSqlDml extends PredicateHelper {
 
   /** Group SET assignments by top-level column, composing nested
     * field assignments (`SET meta.flag = …`) into ONE struct rebuild
-    * over the column's current value (Column.withField — dotted
-    * paths address any depth): the merge-on-read primitives then see
-    * a plain whole-column update, so masks/feed/constraints need no
-    * new machinery. Assigning a column AND one of its own fields in
-    * one statement is ambiguous and loud. `target` supplies the
-    * current-value column (bare name for UPDATE, `t`-aliased for
-    * MERGE clauses); `mkValue` runs the per-value rewrite. */
+    * over the column's current value (UpdateFields, any depth): the
+    * merge-on-read primitives then see a plain whole-column update,
+    * so masks/feed/constraints need no new machinery. Assigning a
+    * column AND one of its own fields in one statement is ambiguous
+    * and loud. `target` supplies the current value of a top-level
+    * name. */
   private def composeSet(assigns: Seq[Assignment], what: String,
-      mkValue: Expression => Column,
-      target: String => Column): Seq[(String, Column)] = {
+      target: String => Expression): Seq[(String, Expression)] = {
+    def withField(acc: Expression, path: Seq[String],
+        v: Expression): Expression = UpdateFields(acc, Seq(WithField(
+      path.head,
+      if (path.sizeIs == 1) v
+      else withField(GetStructField(acc, acc.dataType
+        .asInstanceOf[StructType].fieldIndex(path.head)), path.tail, v))))
     val paths = assigns.map(a => (assignPath(a), a.value))
-    paths.groupBy(p =>
-        p._1.head.toLowerCase(java.util.Locale.ROOT)).toSeq
-      .map { case (_, group) =>
-        val top = group.head._1.head
-        if (group.exists(_._1.sizeIs == 1)) {
-          if (group.sizeIs > 1) unsupported(
-            s"$what assigning column `$top` and one of its nested " +
-              "fields in the same statement",
-            "assign either the whole column or its fields, not both")
-          top -> mkValue(group.head._2)
-        } else top -> group.foldLeft(target(top)) {
-          case (acc, (p, v)) =>
-            acc.withField(p.tail.mkString("."), mkValue(v))
-        }
+    paths.groupBy(p => fold(p._1.head)).toSeq.map { case (_, group) =>
+      val top = group.head._1.head
+      if (group.exists(_._1.sizeIs == 1)) {
+        if (group.sizeIs > 1) unsupported(
+          s"$what assigning column `$top` and one of its nested " +
+            "fields in the same statement",
+          "assign either the whole column or its fields, not both")
+        top -> group.head._2
+      } else top -> group.foldLeft(target(top)) {
+        case (acc, (p, v)) => withField(acc, p.tail, v)
       }
+    }
   }
 
-  /** Conjunct-wise DELETE/UPDATE WHERE rewrite with a DISTRIBUTED
-    * SEMI-JOIN fallback ([[Versioned.deleteWhereDVJoin]] /
-    * [[Versioned.updateWhereDVJoin]] — both sides shuffle on the key,
-    * nothing key-set-sized reaches the driver) for the first
-    * top-level subquery conjunct the bounded IN-set rewrite cannot
-    * carry:
-    *
-    *  - an uncorrelated single-column `IN (subquery)` whose distinct
-    *    key set overflows [[MaxInSetKeys]] (the >1M-id GDPR erasure);
-    *  - a correlated EXISTS with ANY number of outer = inner equality
-    *    correlations (composite struct key; both sides filter null
-    *    key fields first — struct ordering treats null fields as
-    *    equal where the equality conjuncts never match them);
-    *  - a correlated single-column `IN (subquery)` (its correlations
-    *    + the value = subquery-column pair are the composite key).
-    *
-    * Remaining conjuncts rewrite bounded-or-loud as before and ride
-    * as the join path's pre-filter. Semi-join scope == the subquery
-    * predicate's TRUE-only scope for row-level DML (NULL and FALSE
-    * both keep the row untouched), so the paths are interchangeable
-    * row-for-row. Returns Right(row-local predicate) on the plain
-    * path, Left((keyCol, keys frame, extra pre-filter, cleanup)) on
-    * the join path — the caller invokes `cleanup` after the DML lands
-    * (it unpersists the cached big-IN key frame; a no-op for the
-    * never-persisted correlated frames). */
-  private def rewriteWhereOrJoin(sp: SparkSession, cond: Expression,
-      what: String, label: String): Either[
-        (Column, org.apache.spark.sql.DataFrame, Option[Column],
-          () => Unit),
-        Column] = {
-    var semiJoin: Option[(Seq[Expression],
-      org.apache.spark.sql.DataFrame)] = None
-    def keysFrame(eqs: Seq[(Expression, Expression)],
-        base: LogicalPlan): org.apache.spark.sql.DataFrame =
-      GraftBridge.ofRows(sp, Project(
-        eqs.map(_._2).zipWithIndex.map { case (e, i) =>
-          Alias(e, s"__graft_k$i")() }, base))
-    val rewritten = splitConjunctivePredicates(cond).map {
-      case InSubquery(values, lq: ListQuery)
-          if semiJoin.isEmpty && values.size == 1 &&
-            lq.outerAttrs.isEmpty && lq.joinCond.isEmpty =>
-        inSetOrKeys(sp, values.head, lq.plan) match {
-          case Right(e) => e
-          case Left(keys) =>
-            logInfo(s"$label: IN-subquery key set exceeds " +
-              s"$MaxInSetKeys — falling back to the distributed " +
-              "semi-join mask")
-            semiJoin = Some((Seq(values.head), keys))
-            Literal.TrueLiteral // scoped by the join instead
-        }
-      case in @ InSubquery(values, lq: ListQuery) if semiJoin.isEmpty =>
-        // correlated and/or MULTI-COLUMN IN: for a top-level DML
-        // conjunct, IN TRUE ⟺ EXISTS of the conjoined equalities
-        // (value columns AND correlations — NULL and FALSE both keep
-        // the row), so the whole shape rides ONE distributed
-        // semi-join, unbounded; MIXED (non-equality) correlations
-        // cannot join and fall to the bounded chain
-        inParts(values, lq, what, allowMixed = true) match {
-          case Some((corrEqs, Seq(), valueExprs, base)) =>
-            val eqs = values.zip(valueExprs) ++ corrEqs
-            semiJoin = Some((eqs.map(_._1), keysFrame(eqs, base)))
-            Literal.TrueLiteral
-          case _ => // mixed conjuncts / unrecognized: bounded chain
-            rewritePredicateSubqueries(sp, in, what)
-        }
-      case ex: Exists
-          if semiJoin.isEmpty &&
-            (ex.outerAttrs.nonEmpty || ex.joinCond.nonEmpty) =>
-        existsEqs(ex, what) match {
-          case (_, mixed, _) if mixed.nonEmpty =>
-            // non-equality correlations: the bounded chain
-            rewritePredicateSubqueries(sp, ex, what)
-          case (Seq(), _, _) => // no correlations recognized: loud
-            rewritePredicateSubqueries(sp, ex, what)
-          case (Seq(eq), _, base) =>
-            // one equality: bounded IN first, join past the cap
-            inSetOrKeys(sp, eq._1, Project(
-              Seq(Alias(eq._2, "__graft_in")()), base)) match {
-              case Right(e) =>
-                Coalesce(Seq(e, Literal.FalseLiteral))
-              case Left(keys) =>
-                semiJoin = Some((Seq(eq._1), keys))
-                Literal.TrueLiteral
-            }
-          case (eqs, _, base) =>
-            semiJoin = Some((eqs.map(_._1), keysFrame(eqs, base)))
-            Literal.TrueLiteral
-        }
-      case other => rewritePredicateSubqueries(sp, other, what)
-    }
-    semiJoin match {
-      case None => Right(bareCol(rewritten.reduce(And), what))
-      case Some((outerExprs, keysDf0)) =>
-        import org.apache.spark.sql.functions.struct
-        val outerCols = outerExprs.map(e => bareCol(e, what))
-        // composite keys join on a STRUCT: struct ordering treats
-        // null fields as EQUAL, diverging from the equality
-        // conjuncts — so null key fields filter out of BOTH sides
-        // first (they can never witness a match)
-        val (keyCol, keysDf, nnPred) =
-          if (outerCols.size == 1) (outerCols.head, keysDf0, None)
-          else (struct(outerCols: _*),
-            keysDf0.na.drop("any").select(struct(
-              keysDf0.columns.toIndexedSeq.map(col): _*).as("k")),
-            Some(outerCols.map(_.isNotNull).reduce(_ && _)))
-        val extras = rewritten.filter(_ != Literal.TrueLiteral)
-        val extraPred = (extras.headOption.map(_ =>
-          bareCol(extras.reduce(And), what)).toSeq ++
-          nnPred).reduceOption(_ && _)
-        Left((keyCol, keysDf, extraPred,
-          () => { keysDf0.unpersist(): Unit }))
-    }
-  }
+  /** The target attribute of a column name (folded). */
+  private def targetAttr(out: Seq[Attribute])(name: String): Expression =
+    out.find(a => fold(a.name) == fold(name)).get
 
   /** The planner strategy. Only commands whose target is a
     * [[VersionedSqlTable]] match; everything else falls through to
     * Spark's own strategies. */
   object Strategy extends SparkStrategy {
     override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-      case DeleteFromTable(VersionedRel(_, t), cond) =>
-        // subquery rewrite runs INSIDE the exec (execution time — it
-        // runs the subplan), so planning/explain stays side-effect-free
+      // every check and the engine call run INSIDE the exec (execution
+      // time), so planning/explain stays side-effect-free
+      case DeleteFromTable(VersionedRel(out, t), cond) =>
         GraftDmlExec(s"GraftDelete ${t.name()}", sp => {
-          rewriteWhereOrJoin(sp, cond, "DELETE WHERE",
-            s"GraftDelete ${t.name()}") match {
-            case Right(pred) =>
-              Versioned.deleteWhereDV(sp, t.path, pred): Unit
-            case Left((keyCol, keysDf, extraPred, cleanup)) =>
-              try Versioned.deleteWhereDVJoin(sp, t.path, keyCol,
-                keysDf, extraPred): Unit
-              finally cleanup()
-          }
+          requireAggregatedScalars(Seq(cond))
+          Versioned.deleteWhereDVCore(sp, t.path, None,
+            GraftBridge.column(cond), hits(sp, out, cond)): Unit
         }) :: Nil
 
-      case UpdateTable(VersionedRel(_, t), assignments, cond) =>
-        GraftDmlExec(s"GraftUpdate ${t.name()}", sp => {
-          // assignment VALUES rewrite too (execution time): an
-          // uncorrelated scalar subquery — `SET v = (SELECT max(…)…)`
-          // — executes once and lands as a literal (loud past one
-          // row); correlated shapes remain loud via bareCol's
-          // no-subquery gate
-          val set = composeSet(assignments, "UPDATE SET",
-            e => bareCol(rewritePredicateSubqueries(
-              sp, e, "UPDATE SET"), "UPDATE SET"),
-            top => col(top))
-          cond match {
-            case None =>
-              Versioned.updateWhereDV(sp, t.path, lit(true), set): Unit
-            case Some(c) =>
-              // same WHERE rewrite + semi-join fallback as DELETE:
-              // UPDATE touches TRUE rows only, so the join scope and
-              // the predicate scope are interchangeable here too
-              rewriteWhereOrJoin(sp, c, "UPDATE WHERE",
-                s"GraftUpdate ${t.name()}") match {
-                case Right(pred) =>
-                  Versioned.updateWhereDV(sp, t.path, pred, set): Unit
-                case Left((keyCol, keysDf, extraPred, cleanup)) =>
-                  try Versioned.updateWhereDVJoin(sp, t.path, keyCol,
-                    keysDf, set, extraPred): Unit
-                  finally cleanup()
-              }
-          }
-        }) :: Nil
+      case UpdateTable(VersionedRel(out, t), assignments, cond) =>
+        GraftDmlExec(s"GraftUpdate ${t.name()}",
+          updateRun(out, t, assignments,
+            cond.getOrElse(Literal.TrueLiteral))) :: Nil
 
-      case MergeIntoTable(VersionedRel(tOut, t), source, mergeCond,
+      case m @ MergeIntoTable(VersionedRel(tOut, t), source, mergeCond,
           matched, notMatched, notMatchedBySource, _) =>
         // `WITH SCHEMA EVOLUTION` needs no handling HERE: the table
         // declares AUTOMATIC_SCHEMA_EVOLUTION, so the analyzer's
@@ -934,9 +250,11 @@ object GraftSqlDml extends PredicateHelper {
         // physical names, off-ladder drift loud) BEFORE this plan
         // arrived; tOut is the EVOLVED schema and mergeRun reads the
         // post-alter head.
-        GraftDmlExec(s"GraftMerge ${t.name()}",
+        GraftDmlExec(s"GraftMerge ${t.name()}", sp => {
+          requireAggregatedScalars(m.expressions)
           mergeRun(tOut, t, source, mergeCond, matched, notMatched,
-            notMatchedBySource)) :: Nil
+            notMatchedBySource)(sp)
+        }) :: Nil
 
       // view DDL rewritten by [[GraftViewRules]] (CREATE/DROP VIEW
       // against a GraftCatalog — Spark's own analyzer blanket-rejects
@@ -947,6 +265,24 @@ object GraftSqlDml extends PredicateHelper {
     }
   }
 
+  /** One UPDATE: the scope as for DELETE, the post-image each
+    * column's assigned value (or its current one) over the staged
+    * pre-images, bound the same way. */
+  private def updateRun(out: Seq[Attribute], t: VersionedSqlTable,
+      assignments: Seq[Assignment], where: Expression)
+      : SparkSession => Unit = { spark =>
+    requireAggregatedScalars(assignments.map(_.value) :+ where)
+    val set = composeSet(assignments, "UPDATE SET", targetAttr(out))
+    val setFold = set.map { case (n, e) => fold(n) -> e }.toMap
+    def postImage(staged: DataFrame, st: StructType): DataFrame =
+      frame(spark, Project(st.fields.toIndexedSeq.map { f =>
+        typed(setFold.getOrElse(fold(f.name), targetAttr(out)(f.name)),
+          f.dataType, f.name)
+      }, bound(staged, out)))
+    Versioned.updateWhereDVCore(spark, t.path, set.map(_._1), None,
+      GraftBridge.column(where), hits(spark, out, where), postImage): Unit
+  }
+
   /** Translate one MERGE INTO onto [[Versioned.mergeDV]]: split the
     * ON condition into key equalities + source-only prefilters, build
     * the batch-sized updates frame (matched post-images via one
@@ -955,15 +291,18 @@ object GraftSqlDml extends PredicateHelper {
     * post-images/deletes via the REVERSE anti-join — target keys
     * absent from the source, the full-sync mirror scope), and hand it
     * to the engine with `deleteWhen` carrying the DELETE clauses'
-    * verdicts. Target rows matched by NO applicable clause are left
-    * out of the batch — they persist untouched (and produce no
-    * change-feed noise). Write amplification stays ∝ (batch +
-    * affected target rows): an unconditioned NOT MATCHED BY SOURCE
-    * DELETE touches every unmatched target row because that IS its
-    * semantics, never the untouched rest. The standard MERGE
-    * cardinality rule (≤1 source row per target row, only when a
-    * matched clause exists) is enforced with one batch-sized
-    * aggregate before any write. */
+    * verdicts. The target snapshot is bound to the command's target
+    * attributes ([[bound]]) and the source is the command's own
+    * resolved plan, so the ON keys, clause conditions and assignment
+    * values — subqueries included — bind unchanged. Target rows
+    * matched by NO applicable clause are left out of the batch — they
+    * persist untouched (and produce no change-feed noise). Write
+    * amplification stays ∝ (batch + affected target rows): an
+    * unconditioned NOT MATCHED BY SOURCE DELETE touches every
+    * unmatched target row because that IS its semantics, never the
+    * untouched rest. The standard MERGE cardinality rule (≤1 source
+    * row per target row, only when a matched clause exists) is
+    * enforced with one batch-sized aggregate before any write. */
   private def mergeRun(targetOut: Seq[Attribute], t: VersionedSqlTable,
       source: LogicalPlan, mergeCond: Expression,
       matched: Seq[MergeAction], notMatched: Seq[MergeAction],
@@ -972,15 +311,16 @@ object GraftSqlDml extends PredicateHelper {
     val tOut = AttributeSet(targetOut)
     val sOut = AttributeSet(source.output)
     // ---- ON condition: key equalities + source-only prefilters
-    val keys = scala.collection.mutable.ArrayBuffer.empty[(String, Expression)]
+    val keys = scala.collection.mutable.ArrayBuffer
+      .empty[(Attribute, Expression)]
     val srcOnly = scala.collection.mutable.ArrayBuffer.empty[Expression]
     splitConjunctivePredicates(mergeCond).foreach {
       case EqualTo(l: AttributeReference, rr)
           if tOut.contains(l) && rr.references.subsetOf(sOut) =>
-        keys += l.name -> rr
+        keys += l -> rr
       case EqualTo(ll, rr: AttributeReference)
           if tOut.contains(rr) && ll.references.subsetOf(sOut) =>
-        keys += rr.name -> ll
+        keys += rr -> ll
       case p if p.references.subsetOf(sOut) => srcOnly += p
       case p => unsupported(s"MERGE ON conjunct `${p.sql}`",
         "supported conjuncts are target-column = source-expression " +
@@ -989,12 +329,9 @@ object GraftSqlDml extends PredicateHelper {
     if (keys.isEmpty)
       unsupported("MERGE ON without a target-key equality",
         "join target and source on at least one target column")
-    if (keys.map(k => k._1.toLowerCase(java.util.Locale.ROOT)).distinct
-        .sizeIs < keys.size)
+    if (keys.map(k => fold(k._1.name)).distinct.sizeIs < keys.size)
       unsupported("MERGE ON with the same target column in two equalities",
         "fold the duplicate into a source-only predicate")
-    val tAl = "__graft_t"
-    val sAl = "__graft_s"
     // ---- ON-key reassignment guard: [[Versioned.mergeDV]] masks the
     // matched target rows by the BATCH's key values (post-images), so
     // a clause that gives a row a key DIFFERENT from the value the ON
@@ -1008,9 +345,8 @@ object GraftSqlDml extends PredicateHelper {
     // the canonical INSERT expand to) — anything else throws with the
     // workaround named. Casts strip before the compare (Spark aligns
     // assignment types by inserting them).
-    def fold(s: String): String = s.toLowerCase(java.util.Locale.ROOT)
     val keyExprByFold: Map[String, Expression] =
-      keys.map(k => fold(k._1) -> k._2).toMap
+      keys.map(k => fold(k._1.name) -> k._2).toMap
     def stripCasts(e: Expression): Expression = e match {
       case c: Cast => stripCasts(c.child)
       case a: Alias => stripCasts(a.child)
@@ -1047,36 +383,32 @@ object GraftSqlDml extends PredicateHelper {
             "row and INSERT the new one (or MERGE on a stable key)")
       }
     }
-    // ---- source: prefilters applied, key expressions materialized
-    var sdf = GraftBridge.ofRows(spark, source)
-    // source-only prefilters may carry subqueries too (`ON t.k = s.k
-    // AND s.region IN (SELECT …)`) — same bounded rewrite
-    srcOnly.foreach(p => sdf = sdf.filter(bareCol(
-      rewritePredicateSubqueries(spark, p, "MERGE ON"), "MERGE ON")))
-    val gk = keys.indices.map(i => s"__graft_k$i")
-    val sdf2 = sdf.select(col("*") +: keys.zipWithIndex.map {
-      case ((_, se), i) => bareCol(se, "MERGE key").as(gk(i)) }.toSeq: _*)
+    // ---- the pair: the bound target snapshot and the prefiltered
+    // source, joined on the ON key equalities
     val tdf = Versioned.read(spark, t.path)
     val schema = tdf.schema
-    val keyCond = keys.zipWithIndex.map { case ((tn, _), i) =>
-      col(s"$tAl.$tn") === col(s"$sAl.${gk(i)}") }.reduce(_ && _)
-    val tA = tdf.as(tAl)
-    val sA = sdf2.as(sAl)
+    val tgt = bound(tdf, targetOut)
+    val src = srcOnly.reduceOption(And).fold(source)(Filter(_, source))
+    val keyCond = keys.map { case (ta, se) => EqualTo(ta, se) }.reduce(And)
     // ---- cardinality check: a duplicate source key is only an error
     // if it actually matches a target row AND a WHEN MATCHED clause
     // exists to apply twice (SQL MERGE contract — an insert-only
     // merge anti-joins, so duplicate matching keys are harmless)
     if (matched.nonEmpty) {
-      val dupKeys = sdf2.groupBy(gk.map(col): _*).count()
-        .filter(col("count") > 1).select(gk.map(col): _*)
-      if (tA.join(dupKeys.as(sAl), keyCond, "left_semi")
-          .limit(1).count() > 0)
+      val gk = keys.indices.map(i => s"__graft_k$i")
+      val dupKeys = frame(spark, Project(
+          keys.zip(gk).map { case ((_, se), g) => Alias(se, g)() }.toSeq,
+          src))
+        .groupBy(gk.map(col): _*).count().filter(col("count") > 1)
+      if (frame(spark, tgt).join(dupKeys,
+            keys.zip(gk).map { case ((ta, _), g) =>
+              GraftBridge.column(ta) === dupKeys(g) }.reduce(_ && _),
+            "left_semi").limit(1).count() > 0)
         throw new IllegalStateException(
           "GraftCatalog DML: MERGE cardinality violation — more than " +
             "one source row matched the same target row; deduplicate " +
             "the source on the ON keys first")
     }
-    // ---- matched rows: first-match-wins verdict over the pair join
     def actionCond(a: MergeAction): Option[Expression] = a match {
       case UpdateAction(c, _, _) => c
       case DeleteAction(c) => c
@@ -1084,82 +416,65 @@ object GraftSqlDml extends PredicateHelper {
       case other => unsupported(s"MERGE action $other",
         "UPDATE / DELETE / INSERT actions only")
     }
-    // clause conditions ride the same subquery rewrite as assignment
-    // values: uncorrelated IN/EXISTS/scalar subqueries execute once
-    // (bounded), single-equality-correlated EXISTS decorrelates to an
-    // IN over the merge row's own columns — `WHEN MATCHED AND t.v IN
-    // (SELECT …)` works; correlated IN stays loud (three-valued
-    // semantics don't survive the EXISTS-shaped decorrelation)
-    def verdictOf(actions: Seq[MergeAction], what: String): Column =
-      actions.zipWithIndex.foldRight(lit(-1)) { case ((a, i), els) =>
-        val c = actionCond(a)
-          .map(e => coalesce(sidedCol(
-            rewritePredicateSubqueries(spark, e, s"$what condition"),
-            tOut, tAl, sAl, what), lit(false)))
-          .getOrElse(lit(true))
-        when(c, lit(i)).otherwise(els)
-      }
-    val matchedAssigns: Seq[Option[Map[String, Column]]] = matched.map {
-      case UpdateAction(_, assigns, _) =>
-        guardKeyAssigns(assigns, "WHEN MATCHED UPDATE", sourceSideOk = true)
-        Some(composeSet(assigns, "MERGE UPDATE SET",
-          e => sidedCol(rewritePredicateSubqueries(spark, e,
-            "MERGE UPDATE SET"), tOut, tAl, sAl, "MERGE UPDATE SET"),
-          top => col(s"$tAl.$top"))
-          .map { case (k, c) => fold(k) -> c }.toMap)
-      case DeleteAction(_) => None
-      case other => unsupported(s"MERGE matched action $other",
-        "WHEN MATCHED supports UPDATE and DELETE")
+    // one clause family's rows: the first-match-wins verdict over the
+    // clause conditions, then each clause's image (None = DELETE,
+    // values unused) with `keep` for the columns it does not assign
+    def clauseRows(rows: LogicalPlan, actions: Seq[MergeAction],
+        images: Seq[Option[Map[String, Expression]]],
+        keep: StructField => Expression): LogicalPlan = {
+      val verdict = Alias(CaseWhen(actions.zipWithIndex.map {
+        case (a, i) => actionCond(a).fold[Expression](Literal.TrueLiteral)(
+          e => Coalesce(Seq(e, Literal.FalseLiteral))) -> Literal(i)
+      }, Literal(-1)), "__graft_v")()
+      val v = verdict.toAttribute
+      val dels = images.zipWithIndex.collect {
+        case (None, i) => Literal(i): Expression }
+      Project(schema.fields.toIndexedSeq.map { f =>
+          typed(CaseWhen(images.zipWithIndex.map { case (img, i) =>
+            EqualTo(v, Literal(i)) ->
+              img.flatMap(_.get(fold(f.name))).getOrElse(keep(f))
+          }, keep(f)), f.dataType, f.name)
+        } :+ Alias(if (dels.isEmpty) Literal.FalseLiteral else In(v, dels),
+          "__graft_del")(),
+        Filter(GreaterThanOrEqual(v, Literal(0)),
+          Project(rows.output :+ verdict, rows)))
     }
-    val delIdx = matchedAssigns.zipWithIndex.collect {
-      case (None, i) => i }
-    val matchedOut = tA.join(sA, keyCond, "inner")
-      .withColumn("__graft_v", verdictOf(matched, "WHEN MATCHED"))
-      .filter(col("__graft_v") >= 0)
-      .select(schema.fields.toIndexedSeq.map { f =>
-        val fold = f.name.toLowerCase(java.util.Locale.ROOT)
-        matchedAssigns.zipWithIndex.foldRight(
-            col(s"$tAl.${f.name}"): Column) { case ((asg, i), els) =>
-          val v = asg match {
-            case Some(m) => m.getOrElse(fold, col(s"$tAl.${f.name}"))
-            case None => col(s"$tAl.${f.name}") // delete: values unused
-          }
-          when(col("__graft_v") === i, v).otherwise(els)
-        }.cast(f.dataType).as(f.name)
-      } :+ (if (delIdx.isEmpty) lit(false)
-            else col("__graft_v").isin(delIdx.map(Integer.valueOf): _*))
-        .as("__graft_del"): _*)
+    def setImages(actions: Seq[MergeAction], clause: String,
+        sourceSideOk: Boolean): Seq[Option[Map[String, Expression]]] =
+      actions.map {
+        case UpdateAction(_, assigns, _) =>
+          guardKeyAssigns(assigns, s"$clause UPDATE", sourceSideOk)
+          Some(composeSet(assigns, s"MERGE $clause SET",
+            targetAttr(targetOut))
+            .map { case (k, v) => fold(k) -> v }.toMap)
+        case DeleteAction(_) => None
+        case other => unsupported(s"MERGE $clause action $other",
+          s"$clause supports UPDATE and DELETE")
+      }
+    def join(l: LogicalPlan, r: LogicalPlan, jt: JoinType): LogicalPlan =
+      Join(l, r, jt, Some(keyCond), JoinHint.NONE)
+    val keepTarget: StructField => Expression = f => targetAttr(targetOut)(f.name)
+    // ---- matched rows: first-match-wins verdict over the pair join
+    val matchedOut = clauseRows(join(tgt, src, Inner), matched,
+      setImages(matched, "WHEN MATCHED", sourceSideOk = true), keepTarget)
     // ---- unmatched source rows: first applicable INSERT clause;
     // rows with no applicable clause do nothing (standard MERGE)
-    val insertAssigns: Seq[Map[String, Column]] = notMatched.map {
-      case InsertAction(_, assigns) =>
-        // an INSERT key must be the ON clause's source key expression:
-        // the anti-join proved THAT value absent from the target, so
-        // only that value is a safe plain insert (a divergent key can
-        // collide with — and mask-replace — an unrelated existing row)
-        guardKeyAssigns(assigns, "WHEN NOT MATCHED INSERT",
-          sourceSideOk = true)
-        assigns.map(a =>
-          assignName(a).toLowerCase(java.util.Locale.ROOT) ->
-            sidedCol(rewritePredicateSubqueries(spark, a.value,
-              "MERGE INSERT"), tOut, tAl, sAl, "MERGE INSERT")).toMap
-      case other => unsupported(s"MERGE not-matched action $other",
-        "WHEN NOT MATCHED supports INSERT")
-    }
     val insertOut =
       if (notMatched.isEmpty) None
-      else Some(sA.join(tA, keyCond, "left_anti")
-        .withColumn("__graft_v",
-          verdictOf(notMatched, "WHEN NOT MATCHED"))
-        .filter(col("__graft_v") >= 0)
-        .select(schema.fields.toIndexedSeq.map { f =>
-          val fold = f.name.toLowerCase(java.util.Locale.ROOT)
-          insertAssigns.zipWithIndex.foldRight(
-              lit(null).cast(f.dataType): Column) { case ((m, i), els) =>
-            when(col("__graft_v") === i,
-              m.getOrElse(fold, lit(null))).otherwise(els)
-          }.cast(f.dataType).as(f.name)
-        } :+ lit(false).as("__graft_del"): _*))
+      else Some(clauseRows(join(src, tgt, LeftAnti), notMatched,
+        notMatched.map {
+          case InsertAction(_, assigns) =>
+            // an INSERT key must be the ON clause's source key
+            // expression: the anti-join proved THAT value absent from
+            // the target, so only that value is a safe plain insert (a
+            // divergent key can collide with — and mask-replace — an
+            // unrelated existing row)
+            guardKeyAssigns(assigns, "WHEN NOT MATCHED INSERT",
+              sourceSideOk = true)
+            Some(assigns.map(a => fold(assignName(a)) -> a.value).toMap)
+          case other => unsupported(s"MERGE not-matched action $other",
+            "WHEN NOT MATCHED supports INSERT")
+        }, f => Literal(null, f.dataType)))
     // ---- target rows matched by NO source row (WHEN NOT MATCHED BY
     // SOURCE): one anti-join scopes them, then the same first-match-
     // wins verdict / post-image machinery as WHEN MATCHED. Conditions
@@ -1167,46 +482,14 @@ object GraftSqlDml extends PredicateHelper {
     // unchanged (guard above, sourceSideOk = false — there IS no
     // source row to equal), so mergeDV's mask covers exactly the
     // affected rows.
-    val nmbsAssigns: Seq[Option[Map[String, Column]]] =
-      notMatchedBySource.map {
-        case UpdateAction(_, assigns, _) =>
-          guardKeyAssigns(assigns, "WHEN NOT MATCHED BY SOURCE UPDATE",
-            sourceSideOk = false)
-          Some(composeSet(assigns, "MERGE NOT MATCHED BY SOURCE SET",
-            e => sidedCol(rewritePredicateSubqueries(spark, e,
-              "MERGE NOT MATCHED BY SOURCE SET"), tOut, tAl, sAl,
-              "MERGE NOT MATCHED BY SOURCE SET"),
-            top => col(s"$tAl.$top"))
-            .map { case (k, c) => fold(k) -> c }.toMap)
-        case DeleteAction(_) => None
-        case other => unsupported(
-          s"MERGE not-matched-by-source action $other",
-          "WHEN NOT MATCHED BY SOURCE supports UPDATE and DELETE")
-      }
-    val nmbsDelIdx = nmbsAssigns.zipWithIndex.collect {
-      case (None, i) => i }
     val nmbsOut =
       if (notMatchedBySource.isEmpty) None
-      else Some(tA.join(sA, keyCond, "left_anti")
-        .withColumn("__graft_v",
-          verdictOf(notMatchedBySource, "WHEN NOT MATCHED BY SOURCE"))
-        .filter(col("__graft_v") >= 0)
-        .select(schema.fields.toIndexedSeq.map { f =>
-          val foldF = fold(f.name)
-          nmbsAssigns.zipWithIndex.foldRight(
-              col(s"$tAl.${f.name}"): Column) { case ((asg, i), els) =>
-            val v = asg match {
-              case Some(m) => m.getOrElse(foldF, col(s"$tAl.${f.name}"))
-              case None => col(s"$tAl.${f.name}") // delete: values unused
-            }
-            when(col("__graft_v") === i, v).otherwise(els)
-          }.cast(f.dataType).as(f.name)
-        } :+ (if (nmbsDelIdx.isEmpty) lit(false)
-              else col("__graft_v").isin(nmbsDelIdx.map(Integer.valueOf): _*))
-          .as("__graft_del"): _*))
+      else Some(clauseRows(join(tgt, src, LeftAnti), notMatchedBySource,
+        setImages(notMatchedBySource, "WHEN NOT MATCHED BY SOURCE",
+          sourceSideOk = false), keepTarget))
     val updates = (Seq(matchedOut) ++ insertOut ++ nmbsOut)
-      .reduce(_.unionByName(_))
-    Versioned.mergeDV(spark, t.path, updates, keys.map(_._1).toSeq,
+      .map(frame(spark, _)).reduce(_.unionByName(_))
+    Versioned.mergeDV(spark, t.path, updates, keys.map(_._1.name).toSeq,
       txn = None, deleteWhen = Some(col("__graft_del"))): Unit
   }
 }
@@ -1256,14 +539,8 @@ class GraftStreamRewrite(spark: SparkSession)
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
 
   private def align(plan: LogicalPlan,
-      out: Seq[AttributeReference]): LogicalPlan = {
-    val byFold = plan.output.map(a =>
-      a.name.toLowerCase(java.util.Locale.ROOT) -> a).toMap
-    Project(out.map { o =>
-      val a = byFold(o.name.toLowerCase(java.util.Locale.ROOT))
-      Alias(a, o.name)(exprId = o.exprId)
-    }, plan)
-  }
+      out: Seq[AttributeReference]): LogicalPlan =
+    Project(GraftSqlDml.aliasTo(plan, out), plan)
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.resolveOperators {

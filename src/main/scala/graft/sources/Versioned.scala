@@ -3949,7 +3949,7 @@ object Versioned {
   }
 
   /** Result of a row-level DML commit ([[deleteWhereDV]],
-    * [[deleteWhereDVJoin]], [[updateWhereDV]]): the committed version
+    * [[updateWhereDV]]): the committed version
     * and the rows the committed mask covers (-1 on a txn replay, whose
     * work was done by the original commit). */
   final case class DeleteResult(version: Int, deletedRows: Long)
@@ -3989,60 +3989,20 @@ object Versioned {
       predicate: org.apache.spark.sql.Column,
       txn: Option[String] = None): DeleteResult = {
     import org.apache.spark.sql.functions.{coalesce, lit}
-    deleteWhereDVCore(spark, path, txn,
-      m => dmlLiveRows(spark, path, m, predicate)
-        .filter(coalesce(predicate, lit(false)))) // NULL keeps the row
-  }
-
-  /** DELETE whose row scope is a DISTRIBUTED SEMI-JOIN instead of a
-    * row-local predicate — the 100 TB GDPR-erasure path when the key
-    * set is too large to materialize on the driver
-    * ([[GraftSqlDml]]'s IN-subquery rewrite falls back here past its
-    * bounded-collect cap): live target rows whose `keyCol` equals any
-    * row of the single-column `keys` frame are masked, optionally
-    * pre-filtered by `extra` (the statement's other conjuncts, NULL
-    * keeps the row). The join is one shuffle of both sides on the key
-    * (AQE broadcasts `keys` when it turns out small); NOTHING
-    * key-set-sized ever reaches the driver. Equality-based semi-join
-    * scope matches SQL `IN (subquery)` exactly for the rows a DELETE
-    * touches: NULL keys witness nothing on either side, so they
-    * delete nothing — identical to IN's three-valued TRUE-only
-    * scope. Same mask/feed/OCC mechanics as [[deleteWhereDV]]. */
-  def deleteWhereDVJoin(spark: SparkSession, path: String,
-      keyCol: org.apache.spark.sql.Column, keys: DataFrame,
-      extra: Option[org.apache.spark.sql.Column] = None,
-      txn: Option[String] = None): DeleteResult =
-    deleteWhereDVCore(spark, path, txn,
-      m => semiJoinHits(spark, path, m, keyCol, keys, extra))
-
-  /** The semi-join hit selector shared by [[deleteWhereDVJoin]] and
-    * [[updateWhereDVJoin]]: live rows (existing mask applied),
-    * pre-filtered by `extra` (NULL keeps the row), left-semi-joined
-    * to the single-column distinct `keys` frame on `keyCol`. */
-  private def semiJoinHits(spark: SparkSession, path: String,
-      m: Manifest, keyCol: org.apache.spark.sql.Column,
-      keys: DataFrame,
-      extra: Option[org.apache.spark.sql.Column]): DataFrame = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit}
-    require(keys.columns.length == 1,
-      s"versioned semi-join DML: keys frame must have exactly " +
-        s"one column, got [${keys.columns.mkString(", ")}]")
-    val live = dmlLiveRows(spark, path, m, extra.getOrElse(lit(true)))
-    val pre = extra.map(e => live.filter(coalesce(e, lit(false))))
-      .getOrElse(live)
-    pre.join(keys.toDF("__graft_semi_k").distinct(),
-      keyCol === col("__graft_semi_k"), "left_semi")
+    deleteWhereDVCore(spark, path, txn, predicate,
+      _.filter(coalesce(predicate, lit(false)))) // NULL keeps the row
   }
 
   /** The shared mask-stage → publish → feed loop behind
-    * [[deleteWhereDV]] and [[deleteWhereDVJoin]]: `hitRows` receives
-    * the base manifest and returns the LIVE rows to delete (still
-    * carrying their `__dv_rel`/`__dv_pos` identities — derived from
-    * [[dmlLiveRows]] so the existing mask is already applied and
-    * masked rows are never double-counted). */
-  private def deleteWhereDVCore(spark: SparkSession, path: String,
-      txn: Option[String],
-      hitRows: Manifest => DataFrame): DeleteResult = {
+    * [[deleteWhereDV]] and SQL `DELETE` ([[GraftSqlDml]]): `scope`
+    * receives the LIVE rows ([[dmlLiveRows]], bloom-pruned by the
+    * `prune` predicate's top-level point lookup) and returns the
+    * rows to delete, still carrying their `__dv_rel`/`__dv_pos`
+    * identities — the existing mask is already applied, so masked
+    * rows are never double-counted. */
+  private[sources] def deleteWhereDVCore(spark: SparkSession, path: String,
+      txn: Option[String], prune: org.apache.spark.sql.Column,
+      scope: DataFrame => DataFrame): DeleteResult = {
     import org.apache.spark.sql.functions.{col, lit}
     var attempt = 0
     while (true) {
@@ -4064,7 +4024,8 @@ object Versioned {
       // to (rel, pos) row ids — bloom-pruned to candidate files when
       // the predicate carries an indexed point lookup (dmlLiveRows);
       // the deleted-row count is observed on that same write
-      val mask = stageMask(path, hitRows(m)).getOrElse(
+      val mask = stageMask(path,
+        scope(dmlLiveRows(spark, path, m, prune))).getOrElse(
         return DeleteResult(base, 0L)) // no commit
       val next = Manifest(base + 1, "delete-dv", m.dataDirs, txn,
         m.schemaDdl, ts = Some(System.currentTimeMillis()),
@@ -4169,42 +4130,35 @@ object Versioned {
       predicate: org.apache.spark.sql.Column,
       set: Seq[(String, org.apache.spark.sql.Column)],
       txn: Option[String] = None): DeleteResult = {
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    updateWhereDVCore(spark, path, set, txn,
-      m => dmlLiveRows(spark, path, m, predicate)
-        .filter(coalesce(predicate, lit(false)))) // NULL keeps the row
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
+    val setFold = set.map { case (n, c) => foldName(n) -> c }.toMap
+    updateWhereDVCore(spark, path, set.map(_._1), txn, predicate,
+      _.filter(coalesce(predicate, lit(false))), // NULL keeps the row
+      (staged, st) => staged.select(st.fields.toIndexedSeq.map { f =>
+        setFold.get(foldName(f.name))
+          .map(_.cast(f.dataType)).getOrElse(col(f.name)).as(f.name)
+      }: _*))
   }
 
-  /** UPDATE whose row scope is a DISTRIBUTED SEMI-JOIN — the update
-    * twin of [[deleteWhereDVJoin]], same contract: rows whose
-    * `keyCol` equals any row of the single-column `keys` frame
-    * (optionally pre-filtered by `extra`) are masked and re-appended
-    * with the assignments applied; nothing key-set-sized reaches the
-    * driver. [[GraftSqlDml]]'s UPDATE falls back here for the
-    * subquery shapes the bounded IN-set rewrite cannot carry. */
-  def updateWhereDVJoin(spark: SparkSession, path: String,
-      keyCol: org.apache.spark.sql.Column, keys: DataFrame,
-      set: Seq[(String, org.apache.spark.sql.Column)],
-      extra: Option[org.apache.spark.sql.Column] = None,
-      txn: Option[String] = None): DeleteResult =
-    updateWhereDVCore(spark, path, set, txn,
-      m => semiJoinHits(spark, path, m, keyCol, keys, extra))
-
   /** The shared mask + post-image + publish loop behind
-    * [[updateWhereDV]] and [[updateWhereDVJoin]]: `hitRows` receives
-    * the base manifest and returns the LIVE rows to update (carrying
-    * their `__dv_rel`/`__dv_pos` identities). */
-  private def updateWhereDVCore(spark: SparkSession, path: String,
-      set: Seq[(String, org.apache.spark.sql.Column)],
-      txn: Option[String],
-      hitRows: Manifest => DataFrame): DeleteResult = {
+    * [[updateWhereDV]] and SQL `UPDATE` ([[GraftSqlDml]]): `scope`
+    * selects the rows to update from the LIVE rows exactly as in
+    * [[deleteWhereDVCore]], and `postImage` maps the staged
+    * pre-images (logical columns) to the post-images under the
+    * table schema, assigning the `set` columns — all of them, every
+    * other column carried. */
+  private[sources] def updateWhereDVCore(spark: SparkSession, path: String,
+      set: Seq[String], txn: Option[String],
+      prune: org.apache.spark.sql.Column, scope: DataFrame => DataFrame,
+      postImage: (DataFrame, org.apache.spark.sql.types.StructType) =>
+        DataFrame): DeleteResult = {
     import org.apache.spark.sql.functions.{col, lit, not}
     require(set.nonEmpty, "versioned updateWhereDV: empty SET list")
-    // each column once: the SET list folds into a map below, so a
+    // each column once: the SET list folds into a per-column map, so a
     // duplicate assignment (SET v = 1, v = 2) would silently last-win
     // where SQL requires an error — and the SQL front door forwards
     // assignments verbatim, so the silent path was reachable
-    set.map(n => foldName(n._1)).groupBy(identity)
+    set.map(foldName).groupBy(identity)
       .collectFirst { case (n, g) if g.size > 1 => n }.foreach(d =>
         sys.error(s"versioned updateWhereDV: duplicate assignment to " +
           s"column '$d' in SET — SQL forbids assigning the same column " +
@@ -4232,27 +4186,21 @@ object Versioned {
       // every SET key must name a live column (folded — Spark
       // resolves case-insensitively); unknown names fail before any IO
       val byFold = st.fields.map(f => foldName(f.name) -> f).toMap
-      val setFold = set.map { case (n, c) =>
-        require(byFold.contains(foldName(n)),
-          s"versioned updateWhereDV: no column '$n' at $path " +
-            s"(have: ${st.fieldNames.mkString(", ")})")
-        foldName(n) -> c
-      }.toMap
+      set.foreach(n => require(byFold.contains(foldName(n)),
+        s"versioned updateWhereDV: no column '$n' at $path " +
+          s"(have: ${st.fieldNames.mkString(", ")})"))
       // stage the mask: live matching rows reduced to (rel, pos) —
       // identical first job to [[deleteWhereDV]], bloom-pruned the
       // same way, the updated-row count observed on the write
-      val mask = stageMask(path, hitRows(m)).getOrElse(
+      val mask = stageMask(path,
+        scope(dmlLiveRows(spark, path, m, prune))).getOrElse(
         return DeleteResult(base, 0L)) // no commit
       // post-image from the staged mask: assignments applied, casts
       // to the declared column types (SQL UPDATE semantics), staged
       // as this commit's data dir under PHYSICAL names
-      val postImage = stagedMaskRows(spark, path, m, mask)
-        .select(st.fields.toIndexedSeq.map { f =>
-          setFold.get(foldName(f.name))
-            .map(_.cast(f.dataType)).getOrElse(col(f.name)).as(f.name)
-        }: _*)
+      val post = postImage(stagedMaskRows(spark, path, m, mask), st)
       val dataId = java.util.UUID.randomUUID().toString
-      toPhysical(m, postImage)
+      toPhysical(m, post)
         .write.mode("errorifexists").parquet(s"$path/data/$dataId")
       // gate + feed read the immutable STAGED bytes back, so what was
       // checked and what was fed is exactly what the manifest commits

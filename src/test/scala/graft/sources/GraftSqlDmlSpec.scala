@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** SQL row-level DML + catalog CRUD + metadata tables
@@ -269,7 +270,7 @@ class GraftSqlDmlSpec extends SparkSpec {
       s"(SELECT 1 FROM $cat.flagged)")
     assert(spark.sql(s"SELECT count(*) AS n FROM $cat.t3")
       .head.getLong(0) == 0L)
-    // pure range correlation rides the bounded chain (pre-r16 loud):
+    // pure range correlation (pre-r16 loud):
     // ids {2,4} — k<4 rows see a larger id and die, k>=5 survive
     spark.sql(s"DELETE FROM $cat.t WHERE EXISTS " +
       s"(SELECT 1 FROM $cat.flagged f WHERE f.id > k)")
@@ -1043,8 +1044,8 @@ class GraftSqlDmlSpec extends SparkSpec {
     Versioned.commit(Seq((100L, "a"), (7L, "b")).toDF("x", "tag"),
       s"$wh/side", overwrite = false)
     val cat = freshCat(wh)
-    // UPDATE SET v = (SELECT max(x) …): the subplan runs once,
-    // distributed, and its one value lands as a literal
+    // UPDATE SET v = (SELECT max(x) …): an uncorrelated scalar
+    // subquery, one value for every row
     spark.sql(s"""UPDATE $cat.t SET v = (SELECT max(x) FROM $cat.side)
       WHERE k = 2""")
     assert(spark.sql(s"SELECT k, v FROM $cat.t ORDER BY k")
@@ -1056,12 +1057,13 @@ class GraftSqlDmlSpec extends SparkSpec {
       WHEN MATCHED THEN UPDATE SET v = (SELECT min(x) FROM $cat.side)""")
     assert(spark.sql(s"SELECT v FROM $cat.t WHERE k = 3")
       .head.getLong(0) == 7L)
-    // >1-row scalar subquery: loud, nothing lands
+    // >1-row scalar subquery: loud (Spark's own error), nothing lands
     val headBefore = Versioned.latestVersion(path)
     val err = intercept[Exception] {
       spark.sql(s"UPDATE $cat.t SET v = (SELECT x FROM $cat.side)")
     }
-    assert(err.getMessage.contains("more than one row"),
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists(_.getMessage.contains("SCALAR_SUBQUERY_TOO_MANY_ROWS")),
       s"wrong error: ${err.getMessage}")
     assert(Versioned.latestVersion(path) == headBefore)
     // an EMPTY scalar subquery assigns NULL (SQL semantics)
@@ -1092,8 +1094,8 @@ class GraftSqlDmlSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSeq ==
       Seq((1L, 10L), (2L, 2000L), (3L, 30L), (4L, 4000L)))
     // WHEN MATCHED AND EXISTS (… WHERE aux.hk = t.k AND …): a
-    // single-equality-correlated EXISTS decorrelates over the merge
-    // row's own column — only k=1 carries a 'y' aux row
+    // single-equality-correlated EXISTS over the merge row's own
+    // column — only k=1 carries a 'y' aux row
     spark.sql(s"""MERGE INTO $cat.t t
       USING (SELECT * FROM VALUES (1L), (3L) AS s(k)) s
       ON t.k = s.k
@@ -1113,8 +1115,8 @@ class GraftSqlDmlSpec extends SparkSpec {
       .head.getLong(0) == 20L)
     assert(spark.sql(s"SELECT v FROM $cat.t WHERE k = 3")
       .head.getLong(0) == 30L, "k=3 prefiltered out of the source")
-    // correlated IN in a clause condition: the exact bounded
-    // OR-of-ANDs chain (pre-r16 this was loud) — k=2's v=20 is in
+    // correlated IN in a clause condition (pre-r16 this was loud) —
+    // k=2's v=20 is in
     // {hot : hot = t.v} = {20}; k=1's v=0 matches nothing
     spark.sql(s"""MERGE INTO $cat.t t
       USING (SELECT * FROM VALUES (1L), (2L) AS s(k)) s
@@ -1125,8 +1127,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(spark.sql(s"SELECT k, v FROM $cat.t ORDER BY k")
       .as[(Long, Long)].collect().toSeq ==
       Seq((1L, 0L), (2L, -1L), (3L, 30L), (4L, 4000L)))
-    // NON-EQUALITY correlation (outer range) in a clause condition:
-    // the mixed-conjunct chain substitutes the collected tuples —
+    // NON-EQUALITY correlation (outer range) in a clause condition —
     // k=4's v=4000 is in {hot*100 : hot > 4} = {2000, 4000}; k=1's
     // v=0 is not (pre-r16 this was loud)
     spark.sql(s"""MERGE INTO $cat.t t
@@ -1178,22 +1179,34 @@ class GraftSqlDmlSpec extends SparkSpec {
       spark.sql(s"""UPDATE $cat.t SET v = (SELECT x FROM $cat.s s
           WHERE s.g = t.grp LIMIT 1)""")
     }
-    // MIXED (non-equality) correlation conjuncts in a SCALAR subquery
-    // are loud, never silently dropped: the aggregate runs over the
-    // whole group, so an outer-row-dependent predicate (s.x < t.k)
-    // cannot be applied to the per-key aggregate after the fact —
-    // applying the filter post-aggregation would be mathematically
-    // wrong for every outer row (the r16 advice's silent-wrong shape)
-    intercept[Exception] {
-      spark.sql(s"""UPDATE $cat.t SET v = (SELECT max(x) FROM $cat.s s
-          WHERE s.g = t.grp AND s.x < t.k)""")
-    }
-    // head unmoved by the failed statements
-    assert(spark.sql(s"SELECT v FROM $cat.t WHERE k = 2")
-      .as[Option[Long]].head().contains(0L))
+    // head unmoved by the failed statement
+    assert(spark.sql(s"SELECT k, v FROM $cat.t ORDER BY k")
+      .as[(Long, Option[Long])].collect().toSeq ==
+      Seq((1L, Some(40L)), (2L, Some(0L)), (3L, None)))
+    // MIXED (equality + outer-row-dependent range) correlation: the
+    // range filters BELOW the aggregate, per outer row — never applied
+    // to a per-group aggregate after the fact. s.x < t.k keeps no
+    // inner row for any k (a: 10, 30; b: 99), so every group is empty
+    spark.sql(s"""UPDATE $cat.t SET v = (SELECT max(x) FROM $cat.s s
+        WHERE s.g = t.grp AND s.x < t.k)""")
+    assert(spark.sql(s"SELECT k, v FROM $cat.t ORDER BY k")
+      .as[(Long, Option[Long])].collect().toSeq ==
+      Seq((1L, None), (2L, None), (3L, None)))
+    // s.x < t.k * 20: k=1 (a) keeps x=10 only; k=2 (b) keeps nothing
+    // (99 >= 40); k=3 (c) has no rows — max, then count's 0 default
+    spark.sql(s"""UPDATE $cat.t SET v = (SELECT max(x) FROM $cat.s s
+        WHERE s.g = t.grp AND s.x < t.k * 20)""")
+    assert(spark.sql(s"SELECT k, v FROM $cat.t ORDER BY k")
+      .as[(Long, Option[Long])].collect().toSeq ==
+      Seq((1L, Some(10L)), (2L, None), (3L, None)))
+    spark.sql(s"""UPDATE $cat.t SET v = (SELECT count(*) FROM $cat.s s
+        WHERE s.g = t.grp AND s.x < t.k * 20)""")
+    assert(spark.sql(s"SELECT k, v FROM $cat.t ORDER BY k")
+      .as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 1L), (2L, 0L), (3L, 0L)))
   }
 
-  test("range-correlated EXISTS in DML WHERE rides the bounded chain") {
+  test("range-correlated EXISTS in DML WHERE: an outer range alone and beside an equality") {
     val wh = freshWarehouse()
     Versioned.commit(Seq((1L, 10L), (2L, 25L), (3L, 50L))
       .toDF("k", "v"), s"$wh/t", overwrite = false)
@@ -1236,8 +1249,8 @@ class GraftSqlDmlSpec extends SparkSpec {
       .toDF("r", "w"), s"$wh/aux", overwrite = false)
     val cat = freshCat(wh)
     // 2-equality correlated EXISTS in a clause condition — pre-r16
-    // loud ("exactly one outer = inner equality"); now a struct-IN
-    // over the null-free inner tuple set
+    // loud ("exactly one outer = inner equality"); the NULL-keyed aux
+    // row witnesses nothing
     spark.sql(s"""MERGE INTO $cat.t t
       USING (SELECT * FROM VALUES (1L), (2L), (3L) AS s(k)) s
       ON t.k = s.k
@@ -1259,7 +1272,7 @@ class GraftSqlDmlSpec extends SparkSpec {
       Seq((1L, -1L), (2L, 20L), (3L, -1L)))
   }
 
-  test("DELETE WHERE multi-column IN rides the semi-join mask; NULL tuples witness nothing") {
+  test("DELETE WHERE multi-column IN lands one mask; NULL tuples witness nothing") {
     val wh = freshWarehouse()
     val path = s"$wh/t"
     Versioned.commit(Seq(
@@ -1308,7 +1321,7 @@ class GraftSqlDmlSpec extends SparkSpec {
       "k=1 in-set, k=2 NULL (not TRUE), k=3 true complement")
   }
 
-  test("UPDATE rides the semi-join fallback too: correlated EXISTS scopes the post-images") {
+  test("UPDATE WHERE correlated EXISTS on two equalities scopes the post-images") {
     val wh = freshWarehouse()
     val path = s"$wh/t"
     Versioned.commit(Seq(
@@ -1318,7 +1331,7 @@ class GraftSqlDmlSpec extends SparkSpec {
       .toDF("region", "v"), s"$wh/s", overwrite = false)
     val cat = freshCat(wh)
     // multi-equality correlated EXISTS in UPDATE WHERE — the same
-    // composite-key semi-join mask as DELETE, post-images appended
+    // one-mask scope as DELETE, post-images appended
     spark.sql(s"""UPDATE $cat.t SET v = v + 1000 WHERE EXISTS (
         SELECT 1 FROM $cat.s s
         WHERE s.region = t.region AND s.v = t.v)""")
@@ -1330,7 +1343,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(Versioned.dataDirIds(path, 1).size == 2)
   }
 
-  test("DELETE with correlated EXISTS/IN: multi-equality correlations land as a semi-join mask") {
+  test("DELETE with correlated EXISTS/IN: multi-equality correlations land as one mask") {
     val wh = freshWarehouse()
     val path = s"$wh/t"
     Versioned.commit(Seq(
@@ -1344,8 +1357,7 @@ class GraftSqlDmlSpec extends SparkSpec {
       (None: Option[String], None: Option[Long], "z"))
       .toDF("region", "v", "tag"), s"$wh/s", overwrite = false)
     val cat = freshCat(wh)
-    // TWO outer equalities — pre-r15 this was loud; now: semi-join
-    // mask on the composite struct key
+    // TWO outer equalities (pre-r15 this was loud): one mask
     spark.sql(s"""DELETE FROM $cat.t WHERE EXISTS (
         SELECT 1 FROM $cat.s s
         WHERE s.region = t.region AND s.v = t.v AND s.tag <> 'q')""")
@@ -1355,8 +1367,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(Versioned.dvDirIds(path, 1).size == 1)
     assert(spark.read.parquet(
       s"$path/dv/${Versioned.dvDirIds(path, 1).head}").count() == 2)
-    // correlated IN decorrelates the same way (value pair + the
-    // correlation pair form the composite key)
+    // correlated IN: the value pair plus the correlation pair
     spark.sql(s"""DELETE FROM $cat.t WHERE v IN (
         SELECT s.v FROM $cat.s s WHERE s.region = t.region)""")
     // remaining: (2,eu,20) kept, (3,us,10) kept (us rows in s carry
@@ -1365,12 +1376,12 @@ class GraftSqlDmlSpec extends SparkSpec {
       .as[Long].collect().toSeq == Seq(2L, 3L, 5L))
   }
 
-  test("DELETE with a >MaxInSetKeys IN-subquery falls back to the distributed semi-join mask") {
+  test("DELETE with a 1.1M-key IN-subquery erases through one mask, no key set collected") {
     val wh = freshWarehouse()
     val path = s"$wh/t"
-    // 1.3M-row target; the erase list holds 1.1M distinct keys —
-    // past the 2^20 bounded-collect cap, so the IN-set rewrite MUST
-    // NOT materialize it on the driver
+    // 1.3M-row target; the erase list holds 1.1M distinct keys (more
+    // than 2^20) — the IN plans as a distributed semi-join, so the key
+    // set is never collected
     val n = 1300000L
     val erased = 1100000L // > (1 << 20)
     Versioned.commit(
@@ -1381,7 +1392,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     spark.range(1, erased + 1).toDF("id")
       .createOrReplaceTempView("erase_src")
     val cat = freshCat(wh)
-    // the extra conjunct rides the join path as a pre-filter
+    // the extra conjunct filters beside the semi-join
     spark.sql(s"""DELETE FROM $cat.t WHERE k IN
         (SELECT id FROM erase_src) AND m <> 0""")
     val expectDeleted = (1L to erased).count(_ % 7 != 0).toLong
@@ -1397,6 +1408,104 @@ class GraftSqlDmlSpec extends SparkSpec {
     assert(spark.sql(s"SELECT count(*) AS n FROM $cat.t " +
       s"WHERE k <= $erased").head.getLong(0) ==
       (1L to erased).count(_ % 7 == 0).toLong)
+  }
+
+  /** Commits each frame as the versioned table `<name>` under `wh`
+    * and registers a plain temp view `<name>_v` over the same rows. */
+  private def twins(wh: String, frames: (String, DataFrame)*): Unit =
+    frames.foreach { case (n, df) =>
+      Versioned.commit(df, s"$wh/$n", overwrite = false)
+      df.createOrReplaceTempView(s"${n}_v")
+    }
+
+  /** The keys Spark itself keeps from the plain view `t_v` under
+    * `NOT coalesce(pred, false)` — what a DML deleting `pred` leaves. */
+  private def sparkKeeps(pred: (String => String) => String): Seq[Long] =
+    spark.sql(s"""SELECT k FROM t_v t
+        WHERE NOT coalesce(${pred(n => s"${n}_v")}, false) ORDER BY k""")
+      .as[Long].collect().toSeq
+
+  private def keysOf(cat: String): Seq[Long] =
+    spark.sql(s"SELECT k FROM $cat.t ORDER BY k").as[Long].collect().toSeq
+
+  test("DELETE WHERE EXISTS with a range correlation over 1,500 inner rows matches Spark") {
+    val wh = freshWarehouse()
+    twins(wh,
+      "t" -> (Seq.tabulate(40)(i => (i + 1L, Some((i + 1L) * 50))) :+
+        ((41L, None: Option[Long]))).toDF("k", "v"),
+      "s" -> spark.range(1000, 2500).toDF("th"))
+    val cat = freshCat(wh)
+    val pred = (tbl: String => String) =>
+      s"EXISTS (SELECT 1 FROM ${tbl("s")} s WHERE s.th < t.v)"
+    val expect = sparkKeeps(pred)
+    assert(expect.size == 21, expect) // v <= 1000 (k <= 20) and NULL v
+    spark.sql(s"DELETE FROM $cat.t t WHERE ${pred(n => s"$cat.$n")}")
+    assert(keysOf(cat) == expect)
+  }
+
+  test("MERGE WHEN MATCHED AND t.v IN (correlated subquery of 1,800 tuples) matches Spark") {
+    val wh = freshWarehouse()
+    twins(wh,
+      "t" -> Seq.tabulate(30)(i => (i + 1L, Seq("a", "b", "c", "d")(i % 4),
+        (i + 1L) * 37 % 700)).toDF("k", "grp", "v"),
+      "s" -> (for (g <- Seq("a", "b", "c"); w <- 0L until 600L)
+        yield (g, Option(w))).++(Seq(("b", None: Option[Long])))
+        .toDF("g", "w"))
+    val cat = freshCat(wh)
+    val pred = (tbl: String => String) =>
+      s"t.v IN (SELECT w FROM ${tbl("s")} x WHERE x.g = t.grp)"
+    val expect = sparkKeeps(pred)
+    assert(expect.nonEmpty && expect.size < 30, expect)
+    spark.sql(s"""MERGE INTO $cat.t t USING t_v s ON t.k = s.k
+      WHEN MATCHED AND ${pred(n => s"$cat.$n")} THEN DELETE""")
+    assert(keysOf(cat) == expect)
+  }
+
+  test("DELETE with two uncorrelated IN conjuncts OR a range EXISTS matches Spark") {
+    val wh = freshWarehouse()
+    twins(wh,
+      "t" -> Seq.tabulate(60)(i => (i + 1L, Seq("a", "b", "c")(i % 3),
+        (i + 1L) * 13 % 97)).toDF("k", "grp", "v"),
+      "a" -> (Seq.tabulate(20)(i => Option(i * 3L)) :+ None).toDF("id"),
+      "b" -> Seq.tabulate(50)(i => i * 2L).toDF("w"),
+      "s" -> (for (g <- Seq("a", "b"); th <- 0L until 750L)
+        yield (g, th + 90L)).toDF("g", "th"))
+    val cat = freshCat(wh)
+    val pred = (tbl: String => String) =>
+      s"""(t.k IN (SELECT id FROM ${tbl("a")}) AND
+            t.v IN (SELECT w FROM ${tbl("b")}))
+          OR EXISTS (SELECT 1 FROM ${tbl("s")} s
+            WHERE s.g = t.grp AND s.th < t.v)"""
+    val expect = sparkKeeps(pred)
+    assert(expect.nonEmpty && expect.size < 60, expect)
+    spark.sql(s"DELETE FROM $cat.t t WHERE ${pred(n => s"$cat.$n")}")
+    assert(keysOf(cat) == expect)
+  }
+
+  test("SQL DELETE IN (subquery) and UPDATE WHERE correlated EXISTS start no job from GraftSqlDml") {
+    val wh = freshWarehouse()
+    Versioned.commit(Seq.tabulate(20)(i => (i + 1L, (i % 4).toLong))
+      .toDF("k", "g"), s"$wh/t", overwrite = false)
+    Versioned.commit(Seq(2L, 4L, 6L).toDF("id"), s"$wh/e",
+      overwrite = false)
+    Versioned.commit(Seq(1L, 3L).toDF("h"), s"$wh/hot", overwrite = false)
+    val cat = freshCat(wh)
+    val (_, delJobs) = graft.JobCounter(spark) {
+      spark.sql(s"DELETE FROM $cat.t WHERE k IN (SELECT id FROM $cat.e)")
+    }
+    val (_, updJobs) = graft.JobCounter(spark) {
+      spark.sql(s"""UPDATE $cat.t SET g = g + 10 WHERE EXISTS (
+          SELECT 1 FROM $cat.hot h WHERE h.h = t.g)""")
+    }
+    assert(keysOf(cat) == (1L to 20L).filterNot(Set(2L, 4L, 6L)))
+    assert(spark.sql(s"SELECT count(*) FROM $cat.t WHERE g > 9")
+      .head.getLong(0) == 7L) // g in {1, 3}: the even k, less 2, 4, 6
+    Seq(delJobs, updJobs).foreach(jobs => assert(
+      !jobs.exists(_.site.contains("GraftSqlDml")), jobs.mkString("\n")))
+    // budgets at the measured counts (2 cores); each subquery runs
+    // inside the engine's own jobs
+    assert(delJobs.size <= 4, delJobs.mkString("\n"))
+    assert(updJobs.size <= 6, updJobs.mkString("\n"))
   }
 
   test("CREATE TABLE PARTITIONED BY (days(ts)): inserts land daily dirs, SQL time ranges prune") {
