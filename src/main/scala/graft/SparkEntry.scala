@@ -5840,7 +5840,7 @@ object SparkEntry {
     // 280: CDC VERSION-RANGE PUSHDOWN driver-gated — the canonical
     // batch CDC query, `SELECT … FROM <t>.changes WHERE
     // _commit_version >= N`, through the SQL catalog: the
-    // ChangesScanBuilder maps the comparison onto the feed layout's
+    // the `.changes` scan maps the comparison onto the feed layout's
     // `cv=` directory index (sources/GraftCatalog.scala →
     // Versioned.readChangesPruned), so the scan lists and reads ONLY
     // the asked versions' dirs — O(asked range), not O(retained
@@ -6583,7 +6583,7 @@ object SparkEntry {
     // records the write policy in the birth manifest, INSERT routes
     // through commitPartitioned (hive layout + per-dir spec), and the
     // filtered read prunes whole partition directories before any
-    // file IO (VersionedV1Scan.partitionPrune). The checked output
+    // file IO (VersionedPrune.partitionPrune). The checked output
     // carries the aggregate AND a `pruned` flag gated on the scan's
     // real file accounting (filesRead < filesTotal); oracle = the
     // source-table filter + TRUE. Bounded collect: ≤2 groups.
@@ -6625,7 +6625,7 @@ object SparkEntry {
     // ts__days=yyyy-MM-dd carry the rendering; the files keep the
     // FULL timestamp, so reads are exact), and a pure-SQL timestamp
     // RANGE predicate prunes whole day directories before any file IO
-    // (VersionedV1Scan.transformPrune → readPartitionPrunedTime — a
+    // (VersionedPrune.transformPrune → readPartitionPrunedTime — a
     // lexicographic string-range compare over the zero-padded
     // renderings, bounds rendered under the same session clock the
     // writer staged under). The `pruned` flag gates the scan's REAL
@@ -7091,7 +7091,7 @@ object SparkEntry {
     // verb → Versioned.commitClustered: one overwrite commit whose
     // files carry tight (user_id, vc) bounding boxes + the min/max
     // sidecar, ledger mode 'cluster'), and the SELECT's pushed `vc`
-    // range routes VersionedV1Scan through readRangeClustered —
+    // range routes VersionedPrune through readRangeClustered —
     // files whose [lo, hi] misses [0, 500] are pruned on the sidecar
     // BEFORE any data IO, with the exact predicate re-applied
     // row-level. Checked output gates the aggregate AND the scan's
@@ -7129,7 +7129,7 @@ object SparkEntry {
     // ranges CANNOT prune — every file's [lo, hi] spans the domain)
     // committed with the per-file bloom sidecar
     // (Versioned.commitBloomIndexed), and the SELECT's pushed
-    // `doc_id = 42` routes VersionedV1Scan through
+    // `doc_id = 42` routes VersionedPrune through
     // readEqualityClustered — files whose bloom proves the key absent
     // never reach IO; the exact predicate removes bloom false
     // positives. Same skipped-flag gate on the scan's file
@@ -7182,7 +7182,7 @@ object SparkEntry {
     // BY (bucket(16, doc_id))` through pure SQL: every INSERT lays
     // its dir out as pmod(hash(doc_id), 16) hive subdirs
     // (Versioned.bucketModulus / stageHiveSpec), and a pushed point
-    // equality routes VersionedV1Scan through
+    // equality routes VersionedPrune through
     // readPartitionPrunedBucket — the probe value hashes driver-side
     // with the SAME Murmur3 expression the writer used, so only 1/16
     // of each bucketed dir's files are even LISTED, before any data

@@ -33,8 +33,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * gives the Scala API.
   *
   * Execution reuses the snapshot read's DISTRIBUTED plan instead of
-  * re-deriving one: the scan is a [[V1Scan]] whose relation builds
-  * `Versioned.read(...)` — the union of explicit-schema parquet scans
+  * re-deriving one: every table here reads through one [[V1Scan]]
+  * bridge ([[GraftCatalog.frameScan]]); for a versioned table its
+  * relation builds `Versioned.read(...)` or one of its pruned reads
+  * ([[VersionedPrune]]) — the union of explicit-schema parquet scans
   * plus the deletion-vector anti-join — so DV-masked and evolved
   * snapshots are exactly as correct through SQL as through the Scala
   * API, and the physical work stays whole-stage-codegen parquet
@@ -370,7 +372,7 @@ class GraftCatalog extends TableCatalog
     // (createView refuses the collision at create time)
     if (viewExists(ident))
       return new ViewSqlTable(s"$catName.${ident.toString}",
-        pathOf(ident), loadView(ident))
+        loadView(ident))
     if (ident.namespace().nonEmpty) {
       val parentPath = (warehouse +: ident.namespace()).mkString("/")
       val parentHead = Versioned.latestVersion(parentPath)
@@ -453,7 +455,7 @@ class GraftCatalog extends TableCatalog
     * [[Versioned.commitPartitionedSpec]] (its data dir lands
     * hive-laid-out with the per-dir spec recorded), and catalog SQL
     * reads partition-prune whole directories before any file IO
-    * ([[VersionedV1Scan]]): equality/IN on an identity column, and
+    * ([[VersionedPrune]]): equality/IN on an identity column, and
     * timestamp/date RANGE predicates on a transformed column (the
     * daily-partitioned 100 TB layout's canonical query). Partitioning
     * stays PER-COMMIT underneath (partition evolution intact — the
@@ -705,7 +707,11 @@ private[sources] final class VersionedSqlTable(ident: String,
 
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new VersionedScanBuilder(path, pinned, tableSchema)
+    GraftCatalog.frameScan(tableSchema, s"graft-versioned $path v$pinned",
+      GraftCatalog.translateFilter(_).isDefined,
+      Some(() => Versioned.versionBytes(path, pinned))) {
+      (spark, accepted) => new VersionedPrune(path, pinned, accepted).read(spark)
+    }
 
   override def newWriteBuilder(
       infoArg: org.apache.spark.sql.connector.write.LogicalWriteInfo)
@@ -763,8 +769,9 @@ private[sources] final class HistorySqlTable(ident: String,
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    GraftCatalog.frameScan(historySchema, s"graft-history $path",
-      spark => Versioned.history(spark, path))
+    GraftCatalog.frameScan(historySchema, s"graft-history $path") {
+      (spark, _) => Versioned.history(spark, path)
+    }
 }
 
 /** `<table>.files` — the head snapshot's physical file inventory as
@@ -797,7 +804,39 @@ private[sources] final class FilesSqlTable(ident: String, path: String)
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
-      : ScanBuilder = new FilesScanBuilder(path, filesSchema)
+      : ScanBuilder =
+    GraftCatalog.frameScan(filesSchema, s"graft-files $path",
+      f => dirLevel(f) || GraftCatalog.translateFilter(f).isDefined) {
+      (spark, accepted) =>
+        // conjunction-only and an exact dir gate: both columns are
+        // per-dir constants of the MANIFEST's (dirId, partSpec) pairs
+        def dirPred(id: String, spec: String): Boolean = {
+          def of(a: String) = if (a.equalsIgnoreCase("dir_id")) id else spec
+          accepted.filter(dirLevel).forall {
+            case sources.EqualTo(a, v: String) => of(a) == v
+            case sources.In(a, vs) => vs.contains(of(a))
+            case sources.StringStartsWith(a, v) => of(a).startsWith(v)
+            case _ => true
+          }
+        }
+        val (df, walked, total) =
+          Versioned.filesDetailPruned(spark, path, dirPred)
+        GraftCatalog.lastFilesScan.set((path, walked, total))
+        df
+    }
+
+  /** `dir_id` / `part_spec` equality, IN and prefix — the filters the
+    * manifest answers before any filesystem walk. */
+  private def dirLevel(f: Filter): Boolean = f match {
+    case sources.EqualTo(a, _: String) => dirCol(a)
+    case sources.In(a, vs) =>
+      vs.nonEmpty && vs.forall(_.isInstanceOf[String]) && dirCol(a)
+    case sources.StringStartsWith(a, _) => dirCol(a)
+    case _ => false
+  }
+
+  private def dirCol(a: String): Boolean =
+    Seq("dir_id", "part_spec").contains(a.toLowerCase(java.util.Locale.ROOT))
 }
 
 /** `<table>.partitions` — SHOW PARTITIONS for this format: one row
@@ -830,8 +869,8 @@ private[sources] final class PartitionsSqlTable(ident: String,
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    GraftCatalog.frameScan(partitionsSchema, s"graft-partitions $path",
-      { spark =>
+    GraftCatalog.frameScan(partitionsSchema, s"graft-partitions $path") {
+      (spark, _) =>
         import org.apache.spark.sql.functions._
         val files = Versioned.filesDetail(spark, path)
         files
@@ -850,99 +889,22 @@ private[sources] final class PartitionsSqlTable(ident: String,
           .agg(count(lit(1)).as("n_files"),
             sum("size_bytes").as("size_bytes"),
             countDistinct("dir_id").as("n_dirs"))
-      })
-}
-
-/** Pushdown surface for `<table>.files`: fold accepted `dir_id` /
-  * `part_spec` filters into a dir-level predicate evaluated against
-  * the MANIFEST's (dirId, partSpec) pairs before any filesystem walk.
-  * Conjunction-only and always a RELAXATION-free exact dir gate (both
-  * columns are per-dir constants); anything else rejects back to
-  * Spark. */
-private[sources] final class FilesScanBuilder(path: String,
-    filesSchema: StructType)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
-
-  private var accepted: Array[Filter] = Array.empty
-  private var required: StructType = filesSchema
-
-  private def dirLevel(f: Filter): Boolean = f match {
-    case sources.EqualTo(a, _: String) =>
-      Seq("dir_id", "part_spec").contains(
-        a.toLowerCase(java.util.Locale.ROOT))
-    case sources.In(a, vs) => vs.nonEmpty &&
-      vs.forall(_.isInstanceOf[String]) &&
-      Seq("dir_id", "part_spec").contains(
-        a.toLowerCase(java.util.Locale.ROOT))
-    case sources.StringStartsWith(a, _) =>
-      Seq("dir_id", "part_spec").contains(
-        a.toLowerCase(java.util.Locale.ROOT))
-    case _ => false
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rejected) = filters.partition(f =>
-      dirLevel(f) || GraftCatalog.translateFilter(f).isDefined)
-    accepted = ok
-    rejected
-  }
-  override def pushedFilters(): Array[Filter] = accepted
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-
-  override def build(): Scan = new V1Scan {
-    override def readSchema(): StructType = required
-    override def description(): String =
-      s"graft-files $path pushed=[${accepted.mkString(", ")}]"
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T = {
-      val rel = new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = readSchema()
-        override def needConversion: Boolean = true
-        override def buildScan(): org.apache.spark.rdd.RDD[
-            org.apache.spark.sql.Row] = {
-          import org.apache.spark.sql.functions.col
-          val spark = context.sparkSession
-          def dirPred(id: String, spec: String): Boolean =
-            accepted.filter(dirLevel).forall {
-              case sources.EqualTo(a, v: String) =>
-                (if (a.equalsIgnoreCase("dir_id")) id else spec) == v
-              case sources.In(a, vs) =>
-                vs.contains(
-                  if (a.equalsIgnoreCase("dir_id")) id else spec)
-              case sources.StringStartsWith(a, v) =>
-                (if (a.equalsIgnoreCase("dir_id")) id else spec)
-                  .startsWith(v)
-              case _ => true
-            }
-          val (df0, walked, total) =
-            Versioned.filesDetailPruned(spark, path, dirPred)
-          GraftCatalog.lastFilesScan.set((path, walked, total))
-          var df = df0
-          accepted.flatMap(GraftCatalog.translateFilter)
-            .foreach(c => df = df.filter(c))
-          df.select(readSchema().fieldNames
-            .map(col).toIndexedSeq: _*).rdd
-        }
-      }
-      rel.asInstanceOf[T]
     }
-  }
 }
 
 /** `<table>.changes` — the STORED change-data feed as a SQL table:
   * batch reads cover the full retained feed range (pinned at
   * resolution, like every read here) and PUSH DOWN the filters the
-  * feed layout indexes ([[ChangesScanBuilder]]): `_commit_version`
-  * comparisons narrow the version range and `_change_type`
-  * equality/IN selects `ct=` subdirs — both become directory-list
-  * filters BEFORE any file IO ([[Versioned.readChangesPruned]]), so
-  * the canonical "changes since version N" query costs O(asked
-  * range), not O(retained feed). Data-column filters replay onto the
-  * inner frame where Catalyst pushes them into the parquet readers.
+  * feed layout `_changes/cv=N/ct=type/` indexes: `_commit_version`
+  * =, >, >=, <, <= and IN narrow the version window ([[narrowing]])
+  * and `_change_type` equality/IN selects `ct=` subdirs — both become
+  * directory-list filters BEFORE any file IO
+  * ([[Versioned.readChangesPruned]]), so the canonical "changes since
+  * version N" query costs O(asked range), not O(retained feed). The
+  * IN envelope is a relaxation: every accepted filter re-applies
+  * row-level, and data-column filters replay onto the inner frame
+  * where Catalyst pushes them into the parquet readers. The directory
+  * accounting lands in [[GraftCatalog.lastChangesScan]].
   * Streaming reads (`spark.readStream.table`) route through
   * [[GraftStreamRewrite]] onto the feed's file-stream source. The
   * MICRO_BATCH_READ capability is declared so the table is
@@ -964,43 +926,25 @@ private[sources] final class ChangesSqlTable(ident: String,
       TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(options: CaseInsensitiveStringMap)
       : ScanBuilder =
-    new ChangesScanBuilder(path, vFrom, vTo, feedSchema)
-}
-
-/** Pushdown surface for `<table>.changes` batch reads. The stored
-  * layout `_changes/cv=N/ct=type/` already IS the index, so:
-  *
-  *  - `_commit_version` =, >, >=, <, <= narrow the `[lo, hi]` version
-  *    window exactly (IN narrows to its min..max envelope);
-  *  - `_change_type` = / IN intersects into the `ct=` directory set;
-  *  - anything [[GraftCatalog.translateFilter]] can express (data
-  *    columns included) is ACCEPTED and replayed onto the inner
-  *    frame, where Catalyst pushes it into the parquet scans;
-  *  - the rest is rejected back to Spark (applied on top — never
-  *    wrong, merely unoptimized).
-  *
-  * Every accepted filter still re-applies row-level after the
-  * directory prune (the IN envelope and double-filtering are
-  * RELAXATIONS — pruning may read extra dirs, never skip a needed
-  * one). The most recent scan's directory accounting is recorded in
-  * [[GraftCatalog.lastChangesScan]] so specs and driver rows can gate
-  * `dirsRead < dirsTotal` — real skipped IO, not a plan shape. */
-private[sources] final class ChangesScanBuilder(path: String,
-    vFrom: Int, vTo: Int, feedSchema: StructType)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+    GraftCatalog.frameScan(feedSchema, s"graft-changes $path",
+      f => narrowing(f).isDefined ||
+        GraftCatalog.translateFilter(f).isDefined) { (spark, accepted) =>
+      val narrow = accepted.toSeq.flatMap(narrowing)
+      val lo = (vFrom.toLong +: narrow.collect { case Left((l, _)) => l }).max
+      val hi = (vTo.toLong +: narrow.collect { case Left((_, h)) => h }).min
+      val cts = narrow.collect { case Right(s) => s }.reduceOption(_ intersect _)
+      // saturating Int clamp: a literal beyond Int range still narrows
+      // soundly (versions are Ints, so > Int.MaxValue ⇒ empty range)
+      def clamp(v: Long): Int =
+        math.max(v, Int.MinValue.toLong).min(Int.MaxValue.toLong).toInt
+      val (df, dirsRead) = Versioned.readChangesPruned(spark, path,
+        clamp(lo), if (lo > hi) clamp(lo) - 1 else clamp(hi), cts)
+      GraftCatalog.lastChangesScan.set(
+        (path, dirsRead, Versioned.changeFeedDirCount(path, vFrom, vTo)))
+      df
+    }
 
   private def fold(s: String) = s.toLowerCase(java.util.Locale.ROOT)
-  private var lo: Long = vFrom.toLong
-  private var hi: Long = vTo.toLong
-  private var cts: Option[Set[String]] = None
-  private var accepted: Array[Filter] = Array.empty
-  private var required: StructType = feedSchema
-
-  // saturating Int clamp: a literal beyond Int range still narrows
-  // soundly (versions are Ints, so > Int.MaxValue ⇒ empty range)
-  private def narrowLo(v: Long): Unit = lo = math.max(lo, v)
-  private def narrowHi(v: Long): Unit = hi = math.min(hi, v)
 
   private def asVersion(v: Any): Option[Long] = v match {
     case n: java.lang.Integer => Some(n.longValue)
@@ -1010,100 +954,33 @@ private[sources] final class ChangesScanBuilder(path: String,
     case _ => None
   }
 
-  /** Whether `f` narrows the directory prune (version window / ct
-    * set). Mutates the builder state when it does. */
-  private def prunes(f: Filter): Boolean = f match {
+  /** What `f` narrows in the feed's directory index: a
+    * `_commit_version` window [lo, hi] (IN narrows to its min..max
+    * envelope) or a `_change_type` set; None when it narrows
+    * neither. */
+  private def narrowing(f: Filter)
+      : Option[Either[(Long, Long), Set[String]]] = f match {
     case sources.EqualTo(a, v) if fold(a) == "_commit_version" =>
-      asVersion(v).exists { n => narrowLo(n); narrowHi(n); true }
+      asVersion(v).map(n => Left((n, n)))
     case sources.GreaterThan(a, v) if fold(a) == "_commit_version" =>
-      asVersion(v).exists { n => narrowLo(n + 1); true }
+      asVersion(v).map(n => Left((n + 1, Long.MaxValue)))
     case sources.GreaterThanOrEqual(a, v)
         if fold(a) == "_commit_version" =>
-      asVersion(v).exists { n => narrowLo(n); true }
+      asVersion(v).map(n => Left((n, Long.MaxValue)))
     case sources.LessThan(a, v) if fold(a) == "_commit_version" =>
-      asVersion(v).exists { n => narrowHi(n - 1); true }
-    case sources.LessThanOrEqual(a, v)
-        if fold(a) == "_commit_version" =>
-      asVersion(v).exists { n => narrowHi(n); true }
+      asVersion(v).map(n => Left((Long.MinValue, n - 1)))
+    case sources.LessThanOrEqual(a, v) if fold(a) == "_commit_version" =>
+      asVersion(v).map(n => Left((Long.MinValue, n)))
     case sources.In(a, vs) if fold(a) == "_commit_version" &&
         vs.nonEmpty && vs.forall(asVersion(_).isDefined) =>
-      // envelope prune; the exact set re-applies row-level
-      narrowLo(vs.flatMap(asVersion).min)
-      narrowHi(vs.flatMap(asVersion).max)
-      true
+      val ns = vs.toSeq.flatMap(asVersion)
+      Some(Left((ns.min, ns.max)))
     case sources.EqualTo(a, v: String) if fold(a) == "_change_type" =>
-      val want = Set(fold(v))
-      cts = Some(cts.map(_.intersect(want)).getOrElse(want))
-      true
+      Some(Right(Set(fold(v))))
     case sources.In(a, vs) if fold(a) == "_change_type" &&
         vs.nonEmpty && vs.forall(_.isInstanceOf[String]) =>
-      val want = vs.map(v => fold(v.asInstanceOf[String])).toSet
-      cts = Some(cts.map(_.intersect(want)).getOrElse(want))
-      true
-    case _ => false
-  }
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rejected) = filters.partition(f =>
-      prunes(f) || GraftCatalog.translateFilter(f).isDefined)
-    accepted = ok
-    rejected
-  }
-  override def pushedFilters(): Array[Filter] = accepted
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // top-level pruning only — see [[VersionedScanBuilder]]: a
-    // nested-pruned struct type here would crash the V1 row codec
-    required = StructType(requiredSchema.fields.map { f =>
-      feedSchema.fields.find(t => t.name.equalsIgnoreCase(f.name))
-        .map(t => f.copy(dataType = t.dataType, nullable = t.nullable))
-        .getOrElse(f)
-    })
-
-  override def build(): Scan = new V1Scan {
-    override def readSchema(): StructType = required
-    override def description(): String =
-      s"graft-changes $path cv=$lo..$hi" +
-        cts.map(s => s" ct=[${s.toSeq.sorted.mkString(",")}]")
-          .getOrElse("") +
-        s" pushed=[${accepted.mkString(", ")}]"
-    override def toMicroBatchStream(checkpointLocation: String)
-        : org.apache.spark.sql.connector.read.streaming
-          .MicroBatchStream =
-      throw new UnsupportedOperationException(
-        s"graft-changes $path: streaming reads route through the " +
-          "stored feed's file-stream source — register graft's " +
-          "session extensions (spark.sql.extensions=graft.plans." +
-          "GraftExtensions) so spark.readStream.table(...) rewrites " +
-          "onto it")
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T = {
-      val rel = new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = readSchema()
-        override def needConversion: Boolean = true
-        override def buildScan(): org.apache.spark.rdd.RDD[
-            org.apache.spark.sql.Row] = {
-          import org.apache.spark.sql.functions.col
-          val spark = context.sparkSession
-          val loI = math.max(lo, Int.MinValue.toLong).min(
-            Int.MaxValue.toLong).toInt
-          val hiI = math.max(hi, Int.MinValue.toLong).min(
-            Int.MaxValue.toLong).toInt
-          val (df0, dirsRead) = Versioned.readChangesPruned(
-            spark, path, loI, if (lo > hi) loI - 1 else hiI, cts)
-          GraftCatalog.lastChangesScan.set(
-            (path, dirsRead, Versioned.changeFeedDirCount(
-              path, vFrom, vTo)))
-          var df = df0
-          accepted.flatMap(GraftCatalog.translateFilter)
-            .foreach(c => df = df.filter(c))
-          df.select(readSchema().fieldNames
-            .map(col).toIndexedSeq: _*).rdd
-        }
-      }
-      rel.asInstanceOf[T]
-    }
+      Some(Right(vs.map(v => fold(v.asInstanceOf[String])).toSet))
+    case _ => None
   }
 }
 
@@ -1253,91 +1130,46 @@ private[sources] final class DynamicOverwriteBatch(path: String,
   }
 }
 
-/** V2 pushdown surface: accepted filters and the pruned column set
-  * are REPLAYED onto the inner snapshot DataFrame, where Catalyst
-  * pushes them into the parquet scans — the explain-visible
-  * `PushedFilters` a SQL user expects from a real table. */
-private[sources] final class VersionedScanBuilder(path: String,
-    pinned: Int, tableSchema: StructType)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+/** File skipping for the versioned table's scan: picks, from the
+  * filters the scan ACCEPTED, the read of the pinned snapshot that
+  * skips the most IO, coarsest index first — an equality/IN on a
+  * column some data dir is hive-partitioned on routes through
+  * [[Versioned.readPartitionPruned]] (whole partition directories
+  * skipped before any file IO), a timestamp range on a time-transform
+  * column through [[Versioned.readPartitionPrunedTime]], an
+  * equality/IN on a bucket column through
+  * [[Versioned.readPartitionPrunedBucket]], an equality on a
+  * bloom-indexed column through [[Versioned.readEqualityClustered]]
+  * (files that provably lack the key skipped), and a range/equality
+  * on a stats-indexed column through [[Versioned.readRangeClustered]]
+  * (z-order/min-max sidecar pruning) — so a SQL `WHERE k = v` or
+  * `BETWEEN` skips files exactly like the Scala read paths. The skip
+  * accounting lands in [[GraftCatalog.lastVersionedScan]].
+  * Un-prunable shapes fall back to the plain snapshot read; the scan
+  * bridge ([[GraftCatalog.frameScan]]) re-applies every accepted
+  * filter row-level either way, so every branch may be a relaxation
+  * (double-filtering safe). */
+private[sources] final class VersionedPrune(path: String, pinned: Int,
+    accepted: Array[Filter]) {
 
-  private var accepted: Array[Filter] = Array.empty
-  private var required: StructType = tableSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rejected) = filters.partition(f =>
-      GraftCatalog.translateFilter(f).isDefined)
-    accepted = ok
-    rejected // Spark keeps these on top
+  def read(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+    val v = Some(pinned)
+    partitionPrune().map { case (c, vals) =>
+      Versioned.readPartitionPruned(spark, path, c, vals, v) }
+      .orElse(transformPrune(spark).map { case (c, lo, hi) =>
+        Versioned.readPartitionPrunedTime(spark, path, c, lo, hi, v) })
+      .orElse(bucketPrune().map { case (c, vals) =>
+        Versioned.readPartitionPrunedBucket(spark, path, c, vals, v) })
+      .orElse(bloomPrune(spark).map { case (c, value) =>
+        Versioned.readEqualityClustered(spark, path, c, value, v) })
+      .orElse(statsPrune(spark).map { case (c, lo, hi) =>
+        Versioned.readRangeClustered(spark, path, c, lo, hi, v) })
+      .map { case (df, read, total) =>
+        GraftCatalog.lastVersionedScan.set((path, read, total))
+        df
+      }
+      .getOrElse(Versioned.read(spark, path, v))
   }
-  override def pushedFilters(): Array[Filter] = accepted
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // TOP-LEVEL pruning only: Spark also offers NESTED pruning by
-    // narrowing a struct field's type here, but the V1 bridge serves
-    // whole top-level columns (`SELECT meta.flag` would then hand
-    // Spark full structs under a narrowed declared schema — a row
-    // codec crash). Restoring the table's full field type is the
-    // legal "scan ignored that part of the prune" answer; Spark
-    // re-projects the subfield on top.
-    required = StructType(requiredSchema.fields.map { f =>
-      tableSchema.fields.find(t => t.name.equalsIgnoreCase(f.name))
-        .map(t => f.copy(dataType = t.dataType, nullable = t.nullable))
-        .getOrElse(f)
-    })
-
-  override def build(): Scan =
-    new VersionedV1Scan(path, pinned, required, accepted)
-}
-
-/** The scan: a [[V1Scan]] bridging to the snapshot DataFrame's RDD.
-  * The handoff is plan-level — `buildScan` hands Spark the DISTRIBUTED
-  * row RDD of the filtered, pruned snapshot read (parquet batches +
-  * DV anti-join on executors); nothing collects on the driver.
-  *
-  * FILE SKIPPING rides the pushed filters, coarsest index first:
-  * an equality/IN on a column some data dir is hive-partitioned on
-  * routes the read through [[Versioned.readPartitionPruned]] (whole
-  * partition directories skipped before any file IO — the biggest
-  * scan saver at 100 TB, now reachable from pure SQL); an equality
-  * on a bloom-indexed column through
-  * [[Versioned.readEqualityClustered]] (files that provably lack the
-  * key skipped); a range/equality on a stats-indexed column through
-  * [[Versioned.readRangeClustered]] (z-order/min-max sidecar
-  * pruning) — so a SQL `WHERE k = v` or `BETWEEN` on a clustered
-  * versioned table skips files exactly like the Scala read paths.
-  * The skip accounting lands in [[GraftCatalog.lastVersionedScan]].
-  * Un-prunable shapes fall back to the plain snapshot read; every
-  * accepted filter re-applies row-level either way (double-filtering
-  * safe). */
-private[sources] final class VersionedV1Scan(path: String, pinned: Int,
-    required: StructType, accepted: Array[Filter]) extends V1Scan
-    with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-
-  override def readSchema(): StructType = required
-
-  override def description(): String =
-    s"graft-versioned $path v$pinned " +
-      s"pushed=[${accepted.mkString(", ")}]"
-
-  /** Snapshot size from the pinned version's file listing (memoized —
-    * versions are immutable), so Catalyst's join planning sees the
-    * REAL table size instead of defaultSizeInBytes=Long.MaxValue:
-    * without this, a 2 MB dimension table on the build side of a join
-    * can never plan as a broadcast join and every dim⨝fact through
-    * the SQL catalog pays a full shuffle — the defining join shape of
-    * a 100 TB star schema. Bytes-on-disk, the same basis
-    * FileSourceScanExec reports (fileCompressionFactor defaults 1). */
-  override def estimateStatistics()
-      : org.apache.spark.sql.connector.read.Statistics =
-    new org.apache.spark.sql.connector.read.Statistics {
-      private val bytes = Versioned.versionBytes(path, pinned)
-      override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(bytes)
-      override def numRows(): java.util.OptionalLong =
-        java.util.OptionalLong.empty()
-    }
 
   private def fold(s: String) = s.toLowerCase(java.util.Locale.ROOT)
 
@@ -1521,72 +1353,12 @@ private[sources] final class VersionedV1Scan(path: String, pinned: Int,
         (a, vs.toIndexedSeq)
     }
   }
-
-  override def toV1TableScan[T <: BaseRelation with TableScan](
-      context: SQLContext): T = {
-    val rel = new BaseRelation with TableScan {
-      override def sqlContext: SQLContext = context
-      override def schema: StructType = required
-      override def needConversion: Boolean = true
-      override def buildScan(): org.apache.spark.rdd.RDD[
-          org.apache.spark.sql.Row] = {
-        val spark = context.sparkSession
-        // prune priority: whole partition dirs > bucket dirs > bloom
-        // point lookups > min/max ranges > plain snapshot — coarsest
-        // index first; every branch is a relaxation the row-level
-        // replay tightens
-        var df = partitionPrune() match {
-          case Some((c, vals)) =>
-            val (pdf, read, tot) = Versioned.readPartitionPruned(
-              spark, path, c, vals, Some(pinned))
-            GraftCatalog.lastVersionedScan.set((path, read, tot))
-            pdf
-          case None => transformPrune(spark) match {
-            case Some((c, lo, hi)) =>
-              val (pdf, read, tot) = Versioned.readPartitionPrunedTime(
-                spark, path, c, lo, hi, Some(pinned))
-              GraftCatalog.lastVersionedScan.set((path, read, tot))
-              pdf
-            case None => bucketPrune() match {
-            case Some((c, vals)) =>
-              val (pdf, read, tot) = Versioned.readPartitionPrunedBucket(
-                spark, path, c, vals, Some(pinned))
-              GraftCatalog.lastVersionedScan.set((path, read, tot))
-              pdf
-            case None => bloomPrune(spark) match {
-            case Some((c, v)) =>
-              val (pdf, read, tot) = Versioned.readEqualityClustered(
-                spark, path, c, v, Some(pinned))
-              GraftCatalog.lastVersionedScan.set((path, read, tot))
-              pdf
-            case None => statsPrune(spark) match {
-              case Some((c, lo, hi)) =>
-                val (pdf, read, tot) = Versioned.readRangeClustered(
-                  spark, path, c, lo, hi, Some(pinned))
-                GraftCatalog.lastVersionedScan.set((path, read, tot))
-                pdf
-              case None => Versioned.read(spark, path, Some(pinned))
-            }
-          }
-          }
-          }
-        }
-        // replay what the V2 pushdown ACCEPTED: rejected filters are
-        // Spark's to apply on top, so no filter evaluates zero times
-        accepted.flatMap(GraftCatalog.translateFilter)
-          .foreach(c => df = df.filter(c))
-        df.select(required.fieldNames.map(org.apache.spark.sql
-          .functions.col).toIndexedSeq: _*).rdd
-      }
-    }
-    rel.asInstanceOf[T]
-  }
 }
 
 object GraftCatalog {
   import org.apache.spark.sql.functions.{col, lit, not}
 
-  /** Directory accounting of the most recent [[ChangesScanBuilder]]
+  /** Directory accounting of the most recent `<t>.changes`
     * batch scan in this JVM: (table path, ct-dirs read, ct-dirs in
     * the pinned range). The observability hook specs and driver rows
     * gate `dirsRead < dirsTotal` on — proof the `_commit_version` /
@@ -1597,7 +1369,7 @@ object GraftCatalog {
       ("", 0, 0))
 
   /** File accounting of the most recent file-skipping
-    * [[VersionedV1Scan]] in this JVM: (table path, files read, files
+    * [[VersionedPrune]] in this JVM: (table path, files read, files
     * total) — set when a pushed filter partition-pruned directories
     * or sidecar-skipped files; the `filesRead < filesTotal` evidence
     * driver rows and specs gate on. */
@@ -1607,17 +1379,17 @@ object GraftCatalog {
 
   /** Dir-walk accounting of the most recent `<t>.files` scan in this
     * JVM: (table path, dirs walked, dirs total) — set by
-    * [[FilesScanBuilder]] so specs can gate `dirsWalked < dirsTotal`
+    * [[FilesSqlTable]]'s scan so specs can gate `dirsWalked < dirsTotal`
     * when a pushed `dir_id`/`part_spec` filter pruned the listing. */
   val lastFilesScan =
     new java.util.concurrent.atomic.AtomicReference[(String, Int, Int)](
       ("", 0, 0))
 
-  /** Per-thread set of view keys currently EXPANDING (a view scan
-    * re-runs its stored SQL, which may read other views) — the
-    * recursion guard [[ViewScanBuilder]] trips loudly instead of
-    * looping forever on a self-referencing definition. */
-  private[sources] val viewExpansion =
+  /** Per-thread set of scans currently BUILDING their frame (a view
+    * scan re-runs its stored SQL, which may read other views) — the
+    * recursion guard [[frameScan]] trips loudly instead of looping
+    * forever on a self-referencing definition. */
+  private val scanExpansion =
     new ThreadLocal[java.util.HashSet[String]] {
       override def initialValue(): java.util.HashSet[String] =
         new java.util.HashSet[String]()
@@ -1709,44 +1481,100 @@ object GraftCatalog {
       case _ => None
     }
 
-  /** A no-pushdown V1 scan over a driver-BUILT (not driver-
-    * materialized — the returned RDD is the frame's distributed plan)
-    * DataFrame: the metadata tables' scan shape (`.history`,
-    * `.changes`), where the frame is ledger-derived and the pushdown
-    * surface would optimize nothing. */
+  /** THE scan bridge every graft SQL table reads through: a [[V1Scan]]
+    * whose relation hands Spark the DISTRIBUTED row RDD of a
+    * driver-BUILT frame (parquet batches, DV anti-joins and all run
+    * on executors — nothing collects on the driver). The V2 pushdown
+    * lands on that frame: filters `accept` takes are handed to
+    * `frame` (to prune directories or files with) and then REPLAYED
+    * onto its result, where Catalyst pushes them into the parquet
+    * readers; rejected filters are Spark's to apply on top, so no
+    * filter evaluates zero times. Column pruning is TOP-LEVEL only:
+    * Spark also offers nested pruning by narrowing a struct field's
+    * type, but the bridge serves whole top-level columns (`SELECT
+    * meta.flag` would then hand Spark full structs under a narrowed
+    * declared schema — a row codec crash), so the table's full field
+    * type is restored — the legal "scan ignored that part of the
+    * prune" answer; Spark re-projects the subfield on top.
+    * `size` (bytes) feeds [[org.apache.spark.sql.connector.read
+    * .SupportsReportStatistics]]. A frame that re-enters its own scan
+    * on this thread (a view whose text transitively reads itself)
+    * fails loudly instead of expanding forever; the guard spans the
+    * frame's planning too, where the nested scans are built. */
   private[sources] def frameScan(schema: StructType, desc: String,
-      frame: SparkSession => DataFrame): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new V1Scan {
-        override def readSchema(): StructType = schema
-        override def description(): String = desc
-        override def toMicroBatchStream(checkpointLocation: String)
-            : org.apache.spark.sql.connector.read.streaming
-              .MicroBatchStream =
-          throw new UnsupportedOperationException(
-            s"$desc: streaming reads route through the stored feed's " +
-              "file-stream source — register graft's session " +
-              "extensions (spark.sql.extensions=graft.plans." +
-              "GraftExtensions) so spark.readStream.table(...) " +
-              "rewrites onto it")
-        override def toV1TableScan[T <: BaseRelation with TableScan](
-            context: SQLContext): T = {
-          val rel = new BaseRelation with TableScan {
-            override def sqlContext: SQLContext = context
-            override def schema: StructType = readSchema()
-            override def needConversion: Boolean = true
-            override def buildScan(): org.apache.spark.rdd.RDD[
-                org.apache.spark.sql.Row] = {
-              import org.apache.spark.sql.functions.col
-              frame(context.sparkSession)
-                .select(readSchema().fieldNames
-                  .map(col).toIndexedSeq: _*).rdd
-            }
-          }
-          rel.asInstanceOf[T]
+      accept: Filter => Boolean = _ => false,
+      size: Option[() => Long] = None)(
+      frame: (SparkSession, Array[Filter]) => DataFrame): ScanBuilder =
+    new ScanBuilder with SupportsPushDownFilters
+        with SupportsPushDownRequiredColumns {
+      private var accepted: Array[Filter] = Array.empty
+      private var required: StructType = schema
+
+      override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+        val (ok, rejected) = filters.partition(accept)
+        accepted = ok
+        rejected
+      }
+      override def pushedFilters(): Array[Filter] = accepted
+
+      override def pruneColumns(requiredSchema: StructType): Unit =
+        required = StructType(requiredSchema.fields.map { f =>
+          schema.fields.find(t => t.name.equalsIgnoreCase(f.name))
+            .map(t => f.copy(dataType = t.dataType, nullable = t.nullable))
+            .getOrElse(f)
+        })
+
+      override def build(): Scan = new BridgeScan(desc, required,
+        accepted, size, frame)
+    }
+
+  private final class BridgeScan(desc: String, required: StructType,
+      accepted: Array[Filter], size: Option[() => Long],
+      frame: (SparkSession, Array[Filter]) => DataFrame) extends V1Scan
+      with org.apache.spark.sql.connector.read.SupportsReportStatistics {
+    override def readSchema(): StructType = required
+    override def description(): String =
+      s"$desc pushed=[${accepted.mkString(", ")}]"
+    override def estimateStatistics()
+        : org.apache.spark.sql.connector.read.Statistics =
+      new org.apache.spark.sql.connector.read.Statistics {
+        private val bytes = size.map(_())
+        override def sizeInBytes(): java.util.OptionalLong =
+          bytes.fold(java.util.OptionalLong.empty())(
+            java.util.OptionalLong.of)
+        override def numRows(): java.util.OptionalLong =
+          java.util.OptionalLong.empty()
+      }
+    override def toMicroBatchStream(checkpointLocation: String)
+        : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
+      throw new UnsupportedOperationException(
+        s"$desc: streaming reads route through the stored feed's " +
+          "file-stream source — register graft's session extensions " +
+          "(spark.sql.extensions=graft.plans.GraftExtensions) so " +
+          "spark.readStream.table(...) rewrites onto it")
+    override def toV1TableScan[T <: BaseRelation with TableScan](
+        context: SQLContext): T = {
+      val rel = new BaseRelation with TableScan {
+        override def sqlContext: SQLContext = context
+        override def schema: StructType = required
+        override def needConversion: Boolean = true
+        override def buildScan(): org.apache.spark.rdd.RDD[
+            org.apache.spark.sql.Row] = {
+          val expanding = scanExpansion.get()
+          require(!expanding.contains(desc),
+            s"GraftCatalog: recursive view definition — $desc " +
+              "(transitively) reads itself")
+          expanding.add(desc): Unit
+          try {
+            var df = frame(context.sparkSession, accepted)
+            accepted.flatMap(translateFilter).foreach(c => df = df.filter(c))
+            df.select(required.fieldNames.map(col).toIndexedSeq: _*).rdd
+          } finally expanding.remove(desc): Unit
         }
       }
+      rel.asInstanceOf[T]
     }
+  }
 
   /** Make the row-level DML strategy ([[GraftSqlDml.Strategy]])
     * visible to this session's planner — idempotent, called from

@@ -1,13 +1,12 @@
 package graft.sources
 
-import org.apache.spark.sql.{GraftBridge, SQLContext, SparkSession}
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{NoSuchViewException, UnresolvedIdentifier}
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.logical.{Command, CreateView, DropView, LeafNode, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability, ViewInfo}
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
-import org.apache.spark.sql.sources.{BaseRelation, Filter, TableScan}
+import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.types.StructType
 
 /** PERSISTENT SQL VIEWS over [[GraftCatalog]] — `CREATE [OR REPLACE]
@@ -199,7 +198,7 @@ private[sources] case class GraftViewDdl(label: String,
   * filters and top-level column pruning replay onto the inner frame,
   * where Catalyst pushes them into the underlying scans. */
 private[sources] final class ViewSqlTable(ident: String,
-    viewKey: String, view: org.apache.spark.sql.connector.catalog.View)
+    view: org.apache.spark.sql.connector.catalog.View)
     extends Table with SupportsRead {
   override def name(): String = ident
   override def schema(): StructType = view.schema()
@@ -207,126 +206,75 @@ private[sources] final class ViewSqlTable(ident: String,
     java.util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(
       options: org.apache.spark.sql.util.CaseInsensitiveStringMap)
-      : ScanBuilder = new ViewScanBuilder(ident, viewKey, view)
-}
-
-private[sources] final class ViewScanBuilder(ident: String,
-    viewKey: String, view: org.apache.spark.sql.connector.catalog.View)
-    extends ScanBuilder with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
-
-  private val viewSchema = view.schema()
-  private var accepted: Array[Filter] = Array.empty
-  private var required: StructType = viewSchema
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    val (ok, rejected) = filters.partition(f =>
-      GraftCatalog.translateFilter(f).isDefined)
-    accepted = ok
-    rejected
-  }
-  override def pushedFilters(): Array[Filter] = accepted
-
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    // top-level pruning only — see [[VersionedScanBuilder]]
-    required = StructType(requiredSchema.fields.map { f =>
-      viewSchema.fields.find(t => t.name.equalsIgnoreCase(f.name))
-        .map(t => f.copy(dataType = t.dataType, nullable = t.nullable))
-        .getOrElse(f)
-    })
-
-  override def build(): Scan = new V1Scan {
-    override def readSchema(): StructType = required
-    override def description(): String =
-      s"graft-view $ident pushed=[${accepted.mkString(", ")}]"
-    override def toV1TableScan[T <: BaseRelation with TableScan](
-        context: SQLContext): T = {
-      val rel = new BaseRelation with TableScan {
-        override def sqlContext: SQLContext = context
-        override def schema: StructType = readSchema()
-        override def needConversion: Boolean = true
-        override def buildScan(): org.apache.spark.rdd.RDD[
-            org.apache.spark.sql.Row] = {
-          import org.apache.spark.sql.functions.col
-          val spark = context.sparkSession
-          // cycle guard: a view whose text (transitively) reads
-          // itself would expand forever — loud, naming the chain
-          val expanding = GraftCatalog.viewExpansion.get()
-          require(!expanding.contains(viewKey),
-            s"GraftCatalog: recursive view definition — $ident " +
-              "(transitively) reads itself")
-          expanding.add(viewKey): Unit
-          // Replay the DEFINING session's name-resolution context:
-          // the stored text may carry unqualified relation names,
-          // which must resolve against the catalog/namespace current
-          // at CREATE VIEW time, not whatever the READING session has
-          // current (a same-named table there would be a silent
-          // wrong-table read). Restored in the finally. If the stored
-          // catalog name is not registered in this session the switch
-          // is skipped — the pre-fix behavior, where only fully
-          // qualified view text can resolve.
-          val cm = spark.sessionState.catalogManager
-          val (prevCat, prevNs) = (cm.currentCatalog.name,
-            cm.currentNamespace)
-          // Track the switch as "any mutating call attempted" BEFORE
-          // the calls, not as their joint success: if setCurrentCatalog
-          // succeeds but setCurrentNamespace throws (the view's
-          // namespace may not exist in the reading session), the
-          // finally below must still restore the catalog — a partial
-          // switch left in place is exactly the silent-wrong-table
-          // read this replay exists to prevent.
-          var switched = false
-          try {
-            if (prevCat != view.currentCatalog) {
-              switched = true
-              cm.setCurrentCatalog(view.currentCatalog)
-            }
-            if (view.currentNamespace.nonEmpty &&
-                !java.util.Arrays.equals(
-                  prevNs.asInstanceOf[Array[AnyRef]],
-                  view.currentNamespace.asInstanceOf[Array[AnyRef]])) {
-              switched = true
-              cm.setCurrentNamespace(view.currentNamespace)
-            }
-          } catch { case _: Exception => () }
-          try {
-            var df = spark.sql(view.query())
-            require(df.columns.length == viewSchema.fields.length,
-              s"GraftCatalog: view $ident no longer matches its " +
-                s"stored schema (${viewSchema.fields.length} columns " +
-                s"at creation, ${df.columns.length} now) — " +
-                "CREATE OR REPLACE to re-bind")
-            df = df.toDF(viewSchema.fieldNames.toIndexedSeq: _*)
-            viewSchema.fields.zip(df.schema.fields).foreach {
-              case (want, got) =>
-                require(Versioned.asNullable(want.dataType) ==
-                    Versioned.asNullable(got.dataType),
-                  s"GraftCatalog: view $ident column ${want.name} " +
-                    s"drifted from ${want.dataType.sql} to " +
-                    s"${got.dataType.sql} — CREATE OR REPLACE to " +
-                    "re-bind")
-            }
-            accepted.flatMap(GraftCatalog.translateFilter)
-              .foreach(c => df = df.filter(c))
-            df.select(readSchema().fieldNames
-              .map(col).toIndexedSeq: _*).rdd
-          } finally {
-            if (switched) {
-              // setCurrentCatalog resets the current namespace to the
-              // catalog's default, so a previously-empty prevNs is
-              // restored by the catalog reset alone; a non-empty one
-              // is re-applied explicitly (best-effort — it existed a
-              // moment ago in this session).
-              cm.setCurrentCatalog(prevCat)
-              if (prevNs.nonEmpty)
-                try cm.setCurrentNamespace(prevNs)
-                catch { case _: Exception => () }
-            }
-            expanding.remove(viewKey): Unit
-          }
+      : ScanBuilder =
+    GraftCatalog.frameScan(view.schema(), s"graft-view $ident",
+      GraftCatalog.translateFilter(_).isDefined) { (spark, _) =>
+      val viewSchema = view.schema()
+      // Replay the DEFINING session's name-resolution context:
+      // the stored text may carry unqualified relation names,
+      // which must resolve against the catalog/namespace current
+      // at CREATE VIEW time, not whatever the READING session has
+      // current (a same-named table there would be a silent
+      // wrong-table read). Restored in the finally. If the stored
+      // catalog name is not registered in this session the switch
+      // is skipped — the pre-fix behavior, where only fully
+      // qualified view text can resolve.
+      val cm = spark.sessionState.catalogManager
+      val (prevCat, prevNs) = (cm.currentCatalog.name,
+        cm.currentNamespace)
+      // Track the switch as "any mutating call attempted" BEFORE
+      // the calls, not as their joint success: if setCurrentCatalog
+      // succeeds but setCurrentNamespace throws (the view's
+      // namespace may not exist in the reading session), the
+      // finally below must still restore the catalog — a partial
+      // switch left in place is exactly the silent-wrong-table
+      // read this replay exists to prevent.
+      var switched = false
+      try {
+        if (prevCat != view.currentCatalog) {
+          switched = true
+          cm.setCurrentCatalog(view.currentCatalog)
+        }
+        if (view.currentNamespace.nonEmpty &&
+            !java.util.Arrays.equals(
+              prevNs.asInstanceOf[Array[AnyRef]],
+              view.currentNamespace.asInstanceOf[Array[AnyRef]])) {
+          switched = true
+          cm.setCurrentNamespace(view.currentNamespace)
+        }
+      } catch { case _: Exception => () }
+      try {
+        // the stored text resolves (is analyzed) here, under the
+        // defining context
+        val df = spark.sql(view.query())
+        require(df.columns.length == viewSchema.fields.length,
+          s"GraftCatalog: view $ident no longer matches its " +
+            s"stored schema (${viewSchema.fields.length} columns " +
+            s"at creation, ${df.columns.length} now) — " +
+            "CREATE OR REPLACE to re-bind")
+        val renamed = df.toDF(viewSchema.fieldNames.toIndexedSeq: _*)
+        viewSchema.fields.zip(renamed.schema.fields).foreach {
+          case (want, got) =>
+            require(Versioned.asNullable(want.dataType) ==
+                Versioned.asNullable(got.dataType),
+              s"GraftCatalog: view $ident column ${want.name} " +
+                s"drifted from ${want.dataType.sql} to " +
+                s"${got.dataType.sql} — CREATE OR REPLACE to " +
+                "re-bind")
+        }
+        renamed
+      } finally {
+        if (switched) {
+          // setCurrentCatalog resets the current namespace to the
+          // catalog's default, so a previously-empty prevNs is
+          // restored by the catalog reset alone; a non-empty one
+          // is re-applied explicitly (best-effort — it existed a
+          // moment ago in this session).
+          cm.setCurrentCatalog(prevCat)
+          if (prevNs.nonEmpty)
+            try cm.setCurrentNamespace(prevNs)
+            catch { case _: Exception => () }
         }
       }
-      rel.asInstanceOf[T]
     }
-  }
 }

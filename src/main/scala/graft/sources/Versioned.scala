@@ -511,7 +511,7 @@ object Versioned {
     * the dir, not the table, changing the partitioning NEVER rewrites
     * history: later commits may partition by a different column — or
     * none — and one snapshot reads dirs of every vintage, each by its
-    * own recorded layout ([[readDirs]]). [[readPartitionPruned]]
+    * own recorded layout ([[readSnapshot]]). [[readPartitionPruned]]
     * skips whole partition directories of spec-matching dirs before
     * any file IO — the coarse, free sibling of [[commitClustered]]'s
     * min/max skipping. The partition column is carried in directory
@@ -842,18 +842,13 @@ object Versioned {
       version: Option[Int], c: String,
       matches: PartField => Boolean,
       keep: (PartField, String) => Boolean): (DataFrame, Int, Int) = {
-    val v = version.getOrElse(latestVersion(path))
-    require(v >= 0, s"versioned specPrunedRead: no table at $path")
-    val m = readManifest(path, v)
-    val withIds = m.dvDirs.nonEmpty
-    val schema = m.schemaDdl.map(
-      org.apache.spark.sql.types.StructType.fromDDL)
+    val m = pinManifest(path, version)
     // directory names on disk carry the PHYSICAL column name; the
     // caller prunes by the LOGICAL one
     val cPhys = m.physOf(c)
     var filesRead = 0
     var filesTotal = 0
-    val frames = m.dataDirs.flatMap { d =>
+    val picks = m.dataDirs.map { d =>
       val dirPath = Paths.get(path, "data", d)
       val dirTotal = countDataFiles(dirPath)
       filesTotal += dirTotal
@@ -864,7 +859,7 @@ object Versioned {
       if (idx < 0) {
         // other layout: read fully, the caller's row filter applies
         filesRead += dirTotal
-        Some(readDirs(spark, path, m, Seq(d), withIds))
+        d -> None
       } else {
         val entry = spec(idx)
         val prefix = s"${entry.dirName}="
@@ -888,33 +883,11 @@ object Versioned {
             finally ls.close()
           }
         val kept = walk(dirPath, 0).map(_.toString).sorted
-        if (kept.isEmpty) None else {
-          kept.foreach(k => filesRead += countDataFiles(Paths.get(k)))
-          val st = schema.map(physStruct(m, _)).getOrElse(sys.error(
-            s"versioned specPrunedRead: dir $d predates " +
-              "schema tracking"))
-          // explicit schema: discovery PARSES the identity partition
-          // values under the declared types (see [[readDirs]]);
-          // derived transform columns are discovered as extras and
-          // dropped by the alignment projection
-          val scan = spark.read.schema(st)
-            .option("basePath", dirPath.toString).parquet(kept: _*)
-          Some(toLogical(m, schema.get, alignToSchema(
-            if (withIds) withRowId(scan) else scan, st, withIds),
-            if (withIds) Seq("__dv_rel", "__dv_pos") else Seq.empty))
-        }
+        kept.foreach(k => filesRead += countDataFiles(Paths.get(k)))
+        d -> Some(kept)
       }
     }
-    val df = frames match {
-      case Seq() => // every dir pruned away: empty frame, no IO
-        readDirs(spark, path, m, m.dataDirs, withIds).limit(0)
-      case fs => fs.reduce(_.unionByName(_))
-    }
-    val masked =
-      if (withIds) maskByPos(spark, path, m.dvDirs, df)
-        .drop("__dv_rel", "__dv_pos")
-      else df
-    (masked, filesRead, filesTotal)
+    (liveRows(spark, path, m, picks), filesRead, filesTotal)
   }
 
   /** Parquet data files under `p`, recursively (sidecars and hidden
@@ -1483,81 +1456,96 @@ object Versioned {
     * racing this read don't tear the snapshot. */
   def read(spark: SparkSession, path: String,
       version: Option[Int] = None): DataFrame = {
+    val m = pinManifest(path, version)
+    liveRows(spark, path, m, whole(m.dataDirs))
+  }
+
+  /** The manifest a read pins: `version`, default the head. */
+  private def pinManifest(path: String, version: Option[Int]): Manifest = {
     val v = version.getOrElse(latestVersion(path))
     require(v >= 0, s"versioned read: no committed version at $path" +
       version.map(w => s" (asked for v$w)").getOrElse(""))
-    val m = readManifest(path, v)
-    require(version.forall(_ == m.version))
-    if (m.dvDirs.isEmpty) rawRead(spark, path, m)
-    else {
-      // ids must ride each SCAN branch (readDirs withIds) — a mixed-
-      // layout snapshot is a union, where `_metadata` no longer
-      // resolves; the mask anti-joins, then the ids drop
-      maskByPos(spark, path, m.dvDirs,
-          readDirs(spark, path, m, m.dataDirs, withIds = true))
-        .drop("__dv_rel", "__dv_pos")
-    }
+    readManifest(path, v)
   }
 
-  /** The manifest's file set read WITHOUT the deletion-vector mask —
-    * the physical bytes, not the logical table. */
-  private def rawRead(spark: SparkSession, path: String,
-      m: Manifest): DataFrame = readDirs(spark, path, m, m.dataDirs)
+  /** One data dir [[readSnapshot]] reads: the whole dir (None) or the
+    * listed files / hive subtrees under it (absolute paths). */
+  private type DirPick = (String, Option[Seq[String]])
 
-  /** Layout-aware read of a subset of `m`'s data dirs. Plain dirs
-    * batch-read under the manifest's authoritative schema: files
-    * written before a column was added null-fill it under the
+  private def whole(dirIds: Seq[String]): Seq[DirPick] = dirIds.map(_ -> None)
+
+  /** THE snapshot reader every versioned read goes through: the picked
+    * subset of `m`'s data dirs as ONE frame under the manifest's
+    * LOGICAL names, deletion-vector mask NOT applied. Plain dirs
+    * batch into one read under the manifest's authoritative schema:
+    * files written before a column was added null-fill it under the
     * explicit read schema — no mergeSchema footer scan, the ledger
     * already knows (manifests from before schema tracking fall back
-    * to parquet inference). Hive-partitioned dirs ([[partSpecs]])
-    * CANNOT join that batch: their partition column lives in the
-    * directory names, not the file bytes, so an explicit-schema read
-    * would silently null it — each is read per-dir (partition
-    * discovery restores the column), null-filled for evolved columns
-    * the same way, cast to the manifest's types, and united by name.
-    * Mixed layouts in one snapshot are the point: changing the
-    * partition spec never rewrites history. */
-  private def readDirs(spark: SparkSession, path: String,
-      m: Manifest, dirIds: Seq[String],
+    * to parquet inference). A whole dir is passed as its dir path,
+    * never as a driver-side listing. Hive-partitioned dirs
+    * ([[Manifest.partSpecs]]) CANNOT join that batch: their partition
+    * column lives in the directory names, not the file bytes, so an
+    * explicit-schema read would silently null it — each is read on
+    * its own with `basePath` (partition discovery restores the
+    * column, PARSED under the declared type: a string column of
+    * numeric-looking values — '00123', '1e3' — would otherwise infer
+    * numeric and round-trip corrupted), then aligned to the manifest
+    * schema. Mixed layouts in one snapshot are the point: changing
+    * the partition spec never rewrites history. Files carry PHYSICAL
+    * names (column mapping), so ONE rename projection at the end
+    * restores the logical names — identity (and absent from the plan)
+    * for tables that never renamed. `withIds` appends each row's
+    * (`__dv_rel`, `__dv_pos`) identity ON the scans, where `_metadata`
+    * resolves. When nothing is picked the result is one zero-row
+    * frame — no IO. */
+  private def readSnapshot(spark: SparkSession, path: String,
+      m: Manifest, picks: Seq[DirPick],
       withIds: Boolean = false): DataFrame = {
-    require(dirIds.nonEmpty, s"versioned read: empty dir set at $path")
-    val schema = m.schemaDdl.map(
-      org.apache.spark.sql.types.StructType.fromDDL)
-    // files carry PHYSICAL names (column mapping): every scan reads
-    // under the physical schema, and ONE rename projection at the end
-    // restores the manifest's logical names — identity (and absent
-    // from the plan) for tables that never renamed
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val schema = m.schemaDdl.map(StructType.fromDDL)
     val physOpt = schema.map(physStruct(m, _))
-    val (parted, plain) = dirIds.partition(m.partSpecs.contains)
-    val plainDf = if (plain.isEmpty) Seq.empty[DataFrame] else Seq {
-      val dirs = plain.map(d => s"$path/data/$d")
-      val scan = physOpt match {
-        case Some(st) => spark.read.schema(st).parquet(dirs: _*)
-        case None => spark.read.parquet(dirs: _*)
+    val ids = if (withIds) Seq("__dv_rel", "__dv_pos") else Seq.empty
+    def scan(reader: org.apache.spark.sql.DataFrameReader,
+        paths: Seq[String]): DataFrame = {
+      val df = reader.parquet(paths: _*)
+      if (withIds) withRowId(df) else df
+    }
+    val (parted, plain) = picks.filter(_._2.forall(_.nonEmpty))
+      .partition(p => m.partSpecs.contains(p._1))
+    val plainPaths = plain.flatMap { case (d, sel) =>
+      sel.getOrElse(Seq(s"$path/data/$d")) }
+    val frames = (if (plainPaths.isEmpty) Seq.empty[DataFrame] else Seq(
+      scan(physOpt.fold(spark.read)(st => spark.read.schema(st)), plainPaths))) ++
+      parted.map { case (d, sel) =>
+        val st = physOpt.getOrElse(sys.error(
+          s"versioned read: partitioned dir $d at $path predates " +
+            "schema tracking"))
+        val dir = s"$path/data/$d"
+        alignToSchema(scan(spark.read.schema(st).option("basePath", dir),
+          sel.getOrElse(Seq(dir))), st, withIds)
       }
-      if (withIds) withRowId(scan) else scan
+    (frames.reduceOption(_.unionByName(_)), schema) match {
+      case (Some(phys), Some(st)) => toLogical(m, st, phys, ids)
+      case (Some(phys), None) => phys
+      case (None, st) => spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+        StructType(asNullable(st.getOrElse(sys.error(
+          s"versioned read: empty read at $path predates schema " +
+            "tracking"))).asInstanceOf[StructType].fields ++
+          (if (withIds) Seq(StructField("__dv_rel", StringType),
+            StructField("__dv_pos", LongType)) else Nil)))
     }
-    val partDfs = parted.map { d =>
-      val st = physOpt.getOrElse(sys.error(
-        s"versioned read: partitioned dir $d at $path predates " +
-          "schema tracking"))
-      // the manifest schema rides the per-dir read too: partition
-      // discovery PARSES the directory-name values under the declared
-      // type instead of inferring one (a string column of
-      // numeric-looking values — '00123', '1e3' — would otherwise
-      // infer numeric and round-trip corrupted)
-      val scan = spark.read.schema(st)
-        .option("basePath", s"$path/data/$d")
-        .parquet(s"$path/data/$d")
-      // row ids attach ON the scan (the `_metadata` hidden column
-      // only resolves there — after the cast/union projections it is
-      // gone), THEN the frame aligns to the manifest schema
-      alignToSchema(if (withIds) withRowId(scan) else scan, st, withIds)
-    }
-    val phys = (plainDf ++ partDfs).reduce(_.unionByName(_))
-    toLogical(m, schema.getOrElse(return phys), phys,
-      if (withIds) Seq("__dv_rel", "__dv_pos") else Seq.empty)
   }
+
+  /** The LIVE rows of `picks`: [[readSnapshot]] with the manifest's
+    * deletion-vector mask applied (the row ids ride only when a mask
+    * exists), logical columns only. */
+  private def liveRows(spark: SparkSession, path: String, m: Manifest,
+      picks: Seq[DirPick]): DataFrame =
+    if (m.dvDirs.isEmpty) readSnapshot(spark, path, m, picks)
+    else maskByPos(spark, path, m.dvDirs,
+        readSnapshot(spark, path, m, picks, withIds = true))
+      .drop("__dv_rel", "__dv_pos")
 
   /** Null-fill evolved columns and cast to the manifest's types in
     * its column order (the per-branch analog of the explicit-schema
@@ -1596,24 +1584,13 @@ object Versioned {
       col("_metadata.row_index").as("__dv_pos"))
   }
 
-  /** MERGE-ON-READ deletion-vector overlay: anti-join the frame's
-    * (rel, pos) row identities against the manifest's accumulated
-    * mask. The mask is proportional to DELETED rows, never the table
-    * — Catalyst/AQE broadcasts it when small (the normal case), so
-    * the big side never reshuffles; `df` must be a raw parquet read
-    * of (a subset of) the table's data dirs so `_metadata` resolves.
-    * Mask rows referencing dirs outside `df`'s read set simply never
-    * match — applying a table-wide mask to a pruned read is sound. */
-  private def applyDvMask(spark: SparkSession, path: String,
-      dvDirs: Seq[String], df: DataFrame): DataFrame = {
-    if (dvDirs.isEmpty) return df
-    import org.apache.spark.sql.functions.col
-    maskByPos(spark, path, dvDirs, withRowId(df))
-      .select(df.columns.toIndexedSeq.map(col): _*)
-  }
-
-  /** The anti-join itself, over a frame that already carries its
-    * (`__dv_rel`, `__dv_pos`) row-identity columns. */
+  /** MERGE-ON-READ deletion-vector overlay: anti-join a frame's
+    * (`__dv_rel`, `__dv_pos`) row identities against the manifest's
+    * accumulated mask. The mask is proportional to DELETED rows, never
+    * the table — Catalyst/AQE broadcasts it when small (the normal
+    * case), so the big side never reshuffles. Mask rows referencing
+    * dirs outside the frame's read set simply never match — applying
+    * a table-wide mask to a pruned read is sound. */
   private def maskByPos(spark: SparkSession, path: String,
       dvDirs: Seq[String], withPos: DataFrame): DataFrame = {
     if (dvDirs.isEmpty) return withPos
@@ -1680,68 +1657,53 @@ object Versioned {
   /** The shared sidecar-pruned snapshot read behind
     * [[readRangeClustered]] (min/max stats) and
     * [[readEqualityClustered]] (bloom): resolve `version`'s manifest,
-    * per data dir ask `pruneDir` for (survivors, total) — None means
-    * the dir carries no usable index for the asked column and EVERY
-    * file stays (unknown never justifies a skip) — then read the
-    * surviving files under the manifest's explicit schema, re-apply
-    * the exact predicate row-level, overlay the deletion-vector mask
-    * (mask rows for pruned files simply never match the anti-join),
-    * and restore logical names. Skipping therefore composes with
-    * schema evolution AND time travel — each version prunes on the
-    * index it was committed with.
-    *
-    * LAYOUT-AWARE: hive-partitioned dirs (no flat sidecar contract)
-    * read FULLY through the layout-aware [[readDirs]] and union with
-    * the pruned flat read — so a table that mixes partitioned history
-    * with indexed appends (partition evolution's normal end state)
-    * keeps file skipping on its indexed dirs instead of losing it
-    * everywhere (the pre-r15 behavior). Returns (frame, filesRead,
+    * pick each data dir's surviving files ([[sidecarPicks]]), read
+    * them through [[readSnapshot]], re-apply the exact predicate
+    * row-level and overlay the deletion-vector mask (mask rows for
+    * pruned files simply never match the anti-join). Skipping
+    * therefore composes with schema evolution AND time travel — each
+    * version prunes on the index it was committed with, and a table
+    * that mixes partitioned history with indexed appends keeps file
+    * skipping on its indexed dirs. Returns (frame, filesRead,
     * filesTotal). */
   private def sidecarPrunedRead(spark: SparkSession, path: String,
       version: Option[Int],
       pruneDir: (String, Manifest) => Option[(Seq[String], Int)],
       predLogical: Column): (DataFrame, Int, Int) = {
-    val v = version.getOrElse(latestVersion(path))
-    require(v >= 0, s"versioned read: no committed version at $path")
-    val m = readManifest(path, v)
-    val (specced, plainIds) = m.dataDirs.partition(m.partSpecs.contains)
-    var kept = Vector.empty[String]
+    val m = pinManifest(path, version)
+    val (picks, read, total, _) = sidecarPicks(path, m, pruneDir)
+    (liveRows(spark, path, m, picks).filter(predLogical), read, total)
+  }
+
+  /** Per data dir of `m`, the files a sidecar prune keeps: `pruneDir`
+    * answers (survivors, total) for a spec-free dir, or None when the
+    * dir carries no usable index for the asked column — then EVERY
+    * file stays (unknown never justifies a skip) and the dir reads
+    * whole. Hive-partitioned dirs have no flat sidecar contract and
+    * read whole too. Returns (picks, filesRead, filesTotal, whether
+    * any dir pruned on an index). */
+  private def sidecarPicks(path: String, m: Manifest,
+      pruneDir: (String, Manifest) => Option[(Seq[String], Int)])
+      : (Seq[DirPick], Int, Int, Boolean) = {
+    var read = 0
     var total = 0
-    plainIds.map(d => s"$path/data/$d").foreach { dir =>
-      pruneDir(dir, m) match {
-        case Some((k, t)) => kept ++= k; total += t
+    var indexed = false
+    val picks = m.dataDirs.map { d =>
+      val dir = s"$path/data/$d"
+      val parted = m.partSpecs.contains(d)
+      (if (parted) None else pruneDir(dir, m)) match {
+        case Some((kept, t)) =>
+          indexed = true
+          read += kept.size; total += t
+          d -> Some(kept)
         case None =>
-          val fs = listDataFiles(dir)
-          kept ++= fs; total += fs.size
+          val n = if (parted) countDataFiles(Paths.get(dir))
+            else listDataFiles(dir).size
+          read += n; total += n
+          d -> None
       }
     }
-    val speccedFiles = specced
-      .map(d => countDataFiles(Paths.get(path, "data", d))).sum
-    total += speccedFiles
-    val logicalOpt = m.schemaDdl.map(
-      org.apache.spark.sql.types.StructType.fromDDL)
-    val ids = Seq("__dv_rel", "__dv_pos")
-    val frames = Seq.newBuilder[DataFrame]
-    if (kept.nonEmpty) {
-      val reader = logicalOpt match {
-        case Some(st) => spark.read.schema(physStruct(m, st))
-        case None => spark.read
-      }
-      val flat = withRowId(reader.parquet(kept: _*))
-      frames += logicalOpt.map(toLogical(m, _, flat, ids))
-        .getOrElse(flat)
-    }
-    if (specced.nonEmpty)
-      frames += readDirs(spark, path, m, specced, withIds = true)
-    val all = frames.result()
-    val df =
-      if (all.isEmpty) // every file pruned away: empty frame, no IO
-        readDirs(spark, path, m, m.dataDirs, withIds = true)
-          .filter(predLogical).limit(0)
-      else all.reduce(_.unionByName(_)).filter(predLogical)
-    val masked = maskByPos(spark, path, m.dvDirs, df)
-      .drop("__dv_rel", "__dv_pos")
-    (masked, kept.size + speccedFiles, total)
+    (picks, read, total, indexed)
   }
 
   /** An INDEX read must never fail a read that can proceed
@@ -1798,15 +1760,21 @@ object Versioned {
       c: String, value: Any,
       version: Option[Int] = None): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.{col, lit}
-    sidecarPrunedRead(spark, path, version,
-      (dir, m) => pruneOrKeepAll {
-        val cPhys = m.physOf(c)
-        if (Files.isDirectory(Paths.get(Clustered.bloomPath(dir, cPhys))))
-          Some(Clustered.pruneEquality(spark, dir, cPhys, value))
-        else None
-      },
+    sidecarPrunedRead(spark, path, version, bloomPruneDir(spark, c, value),
       col(c) === lit(value))
   }
+
+  /** Per-dir bloom prune on logical column `c`: the dir's survivors
+    * for `value` when it carries a bloom sidecar for `c`, None
+    * (un-indexed) otherwise. */
+  private def bloomPruneDir(spark: SparkSession, c: String, value: Any)
+      : (String, Manifest) => Option[(Seq[String], Int)] =
+    (dir, m) => pruneOrKeepAll {
+      val cPhys = m.physOf(c)
+      if (Files.isDirectory(Paths.get(Clustered.bloomPath(dir, cPhys))))
+        Some(Clustered.pruneEquality(spark, dir, cPhys, value))
+      else None
+    }
 
   /** File accounting of the most recent bloom-pruned DML mask scan
     * in this JVM: (table path, filesRead, filesTotal). Observability
@@ -1827,77 +1795,26 @@ object Versioned {
     * impossible). The point-lookup DELETE/UPDATE — the GDPR erasure
     * shape — stops scanning the whole table. Un-prunable predicates,
     * hive-partitioned manifests, and un-indexed dirs fall back to the
-    * full [[readDirs]] scan. The existing DV mask overlays either
+    * full [[readSnapshot]] scan. The existing DV mask overlays either
     * way. */
   private def dmlLiveRows(spark: SparkSession, path: String,
       m: Manifest, predicate: Column): DataFrame = {
-    import org.apache.spark.sql.types.StructType
-    val pruned: Option[DataFrame] =
+    val bloomPicks: Option[Seq[DirPick]] =
       org.apache.spark.sql.GraftBridge.topLevelEquality(predicate)
         .flatMap { case (rawName, v) =>
-        // resolve the predicate's name against the schema (folded —
-        // Spark resolves case-insensitively) before the physical map
-        val stOpt = m.schemaDdl.map(StructType.fromDDL)
-        val logical = stOpt.flatMap(_.fields.map(_.name)
-          .find(n => foldName(n) == foldName(rawName)))
-          .getOrElse(rawName)
-        val cPhys = m.physOf(logical)
-        // hive-partitioned dirs have no flat sidecar contract: they
-        // read fully beside the bloom-pruned flat dirs — one indexed
-        // spec-free dir still bounds the scan (pre-r15 ANY
-        // partitioned dir disabled pruning table-wide)
-        val (specced, plainIds) =
-          m.dataDirs.partition(m.partSpecs.contains)
-        var kept = Vector.empty[String]
-        var total = 0
-        var anyIndexed = false
-        plainIds.foreach { d =>
-          val dir = s"$path/data/$d"
-          val pruned =
-            if (Files.isDirectory(Paths.get(Clustered.bloomPath(dir, cPhys))))
-              pruneOrKeepAll(
-                Some(Clustered.pruneEquality(spark, dir, cPhys, v)))
-            else None
-          pruned match {
-            case Some((k, t)) =>
-              anyIndexed = true
-              kept ++= k; total += t
-            case None =>
-              val fs = listDataFiles(dir)
-              kept ++= fs; total += fs.size
-          }
+          // resolve the predicate's name against the schema (folded —
+          // Spark resolves case-insensitively) before the physical map
+          val logical = m.schemaDdl.flatMap(ddl =>
+            org.apache.spark.sql.types.StructType.fromDDL(ddl).fieldNames
+              .find(n => foldName(n) == foldName(rawName)))
+            .getOrElse(rawName)
+          val (picks, read, total, indexed) =
+            sidecarPicks(path, m, bloomPruneDir(spark, logical, v))
+          if (!indexed) None
+          else { lastDmlScan.set((path, read, total)); Some(picks) }
         }
-        if (!anyIndexed) None
-        else {
-          val speccedFiles = specced
-            .map(d => countDataFiles(Paths.get(path, "data", d))).sum
-          lastDmlScan.set((path, kept.size + speccedFiles,
-            total + speccedFiles))
-          val physOpt = stOpt.map(physStruct(m, _))
-          val reader = physOpt match {
-            case Some(st) => spark.read.schema(st)
-            case None => spark.read
-          }
-          val frames = Seq.newBuilder[DataFrame]
-          if (kept.nonEmpty) {
-            val withIds = withRowId(reader.parquet(kept: _*))
-            frames += stOpt.map(toLogical(m, _, withIds,
-              Seq("__dv_rel", "__dv_pos"))).getOrElse(withIds)
-          }
-          if (specced.nonEmpty)
-            frames += readDirs(spark, path, m, specced, withIds = true)
-          val all = frames.result()
-          if (all.isEmpty) { // every file bloom-pruned: empty frame
-            val raw = withRowId(reader
-              .parquet(m.dataDirs.map(d => s"$path/data/$d"): _*)
-              .filter(org.apache.spark.sql.functions.lit(false)))
-            Some(stOpt.map(toLogical(m, _, raw,
-              Seq("__dv_rel", "__dv_pos"))).getOrElse(raw))
-          } else Some(all.reduce(_.unionByName(_)))
-        }
-      }
-    maskByPos(spark, path, m.dvDirs, pruned.getOrElse(
-      readDirs(spark, path, m, m.dataDirs, withIds = true)))
+    maskByPos(spark, path, m.dvDirs, readSnapshot(spark, path, m,
+      bloomPicks.getOrElse(whole(m.dataDirs)), withIds = true))
   }
 
   /** Planning-time memo for [[hasSkippingIndex]]'s stats-footer
@@ -1927,8 +1844,8 @@ object Versioned {
     * Cheap on purpose: directory existence checks plus at most one
     * memoized sidecar footer, no data IO. Hive-partitioned dirs do
     * not count (no flat sidecar contract) but no longer disqualify
-    * the whole table — [[sidecarPrunedRead]] reads them fully beside
-    * the pruned flat dirs, so ONE indexed spec-free dir is enough to
+    * the whole table — [[sidecarPicks]] reads them whole beside the
+    * pruned flat dirs, so ONE indexed spec-free dir is enough to
     * route the skipping path. */
   def hasSkippingIndex(spark: SparkSession, path: String, v: Int,
       c: String, kind: String): Boolean = {
@@ -2169,9 +2086,7 @@ object Versioned {
       }
       // the scope's masked snapshot — DV rows for the rewritten files
       // materialize away; kept dirs' mask entries stay live
-      val scopeDf = maskByPos(spark, path, m.dvDirs,
-        readDirs(spark, path, m, selected, withIds = true))
-        .drop("__dv_rel", "__dv_pos")
+      val scopeDf = liveRows(spark, path, m, whole(selected))
       // offer the hive layout iff every selected dir shares ONE spec
       // whose transform clock (if any) matches this session — a
       // re-render under another clock would move rows across dirs
@@ -2599,19 +2514,13 @@ object Versioned {
     * (inclusive): table columns + `_commit_version` + `_change_type`.
     * Validates every version in the range has a published feed
     * (compactions contribute zero rows); a gap names the repair
-    * hook, a plain overwrite names the contract. Partition pruning
-    * on `cv` keeps the scan to the asked range however long the
-    * feed's history is. */
+    * hook, a plain overwrite names the contract. The read lists only
+    * the asked `cv=` dirs ([[readChangesPruned]]), so it costs the
+    * asked range however long the feed's history is. */
   def readChanges(spark: SparkSession, path: String, vFrom: Int,
       vTo: Int): DataFrame = {
     require(vFrom >= 0 && vFrom <= vTo, s"readChanges: bad range $vFrom..$vTo")
-    requireFeed("readChanges", path, vFrom, vTo)
-    import org.apache.spark.sql.functions.col
-    renameFeedCols(logicalizeFeed(path,
-      spark.read.schema(feedSchema(path))
-        .option("basePath", changesRoot(path).toString)
-        .parquet(changesRoot(path).toString)))
-      .filter(col("_commit_version").between(vFrom, vTo))
+    readChangesPruned(spark, path, vFrom, vTo, None)._1
   }
 
   /** Directory-level accounting for the pruned feed read: ct-level
@@ -2775,7 +2684,7 @@ object Versioned {
   }
 
   /** Layout-aware `ct=insert` feed for `dirs` of `v`'s manifest:
-    * [[readDirs]] restores partition columns from directory names and
+    * [[readSnapshot]] restores partition columns from directory names and
     * aligns to the manifest schema, then the rows are WRITTEN (not
     * linked) as the feed — the only sound shape when a fed dir is
     * hive-partitioned, because its files physically lack the
@@ -2785,7 +2694,7 @@ object Versioned {
   private def writeDirsInsertFeed(spark: SparkSession, path: String,
       v: Int, m: Manifest, dirs: Seq[String]): Unit = {
     import org.apache.spark.sql.functions.{col, lit}
-    val base = readDirs(spark, path, m, dirs)
+    val base = readSnapshot(spark, path, m, whole(dirs))
     publishWrittenFeed(
       base.withColumn("ct", lit("insert"))
         .select((base.columns.toIndexedSeq.map(col) :+ col("ct")): _*),
@@ -3623,7 +3532,7 @@ object Versioned {
       // batch of all-new keys adds no mask dir
       val touched = updates.select(keys.map(col): _*).distinct()
       val live = maskByPos(spark, path, m.dvDirs,
-        readDirs(spark, path, m, m.dataDirs, withIds = true))
+        readSnapshot(spark, path, m, whole(m.dataDirs), withIds = true))
       val mask = stageMask(path,
         live.join(touched, keys.toIndexedSeq, "left_semi"))
       val dataId = java.util.UUID.randomUUID().toString
@@ -3891,19 +3800,10 @@ object Versioned {
         // BACK from the committed bytes so feed == committed content
         val cols = st.fields.toIndexedSeq.map(_.name)
         val delDropped = if (dropped.isEmpty) None else Some(
-          maskByPos(spark, path, m.dvDirs,
-            readDirs(spark, path, m, dropped, withIds = true))
-            .select(cols.map(col): _*))
+          liveRows(spark, path, m, whole(dropped)).select(cols.map(col): _*))
         val delMasked = mask.map(
           stagedMaskRows(spark, path, m, _).select(cols.map(col): _*))
-        val pst = physStruct(m, st)
-        val insBack = zoned match {
-          case None => toLogical(m, st,
-            spark.read.schema(pst).parquet(dataDir))
-          case Some(_) => toLogical(m, st, alignToSchema(
-            spark.read.schema(pst).option("basePath", dataDir)
-              .parquet(dataDir), pst, withIds = false))
-        }
+        val insBack = readSnapshot(spark, path, next, whole(Seq(dataId)))
         val feed = ((delDropped.toSeq ++ delMasked.toSeq)
           .map(_.withColumn("ct", lit("delete")))
           :+ insBack.select(cols.map(col): _*)
@@ -4070,34 +3970,10 @@ object Versioned {
       m: Manifest, mask: StagedMask): DataFrame = {
     import org.apache.spark.sql.functions.col
     val staged = readMasks(spark, path, Seq(mask.id))
-    val logicalSt = m.schemaDdl.map(
-      org.apache.spark.sql.types.StructType.fromDDL)
-    val physSt = logicalSt.map(physStruct(m, _))
-    val reader = physSt match {
-      case Some(st) => spark.read.schema(st)
-      case None => spark.read
-    }
-    // file bytes carry PHYSICAL names; one rename projection at the
-    // end restores the logical view
-    val (partRels, plainRels) = mask.rels.sorted
-      .partition(f => m.partSpecs.contains(f.takeWhile(_ != '/')))
-    val plainFrames = if (plainRels.isEmpty) Seq.empty[DataFrame]
-      else Seq(withRowId(reader.parquet(
-        plainRels.map(f => s"$path/data/$f"): _*)))
-    val partFrames = partRels.groupBy(_.takeWhile(_ != '/')).toSeq
+    val picks = mask.rels.sorted.groupBy(_.takeWhile(_ != '/')).toSeq
       .sortBy(_._1).map { case (d, rels) =>
-        val st = physSt.getOrElse(sys.error(
-          s"versioned stagedMaskRows: partitioned dir $d " +
-            "predates schema tracking"))
-        alignToSchema(withRowId(spark.read.schema(st)
-          .option("basePath", s"$path/data/$d")
-          .parquet(rels.map(f => s"$path/data/$f"): _*)),
-          st, withIds = true)
-      }
-    val physFrame = (plainFrames ++ partFrames)
-      .reduce(_.unionByName(_))
-    val frame = logicalSt.map(toLogical(m, _, physFrame,
-      extra = Seq("__dv_rel", "__dv_pos"))).getOrElse(physFrame)
+        d -> Some(rels.map(f => s"$path/data/$f")) }
+    val frame = readSnapshot(spark, path, m, picks, withIds = true)
     val cols = frame.columns.toIndexedSeq
       .filterNot(Set("__dv_rel", "__dv_pos"))
     frame.join(staged,
@@ -4202,10 +4078,14 @@ object Versioned {
       val dataId = java.util.UUID.randomUUID().toString
       toPhysical(m, post)
         .write.mode("errorifexists").parquet(s"$path/data/$dataId")
+      val next = Manifest(base + 1, "update-dv", m.dataDirs :+ dataId,
+        txn, m.schemaDdl, ts = Some(System.currentTimeMillis()),
+        constraints = m.constraints, dvDirs = m.dvDirs :+ mask.id,
+        partSpecs = m.partSpecs, droppedCols = m.droppedCols,
+        props = m.props, colMap = m.colMap)
       // gate + feed read the immutable STAGED bytes back, so what was
       // checked and what was fed is exactly what the manifest commits
-      val stagedBack = toLogical(m, st, spark.read
-        .schema(physStruct(m, st)).parquet(s"$path/data/$dataId"))
+      val stagedBack = readSnapshot(spark, path, next, whole(Seq(dataId)))
       if (m.constraints.nonEmpty) {
         import org.apache.spark.sql.functions.expr
         val pred = m.constraints.map(expr).reduce(_ && _)
@@ -4215,11 +4095,6 @@ object Versioned {
           s"violates constraint(s) [${m.constraints.mkString("; ")}]; " +
           s"example row: ${viol.map(_.toString).getOrElse("")}")
       }
-      val next = Manifest(base + 1, "update-dv", m.dataDirs :+ dataId,
-        txn, m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints, dvDirs = m.dvDirs :+ mask.id,
-        partSpecs = m.partSpecs, droppedCols = m.droppedCols,
-        props = m.props, colMap = m.colMap)
       if (publishManifest(path, next)) {
         val cols = stagedBack.columns.toIndexedSeq
         publishWrittenFeed(
@@ -4273,7 +4148,7 @@ object Versioned {
 
   /** Total data-file bytes of version `v`'s snapshot — the size the
     * SQL scan reports to Catalyst's join planner
-    * ([[GraftCatalog.VersionedV1Scan]] SupportsReportStatistics), so
+    * ([[GraftCatalog.frameScan]] SupportsReportStatistics), so
     * small versioned tables BROADCAST instead of defaulting to
     * Long.MaxValue and shuffling every dim⨝fact join. Memoized: a
     * version's dir chain is immutable, so one filesystem walk per

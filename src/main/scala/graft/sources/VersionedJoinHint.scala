@@ -15,7 +15,7 @@ import org.apache.spark.sql.execution.datasources.v2.{
   * Why a rule and not scan statistics: the read bridge is a V1Scan,
   * and Spark's V2ScanRelationPushDown wraps V1 scans in a
   * V1ScanWrapper that implements ONLY `Scan` — the scan's
-  * SupportsReportStatistics ([[GraftCatalog.VersionedV1Scan]]) is
+  * SupportsReportStatistics ([[GraftCatalog.frameScan]]) is
   * invisible to `DataSourceV2ScanRelation.computeStats`, which then
   * answers defaultSizeInBytes = Long.MaxValue and join selection can
   * never pick broadcast on its own. The size check is the REAL file

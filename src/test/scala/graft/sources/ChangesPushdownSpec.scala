@@ -3,7 +3,7 @@ package graft.sources
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** `<table>.changes` batch pushdown ([[ChangesScanBuilder]] →
+/** `<table>.changes` batch pushdown ([[ChangesSqlTable]]'s scan →
   * [[Versioned.readChangesPruned]]): `_commit_version` /
   * `_change_type` predicates must become DIRECTORY-list filters
   * (dirsRead < dirsTotal — real skipped IO, not plan shape), results

@@ -212,27 +212,6 @@ class StreamingSpec extends SparkSpec {
       s"expired right-only row must emit null-padded, got $got")
   }
 
-  test("UpsertSink: micro-batches merge into a keyed parquet table") {
-    implicit val sq = spark.sqlContext
-    import java.nio.file.Files
-    val dir = Files.createTempDirectory("upsink")
-    val target = dir.resolve("table").toString
-    val ckpt = dir.resolve("ckpt").toString
-    val stream = MemoryStream[(Long, String, Int)]
-    val q = UpsertSink.start(
-      stream.toDF().toDF("k", "s", "v"), Seq("k"),
-      Seq(col("v").desc), target, ckpt)
-    stream.addData((1L, "a", 10), (2L, "b", 20))
-    q.processAllAvailable()
-    stream.addData((2L, "b2", 99), (3L, "c", 30),
-      (3L, "c-older", 29)) // same-key in-batch: highest v wins
-    q.processAllAvailable()
-    q.stop()
-    val got = spark.read.parquet(target)
-      .as[(Long, String, Int)].collect().sortBy(_._1)
-    assert(got.toSeq == Seq((1L, "a", 10), (2L, "b2", 99), (3L, "c", 30)))
-  }
-
   test("file-source replay: parquet landing dir streams to the same result as batch") {
     // the production ingest shape: files land in a directory, the
     // stream tails it (maxFilesPerTrigger throttles); same transform,
