@@ -151,10 +151,15 @@ object Clustered {
     * rows — the full index never materializes driver-side). A file
     * with null bounds (all-null column chunk) is KEPT — unknown can
     * never justify a skip; so is one whose bounds don't cast to
-    * double (non-numeric stat column). Returns (survivors, total). */
+    * double (non-numeric stat column). `schema`, when the caller
+    * already knows the sidecar's, spares the footer read. Returns
+    * (survivors, total). */
   def pruneRange(spark: SparkSession, path: String, c: String,
-      lo: Double, hi: Double): (Seq[String], Int) = {
-    val st = spark.read.parquet(statsPath(path))
+      lo: Double, hi: Double,
+      schema: Option[org.apache.spark.sql.types.StructType] = None)
+      : (Seq[String], Int) = {
+    val st = schema.fold(spark.read)(spark.read.schema(_))
+      .parquet(statsPath(path))
     // TRY-mode cast: non-numeric stat columns null out (instead of
     // throwing under ANSI) and the null branch KEEPS the file
     def tryDouble(cl: Column): Column =

@@ -8,7 +8,8 @@ import java.nio.file.{Files, Path, Paths, StandardOpenOption}
   * `putIfAbsent(path, v, payload)` must atomically bind version slot
   * `v` of table `path` to `payload` and answer whether THIS caller
   * won. Its postconditions carry every correctness proof above it
-  * (optimistic retry loops, txn dedup, cross-process exactly-once):
+  * (the one optimistic retry loop, `Versioned.commitLoop`, every
+  * writer commits through; txn dedup; cross-process exactly-once):
   *
   *  1. exactly one caller per slot ever sees `true`;
   *  2. after ANY return (true or false), the slot's manifest file

@@ -314,12 +314,12 @@ object Versioned {
     * create-exclusive `link(2)` of POSIX/HDFS-class stores; a store
     * with NO fail-if-exists write swaps in
     * [[CommitArbiter.ExternalLog]] (slot CAS through an external
-    * coordination log with crash recovery) — every optimistic retry
-    * loop above this seam is deployment-agnostic, so
-    * [[VersionedCrossProcessSpec]]'s cross-process exactly-once proof
-    * carries over to whatever implements the contract. Invokes the
-    * test-only [[prePublishHook]] race-injection point before the
-    * attempt. */
+    * coordination log with crash recovery) — [[commitLoop]], the one
+    * optimistic retry loop above this seam and its only caller, is
+    * deployment-agnostic, so [[VersionedCrossProcessSpec]]'s
+    * cross-process exactly-once proof carries over to whatever
+    * implements the contract. Invokes the test-only [[prePublishHook]]
+    * race-injection point before the attempt. */
   private def publishManifest(path: String, m: Manifest): Boolean = {
     prePublishHook()
     arbiter.putIfAbsent(path, m.version, render(m).getBytes("UTF-8"))
@@ -366,7 +366,7 @@ object Versioned {
     * tail). Missing manifests below `retainFrom` after a vacuum read
     * as not-found — a replay older than the retention window cannot
     * be deduplicated, the same contract every txn-ledger table format
-    * documents. Takes `head` EXPLICITLY so [[commitTxn]] can order
+    * documents. Takes `head` EXPLICITLY so [[commitLoop]] can order
     * its reads race-free: head first, then the scan over 0..head —
     * any manifest published after the scan necessarily occupies
     * ≥ head+1, where the create-exclusive publish collides with it. */
@@ -381,6 +381,113 @@ object Versioned {
     None
   }
 
+  /** The change feed a commit publishes once its manifest is in. */
+  private sealed trait Feed
+  private object Feed {
+    /** None: a plain overwrite or restore is not representable as row
+      * changes ([[requireFeed]] names the contract to its readers). */
+    case object Absent extends Feed
+    /** The committed EMPTY feed dir: no logical row changed (metadata
+      * commits, physical rewrites). */
+    case object Unchanged extends Feed
+    /** Rows linked or written for the published manifest. */
+    final case class Rows(publish: Manifest => Unit) extends Feed
+  }
+
+  /** One attempt of a versioned writer, derived from the head: `next`
+    * is the manifest to publish ([[commitLoop]] stamps its version,
+    * commit time and txn), `result` the writer's answer for the
+    * published manifest, `staged` the dirs written for this attempt
+    * alone (dropped when its publish loses), `feed` the change feed
+    * published after it lands, and `reindex` the new data dir that
+    * inherits the head's skipping indexes ([[retrofitIndexes]]). */
+  private final case class Attempt[+A](next: Manifest,
+      result: Manifest => A, staged: Seq[java.nio.file.Path] = Nil,
+      feed: Feed = Feed.Unchanged,
+      reindex: Option[(SparkSession, String)] = None)
+
+  /** THE optimistic commit protocol, written once for every versioned
+    * writer (the Delta-log shape): read the head, answer `replay` if a
+    * manifest ≤ head already carries `txn`, let `step` derive this
+    * attempt from the head version and its manifest, publish it at
+    * head+1 through [[publishManifest]], then publish its feed and
+    * indexes. A lost race drops what the attempt staged and derives
+    * again from the new head — a concurrent commit is never silently
+    * overwritten, and a same-token racer turns the retry into a
+    * replay. `step` may answer `Left(result)` to finish without a
+    * commit (a delete that matched nothing). `what` names the writer
+    * in every error. */
+  private def commitLoop[A](path: String, what: String,
+      txn: Option[String] = None,
+      replay: Int => A = (_: Int) => sys.error("replay without a txn"))(
+      step: (Int, Option[Manifest]) => Either[A, Attempt[A]]): A = {
+    // token charset gate BEFORE any work: a token is an identifier
+    // (an appId-derived batch id), and a quote or backslash in it is
+    // a caller bug the ledger should not carry
+    txn.foreach(t => require(t.nonEmpty && t.forall(ch =>
+      ch.isLetterOrDigit && ch < 128 || ch == ':' || ch == '_' || ch == '-'),
+      s"versioned $what: txn token must match [A-Za-z0-9:_-]+, got '$t'"))
+    var attempt = 0
+    while (true) {
+      require(attempt < 50, s"versioned $what: 50 lost races at $path")
+      attempt += 1
+      // Order matters (TOCTOU): read head FIRST, then scan 0..head for
+      // our txn, then attempt head+1. A same-txn racer publishing
+      // after the scan lands at ≥ head+1 (commits only ever target
+      // latest+1), so our publish at head+1 fails and the retry
+      // re-scans — it can never be silently double-applied. The
+      // reverse order (scan, then read head) had a window where the
+      // racer's manifest raised the head between the two reads and
+      // the late committer published to an uncontended version.
+      val head = latestVersion(path)
+      txn.flatMap(findTxn(path, _, head)) match {
+        case Some(v) => return replay(v)
+        case None => ()
+      }
+      val parent = if (head < 0) None else Some(readManifest(path, head))
+      step(head, parent) match {
+        case Left(done) => return done
+        case Right(a) =>
+          val m = a.next.copy(version = head + 1, txn = txn,
+            ts = Some(System.currentTimeMillis()))
+          if (publishManifest(path, m)) {
+            a.feed match {
+              case Feed.Absent => ()
+              case Feed.Unchanged =>
+                Files.createDirectories(changeDirPath(path, m.version)): Unit
+              case Feed.Rows(publish) => publish(m)
+            }
+            a.reindex.foreach { case (spark, dir) =>
+              retrofitIndexes(spark, path, parent, dir) }
+            return a.result(m)
+          }
+          a.staged.foreach(dropDirRec) // lost the race: re-derive
+      }
+    }
+    sys.error("unreachable")
+  }
+
+  /** The head manifest a writer derives from; loud when there is none. */
+  private def headOf(parent: Option[Manifest], what: String,
+      path: String): Manifest = {
+    require(parent.isDefined,
+      s"versioned $what: no committed version at $path")
+    parent.get
+  }
+
+  /** CHECK-constraint gate (SQL semantics: NULL passes): one job looks
+    * for a row of `rows` violating `cons` before the publish. */
+  private def requireConstraints(what: String, path: String,
+      cons: Seq[String], rows: DataFrame): Unit =
+    if (cons.nonEmpty) {
+      import org.apache.spark.sql.functions.{expr, not}
+      val viol = rows.filter(not(cons.map(expr).reduce(_ && _))).limit(1)
+        .collect().headOption
+      require(viol.isEmpty, s"versioned $what at $path violates " +
+        s"constraint(s) [${cons.mkString("; ")}]; example row: " +
+        viol.map(_.toString).getOrElse(""))
+    }
+
   /** Commit `df` as the next version. `overwrite` replaces the
     * table's content; append composes with the current head. Returns
     * the committed version number. Safe under concurrent committers
@@ -394,13 +501,11 @@ object Versioned {
     * engine retries (Structured Streaming re-runs a micro-batch after
     * a crash; the re-run must not double-append). The token is
     * checked again on every lost-race retry, so a concurrent
-    * committer landing the same txn is also deduplicated. Retried
-    * batches leave at most one orphaned staged data dir (invisible —
-    * no manifest references it; reclaimed by [[vacuum]]'s
-    * unreachable-dir sweep). */
+    * committer landing the same txn is also deduplicated — and the
+    * data the retry had staged is dropped ([[commitLoop]]). */
   def commitTxn(df: DataFrame, path: String, overwrite: Boolean,
       txn: Option[String]): Int =
-    commitCore(df, path, overwrite, txn, expectedBase = None).get
+    commitCore(_ => df, path, overwrite, txn)
 
   /** Commit `df` Z-CLUSTERED on two numeric columns as the next
     * version: the staged data dir is written in
@@ -412,16 +517,22 @@ object Versioned {
     * exactly [[commitTxn]]'s. */
   def commitClustered(df: DataFrame, path: String, c1: String, c2: String,
       files: Int, overwrite: Boolean, txn: Option[String] = None): Int =
-    commitCore(df, path, overwrite, txn, expectedBase = None,
-      stage = (dataDir, pdf, phys) => {
-        Clustered.clusteredFrame(pdf, phys(c1), phys(c2), files)
-          .write.mode("errorifexists").parquet(dataDir)
-        Clustered.writeStats(pdf.sparkSession, dataDir,
-          Seq(phys(c1), phys(c2)))
-      },
+    commitCore(_ => df, path, overwrite, txn,
+      stage = clusteredStage(c1, c2, files),
       // the ledger names the maintenance action, like "compact" —
       // DESCRIBE HISTORY should say what rewrote the snapshot
-      modeOverride = if (overwrite) Some("cluster") else None).get
+      modeOverride = if (overwrite) Some("cluster") else None)
+
+  /** [[Clustered]]'s z-ordered layout plus its min/max sidecar on
+    * `(c1, c2)` as a [[commitCore]] staging writer. */
+  private def clusteredStage(c1: String, c2: String, files: Int)
+      : (String, DataFrame, String => String) => Unit =
+    (dataDir, pdf, phys) => {
+      Clustered.clusteredFrame(pdf, phys(c1), phys(c2), files)
+        .write.mode("errorifexists").parquet(dataDir)
+      Clustered.writeStats(pdf.sparkSession, dataDir,
+        Seq(phys(c1), phys(c2)))
+    }
 
   /** STATS-INDEXED APPEND: a plain commit (no re-clustering, no
     * sort — the rows land in arrival order) that also writes the
@@ -434,11 +545,11 @@ object Versioned {
     * per commit and zero data movement. */
   def commitIndexed(df: DataFrame, path: String, cols: Seq[String],
       overwrite: Boolean, txn: Option[String] = None): Int =
-    commitCore(df, path, overwrite, txn, expectedBase = None,
+    commitCore(_ => df, path, overwrite, txn,
       stage = (dataDir, pdf, phys) => {
         pdf.write.mode("errorifexists").parquet(dataDir)
         Clustered.writeStats(pdf.sparkSession, dataDir, cols.map(phys))
-      }).get
+      })
 
   /** BLOOM-INDEXED commit: a plain commit (arrival order, optionally
     * pre-bucketed by the caller) that also writes the per-file bloom
@@ -453,12 +564,12 @@ object Versioned {
   def commitBloomIndexed(df: DataFrame, path: String, c: String,
       expectedPerFile: Long = 100000L, overwrite: Boolean = false,
       txn: Option[String] = None): Int =
-    commitCore(df, path, overwrite, txn, expectedBase = None,
+    commitCore(_ => df, path, overwrite, txn,
       stage = (dataDir, pdf, phys) => {
         pdf.write.mode("errorifexists").parquet(dataDir)
         Clustered.writeBloomIndex(pdf.sparkSession, dataDir, phys(c),
           expectedPerFile)
-      }).get
+      })
 
   /** Build (or rebuild) the per-file min/max stats sidecar for
     * `cols` over the head snapshot's data dirs IN PLACE — an INDEX
@@ -615,10 +726,10 @@ object Versioned {
       spec: Seq[PartField], overwrite: Boolean = false,
       txn: Option[String] = None): Int = {
     val zoned = zonedPartSpec(df, spec)
-    commitCore(df, path, overwrite, txn, expectedBase = None,
+    commitCore(_ => df, path, overwrite, txn,
       stage = (dataDir, pdf, phys) =>
         stageHiveSpec(dataDir, pdf, phys, spec),
-      partSpec = Some(zoned)).get
+      partSpec = Some(zoned))
   }
 
   /** Validate `spec` against `df`'s schema and record the writer's
@@ -714,8 +825,8 @@ object Versioned {
     * [[commitPartitioned]]). */
   def commitWithProps(df: DataFrame, path: String, overwrite: Boolean,
       props: Map[String, String]): Int =
-    commitCore(df, path, overwrite, txn = None, expectedBase = None,
-      tableProps = Some(props)).get
+    commitCore(_ => df, path, overwrite, txn = None,
+      tableProps = Some(props))
 
   /** The immutable PHYSICAL name of logical column `c` at `v` (the
     * name directory layouts and file bytes carry) — the translation
@@ -896,12 +1007,19 @@ object Versioned {
     if (!Files.exists(p)) 0
     else {
       val w = Files.walk(p)
-      try w.iterator().asScala.count { q =>
-        val n = q.getFileName.toString
-        Files.isRegularFile(q) && n.endsWith(".parquet") &&
-          !n.startsWith("_") && !n.startsWith(".")
-      }
+      try w.iterator().asScala.count(q =>
+        Files.isRegularFile(q) && isDataFile(p.relativize(q)))
       finally w.close()
+    }
+
+  /** Whether `rel`, a path below a data dir, is a data file: a parquet
+    * part none of whose path components is `_`- or `.`-prefixed — the
+    * parts of a `_graft_stats` / `_graft_bloom_*` sidecar table and
+    * hidden files are not data. */
+  private def isDataFile(rel: java.nio.file.Path): Boolean =
+    rel.toString.endsWith(".parquet") && rel.iterator().asScala.forall { c =>
+      val n = c.toString
+      !n.startsWith("_") && !n.startsWith(".")
     }
 
   /** Hive partition-dir value unescaping (percent-encoding). */
@@ -918,37 +1036,22 @@ object Versioned {
     b.toString
   }
 
-  private def commitCore(df: DataFrame, path: String, overwrite: Boolean,
-      txn: Option[String], expectedBase: Option[Int],
+  /** The one data-commit writer behind [[commit]], every commit mode
+    * and the head rewrites ([[compact]], [[clusterRewrite]]): stage
+    * `rows(head)` as one new data dir under the head's column mapping
+    * and publish it through [[commitLoop]]. A caller's frame stages
+    * ONCE — a lost race re-derives only the manifest, and the data is
+    * restaged only when the column mapping drifted under it — while a
+    * head rewrite's frame is the head snapshot itself, so each attempt
+    * restages it from the new head. An append publishes its rows as
+    * the insert feed; an overwrite publishes `overwriteFeed`. */
+  private def commitCore(rows: Int => DataFrame, path: String,
+      overwrite: Boolean, txn: Option[String], what: String = "commit",
       stage: (String, DataFrame, String => String) => Unit = null,
       modeOverride: Option[String] = None,
       partSpec: Option[Seq[PartField]] = None,
-      tableProps: Option[Map[String, String]] = None): Option[Int] = {
-    // token charset gate BEFORE any work: render() interpolates the
-    // token into manifest JSON unescaped (documented builder-owned
-    // charset); an appId-derived token carrying a quote or backslash
-    // would corrupt the ledger for every future reader.
-    txn.foreach(t => require(t.nonEmpty && t.forall(ch =>
-      ch.isLetterOrDigit && ch < 128 || ch == ':' || ch == '_' || ch == '-'),
-      s"versioned commitTxn: txn token must match [A-Za-z0-9:_-]+, got '$t'"))
-    // `cv`/`ct` are the change-feed's directory-derived partition
-    // columns (shadowed at feed-read time); `__dv_rel`/`__dv_pos`
-    // are the deletion-vector row-identity columns (a same-named
-    // table column makes every masked read ambiguous AFTER a mask
-    // already committed) — reserve all four up front
-    // folded compare, like every other name comparison here: Spark
-    // resolves case-insensitively, so 'Cv' would shadow the feed's
-    // partition column exactly as 'cv' does
-    Seq("cv", "ct", "__dv_rel", "__dv_pos").foreach(r =>
-      require(!df.columns.exists(c => foldName(c) == r),
-        s"versioned commit: column name '$r' is reserved (change-" +
-          "feed partition / deletion-vector row-identity columns)"))
-    txn.flatMap(findTxn(path, _, latestVersion(path))) match {
-      case Some(v) => return Some(v) // cheap pre-stage dedup (advisory)
-      case None => ()
-    }
-    val dataId = java.util.UUID.randomUUID().toString
-    val dataDir = s"$path/data/$dataId"
+      tableProps: Option[Map[String, String]] = None,
+      overwriteFeed: Feed = Feed.Absent): Int = {
     // COLUMN-MAPPING assignment for this commit's columns: existing
     // logical columns keep their immutable physical name; NEW columns
     // get `logical` itself unless that physical name is already taken
@@ -956,7 +1059,7 @@ object Versioned {
     // fresh `<logical>_p<version>` name, which is what makes
     // drop-then-re-add safe (old files simply lack the fresh physical
     // name and null-fill; their bytes can never resurrect).
-    def assignPhys(parentM: Option[Manifest], nextV: Int)
+    def assignPhys(df: DataFrame, parentM: Option[Manifest], nextV: Int)
         : Map[String, String] = parentM match {
       case None => df.columns.map(c => c -> c).toMap // fresh baseline
       case Some(pm) =>
@@ -987,7 +1090,7 @@ object Versioned {
     // the manifest the mapping derives from) so the staged files
     // carry physical leaf names at every depth — identity (and
     // plan-invisible) when nothing ever diverged
-    def physRename(mapping: Map[String, String],
+    def physRename(df: DataFrame, mapping: Map[String, String],
         pm: Option[Manifest]): DataFrame = {
       import org.apache.spark.sql.functions.col
       def physT(f: org.apache.spark.sql.types.StructField) =
@@ -1000,88 +1103,74 @@ object Versioned {
          else col(f.name).cast(asNullable(pt))).as(mapping(f.name))
       }: _*)
     }
-    // default staging is a plain distributed parquet write of the
-    // PHYSICAL-named frame; a commit MODE (e.g. [[commitClustered]])
-    // swaps in its own layout writer, receiving the physical frame
-    // and the name translator — the ledger mechanics below are
-    // identical either way
-    def runStage(mapping: Map[String, String],
-        pm: Option[Manifest]): Unit = {
-      val pdf = physRename(mapping, pm)
-      if (stage == null) pdf.write.mode("errorifexists").parquet(dataDir)
-      else stage(dataDir, pdf, (c: String) => mapping.getOrElse(c, c))
-    }
-    val stageHead = latestVersion(path)
-    // NAME CONTINUITY CROSSES OVERWRITES: the physical assignment
-    // always derives from the actual head manifest, even when the
-    // commit replaces the table's content. The data-dir chain resets
-    // on overwrite, but the change-FEED dirs of earlier eras do not —
-    // their files carry the old physical names, and [[feedSchema]]
-    // reads every era under ONE head-derived physical schema. A
-    // logical column that persists across the overwrite must
-    // therefore keep its physical name (else historical feed reads
-    // silently null-fill it), and a new column must avoid every
-    // physical name any era ever used.
-    val stageParent = if (stageHead < 0) None
-      else Some(readManifest(path, stageHead))
-    var stagedMapping = assignPhys(stageParent, stageHead + 1)
-    runStage(stagedMapping, stageParent)
-    Files.createDirectories(versionsDir(path))
-    var attempt = 0
-    while (true) {
-      require(attempt < 50, s"versioned commit: 50 lost races at $path")
-      attempt += 1
-      // Order matters (TOCTOU): read head FIRST, then scan 0..head for
-      // our txn, then attempt head+1. A same-txn racer publishing
-      // after the scan lands at ≥ head+1 (commits only ever target
-      // latest+1), so our createLink at head+1 fails and the retry
-      // re-scans — it can never be silently double-appended. The
-      // reverse order (scan, then read head) had a window where the
-      // racer's manifest raised the head between the two reads and
-      // the late committer published to an uncontended version.
-      val head = latestVersion(path)
-      txn.flatMap(findTxn(path, _, head)) match {
-        case Some(v) => return Some(v) // a racer landed our txn first
-        case None => ()
+    // what is staged now: the frame, the mapping its files carry, the
+    // dir id — None until the first attempt stages
+    var staged: Option[(DataFrame, Map[String, String], String)] = None
+    def dropStaged(): Unit =
+      staged.foreach { case (_, _, id) =>
+        dropDirRec(Paths.get(path, "data", id)) }
+    commitLoop[Int](path, what, txn,
+      replay = v => { dropStaged(); v }) { (head, parentMeta) =>
+      val df = rows(head)
+      // NAME CONTINUITY CROSSES OVERWRITES: the physical assignment
+      // always derives from the actual head manifest, even when the
+      // commit replaces the table's content. The data-dir chain resets
+      // on overwrite, but the change-FEED dirs of earlier eras do not —
+      // their files carry the old physical names, and [[feedSchema]]
+      // reads every era under ONE head-derived physical schema. A
+      // logical column that persists across the overwrite must
+      // therefore keep its physical name (else historical feed reads
+      // silently null-fill it), and a new column must avoid every
+      // physical name any era ever used.
+      val mapping = assignPhys(df, parentMeta, head + 1)
+      // column-mapping drift check: staged files carry the physical
+      // names of the head they were staged against; a concurrent
+      // rename / colliding new-column commit can change the
+      // assignment (physical names themselves are immutable, so this
+      // is rare: only fresh-name suffixes and rename-reused logical
+      // names move). Restage under the current assignment —
+      // correctness over the re-write cost, on a losing-race path
+      // that is already re-deriving everything else. A head rewrite
+      // hands over a new frame per head, so it always restages.
+      if (!staged.exists { case (d, mp, _) => (d eq df) && mp == mapping }) {
+        dropStaged()
+        // `cv`/`ct` are the change-feed's directory-derived partition
+        // columns (shadowed at feed-read time); `__dv_rel`/`__dv_pos`
+        // are the deletion-vector row-identity columns (a same-named
+        // table column makes every masked read ambiguous AFTER a mask
+        // already committed) — reserve all four up front
+        // folded compare, like every other name comparison here: Spark
+        // resolves case-insensitively, so 'Cv' would shadow the feed's
+        // partition column exactly as 'cv' does
+        Seq("cv", "ct", "__dv_rel", "__dv_pos").foreach(r =>
+          require(!df.columns.exists(c => foldName(c) == r),
+            s"versioned commit: column name '$r' is reserved (change-" +
+              "feed partition / deletion-vector row-identity columns)"))
+        val id = java.util.UUID.randomUUID().toString
+        // default staging is a plain distributed parquet write of the
+        // PHYSICAL-named frame; a commit MODE (e.g. [[commitClustered]])
+        // swaps in its own layout writer, receiving the physical frame
+        // and the name translator — the ledger mechanics are identical
+        // either way
+        val pdf = physRename(df, mapping, parentMeta)
+        if (stage == null)
+          pdf.write.mode("errorifexists").parquet(s"$path/data/$id")
+        else stage(s"$path/data/$id", pdf,
+          (c: String) => mapping.getOrElse(c, c))
+        staged = Some((df, mapping, id))
       }
-      if (expectedBase.exists(_ != head))
-        return None // head moved under a read-modify-write: recompute
+      val (_, _, dataId) = staged.get
       // metadata (constraints) survives overwrites — only the data-dir
       // chain and the schema baseline reset; an overwrite commit must
       // not silently drop the table's quality gates
-      val parentMeta = if (head < 0) None else Some(readManifest(path, head))
       val parent = if (overwrite) None else parentMeta
       val parentDirs = parent.map(_.dataDirs).getOrElse(Seq.empty)
-      // column-mapping drift check: the staged files were written
-      // under physical names derived from the STAGE-TIME head; a
-      // concurrent rename / colliding new-column commit can change
-      // the assignment (physical names themselves are immutable, so
-      // this is rare: only fresh-name suffixes and rename-reused
-      // logical names move). Restage under the current assignment —
-      // correctness over the re-write cost, on a losing-race path
-      // that is already re-deriving everything else.
-      val mappingNow = assignPhys(parentMeta, head + 1)
-      if (mappingNow != stagedMapping) {
-        dropDirRec(Paths.get(dataDir))
-        stagedMapping = mappingNow
-        runStage(stagedMapping, parentMeta)
-      }
-      // CHECK-constraint enforcement (SQL semantics: NULL passes):
-      // one batch job finds any violating row BEFORE the publish; the
-      // staged dir stays orphaned on failure (vacuum reclaims). For
-      // overwrite commits this scans the full new content — which is
-      // exactly what "the table always satisfies its constraints"
-      // costs on a rewrite.
+      // CHECK constraints: the staged dir stays orphaned on failure
+      // (vacuum reclaims). For overwrite commits this scans the full
+      // new content — which is exactly what "the table always
+      // satisfies its constraints" costs on a rewrite.
       val cons = parentMeta.map(_.constraints).getOrElse(Seq.empty)
-      if (cons.nonEmpty) {
-        import org.apache.spark.sql.functions.{expr, not}
-        val pred = cons.map(expr).reduce(_ && _)
-        val viol = df.filter(not(pred)).limit(1)
-          .collect().headOption
-        require(viol.isEmpty, s"versioned commit at $path violates " +
-          s"constraint(s) [${cons.mkString("; ")}]; example row: " +
-          viol.map(_.toString).getOrElse(""))
-      }
+      requireConstraints(what, path, cons, df)
       // schema evolution: an append may ADD columns (they null-fill
       // for older files at read time), and a same-name column may
       // WIDEN along the lossless ladders byte→short→int→long and
@@ -1094,7 +1183,7 @@ object Versioned {
       // A name tombstoned by [[dropColumn]] CAN come back: column
       // mapping hands the reborn column a FRESH physical name
       // (assignPhys), so old files null-fill it — never resurrect it.
-      // tombstones survive overwrites (see stageParent above): prior
+      // tombstones survive overwrites (see NAME CONTINUITY above): prior
       // reservations carry forward, and every parent physical name
       // the overwrite's column set does NOT reuse is newly tombstoned
       // — feed files of the old era still carry those bytes, so a
@@ -1103,7 +1192,7 @@ object Versioned {
         case None => Seq.empty
         case Some(pm) if !overwrite => pm.droppedCols
         case Some(pm) =>
-          val keptFold = stagedMapping.values.map(foldName).toSet
+          val keptFold = mapping.values.map(foldName).toSet
           val implicitDrops = pm.schemaDdl.toSeq.flatMap(d =>
             org.apache.spark.sql.types.StructType.fromDDL(d)
               .fields.toSeq.map(f => pm.physOf(f.name))
@@ -1230,7 +1319,7 @@ object Versioned {
       // An overwrite's schema holds exactly this commit's columns, so
       // its top-level mapping is exactly the staged assignment —
       // which already carries forward the parent's physical names for
-      // persisting logical columns (stageParent above); NESTED
+      // persisting logical columns (NAME CONTINUITY above); NESTED
       // (dotted) entries of persisting top columns carry across the
       // overwrite too, because historical FEED files keep the old
       // physical leaf names and feedSchema reads every era under the
@@ -1241,16 +1330,15 @@ object Versioned {
               df.columns.exists(c =>
                 foldName(c) == foldName(k.takeWhile(_ != '.'))) }
         else parent.map(_.colMap).getOrElse(Map.empty)) ++
-        stagedMapping.filter { case (l, p) => foldName(l) != foldName(p) }
+        mapping.filter { case (l, p) => foldName(l) != foldName(p) }
       // an APPEND carries the parent's deletion-vector mask — new
       // files are untouched by it (their (rel,pos) ids are fresh) and
       // the carried dirs' masked rows must STAY deleted; an overwrite
-      // (incl. compact/merge, which stage the MASKED snapshot) resets
-      // the mask with the data-dir chain
-      val m = Manifest(head + 1,
+      // (incl. compact, which stages the MASKED snapshot) resets the
+      // mask with the data-dir chain
+      val next = Manifest(head + 1,
         modeOverride.getOrElse(if (overwrite) "overwrite" else "append"),
-        parentDirs :+ dataId, txn, Some(ddl),
-        ts = Some(System.currentTimeMillis()), constraints = cons,
+        parentDirs :+ dataId, schemaDdl = Some(ddl), constraints = cons,
         dvDirs = parent.map(_.dvDirs).getOrElse(Seq.empty),
         // carry the CARRIED dirs' partition specs; the new dir adds
         // its own spec iff this is a partitioned-layout commit
@@ -1260,7 +1348,7 @@ object Versioned {
         partSpecs = parent.map(_.specsFor(parentDirs))
           .getOrElse(Map.empty) ++
           partSpec.map(sp => dataId -> renderPartSpec(sp.map(f =>
-            f.copy(col = stagedMapping.getOrElse(f.col, f.col))))),
+            f.copy(col = mapping.getOrElse(f.col, f.col))))),
         droppedCols = dropped,
         // table properties are POLICY, not data lineage — they
         // survive overwrites like constraints do (parentMeta, not
@@ -1268,58 +1356,14 @@ object Versioned {
         props = tableProps.getOrElse(
           parentMeta.map(_.props).getOrElse(Map.empty)),
         colMap = nextColMap)
-      // atomic create-exclusive publish via [[publishManifest]] (the
-      // one deployment seam — rename(2) would REPLACE silently, the
-      // wrong primitive for a commit race); the loser retries against
-      // the new head.
-      if (publishManifest(path, m)) {
-        // stored change-data feed (Delta-CDF shape): an APPEND's
-        // change rows ARE its new data files — publish them as
-        // hardlinks (zero-copy; see [[publishInsertFeed]]). A
-        // COMPACTION rewrites bytes without changing the logical
-        // content, so its feed is the committed empty dir. Plain
-        // overwrites are not representable in a row-change feed and
-        // publish none ([[readChanges]] fails loudly on them).
-        m.mode match {
-          case "append" if partSpec.isEmpty =>
-            publishInsertFeed(path, m.version, dataDir)
-          case "append" =>
-            // a hive-partitioned dir's files do NOT contain the
-            // partition column — zero-copy links would publish a feed
-            // missing it. Read the staged dir back (discovery
-            // restores the column) and WRITE the insert feed.
-            import org.apache.spark.sql.functions.{col, lit}
-            // read back under df's OWN schema — PHYSICAL names (the
-            // staged dir carries them): discovery then parses the
-            // partition-dir values as the declared type, so the
-            // written feed's column types match feedSchema exactly
-            // (inference could flip a string partition col numeric);
-            // renamed to logical before the feed write renames back
-            // (publishWrittenFeed owns the physical translation)
-            val backSchema = org.apache.spark.sql.types.StructType(
-              df.schema.fields.map(f =>
-                f.copy(name = stagedMapping(f.name),
-                  dataType = parentMeta
-                    .map(physType(_, Seq(f.name), f.dataType))
-                    .getOrElse(f.dataType))))
-            val back0 = df.sparkSession.read.schema(backSchema)
-              .option("basePath", dataDir).parquet(dataDir)
-            val back = back0.select(df.schema.fields.toIndexedSeq.map {
-              f =>
-                val c = col(stagedMapping(f.name))
-                (if (backSchema(stagedMapping(f.name)).dataType ==
-                    f.dataType) c
-                 else c.cast(asNullable(f.dataType))).as(f.name)
-            }: _*)
-            publishWrittenFeed(
-              back.withColumn("ct", lit("insert"))
-                .select((df.columns.toIndexedSeq.map(col)
-                  :+ col("ct")): _*),
-              path, m.version)
-          case "compact" =>
-            Files.createDirectories(changeDirPath(path, m.version)): Unit
-          case _ => ()
-        }
+      Right(Attempt[Int](next, _.version,
+        // stored change-data feed (Delta-CDF shape): an APPEND's change
+        // rows ARE its new data dir ([[insertFeed]]); an overwrite's
+        // feed is the caller's — none for plain overwrites (not
+        // representable in a row-change feed; [[readChanges]] fails
+        // loudly on them), the empty dir for head rewrites
+        feed = if (overwrite) overwriteFeed else Feed.Rows(m =>
+          insertFeed(df.sparkSession, path, m.version, m, Seq(dataId))),
         // auto-index the new dir when the HEAD's dirs are indexed —
         // parentMeta, not parent: an overwrite (compact/cluster/
         // INSERT OVERWRITE) inherits the REPLACED snapshot's index
@@ -1329,21 +1373,10 @@ object Versioned {
         // Hive-partitioned commits skip (partition pruning covers
         // them); sidecars the commit itself staged are detected and
         // left alone inside retrofitIndexes.
-        if (partSpec.isEmpty)
-          retrofitIndexes(df.sparkSession, path, parentMeta, dataId)
-        return Some(m.version)
-      }
+        reindex = if (partSpec.isEmpty) Some((df.sparkSession, dataId))
+          else None))
     }
-    None // unreachable
   }
-
-  /** Per-sidecar memo of the stats columns a `_graft_stats` dir
-    * indexes, keyed by sidecar mtime — [[retrofitIndexes]] runs on
-    * EVERY commit, and without this an append-heavy table would
-    * re-read O(dataDirs) sidecar footers per commit (the same
-    * planning-tax shape [[statsIndexMemo]] exists for). */
-  private val statsColsMemo = new java.util.concurrent
-    .ConcurrentHashMap[String, (Long, Set[String])]()
 
   /** The file-skipping index columns any of `m`'s spec-free data dirs
     * carry: (stats-indexed cols, bloom-indexed cols), PHYSICAL names
@@ -1356,29 +1389,7 @@ object Versioned {
     var blooms = Set.empty[String]
     m.dataDirs.filterNot(m.partSpecs.contains).foreach { d =>
       val dir = s"$path/data/$d"
-      val sp = Paths.get(Clustered.statsPath(dir))
-      if (Files.isDirectory(sp)) {
-        val mtime =
-          try Files.getLastModifiedTime(sp).toMillis
-          catch { case scala.util.control.NonFatal(_) => -1L }
-        val key = sp.toString
-        stats ++= (statsColsMemo.get(key) match {
-          case (`mtime`, cols) => cols
-          case _ =>
-            if (statsColsMemo.size > StatsIndexMemoCap)
-              statsColsMemo.clear()
-            val cols = try {
-              val names = spark.read.parquet(sp.toString)
-                .schema.fieldNames.toSet
-              names.filter(_.startsWith("lo_")).map(_.drop(3))
-                .filter(c => names.contains("hi_" + c))
-            } catch {
-              case scala.util.control.NonFatal(_) => Set.empty[String]
-            }
-            statsColsMemo.put(key, (mtime, cols))
-            cols
-        })
-      }
+      stats ++= statsCols(spark, dir)
       if (Files.isDirectory(Paths.get(dir))) eachEntry(Paths.get(dir)) {
         p =>
           val n = p.getFileName.toString
@@ -1645,10 +1656,8 @@ object Versioned {
       val out = Vector.newBuilder[String]
       val fs = ls.iterator()
       while (fs.hasNext) {
-        val f = fs.next().getFileName.toString
-        if (f.endsWith(".parquet") && !f.startsWith("_") &&
-            !f.startsWith("."))
-          out += s"$dir/$f"
+        val f = fs.next().getFileName
+        if (isDataFile(f)) out += s"$dir/$f"
       }
       out.result()
     } finally ls.close()
@@ -1718,17 +1727,13 @@ object Versioned {
   /** Per-dir min/max prune, column-tolerant: a dir whose stats
     * sidecar indexes OTHER columns (e.g. a later [[commitIndexed]] on
     * a different key) counts as un-indexed for `cPhys` instead of
-    * erroring — one sidecar footer read decides. */
+    * erroring — the memoized sidecar schema decides, and the prune
+    * reads the sidecar under it. */
   private def statsPruneDir(spark: SparkSession, dir: String,
       cPhys: String, lo: Double, hi: Double): Option[(Seq[String], Int)] =
     pruneOrKeepAll {
-      if (!Files.isDirectory(Paths.get(Clustered.statsPath(dir)))) None
-      else {
-        val names = spark.read.parquet(Clustered.statsPath(dir))
-          .schema.fieldNames.toSet
-        if (!names("lo_" + cPhys) || !names("hi_" + cPhys)) None
-        else Some(Clustered.pruneRange(spark, dir, cPhys, lo, hi))
-      }
+      statsSchema(spark, dir).filter(st => statsColsOf(st)(cPhys))
+        .map(st => Clustered.pruneRange(spark, dir, cPhys, lo, hi, Some(st)))
     }
 
   /** Snapshot read WITH file skipping: per data dir prune on its own
@@ -1817,36 +1822,68 @@ object Versioned {
       bloomPicks.getOrElse(whole(m.dataDirs)), withIds = true))
   }
 
-  /** Planning-time memo for [[hasSkippingIndex]]'s stats-footer
-    * probe, keyed (sidecar dir, physical col) and VALUED with the
-    * sidecar mtime it was computed at: data dirs are immutable, but
-    * [[buildStatsIndex]] can REBUILD a sidecar in place — an mtime
-    * mismatch recomputes and REPLACES the entry, so a rebuild can
-    * never serve a stale answer and stale generations never
-    * accumulate (the r14 shape keyed ON the mtime, which made every
-    * rebuild a fresh never-evicted entry — a slow leak in long-lived
-    * sessions). Entries for dropped/vacuumed tables still linger, so
-    * a size backstop clears the whole memo past a bound no healthy
-    * session reaches (it is a cache of one footer read — a clear
-    * costs one re-probe per live sidecar, never a wrong answer).
-    * Without the memo, EVERY SQL read of a stats-indexed table would
-    * re-read the index footer at planning time (per query, per
-    * pushed column) — noise locally, a real planning tax on a
-    * 10⁶-file table. */
-  private val statsIndexMemo = new java.util.concurrent
-    .ConcurrentHashMap[(String, String), (Long, Boolean)]()
+  /** THE stats-sidecar schema memo, keyed by sidecar dir and VALUED
+    * with the sidecar mtime it was read at: data dirs are immutable,
+    * but [[buildStatsIndex]] can REBUILD a sidecar in place — an mtime
+    * mismatch re-reads and REPLACES the entry, so a rebuild can never
+    * serve a stale answer and stale generations never accumulate.
+    * Entries for dropped/vacuumed tables still linger, so a size
+    * backstop clears the whole memo past a bound no healthy session
+    * reaches (a clear costs one re-read per live sidecar, never a
+    * wrong answer). Every reader of a sidecar's columns goes through
+    * it — the planning gate ([[hasSkippingIndex]]), the range prune
+    * ([[statsPruneDir]]) and the per-commit auto-index
+    * ([[indexedColumns]]) — so each sidecar footer is read once per
+    * generation, not per query or per commit (a real planning tax on
+    * a 10⁶-file table). None = unreadable (mid-rebuild): un-indexed. */
+  private val statsSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, (Long, Option[org.apache.spark.sql.types.StructType])]()
   private val StatsIndexMemoCap = 1 << 16
+
+  /** The stats sidecar schema of data dir `dir`, through
+    * [[statsSchemaMemo]]; None when the dir has no readable sidecar. */
+  private def statsSchema(spark: SparkSession, dir: String)
+      : Option[org.apache.spark.sql.types.StructType] = {
+    val sp = Paths.get(Clustered.statsPath(dir))
+    if (!Files.isDirectory(sp)) None
+    else {
+      val mtime =
+        try Files.getLastModifiedTime(sp).toMillis
+        catch { case scala.util.control.NonFatal(_) => -1L }
+      statsSchemaMemo.get(sp.toString) match {
+        case (`mtime`, st) => st
+        case _ =>
+          if (statsSchemaMemo.size > StatsIndexMemoCap)
+            statsSchemaMemo.clear()
+          val st = try Some(spark.read.parquet(sp.toString).schema)
+            catch { case scala.util.control.NonFatal(_) => None }
+          statsSchemaMemo.put(sp.toString, (mtime, st))
+          st
+      }
+    }
+  }
+
+  /** The PHYSICAL columns a stats sidecar schema indexes (both bounds). */
+  private def statsColsOf(st: org.apache.spark.sql.types.StructType)
+      : Set[String] = {
+    val names = st.fieldNames.toSet
+    names.filter(_.startsWith("lo_")).map(_.drop(3))
+      .filter(c => names("hi_" + c))
+  }
+
+  private def statsCols(spark: SparkSession, dir: String): Set[String] =
+    statsSchema(spark, dir).map(statsColsOf).getOrElse(Set.empty)
 
   /** Whether `v`'s snapshot carries a usable file-skipping sidecar
     * for logical column `c` — the SQL scan's PLANNING gate
     * ([[GraftCatalog]] consults it before routing a pushed filter
     * through the sidecar read paths). `kind` is "stats" or "bloom".
-    * Cheap on purpose: directory existence checks plus at most one
-    * memoized sidecar footer, no data IO. Hive-partitioned dirs do
-    * not count (no flat sidecar contract) but no longer disqualify
-    * the whole table — [[sidecarPicks]] reads them whole beside the
-    * pruned flat dirs, so ONE indexed spec-free dir is enough to
-    * route the skipping path. */
+    * Cheap on purpose: directory existence checks plus memoized
+    * sidecar schemas ([[statsSchemaMemo]]), no data IO.
+    * Hive-partitioned dirs do not count (no flat sidecar contract)
+    * but no longer disqualify the whole table — [[sidecarPicks]]
+    * reads them whole beside the pruned flat dirs, so ONE indexed
+    * spec-free dir is enough to route the skipping path. */
   def hasSkippingIndex(spark: SparkSession, path: String, v: Int,
       c: String, kind: String): Boolean = {
     val m = readManifest(path, v)
@@ -1856,30 +1893,7 @@ object Versioned {
       kind match {
         case "bloom" =>
           Files.isDirectory(Paths.get(Clustered.bloomPath(dir, cPhys)))
-        case _ =>
-          val sp = Paths.get(Clustered.statsPath(dir))
-          Files.isDirectory(sp) && {
-            val mtime =
-              try Files.getLastModifiedTime(sp).toMillis
-              catch { case scala.util.control.NonFatal(_) => -1L }
-            val key = (sp.toString, cPhys)
-            statsIndexMemo.get(key) match {
-              case (`mtime`, ans) => ans
-              case _ =>
-                if (statsIndexMemo.size > StatsIndexMemoCap)
-                  statsIndexMemo.clear()
-                val ans = try {
-                  val names = spark.read
-                    .parquet(Clustered.statsPath(dir))
-                    .schema.fieldNames.toSet
-                  names("lo_" + cPhys) && names("hi_" + cPhys)
-                } catch { // mid-rebuild sidecar: plan as un-indexed
-                  case scala.util.control.NonFatal(_) => false
-                }
-                statsIndexMemo.put(key, (mtime, ans))
-                ans
-            }
-          }
+        case _ => statsCols(spark, dir)(cPhys)
       }
     }
   }
@@ -1892,19 +1906,17 @@ object Versioned {
     * [[vacuum]] reclaims them. Returns the compacted version.
     *
     * Concurrency: a compaction is a read-modify-write (it republishes
-    * the snapshot it READ), so it runs under the same optimistic
-    * re-derive loop as [[mergeDV]] (`expectedBase` — the head must
-    * still be the version the rewrite was derived from): a concurrent
-    * INSERT landing between the read and the publish fails the
-    * precondition and the compaction re-reads the NEW head and
-    * re-compacts, instead of silently dropping the append from the
-    * republished snapshot (the lost-update every naive OPTIMIZE
-    * implementation ships with). */
+    * the snapshot it READ), so each attempt of [[commitLoop]] restages
+    * the head it derived from: a concurrent INSERT landing between the
+    * read and the publish makes the publish lose, and the compaction
+    * drops its staged dir, re-reads the NEW head and re-compacts,
+    * instead of silently dropping the append from the republished
+    * snapshot (the lost-update every naive OPTIMIZE implementation
+    * ships with). */
   def compact(spark: SparkSession, path: String, targetFiles: Int): Int =
-    rewriteHead(spark, path, "compact", (df, base) =>
-      commitCore(df.coalesce(targetFiles), path, overwrite = true,
-        txn = None, expectedBase = Some(base),
-        modeOverride = Some("compact")))
+    commitCore(head => read(spark, path, Some(head)).coalesce(targetFiles),
+      path, overwrite = true, txn = None, what = "compact",
+      modeOverride = Some("compact"), overwriteFeed = Feed.Unchanged)
 
   /** OPTIMIZE ZORDER as a head rewrite — [[commitClustered]] of the
     * CURRENT snapshot under the same derive-from-head optimistic
@@ -1916,24 +1928,14 @@ object Versioned {
     * version; the `CALL <cat>.system.cluster` verb routes here. */
   def clusterRewrite(spark: SparkSession, path: String, c1: String,
       c2: String, files: Int): Int =
-    rewriteHead(spark, path, "clusterRewrite", (df, base) =>
-      commitCore(df, path, overwrite = true, txn = None,
-        expectedBase = Some(base),
-        stage = (dataDir, pdf, phys) => {
-          Clustered.clusteredFrame(pdf, phys(c1), phys(c2), files)
-            .write.mode("errorifexists").parquet(dataDir)
-          Clustered.writeStats(pdf.sparkSession, dataDir,
-            Seq(phys(c1), phys(c2)))
-        },
-        modeOverride = Some("cluster")).map { v =>
-        // THIS rewrite stages the masked head snapshot — zero logical
-        // row changes — so its feed is the committed EMPTY dir, like
-        // compact (pre-r15 the version was a feed GAP and readChanges
-        // across it errored; commitClustered with caller-supplied
-        // content rightly stays feed-less — ITS rows did change)
-        Files.createDirectories(changeDirPath(path, v))
-        v
-      })
+    commitCore(head => read(spark, path, Some(head)), path,
+      overwrite = true, txn = None, what = "clusterRewrite",
+      stage = clusteredStage(c1, c2, files), modeOverride = Some("cluster"),
+      // THIS rewrite stages the masked head snapshot — zero logical
+      // row changes — so its feed is the committed EMPTY dir, like
+      // compact (commitClustered with caller-supplied content rightly
+      // stays feed-less — ITS rows did change)
+      overwriteFeed = Feed.Unchanged)
 
   /** Result of a scoped [[compactWhere]]: the committed version plus
     * the dir accounting — how many dirs merged into the compacted
@@ -2021,15 +2023,8 @@ object Versioned {
       skipWhenTidy: Option[Int],
       stage: (Manifest, DataFrame, String, Option[Seq[PartField]]) => Boolean)
       : CompactResult = {
-    var attempt = 0
-    while (true) {
-      require(attempt < 50,
-        s"versioned $what: 50 lost races at $path")
-      attempt += 1
-      val base = latestVersion(path)
-      require(base >= 0,
-        s"versioned $what: no committed version at $path")
-      val m = readManifest(path, base)
+    commitLoop[CompactResult](path, what) { (_, parent) =>
+      val m = headOf(parent, what, path)
       val zone = spark.sessionState.conf.sessionLocalTimeZone
       val selected = m.dataDirs.filter { d =>
         partEqs.isEmpty || (m.partSpecs.get(d).map(parsePartSpec) match {
@@ -2046,15 +2041,13 @@ object Versioned {
       val carried = m.dataDirs.filterNot(selected.toSet)
       val filesBefore = selected
         .map(d => countDataFiles(Paths.get(path, "data", d))).sum
-      if (selected.isEmpty)
-        return CompactResult(-1, 0, carried.size, 0, 0)
       // per-DV-dir data-dir prefixes its mask rows reference (masks
       // are deleted-rows-sized, the distinct prefix set dirs-sized):
       // feeds the SCOPE-AWARE tidy gate and the dv-retirement below.
       // None on a read error — treated conservatively as "touches the
       // scope, not retirable" (retiring wrongly would resurrect
       // deleted rows; a dangling dir kept wrongly is harmless).
-      val dvInfo: Seq[(String, Option[Set[String]])] = m.dvDirs.map {
+      lazy val dvInfo: Seq[(String, Option[Set[String]])] = m.dvDirs.map {
         dvd => dvd -> (
           try {
             import org.apache.spark.sql.functions.{col, regexp_extract}
@@ -2063,86 +2056,57 @@ object Versioned {
               .distinct().collect().map(_.getString(0)).toSet)
           } catch { case scala.util.control.NonFatal(_) => None })
       }
-      val selectedSet = selected.toSet
       // a mask chain on OTHER partitions must not force this scope to
       // re-rewrite (the nightly-maintenance churn bug: one DV row
       // anywhere made every already-compact partition rewrite forever)
-      val maskTouchesScope =
-        dvInfo.exists { case (_, p) => p.forall(_.exists(selectedSet)) }
-      // already tidy AND no mask row targets the scope: no-op
-      if (skipWhenTidy.exists(t => selected.sizeIs == 1 &&
-          filesBefore <= t) && !maskTouchesScope)
-        return CompactResult(-1, 0, carried.size, filesBefore,
-          filesBefore)
-      // DV RETIREMENT: a dv dir whose every mask row references only
-      // dirs absent from the NEXT manifest (rewritten away now, or
-      // dangling from an earlier rewrite) can never mask anything
-      // again — drop it from the chain so maintenance loops converge
-      // instead of re-absorbing an eternally-nonempty mask list; the
-      // orphaned dv dir itself is the vacuum sweep's to reclaim
-      val carriedSet = carried.toSet
-      val retainedDv = dvInfo.collect {
-        case (dvd, p) if !p.exists(_.forall(d => !carriedSet(d))) => dvd
-      }
-      // the scope's masked snapshot — DV rows for the rewritten files
-      // materialize away; kept dirs' mask entries stay live
-      val scopeDf = liveRows(spark, path, m, whole(selected))
-      // offer the hive layout iff every selected dir shares ONE spec
-      // whose transform clock (if any) matches this session — a
-      // re-render under another clock would move rows across dirs
-      // the recorded spec string then lies about
-      val specs = selected.map(m.partSpecs.get).distinct
-      val keepSpec: Option[Seq[PartField]] = specs match {
-        case Seq(Some(one)) =>
-          val parsed = parsePartSpec(one)
-          if (parsed.forall(f => f.unit.isEmpty ||
-              f.zone.forall(_ == zone))) Some(parsed) else None
-        case _ => None
-      }
-      val dataId = java.util.UUID.randomUUID().toString
-      val dataDir = s"$path/data/$dataId"
-      val recordedSpec = stage(m, scopeDf, dataDir, keepSpec)
-      val next = Manifest(base + 1, mode, carried :+ dataId,
-        txn = None, m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints, dvDirs = retainedDv,
-        partSpecs = m.specsFor(carried) ++
-          (if (recordedSpec)
-            keepSpec.map(sp => dataId -> renderPartSpec(sp))
-          else None),
-        droppedCols = m.droppedCols, props = m.props, colMap = m.colMap)
-      if (publishManifest(path, next)) {
-        // physical rewrites change no logical rows: the feed is the
-        // committed EMPTY dir (same contract as the full compact)
-        Files.createDirectories(changeDirPath(path, next.version))
-        if (!recordedSpec)
-          retrofitIndexes(spark, path, Some(m), dataId)
-        return CompactResult(next.version, selected.size, carried.size,
-          filesBefore, countDataFiles(Paths.get(path, "data", dataId)))
-      }
-      dropDirRec(Paths.get(path, "data", dataId)) // lost race: re-derive
-    }
-    sys.error("unreachable")
-  }
-
-  /** The shared read-head → rewrite → publish-if-base loop behind
-    * [[compact]] and [[clusterRewrite]]: `attemptCommit` receives the
-    * pinned base snapshot and its version and returns None on a lost
-    * race (some other commit moved the head), upon which the rewrite
-    * re-derives from the new head. */
-  private def rewriteHead(spark: SparkSession, path: String,
-      what: String, attemptCommit: (DataFrame, Int) => Option[Int]): Int = {
-    var attempt = 0
-    while (true) {
-      require(attempt < 50, s"versioned $what: 50 lost races at $path")
-      attempt += 1
-      val base = latestVersion(path)
-      require(base >= 0, s"versioned $what: no committed version at $path")
-      attemptCommit(read(spark, path, Some(base)), base) match {
-        case Some(v) => return v
-        case None => () // head moved under the rewrite: re-derive
+      def maskTouchesScope = dvInfo.exists { case (_, p) =>
+        p.forall(_.exists(selected.toSet)) }
+      // nothing in scope, or already tidy AND no mask row targets the
+      // scope: no-op, no commit
+      if (selected.isEmpty || skipWhenTidy.exists(t =>
+          selected.sizeIs == 1 && filesBefore <= t) && !maskTouchesScope)
+        Left(CompactResult(-1, 0, carried.size, filesBefore, filesBefore))
+      else {
+        // DV RETIREMENT: a dv dir whose every mask row references only
+        // dirs absent from the NEXT manifest (rewritten away now, or
+        // dangling from an earlier rewrite) can never mask anything
+        // again — drop it from the chain so maintenance loops converge
+        // instead of re-absorbing an eternally-nonempty mask list; the
+        // orphaned dv dir itself is the vacuum sweep's to reclaim
+        val carriedSet = carried.toSet
+        val retainedDv = dvInfo.collect {
+          case (dvd, p) if !p.exists(_.forall(d => !carriedSet(d))) => dvd
+        }
+        // the scope's masked snapshot — DV rows for the rewritten files
+        // materialize away; kept dirs' mask entries stay live
+        val scopeDf = liveRows(spark, path, m, whole(selected))
+        // offer the hive layout iff every selected dir shares ONE spec
+        // whose transform clock (if any) matches this session — a
+        // re-render under another clock would move rows across dirs
+        // the recorded spec string then lies about
+        val keepSpec: Option[Seq[PartField]] =
+          selected.map(m.partSpecs.get).distinct match {
+            case Seq(Some(one)) =>
+              val parsed = parsePartSpec(one)
+              if (parsed.forall(f => f.unit.isEmpty ||
+                  f.zone.forall(_ == zone))) Some(parsed) else None
+            case _ => None
+          }
+        val dataId = java.util.UUID.randomUUID().toString
+        val dataDir = Paths.get(path, "data", dataId)
+        val recordedSpec = stage(m, scopeDf, dataDir.toString, keepSpec)
+        Right(Attempt(m.copy(mode = mode, dataDirs = carried :+ dataId,
+            dvDirs = retainedDv,
+            partSpecs = m.specsFor(carried) ++ (if (recordedSpec)
+              keepSpec.map(sp => dataId -> renderPartSpec(sp)) else None)),
+          v => CompactResult(v.version, selected.size, carried.size,
+            filesBefore, countDataFiles(dataDir)),
+          staged = Seq(dataDir),
+          // physical rewrites change no logical rows: the feed is the
+          // committed EMPTY dir (the default, like the full compact)
+          reindex = if (recordedSpec) None else Some((spark, dataId))))
       }
     }
-    -1 // unreachable
   }
 
   /** RESTORE — rollback-as-a-commit (Delta RESTORE semantics): the
@@ -2166,22 +2130,12 @@ object Versioned {
     * re-read manifest of `v` is immutable). Returns the new head. */
   def restore(path: String, v: Int): Int = {
     val src = readManifest(path, v) // immutable once published
-    var attempt = 0
-    while (true) {
-      require(attempt < 50, s"versioned restore: 50 lost races at $path")
-      attempt += 1
-      val head = latestVersion(path)
-      require(head >= 0, s"versioned restore: no table at $path")
-      val cons = readManifest(path, head).constraints
-      val m = Manifest(head + 1, "restore", src.dataDirs, txn = None,
-        schemaDdl = src.schemaDdl,
-        ts = Some(System.currentTimeMillis()), constraints = cons,
-        dvDirs = src.dvDirs, partSpecs = src.partSpecs,
-        droppedCols = src.droppedCols,
-        props = readManifest(path, head).props, colMap = src.colMap)
-      if (publishManifest(path, m)) return m.version
+    commitLoop[Int](path, "restore") { (_, parent) =>
+      val head = headOf(parent, "restore", path)
+      Right(Attempt(src.copy(mode = "restore",
+        constraints = head.constraints, props = head.props),
+        _.version, feed = Feed.Absent))
     }
-    -1 // unreachable
   }
 
   /** AGE-BASED retention — the operational vacuum form every
@@ -2411,36 +2365,50 @@ object Versioned {
     * one atomic rename AFTER the manifest lands, so a feed dir is
     * only ever seen complete. A crash between manifest publish and
     * feed rename leaves a feed gap; [[repairChangeFeed]] backfills
-    * gaps deterministically from the manifests/snapshots. */
-  private def publishInsertFeed(path: String, v: Int,
-      dataDir: String): Unit = {
+    * gaps deterministically from the manifests/snapshots. This is that
+    * stage-then-rename step for version `v`: `fill` writes the staged
+    * dir, and a feed already published for `v` wins. */
+  private def publishFeed(path: String, v: Int)(
+      fill: java.nio.file.Path => Unit): Unit = {
     val dst = changeDirPath(path, v)
     if (Files.exists(dst)) return // idempotent (repair/replay)
     val stage = changesRoot(path)
       .resolve(s".stage-${java.util.UUID.randomUUID()}")
-    val ins = stage.resolve("ct=insert")
-    Files.createDirectories(ins)
-    val ls = Files.list(Paths.get(dataDir))
-    try ls.iterator().forEachRemaining { p =>
-      val n = p.getFileName.toString
-      // a subdir means a hive layout: its files LACK the partition
-      // column, so a link feed would silently lose it — fail loudly
-      // (callers route partitioned dirs to the written-feed path)
-      if (Files.isDirectory(p) && n.contains("=")) sys.error(
-        s"versioned feed: $dataDir is hive-partitioned — link feeds " +
-          "cannot represent it; write the feed from a layout-aware read")
-      if (n.endsWith(".parquet") && !n.startsWith("_") && !n.startsWith("."))
-        Files.createLink(ins.resolve(n), p): Unit
-    } finally ls.close()
+    fill(stage)
     try { Files.move(stage, dst): Unit }
     catch { case _: java.nio.file.FileAlreadyExistsException =>
       // a concurrent repair published the same feed first — ours is
-      // byte-identical (links to the same immutable files); drop it
+      // equivalent (same immutable files or rows); drop it
       dropDirRec(stage)
     }
   }
 
-  /** Write a merge's classified change rows as the feed of `v`.
+  /** THE insert-feed writer: `ct=insert` rows of `v` = every row of
+    * `m`'s data dirs `dirs` (an append's new dir, a clone's whole
+    * snapshot). Flat dirs publish ZERO-COPY: each data file is
+    * hardlinked in, prefixed by its dir id so same-named parts of
+    * different dirs cannot collide. A hive-partitioned dir's files
+    * LACK the partition column, so a link feed would silently lose it:
+    * when any dir is partitioned the rows are read back through
+    * [[readSnapshot]] (discovery restores the column, parsed under the
+    * declared type) and WRITTEN — cost ∝ the fed dirs' rows, the same
+    * bound every written feed pays. */
+  private def insertFeed(spark: => SparkSession, path: String, v: Int,
+      m: Manifest, dirs: Seq[String]): Unit =
+    if (dirs.exists(m.partSpecs.contains)) {
+      import org.apache.spark.sql.functions.lit
+      publishWrittenFeed(readSnapshot(spark, path, m, whole(dirs))
+        .withColumn("ct", lit("insert")), path, v)
+    } else publishFeed(path, v) { stage =>
+      val ins = stage.resolve("ct=insert")
+      Files.createDirectories(ins)
+      dirs.foreach(d => listDataFiles(s"$path/data/$d").foreach { f =>
+        val p = Paths.get(f)
+        Files.createLink(ins.resolve(s"$d-${p.getFileName}"), p): Unit
+      })
+    }
+
+  /** Write a commit's classified change rows as the feed of `v`.
     * `feed` arrives with LOGICAL table columns + `ct` (every caller
     * passes frames read through the logical API); the write renames
     * to PHYSICAL names so feed files and data files share the one
@@ -2448,19 +2416,11 @@ object Versioned {
     * freely under [[feedSchema]]. Partitioned by `ct` so the type
     * rides the directory name like the append path. */
   private def publishWrittenFeed(feed: DataFrame, path: String,
-      v: Int): Unit = {
-    val dst = changeDirPath(path, v)
-    if (Files.exists(dst)) return
+      v: Int): Unit = publishFeed(path, v) { stage =>
     val m = readManifest(path, v) // published before any feed write
-    val stage = changesRoot(path)
-      .resolve(s".stage-${java.util.UUID.randomUUID()}")
     toPhysical(m, feed, extra = Seq("ct"))
       .write.partitionBy("ct").mode("errorifexists")
       .parquet(stage.toString)
-    try { Files.move(stage, dst): Unit }
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      dropDirRec(stage)
-    }
   }
 
   /** The feed's read schema — PHYSICAL table names (what the linked/
@@ -2633,19 +2593,9 @@ object Versioned {
     (0 to head).filterNot(v => Files.isDirectory(changeDirPath(path, v)))
       .map { v =>
         val m = readManifest(path, v)
-        // a hive-partitioned dir holds only `<col>=v/` SUBDIRS — the
-        // zero-copy link publishers would find zero top-level files
-        // and publish an EMPTY feed (silent insert loss, and the
-        // published-but-empty dir un-bumps the epoch so reseed never
-        // fires either). Any branch whose fed dirs intersect
-        // m.partSpecs must WRITE the feed from a layout-aware read.
-        def fedPartitioned(dirs: Seq[String]): Boolean =
-          dirs.exists(m.partSpecs.contains)
         m.mode match {
-          case "append" if fedPartitioned(Seq(m.dataDirs.last)) =>
-            writeDirsInsertFeed(spark, path, v, m, Seq(m.dataDirs.last))
           case "append" =>
-            publishInsertFeed(path, v, s"$path/data/${m.dataDirs.last}")
+            insertFeed(spark, path, v, m, Seq(m.dataDirs.last))
           case "compact" | "meta" =>
             Files.createDirectories(changeDirPath(path, v)): Unit
           case "clone" if m.dvDirs.nonEmpty =>
@@ -2658,20 +2608,13 @@ object Versioned {
               read(spark, path, Some(v)).withColumn("ct", lit("insert"))
                 .select((cols.map(col) :+ col("ct")): _*),
               path, v)
-          case "clone" if fedPartitioned(m.dataDirs) =>
-            // same resurrection-by-omission hazard as the dv clone:
-            // linked files LACK the partition column — write the
-            // birth feed from the layout-aware read instead
-            writeDirsInsertFeed(spark, path, v, m, m.dataDirs)
           case "clone" =>
             // a clone's v0 is a whole-table insert across ALL its
             // dirs (the birth feed [[cloneTable]] writes; this is the
             // crash-window backfill)
-            publishWholeTableFeed(path, v, m.dataDirs)
-          case _ if v == 0 && fedPartitioned(Seq(m.dataDirs.last)) =>
-            writeDirsInsertFeed(spark, path, 0, m, Seq(m.dataDirs.last))
+            insertFeed(spark, path, v, m, m.dataDirs)
           case _ if v == 0 =>
-            publishInsertFeed(path, 0, s"$path/data/${m.dataDirs.last}")
+            insertFeed(spark, path, 0, m, Seq(m.dataDirs.last))
           case _ =>
             val cols = read(spark, path, Some(v)).columns.toIndexedSeq
             val feed = changeFeed(spark, path, v - 1, v, keys)
@@ -2681,24 +2624,6 @@ object Versioned {
         }
         v
       }
-  }
-
-  /** Layout-aware `ct=insert` feed for `dirs` of `v`'s manifest:
-    * [[readSnapshot]] restores partition columns from directory names and
-    * aligns to the manifest schema, then the rows are WRITTEN (not
-    * linked) as the feed — the only sound shape when a fed dir is
-    * hive-partitioned, because its files physically lack the
-    * partition column. Cost ∝ the fed dirs' rows (an append's batch /
-    * a clone's birth snapshot), the same bound the normal write-path
-    * feed pays. */
-  private def writeDirsInsertFeed(spark: SparkSession, path: String,
-      v: Int, m: Manifest, dirs: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val base = readSnapshot(spark, path, m, whole(dirs))
-    publishWrittenFeed(
-      base.withColumn("ct", lit("insert"))
-        .select((base.columns.toIndexedSeq.map(col) :+ col("ct")): _*),
-      path, v)
   }
 
   /** FEED EPOCH of version `v`: the number of commits ≤ v that are
@@ -2853,29 +2778,17 @@ object Versioned {
   def addConstraint(spark: SparkSession, path: String,
       constraintSql: String): Int = {
     import org.apache.spark.sql.functions.{expr, not}
-    var attempt = 0
-    while (true) {
-      require(attempt < 50, s"versioned addConstraint: 50 lost races at $path")
-      attempt += 1
-      val head = latestVersion(path)
-      require(head >= 0,
-        s"versioned addConstraint: no committed version at $path")
+    commitLoop[Int](path, "addConstraint") { (head, parent) =>
+      val m = headOf(parent, "addConstraint", path)
       val bad = read(spark, path, Some(head))
         .filter(not(expr(constraintSql))).limit(1).collect().headOption
       require(bad.isEmpty, s"versioned addConstraint: existing data at " +
         s"$path v$head violates '$constraintSql'; example row: " +
         bad.map(_.toString).getOrElse(""))
-      val parent = readManifest(path, head)
-      val m = parent.copy(version = head + 1, mode = "meta",
-        txn = None, ts = Some(System.currentTimeMillis()),
-        constraints = parent.constraints :+ constraintSql)
-      if (publishManifest(path, m)) {
-        // a metadata commit changes no logical rows: empty feed dir
-        Files.createDirectories(changeDirPath(path, m.version))
-        return m.version
-      } // else: lost the race — revalidate against the new head
+      // a metadata commit changes no logical rows: empty feed dir
+      Right(Attempt(m.copy(mode = "meta",
+        constraints = m.constraints :+ constraintSql), _.version))
     }
-    -1 // unreachable
   }
 
   /** The constraint ledger at the head (or `version`). */
@@ -2895,29 +2808,15 @@ object Versioned {
     * FUTURE commits from checking it. Returns the metadata version. */
   def dropConstraint(path: String, constraintSql: String): Int = {
     val want = constraintSql.trim
-    var attempt = 0
-    while (true) {
-      require(attempt < 50,
-        s"versioned dropConstraint: 50 lost races at $path")
-      attempt += 1
-      val head = latestVersion(path)
-      require(head >= 0,
-        s"versioned dropConstraint: no committed version at $path")
-      val parent = readManifest(path, head)
-      require(parent.constraints.exists(_.trim == want),
+    commitLoop[Int](path, "dropConstraint") { (head, parent) =>
+      val m = headOf(parent, "dropConstraint", path)
+      require(m.constraints.exists(_.trim == want),
         s"versioned dropConstraint: no constraint '$want' at $path " +
-          s"v$head (ledger: ${parent.constraints.map(c => s"'$c'")
+          s"v$head (ledger: ${m.constraints.map(c => s"'$c'")
             .mkString(", ")})")
-      val m = parent.copy(version = head + 1, mode = "meta",
-        txn = None, ts = Some(System.currentTimeMillis()),
-        constraints = parent.constraints.filterNot(_.trim == want))
-      if (publishManifest(path, m)) {
-        // a metadata commit changes no logical rows: empty feed dir
-        Files.createDirectories(changeDirPath(path, m.version))
-        return m.version
-      } // else: lost the race — re-resolve against the new head
+      Right(Attempt(m.copy(mode = "meta",
+        constraints = m.constraints.filterNot(_.trim == want)), _.version))
     }
-    -1 // unreachable
   }
 
   /** One schema-evolution operation for [[alterColumns]] — the ALTER
@@ -3026,8 +2925,9 @@ object Versioned {
       case _: ColumnOp.Drop => "versioned dropColumn"
       case _: ColumnOp.Widen => "versioned widenColumn"
     }
-    val loopPfx =
-      if (ops.sizeIs == 1) pfx(ops.head) else "versioned alterColumns"
+    val what = if (ops.sizeIs == 1) pfx(ops.head).stripPrefix("versioned ")
+      else "alterColumns"
+    val loopPfx = s"versioned $what"
     // reserved-name + type-parse guards need no ledger state: fail
     // them before the loop (folded — Spark resolves names
     // case-insensitively, so 'Cv' shadows the feed partition column
@@ -3046,13 +2946,8 @@ object Versioned {
         DataType.fromDDL(ddlType): Unit // parse error is the message
       case _: ColumnOp.Drop => ()
     }
-    var attempt = 0
-    while (true) {
-      require(attempt < 50, s"$loopPfx: 50 lost races at $path")
-      attempt += 1
-      val head = latestVersion(path)
-      require(head >= 0, s"$loopPfx: no committed version at $path")
-      val parent = readManifest(path, head)
+    commitLoop[Int](path, what) { (head, pm) =>
+      val parent = headOf(pm, what, path)
       val ddl = parent.schemaDdl.getOrElse(sys.error(
         s"$loopPfx: table at $path predates schema tracking"))
       // the evolving state every op transforms under guard; nothing
@@ -3364,17 +3259,10 @@ object Versioned {
             props = props + ("partCol" -> renderPartSpec(followed))
           }
       }
-      val m = parent.copy(version = head + 1, mode = "meta", txn = None,
-        ts = Some(System.currentTimeMillis()),
-        schemaDdl = Some(ps.toDDL),
-        droppedCols = droppedCols, colMap = colMap, props = props)
-      if (publishManifest(path, m)) {
-        // a metadata commit changes no logical rows: empty feed dir
-        Files.createDirectories(changeDirPath(path, m.version))
-        return m.version
-      } // else: lost the race — re-derive against the new head
+      Right(Attempt(parent.copy(mode = "meta", schemaDdl = Some(ps.toDDL),
+        droppedCols = droppedCols, colMap = colMap, props = props),
+        _.version))
     }
-    -1 // unreachable
   }
   /** Snapshot CDC: classify every key between two versions of the
     * table as insert / delete / update / unchanged — the change feed
@@ -3483,22 +3371,11 @@ object Versioned {
   def mergeDV(spark: SparkSession, path: String, updates: DataFrame,
       keys: Seq[String], txn: Option[String] = None,
       deleteWhen: Option[org.apache.spark.sql.Column] = None): Int = {
-    import org.apache.spark.sql.functions.{col, lit, not}
-    txn.foreach(t => require(t.nonEmpty && t.forall(ch =>
-      ch.isLetterOrDigit && ch < 128 || ch == ':' || ch == '_' || ch == '-'),
-      s"versioned mergeDV: txn token must match [A-Za-z0-9:_-]+, got '$t'"))
-    var attempt = 0
-    while (true) {
-      require(attempt < 50, s"versioned mergeDV: 50 lost races at $path")
-      attempt += 1
-      val base = latestVersion(path)
-      require(base >= 0, s"versioned mergeDV: no committed version at $path")
-      txn.flatMap(findTxn(path, _, base)) match {
-        case Some(v) => return v // replay: work already done
-        case None => ()
-      }
-      val m = readManifest(path, base)
-      val target = read(spark, path, Some(base))
+    import org.apache.spark.sql.functions.col
+    commitLoop[Int](path, "mergeDV", txn, replay = identity) {
+        (head, parent) =>
+      val m = headOf(parent, "mergeDV", path)
+      val target = read(spark, path, Some(head))
       // a NULL deleteWhen row is dropped from the upserts (its key
       // still deletes via the touched set) — [[publishMergeFeed]]
       // classifies it as a delete to match
@@ -3518,14 +3395,7 @@ object Versioned {
         }
       }
       // constraint gate on the incoming rows BEFORE any staging
-      if (m.constraints.nonEmpty) {
-        import org.apache.spark.sql.functions.expr
-        val pred = m.constraints.map(expr).reduce(_ && _)
-        val viol = upserts.filter(not(pred)).limit(1).collect().headOption
-        require(viol.isEmpty, s"versioned mergeDV at $path violates " +
-          s"constraint(s) [${m.constraints.mkString("; ")}]; example " +
-          s"row: ${viol.map(_.toString).getOrElse("")}")
-      }
+      requireConstraints("mergeDV", path, m.constraints, upserts)
       // mask every LIVE target row whose key appears in the batch —
       // ONE semi-join against the (small) distinct key set, staged
       // by [[stageMask]]: batch-matched-sized, never table-sized; a
@@ -3538,28 +3408,19 @@ object Versioned {
       val dataId = java.util.UUID.randomUUID().toString
       toPhysical(m, upserts)
         .write.mode("errorifexists").parquet(s"$path/data/$dataId")
-      val next = Manifest(base + 1, "merge-dv", m.dataDirs :+ dataId,
-        txn, m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints, dvDirs = m.dvDirs ++ mask.map(_.id),
-        partSpecs = m.partSpecs, droppedCols = m.droppedCols,
-        props = m.props, colMap = m.colMap)
-      if (publishManifest(path, next)) {
-        publishMergeFeed(path, next.version, target, updates, keys,
-          deleteWhen)
+      Right(Attempt(m.copy(mode = "merge-dv", dataDirs = m.dataDirs :+ dataId,
+          dvDirs = m.dvDirs ++ mask.map(_.id)),
+        _.version,
+        // both staged dirs derive from this head: a lost race drops them
+        staged = mask.map(k => Paths.get(path, "dv", k.id)).toSeq :+
+          Paths.get(path, "data", dataId),
+        feed = Feed.Rows(next => publishMergeFeed(path, next.version,
+          target, updates, keys, deleteWhen)),
         // the merge's upsert dir inherits the head's indexes, so
         // point-lookup pruning does not decay under CDC traffic
-        retrofitIndexes(spark, path, Some(m), dataId)
-        return next.version
-      } else {
-        // a commit landed at base+1 first — drop BOTH staged dirs
-        // (derived against a stale head) and re-derive
-        mask.foreach(k => dropDirRec(Paths.get(path, "dv", k.id)))
-        dropDirRec(Paths.get(path, "data", dataId))
-      }
+        reindex = Some((spark, dataId))))
     }
-    -1 // unreachable
   }
-
 
   /** Result of a [[replaceWhere]]: the committed version plus the
     * scope accounting — how many data dirs the predicate DROPPED
@@ -3693,24 +3554,11 @@ object Versioned {
       data: DataFrame, predicate: org.apache.spark.sql.Column,
       partEqs: Seq[(PartField, Set[String])],
       txn: Option[String]): ReplaceResult = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, not}
+    import org.apache.spark.sql.functions.{coalesce, col, lit}
     import org.apache.spark.sql.types.StructType
-    txn.foreach(t => require(t.nonEmpty && t.forall(ch =>
-      ch.isLetterOrDigit && ch < 128 || ch == ':' || ch == '_' || ch == '-'),
-      s"versioned replaceWhere: txn token must match [A-Za-z0-9:_-]+, got '$t'"))
-    var attempt = 0
-    while (true) {
-      require(attempt < 50,
-        s"versioned replaceWhere: 50 lost races at $path")
-      attempt += 1
-      val base = latestVersion(path)
-      require(base >= 0,
-        s"versioned replaceWhere: no committed version at $path")
-      txn.flatMap(findTxn(path, _, base)) match {
-        case Some(v) => return ReplaceResult(v, -1, -1, -1L) // replay
-        case None => ()
-      }
-      val m = readManifest(path, base)
+    commitLoop[ReplaceResult](path, "replaceWhere", txn,
+        replay = ReplaceResult(_, -1, -1, -1L)) { (_, parent) =>
+      val m = headOf(parent, "replaceWhere", path)
       val st = StructType.fromDDL(m.schemaDdl.getOrElse(sys.error(
         s"versioned replaceWhere: table at $path predates schema tracking")))
       // align the batch to the table schema by (folded) name; exact
@@ -3728,14 +3576,7 @@ object Versioned {
           s"versioned replaceWhere: column ${f.name} type drift " +
             s"(${f.dataType} -> $got) at $path")
       }
-      if (m.constraints.nonEmpty) {
-        import org.apache.spark.sql.functions.expr
-        val pred = m.constraints.map(expr).reduce(_ && _)
-        val viol = batch.filter(not(pred)).limit(1).collect().headOption
-        require(viol.isEmpty, s"versioned replaceWhere at $path " +
-          s"violates constraint(s) [${m.constraints.mkString("; ")}]; " +
-          s"example row: ${viol.map(_.toString).getOrElse("")}")
-      }
+      requireConstraints("replaceWhere", path, m.constraints, batch)
       // scope gate: every incoming row must be IN the replaced scope
       // (NULL predicate = outside — it would not be deleted by the
       // next replace of this scope)
@@ -3787,40 +3628,36 @@ object Versioned {
         case None => toPhysical(m, batch)
           .write.mode("errorifexists").parquet(dataDir)
       }
-      val next = Manifest(base + 1, "replace", kept :+ dataId, txn,
-        m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints, dvDirs = m.dvDirs ++ mask.map(_.id),
-        partSpecs = m.specsFor(kept) ++ zoned.map(sp =>
-          dataId -> renderPartSpec(sp.map(f =>
-            f.copy(col = m.physOf(f.col))))),
-        droppedCols = m.droppedCols, props = m.props, colMap = m.colMap)
-      if (publishManifest(path, next)) {
+      Right(Attempt(m.copy(mode = "replace", dataDirs = kept :+ dataId,
+          dvDirs = m.dvDirs ++ mask.map(_.id),
+          partSpecs = m.specsFor(kept) ++ zoned.map(sp =>
+            dataId -> renderPartSpec(sp.map(f =>
+              f.copy(col = m.physOf(f.col)))))),
+        next => ReplaceResult(next.version, dropped.size, kept.size,
+          mask.fold(0L)(_.rows)),
+        // both staged dirs derive from this head: a lost race drops them
+        staged = mask.map(k => Paths.get(path, "dv", k.id)).toSeq :+
+          Paths.get(dataDir),
         // classified feed: pre-image deletes (dropped dirs' LIVE rows
         // + the staged mask's rows) and the batch as inserts, read
         // BACK from the committed bytes so feed == committed content
-        val cols = st.fields.toIndexedSeq.map(_.name)
-        val delDropped = if (dropped.isEmpty) None else Some(
-          liveRows(spark, path, m, whole(dropped)).select(cols.map(col): _*))
-        val delMasked = mask.map(
-          stagedMaskRows(spark, path, m, _).select(cols.map(col): _*))
-        val insBack = readSnapshot(spark, path, next, whole(Seq(dataId)))
-        val feed = ((delDropped.toSeq ++ delMasked.toSeq)
-          .map(_.withColumn("ct", lit("delete")))
-          :+ insBack.select(cols.map(col): _*)
-            .withColumn("ct", lit("insert")))
-          .reduce(_.unionByName(_))
-        publishWrittenFeed(feed, path, next.version)
+        feed = Feed.Rows { next =>
+          val cols = st.fields.toIndexedSeq.map(_.name)
+          val delDropped = if (dropped.isEmpty) None else Some(
+            liveRows(spark, path, m, whole(dropped)).select(cols.map(col): _*))
+          val delMasked = mask.map(
+            stagedMaskRows(spark, path, m, _).select(cols.map(col): _*))
+          val insBack = readSnapshot(spark, path, next, whole(Seq(dataId)))
+          publishWrittenFeed(((delDropped.toSeq ++ delMasked.toSeq)
+            .map(_.withColumn("ct", lit("delete")))
+            :+ insBack.select(cols.map(col): _*)
+              .withColumn("ct", lit("insert")))
+            .reduce(_.unionByName(_)), path, next.version)
+        },
         // the new dir inherits the head's indexes (hive-partitioned
         // staging skips, like commitCore: pruning covers it)
-        if (zoned.isEmpty) retrofitIndexes(spark, path, Some(m), dataId)
-        return ReplaceResult(next.version, dropped.size, kept.size,
-          mask.fold(0L)(_.rows))
-      }
-      // lost the race: both staged dirs derive from a stale head
-      mask.foreach(k => dropDirRec(Paths.get(path, "dv", k.id)))
-      dropDirRec(Paths.get(path, "data", dataId))
+        reindex = if (zoned.isEmpty) Some((spark, dataId)) else None))
     }
-    sys.error("unreachable")
   }
 
   /** Does EVERY data file under `dirPath` sit inside a depth-`idx`
@@ -3855,10 +3692,11 @@ object Versioned {
   final case class DeleteResult(version: Int, deletedRows: Long)
 
   /** TEST-ONLY race-injection point: invoked by [[publishManifest]]
-    * immediately before EVERY publish attempt, so a spec can
-    * deterministically land a competing manifest inside any
-    * derive→publish window and prove the lost-race retry loop
-    * re-derives from the new head. A hook that itself commits must
+    * immediately before EVERY publish attempt of [[commitLoop]] — so
+    * of every writer — letting a spec deterministically land a
+    * competing manifest inside any derive→publish window and prove
+    * the loop re-derives from the new head ([[VersionedLostRaceSpec]]
+    * runs one racer per writer). A hook that itself commits must
     * self-disarm on first fire (the racer's own publish re-enters
     * it). No-op in production. */
   private[graft] var prePublishHook: () => Unit = () => ()
@@ -3903,56 +3741,34 @@ object Versioned {
   private[sources] def deleteWhereDVCore(spark: SparkSession, path: String,
       txn: Option[String], prune: org.apache.spark.sql.Column,
       scope: DataFrame => DataFrame): DeleteResult = {
-    import org.apache.spark.sql.functions.{col, lit}
-    var attempt = 0
-    while (true) {
-      require(attempt < 50,
-        s"versioned deleteWhereDV: 50 lost races at $path")
-      attempt += 1
-      val base = latestVersion(path)
-      require(base >= 0,
-        s"versioned deleteWhereDV: no committed version at $path")
-      txn.flatMap(findTxn(path, _, base)) match {
-        case Some(v) =>
-          return DeleteResult(v, -1L) // replay: already done
-        case None => ()
-      }
-      val m = readManifest(path, base)
+    import org.apache.spark.sql.functions.lit
+    commitLoop[DeleteResult](path, "deleteWhereDV", txn,
+        replay = DeleteResult(_, -1L)) { (head, parent) =>
+      val m = headOf(parent, "deleteWhereDV", path)
       // ONE distributed job stages the mask: the base snapshot with
       // the EXISTING mask applied (already-deleted rows must not be
       // re-masked and double-counted), filtered to matches, reduced
       // to (rel, pos) row ids — bloom-pruned to candidate files when
       // the predicate carries an indexed point lookup (dmlLiveRows);
       // the deleted-row count is observed on that same write
-      val mask = stageMask(path,
-        scope(dmlLiveRows(spark, path, m, prune))).getOrElse(
-        return DeleteResult(base, 0L)) // no commit
-      val next = Manifest(base + 1, "delete-dv", m.dataDirs, txn,
-        m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints, dvDirs = m.dvDirs :+ mask.id,
-        partSpecs = m.partSpecs, droppedCols = m.droppedCols,
-        props = m.props, colMap = m.colMap)
-      if (publishManifest(path, next)) {
-        // stored feed: pre-image delete rows derived from the STAGED
-        // MASK, not a re-run of the predicate — (a) one bounded read
-        // of only the files the mask touches instead of a second
-        // whole-table scan, and (b) the feed provably matches the
-        // committed mask even under a nondeterministic predicate.
-        // Published AFTER the manifest (lost races never write a
-        // stale feed); batch-sized like the deleted set.
-        val pre = stagedMaskRows(spark, path, m, mask)
-        val cols = pre.columns.toIndexedSeq
-        publishWrittenFeed(
-          pre.withColumn("ct", lit("delete"))
-            .select((cols.map(col) :+ col("ct")): _*),
-          path, next.version)
-        return DeleteResult(next.version, mask.rows)
+      stageMask(path, scope(dmlLiveRows(spark, path, m, prune))) match {
+        case None => Left(DeleteResult(head, 0L)) // no commit
+        case Some(mask) => Right(Attempt(
+          m.copy(mode = "delete-dv", dvDirs = m.dvDirs :+ mask.id),
+          next => DeleteResult(next.version, mask.rows),
+          staged = Seq(Paths.get(path, "dv", mask.id)),
+          // stored feed: pre-image delete rows derived from the STAGED
+          // MASK, not a re-run of the predicate — (a) one bounded read
+          // of only the files the mask touches instead of a second
+          // whole-table scan, and (b) the feed provably matches the
+          // committed mask even under a nondeterministic predicate.
+          // Published AFTER the manifest (lost races never write a
+          // stale feed); batch-sized like the deleted set.
+          feed = Feed.Rows(next => publishWrittenFeed(
+            stagedMaskRows(spark, path, m, mask)
+              .withColumn("ct", lit("delete")), path, next.version))))
       }
-      // else: a commit landed at base+1 first — drop the staged mask
-      // (it was derived against a stale head) and re-derive
-      dropDirRec(Paths.get(path, "dv", mask.id))
     }
-    sys.error("unreachable")
   }
 
   /** The LIVE pre-image rows a staged `mask` names, under the
@@ -4028,7 +3844,7 @@ object Versioned {
       prune: org.apache.spark.sql.Column, scope: DataFrame => DataFrame,
       postImage: (DataFrame, org.apache.spark.sql.types.StructType) =>
         DataFrame): DeleteResult = {
-    import org.apache.spark.sql.functions.{col, lit, not}
+    import org.apache.spark.sql.functions.lit
     require(set.nonEmpty, "versioned updateWhereDV: empty SET list")
     // each column once: the SET list folds into a per-column map, so a
     // duplicate assignment (SET v = 1, v = 2) would silently last-win
@@ -4039,23 +3855,9 @@ object Versioned {
         sys.error(s"versioned updateWhereDV: duplicate assignment to " +
           s"column '$d' in SET — SQL forbids assigning the same column " +
           "twice in one UPDATE; keep one assignment per column"))
-    txn.foreach(t => require(t.nonEmpty && t.forall(ch =>
-      ch.isLetterOrDigit && ch < 128 || ch == ':' || ch == '_' || ch == '-'),
-      s"versioned updateWhereDV: txn token must match [A-Za-z0-9:_-]+, got '$t'"))
-    var attempt = 0
-    while (true) {
-      require(attempt < 50,
-        s"versioned updateWhereDV: 50 lost races at $path")
-      attempt += 1
-      val base = latestVersion(path)
-      require(base >= 0,
-        s"versioned updateWhereDV: no committed version at $path")
-      txn.flatMap(findTxn(path, _, base)) match {
-        case Some(v) =>
-          return DeleteResult(v, -1L) // replay: already done
-        case None => ()
-      }
-      val m = readManifest(path, base)
+    commitLoop[DeleteResult](path, "updateWhereDV", txn,
+        replay = DeleteResult(_, -1L)) { (head, parent) =>
+      val m = headOf(parent, "updateWhereDV", path)
       val st = org.apache.spark.sql.types.StructType.fromDDL(
         m.schemaDdl.getOrElse(sys.error(
           s"versioned updateWhereDV: table at $path predates schema tracking")))
@@ -4068,50 +3870,35 @@ object Versioned {
       // stage the mask: live matching rows reduced to (rel, pos) —
       // identical first job to [[deleteWhereDV]], bloom-pruned the
       // same way, the updated-row count observed on the write
-      val mask = stageMask(path,
-        scope(dmlLiveRows(spark, path, m, prune))).getOrElse(
-        return DeleteResult(base, 0L)) // no commit
-      // post-image from the staged mask: assignments applied, casts
-      // to the declared column types (SQL UPDATE semantics), staged
-      // as this commit's data dir under PHYSICAL names
-      val post = postImage(stagedMaskRows(spark, path, m, mask), st)
-      val dataId = java.util.UUID.randomUUID().toString
-      toPhysical(m, post)
-        .write.mode("errorifexists").parquet(s"$path/data/$dataId")
-      val next = Manifest(base + 1, "update-dv", m.dataDirs :+ dataId,
-        txn, m.schemaDdl, ts = Some(System.currentTimeMillis()),
-        constraints = m.constraints, dvDirs = m.dvDirs :+ mask.id,
-        partSpecs = m.partSpecs, droppedCols = m.droppedCols,
-        props = m.props, colMap = m.colMap)
-      // gate + feed read the immutable STAGED bytes back, so what was
-      // checked and what was fed is exactly what the manifest commits
-      val stagedBack = readSnapshot(spark, path, next, whole(Seq(dataId)))
-      if (m.constraints.nonEmpty) {
-        import org.apache.spark.sql.functions.expr
-        val pred = m.constraints.map(expr).reduce(_ && _)
-        val viol = stagedBack.filter(not(pred)).limit(1)
-          .collect().headOption
-        require(viol.isEmpty, s"versioned updateWhereDV at $path " +
-          s"violates constraint(s) [${m.constraints.mkString("; ")}]; " +
-          s"example row: ${viol.map(_.toString).getOrElse("")}")
+      stageMask(path, scope(dmlLiveRows(spark, path, m, prune))) match {
+        case None => Left(DeleteResult(head, 0L)) // no commit
+        case Some(mask) =>
+          // post-image from the staged mask: assignments applied, casts
+          // to the declared column types (SQL UPDATE semantics), staged
+          // as this commit's data dir under PHYSICAL names
+          val post = postImage(stagedMaskRows(spark, path, m, mask), st)
+          val dataId = java.util.UUID.randomUUID().toString
+          toPhysical(m, post)
+            .write.mode("errorifexists").parquet(s"$path/data/$dataId")
+          val next = m.copy(mode = "update-dv",
+            dataDirs = m.dataDirs :+ dataId, dvDirs = m.dvDirs :+ mask.id)
+          // gate + feed read the immutable STAGED bytes back, so what
+          // was checked and what was fed is exactly what the manifest
+          // commits
+          val stagedBack = readSnapshot(spark, path, next, whole(Seq(dataId)))
+          requireConstraints("updateWhereDV", path, m.constraints, stagedBack)
+          Right(Attempt(next, v => DeleteResult(v.version, mask.rows),
+            // both staged dirs derive from this head: a lost race
+            // drops them
+            staged = Seq(Paths.get(path, "dv", mask.id),
+              Paths.get(path, "data", dataId)),
+            feed = Feed.Rows(v => publishWrittenFeed(
+              stagedBack.withColumn("ct", lit("update")), path, v.version)),
+            // the post-image dir inherits the head's indexes (the
+            // update-DV dir the r14 advice named)
+            reindex = Some((spark, dataId))))
       }
-      if (publishManifest(path, next)) {
-        val cols = stagedBack.columns.toIndexedSeq
-        publishWrittenFeed(
-          stagedBack.withColumn("ct", lit("update"))
-            .select((cols.map(col) :+ col("ct")): _*),
-          path, next.version)
-        // the post-image dir inherits the head's indexes (the
-        // update-DV dir the r14 advice named)
-        retrofitIndexes(spark, path, Some(m), dataId)
-        return DeleteResult(next.version, mask.rows)
-      }
-      // lost the race: both staged dirs were derived against a stale
-      // head — drop them and re-derive
-      dropDirRec(Paths.get(path, "dv", mask.id))
-      dropDirRec(Paths.get(path, "data", dataId))
     }
-    sys.error("unreachable")
   }
 
   /** The ledger as a DataFrame — DESCRIBE HISTORY for the versioned
@@ -4153,7 +3940,7 @@ object Versioned {
     * Long.MaxValue and shuffling every dim⨝fact join. Memoized: a
     * version's dir chain is immutable, so one filesystem walk per
     * (table, version) per session; the memo clears past a bound like
-    * [[statsIndexMemo]] (an estimate re-walk, never a wrong answer).
+    * [[statsSchemaMemo]] (an estimate re-walk, never a wrong answer).
     * Vacuumed versions answer from the memo if present — stats are
     * planning estimates, staleness is harmless. */
   def versionBytes(path: String, v: Int): Long = {
@@ -4282,57 +4069,22 @@ object Versioned {
     // their (rel, pos) keys are table-root-relative, so the linked
     // mask stays valid against the linked data files
     m.dvDirs.foreach(linkDir(srcPath, "dv", _))
-    Files.createDirectories(versionsDir(dstPath))
-    val v0 = Manifest(0, "clone", m.dataDirs, txn = None,
-      schemaDdl = m.schemaDdl, ts = Some(System.currentTimeMillis()),
-      constraints = m.constraints, dvDirs = m.dvDirs,
-      partSpecs = m.partSpecs, droppedCols = m.droppedCols,
-      props = m.props, colMap = m.colMap)
-    require(publishManifest(dstPath, v0),
-      s"versioned clone: $dstPath v0 already exists (racing clone?)")
-    // birth feed: the clone's v0 IS a whole-table insert. With an
-    // active deletion-vector mask the raw files contain rows that are
-    // logically deleted, so the zero-copy link feed would lie — leave
-    // the feed dir absent (a loud, documented gap) and let
-    // [[repairChangeFeed]] write the MASKED snapshot as the birth
-    // feed (it needs a SparkSession this metadata-only call lacks).
-    // ... and the same for hive-partitioned dirs: their files lack
-    // the partition column, so a link-feed would publish rows with
-    // the column missing — leave the gap for repairChangeFeed.
-    if (m.dvDirs.isEmpty && m.partSpecs.isEmpty)
-      publishWholeTableFeed(dstPath, 0, m.dataDirs)
-    0
-  }
-
-  /** Whole-table `ct=insert` feed for version `v`: hardlink every
-    * data file of `dirIds` into one flat feed dir, names prefixed by
-    * their dir id so same-named part files from different dirs can't
-    * collide. Idempotent ([[cloneTable]] birth feed + its
-    * [[repairChangeFeed]] backfill). */
-  private def publishWholeTableFeed(path: String, v: Int,
-      dirIds: Seq[String]): Unit = {
-    val dst = changeDirPath(path, v)
-    if (Files.exists(dst)) return
-    val stage = changesRoot(path)
-      .resolve(s".stage-${java.util.UUID.randomUUID()}")
-    val ins = stage.resolve("ct=insert")
-    Files.createDirectories(ins)
-    dirIds.foreach { d =>
-      val dd = Paths.get(path, "data", d)
-      val ls = Files.list(dd)
-      try ls.iterator().forEachRemaining { p =>
-        val n = p.getFileName.toString
-        if (Files.isDirectory(p) && n.contains("=")) sys.error(
-          s"versioned feed: dir $d is hive-partitioned — link feeds " +
-            "cannot represent it; write the feed from a layout-aware read")
-        if (n.endsWith(".parquet") && !n.startsWith("_") &&
-            !n.startsWith("."))
-          Files.createLink(ins.resolve(s"$d-$n"), p): Unit
-      } finally ls.close()
-    }
-    try { Files.move(stage, dst): Unit }
-    catch { case _: java.nio.file.FileAlreadyExistsException =>
-      dropDirRec(stage)
+    commitLoop[Int](dstPath, "clone") { (_, dst) =>
+      require(dst.isEmpty,
+        s"versioned clone: $dstPath v0 already exists (racing clone?)")
+      Right(Attempt(m.copy(mode = "clone"), _.version,
+        // birth feed: the clone's v0 IS a whole-table insert. With an
+        // active deletion-vector mask the raw files contain rows that
+        // are logically deleted, so the zero-copy link feed would lie
+        // — leave the feed dir absent (a loud, documented gap) and let
+        // [[repairChangeFeed]] write the MASKED snapshot as the birth
+        // feed (it needs a SparkSession this metadata-only call
+        // lacks). The same for hive-partitioned dirs, whose feed must
+        // be written from a layout-aware read ([[insertFeed]]).
+        feed = if (m.dvDirs.isEmpty && m.partSpecs.isEmpty)
+          Feed.Rows(v0 => insertFeed(SparkSession.active, dstPath, 0, v0,
+            m.dataDirs))
+        else Feed.Absent))
     }
   }
 

@@ -76,13 +76,13 @@ class ReadPathSpec extends SparkSpec {
       : Seq[(String, () => (DataFrame, Int, Int),
         org.apache.spark.sql.Column, String, Int, Int)] = Seq(
     ("partition", () => Versioned.readPartitionPruned(spark, path,
-      "area", Seq("EU")), col("area") === "EU", "area = 'EU'", 38, 42),
+      "area", Seq("EU")), col("area") === "EU", "area = 'EU'", 36, 40),
     ("time", () => Versioned.readPartitionPrunedTime(spark, path, "ts",
       tsLo, tsHi), tsPred,
       "ts BETWEEN TIMESTAMP '2024-01-03 00:00:00' AND " +
-        "TIMESTAMP '2024-01-04 23:59:00'", 26, 42),
+        "TIMESTAMP '2024-01-04 23:59:00'", 24, 40),
     ("bucket", () => Versioned.readPartitionPrunedBucket(spark, path,
-      "b", Seq(7L)), col("b") === 7L, "b = 7", 36, 42),
+      "b", Seq(7L)), col("b") === 7L, "b = 7", 34, 40),
     ("bloom", () => Versioned.readEqualityClustered(spark, path, "k",
       255L), col("k") === 255L, "k = 255", 37, 40),
     ("stats", () => Versioned.readRangeClustered(spark, path, "k",
@@ -192,14 +192,11 @@ class ReadPathSpec extends SparkSpec {
     spark.sql(q).collect() // warm the sidecar memos
     val (got, jobs) = JobCounter(spark) { spark.sql(q).collect() }
     assert(got.length == 19)
-    assert(jobs.size == 7, jobs.mkString("\n"))
-    // the data files are read under the manifest schema; the only
-    // inferring reads are the two stats-sidecar footers the range
-    // prune opens
+    assert(jobs.size == 5, jobs.mkString("\n"))
+    // the data files are read under the manifest schema and the stats
+    // sidecar under its memoized one: nothing infers a schema
     val inferring = jobs.filter(_.isReaderJob)
-    assert(inferring.size == 2 && inferring.forall(j =>
-      j.stack.contains("statsPruneDir") || j.stack.contains("pruneRange")),
-      inferring.mkString("\n"))
+    assert(inferring.isEmpty, inferring.mkString("\n"))
   }
 
   test("job fence: .changes WHERE _commit_version >= N") {

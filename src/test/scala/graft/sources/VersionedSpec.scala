@@ -253,9 +253,8 @@ class VersionedSpec extends SparkSpec {
       Seq((i.toLong, s"r$i")).toDF("k", "v"), path, overwrite = false))
     // inject a concurrent APPEND inside compact's read→publish window:
     // the rewrite derived from the pre-append head, so its publish
-    // must FAIL the precondition and re-derive — the old shape
-    // (expectedBase = None) published the stale snapshot at head+1,
-    // silently dropping the racer's row
+    // must lose and re-derive — publishing the stale snapshot at
+    // head+1 would silently drop the racer's row
     var fired = false
     Versioned.prePublishHook = () => {
       if (!fired) {
