@@ -5846,7 +5846,7 @@ object SparkEntry {
     // the asked versions' dirs — O(asked range), not O(retained
     // feed). The checked output carries the cv=2 aggregate AND a
     // `skipped` flag gated on the scan's directory accounting
-    // (dirsRead < dirsTotal — real skipped IO, the q_zorder_skip
+    // (dirsRead < dirsTotal — real skipped IO, the q_sql_zorder_skip
     // pattern); the oracle reconstructs the v2 merge batch and TRUE.
     // The 3-row collect is bounded by |change types|, never data.
     "q_changes_range" -> ((s, dir) => {
@@ -5868,56 +5868,6 @@ object SparkEntry {
         .toDF("change_type", "n_rows", "sum_value")
         .withColumn("skipped", lit(dirsRead < dirsTotal))
         .orderBy("change_type")
-    }),
-
-    // 163: Z-ORDER SKIPPING driver-gated — events staged z-clustered
-    // on (user_id, vc) into 16 files with the parquet min/max sidecar
-    // (sources/Clustered): readRange prunes files on the vc dimension
-    // BEFORE any data IO, then re-applies the exact predicate. The
-    // checked output carries the filtered aggregate AND a `skipped`
-    // flag (filesRead < filesTotal), so the driver row gates both the
-    // values and that real file skipping happened; the oracle is the
-    // full-scan filter + TRUE. The [0,500]-cent slice is ~1% of the
-    // vc domain at every SF — thin on the second clustered dimension,
-    // exactly what a linear layout cannot prune.
-    "q_zorder_skip" -> ((s, dir) => {
-      val path = stagingRoot(dir) + "/zorder_events"
-      if (!new java.io.File(
-          graft.sources.Clustered.statsPath(path)).exists()) {
-        val src = t(s, dir, "events").select(col("event_id"),
-          col("user_id"), cents(col("value")).as("vc"))
-        graft.sources.Clustered.writeClustered(src, path,
-          "user_id", "vc", files = 16)
-      }
-      val (df, kept, tot) =
-        graft.sources.Clustered.readRange(s, path, "vc", 0, 500)
-      df.agg(count(lit(1)).as("n_rows"),
-          money(sum(col("vc"))).as("sum_value"))
-        .select(col("n_rows"), col("sum_value"),
-          lit(kept < tot).as("skipped"))
-    }),
-
-    // 164: BLOOM SKIPPING driver-gated — documents staged
-    // hash-partitioned on doc_id (the layout that DEFEATS min/max
-    // range pruning: every file's id range spans the domain) with a
-    // per-file bloom sidecar; readEquality proves most files "cannot
-    // contain doc 42" before IO and the exact predicate removes
-    // bloom false positives. Same skipped-flag gate as q_zorder_skip;
-    // oracle = the point lookup off the source table + TRUE.
-    "q_bloom_skip" -> ((s, dir) => {
-      val path = stagingRoot(dir) + "/bloom_docs"
-      if (!new java.io.File(
-          graft.sources.Clustered.bloomPath(path, "doc_id")).exists()) {
-        t(s, dir, "documents").select(col("doc_id"), col("n_chars"))
-          .repartition(16, col("doc_id"))
-          .write.mode("overwrite").parquet(path)
-        graft.sources.Clustered.writeBloomIndex(s, path, "doc_id",
-          expectedPerFile = 2000L)
-      }
-      val (df, kept, tot) =
-        graft.sources.Clustered.readEquality(s, path, "doc_id", 42L)
-      df.select(col("doc_id"), col("n_chars"),
-        lit(kept < tot).as("skipped"))
     }),
 
     // 165: VERSIONED SCHEMA EVOLUTION driver-gated — v0 commits
@@ -7085,18 +7035,18 @@ object SparkEntry {
         .orderBy("event_type")
     }),
 
-    // 284: SQL Z-ORDER SKIPPING driver-gated — q_zorder_skip's
-    // mechanism through PURE SQL, twice over: the layout comes from
+    // 284: SQL Z-ORDER SKIPPING driver-gated — z-order file skipping
+    // through PURE SQL, twice over: the layout comes from
     // `CALL g.system.cluster(...)` (OPTIMIZE ZORDER as a maintenance
-    // verb → Versioned.commitClustered: one overwrite commit whose
-    // files carry tight (user_id, vc) bounding boxes + the min/max
-    // sidecar, ledger mode 'cluster'), and the SELECT's pushed `vc`
-    // range routes VersionedPrune through readRangeClustered —
-    // files whose [lo, hi] misses [0, 500] are pruned on the sidecar
-    // BEFORE any data IO, with the exact predicate re-applied
-    // row-level. Checked output gates the aggregate AND the scan's
-    // real file accounting (filesRead < filesTotal, the q_zorder_skip
-    // pattern); oracle = the full-scan filter + TRUE. The 1-row
+    // verb → Versioned.clusterRewrite: one overwrite commit whose
+    // files carry tight (user_id, vc) bounding boxes, their min/max
+    // recorded in the dir's _files.json, ledger mode 'cluster'), and
+    // the SELECT's pushed `vc` range routes VersionedPrune through
+    // readRangeClustered — files whose [lo, hi] misses [0, 500] are
+    // pruned on the driver BEFORE any data IO, with the exact
+    // predicate re-applied row-level. Checked output gates the
+    // aggregate AND the scan's real file accounting (filesRead <
+    // filesTotal); oracle = the full-scan filter + TRUE. The 1-row
     // collect is the aggregate itself.
     "q_sql_zorder_skip" -> ((s, dir) => {
       val V = graft.sources.Versioned
@@ -7124,8 +7074,8 @@ object SparkEntry {
         .toDF("n_rows", "sum_value", "skipped")
     }),
 
-    // 285: SQL BLOOM SKIPPING driver-gated — q_bloom_skip through the
-    // catalog: documents hash-spread on doc_id (the layout min/max
+    // 285: SQL BLOOM SKIPPING driver-gated — bloom file skipping
+    // through the catalog: documents hash-spread on doc_id (the layout min/max
     // ranges CANNOT prune — every file's [lo, hi] spans the domain)
     // committed with the per-file bloom sidecar
     // (Versioned.commitBloomIndexed), and the SELECT's pushed
@@ -7600,16 +7550,6 @@ object SparkEntry {
                / 100.0 AS sum_value
       FROM events WHERE event_type = 'purchase'
       GROUP BY 1 ORDER BY day""",
-    "q_zorder_skip" -> """
-      SELECT count(*) AS n_rows,
-             CAST(sum(CAST(round(value * 100) AS BIGINT)) AS DOUBLE)
-               / 100.0 AS sum_value,
-             TRUE AS skipped
-      FROM events
-      WHERE CAST(round(value * 100) AS BIGINT) BETWEEN 0 AND 500""",
-    "q_bloom_skip" -> """
-      SELECT doc_id, n_chars, TRUE AS skipped
-      FROM documents WHERE doc_id = 42""",
     "q_schema_evolution" -> """
       SELECT CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus
                   ELSE '<none>' END AS status,

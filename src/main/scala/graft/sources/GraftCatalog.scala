@@ -777,17 +777,14 @@ private[sources] final class HistorySqlTable(ident: String,
 /** `<table>.files` — the head snapshot's physical file inventory as
   * a SQL table (one row per data file: dir id, dir-relative path,
   * size, partition spec). The scan bridges to
-  * [[Versioned.filesDetailPruned]]'s DISTRIBUTED listing RDD —
-  * files-sized output lists at cluster width, nothing collects on
-  * the driver — and PUSHES DOWN the filters the manifest itself can
+  * [[Versioned.filesDetailPruned]], which reads each dir's
+  * `_files.json`, and PUSHES DOWN the filters the manifest itself can
   * answer: `dir_id` equality/IN and `part_spec`
   * equality/IN/prefix(LIKE 'x%') become a DIRECTORY-LIST filter, so
   * `SELECT sum(size_bytes) FROM t.files WHERE part_spec LIKE
-  * 'days%'` walks only matching dirs instead of the whole tree (a
-  * 10⁶-file table answers a one-dir question in one dir's walk).
-  * Accepted filters still re-apply row-level; everything else is
-  * rejected back to Spark. Dir-walk accounting lands in
-  * [[GraftCatalog.lastFilesScan]]. */
+  * 'days%'` opens only matching dirs' file manifests. Accepted
+  * filters still re-apply row-level; everything else is rejected back
+  * to Spark. Dir accounting lands in [[GraftCatalog.lastFilesScan]]. */
 private[sources] final class FilesSqlTable(ident: String, path: String)
     extends Table with SupportsRead {
   private val filesSchema = StructType(Seq(
@@ -826,7 +823,7 @@ private[sources] final class FilesSqlTable(ident: String, path: String)
     }
 
   /** `dir_id` / `part_spec` equality, IN and prefix — the filters the
-    * manifest answers before any filesystem walk. */
+    * manifest answers before any file manifest is read. */
   private def dirLevel(f: Filter): Boolean = f match {
     case sources.EqualTo(a, _: String) => dirCol(a)
     case sources.In(a, vs) =>
@@ -844,9 +841,8 @@ private[sources] final class FilesSqlTable(ident: String, path: String)
   * its file count, byte size, and the number of commits (dirs)
   * contributing — the operator's first question on a partitioned
   * table ("how big is each day, and how fragmented?"). DERIVED from
-  * the same distributed listing as `<t>.files` (files-sized work at
-  * cluster width, the aggregate is partitions-sized), so a 10⁶-file
-  * table answers without driver materialization; unpartitioned dirs
+  * the same file manifests as `<t>.files` (the aggregate is
+  * partitions-sized); unpartitioned dirs
   * aggregate under a NULL spec/value row. Hive subtree renderings
   * (`region=EU`, `ts__days=2024-01-15/region=EU`) are the values —
   * exactly the directory names pruning operates on. */
@@ -1142,7 +1138,7 @@ private[sources] final class DynamicOverwriteBatch(path: String,
   * bloom-indexed column through [[Versioned.readEqualityClustered]]
   * (files that provably lack the key skipped), and a range/equality
   * on a stats-indexed column through [[Versioned.readRangeClustered]]
-  * (z-order/min-max sidecar pruning) — so a SQL `WHERE k = v` or
+  * (min/max pruning on each dir's `_files.json`) — so a SQL `WHERE k = v` or
   * `BETWEEN` skips files exactly like the Scala read paths. The skip
   * accounting lands in [[GraftCatalog.lastVersionedScan]].
   * Un-prunable shapes fall back to the plain snapshot read; the scan
@@ -1160,9 +1156,9 @@ private[sources] final class VersionedPrune(path: String, pinned: Int,
         Versioned.readPartitionPrunedTime(spark, path, c, lo, hi, v) })
       .orElse(bucketPrune().map { case (c, vals) =>
         Versioned.readPartitionPrunedBucket(spark, path, c, vals, v) })
-      .orElse(bloomPrune(spark).map { case (c, value) =>
+      .orElse(bloomPrune().map { case (c, value) =>
         Versioned.readEqualityClustered(spark, path, c, value, v) })
-      .orElse(statsPrune(spark).map { case (c, lo, hi) =>
+      .orElse(statsPrune().map { case (c, lo, hi) =>
         Versioned.readRangeClustered(spark, path, c, lo, hi, v) })
       .map { case (df, read, total) =>
         GraftCatalog.lastVersionedScan.set((path, read, total))
@@ -1191,11 +1187,10 @@ private[sources] final class VersionedPrune(path: String, pinned: Int,
     * (logical col, probe value) — consulted when partition pruning
     * does not apply. Null probes never prune (a bloom answers
     * membership of values, not of NULL). */
-  private def bloomPrune(spark: org.apache.spark.sql.SparkSession)
-      : Option[(String, Any)] =
+  private def bloomPrune(): Option[(String, Any)] =
     accepted.iterator.collectFirst {
       case sources.EqualTo(a, v) if v != null &&
-          Versioned.hasSkippingIndex(spark, path, pinned, a, "bloom") =>
+          Versioned.hasSkippingIndex(path, pinned, a, "bloom") =>
         (a, v)
     }
 
@@ -1205,11 +1200,12 @@ private[sources] final class VersionedPrune(path: String, pinned: Int,
     * (logical col, lo, hi). Strict bounds (`>`/`<`) are used
     * INCLUSIVELY — a relaxation that may read one extra file, never
     * skip a needed one; the exact predicate re-applies row-level.
-    * Literals are compared through double like the sidecar itself
-    * ([[Clustered.pruneRange]]); integral magnitudes beyond 2^53 are
-    * left unpruned rather than risk a lossy rounding. */
-  private def statsPrune(spark: org.apache.spark.sql.SparkSession)
-      : Option[(String, Double, Double)] = {
+    * Literals are compared through double like the recorded bounds
+    * ([[DirFacts.rangeKeep]]); integral magnitudes beyond 2^53 are
+    * left unpruned rather than risk a lossy rounding. An open side is
+    * an infinite bound, which [[Versioned.readRangeClustered]] leaves
+    * open. */
+  private def statsPrune(): Option[(String, Double, Double)] = {
     val SAFE = 9007199254740992L // 2^53: exact in double
     def asD(v: Any): Option[Double] = v match {
       case n: java.lang.Integer => Some(n.doubleValue)
@@ -1247,7 +1243,7 @@ private[sources] final class VersionedPrune(path: String, pinned: Int,
       .filter { case (_, (lo, hi)) =>
         lo != Double.NegativeInfinity || hi != Double.PositiveInfinity }
       .find { case (c, _) =>
-        Versioned.hasSkippingIndex(spark, path, pinned, c, "stats") }
+        Versioned.hasSkippingIndex(path, pinned, c, "stats") }
       .map { case (c, (lo, hi)) => (c, lo, hi) }
   }
 
@@ -1377,8 +1373,8 @@ object GraftCatalog {
     new java.util.concurrent.atomic.AtomicReference[(String, Int, Int)](
       ("", 0, 0))
 
-  /** Dir-walk accounting of the most recent `<t>.files` scan in this
-    * JVM: (table path, dirs walked, dirs total) — set by
+  /** Dir accounting of the most recent `<t>.files` scan in this
+    * JVM: (table path, dirs listed, dirs total) — set by
     * [[FilesSqlTable]]'s scan so specs can gate `dirsWalked < dirsTotal`
     * when a pushed `dir_id`/`part_spec` filter pruned the listing. */
   val lastFilesScan =

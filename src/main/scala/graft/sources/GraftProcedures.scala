@@ -174,7 +174,7 @@ object GraftProcedures {
         outRow(versionOut, Seq(v))
       }),
     Proc("index",
-      "build the per-file min/max stats sidecar for cols (comma-" +
+      "record per-file min/max for cols (comma-" +
         "separated) over the head's data dirs IN PLACE — no rewrite, " +
         "no new version; range filters start skipping immediately",
       Seq(in("table", StringType), in("cols", StringType)),
@@ -191,7 +191,7 @@ object GraftProcedures {
     Proc("detail",
       "DESCRIBE DETAIL for the format: one row of head-snapshot " +
         "accounting — version, data/dv dir counts, file count and " +
-        "bytes (distributed listing), constraints, the PARTITIONED " +
+        "bytes (the dirs' file manifests), constraints, the PARTITIONED " +
         "BY policy, and the per-dir partition spec count — the " +
         "operator's is-it-fragmented / is-it-masked / what-layout " +
         "view in one CALL",
@@ -204,7 +204,7 @@ object GraftProcedures {
           .agg(org.apache.spark.sql.functions.count(
             org.apache.spark.sql.functions.lit(1)),
             org.apache.spark.sql.functions.sum("size_bytes"))
-          .collect()(0) // 1-row aggregate of the distributed listing
+          .collect()(0) // 1-row aggregate of the file manifests
         outRow(StructType(Seq(
           StructField("version", IntegerType),
           StructField("n_data_dirs", IntegerType),
@@ -239,7 +239,7 @@ object GraftProcedures {
     Proc("cluster",
       "rewrite the head snapshot z-ordered on two numeric columns " +
         "(OPTIMIZE ZORDER): one overwrite commit whose files carry " +
-        "tight (c1, c2) bounding boxes plus the min/max sidecar, so " +
+        "tight (c1, c2) bounding boxes and records their min/max, so " +
         "later SQL range filters on either column skip files; " +
         "scope => \"col=v1|v2\" z-orders ONLY the covered partition " +
         "dirs (dirs outside the scope carry by reference)",

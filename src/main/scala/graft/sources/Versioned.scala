@@ -16,7 +16,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   *
   * Layout: `<table>/_versions/v{N}.json` (JSON: version, mode, data
   * dirs, optional txn token and base64 schema DDL) +
-  * `<table>/data/<uuid>/part-*.parquet`. The manifest-carried schema
+  * `<table>/data/<uuid>/part-*.parquet` + the dir's file manifest
+  * `<table>/data/<uuid>/_files.json` ([[DirFacts]]: each file's bytes
+  * and per-file index bounds). The manifest-carried schema
   * makes column ADDS first-class: older files null-fill new columns
   * under the explicit read schema (no mergeSchema footer scan), and
   * same-name type drift fails the commit loudly.
@@ -32,7 +34,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * the identical contract on clusters.
   *
   * Scale notes: manifests hold DIRECTORY names, not file lists, so
-  * manifest size grows with commits, not data; reads prune normally
+  * manifest size grows with commits, not data (each dir's own
+  * `_files.json` lists its files, written once); reads prune normally
   * (partition/filter pushdown applies per listed dir); `vacuum`
   * drops data dirs unreachable from any retained manifest.
   */
@@ -399,20 +402,32 @@ object Versioned {
     * commit time and txn), `result` the writer's answer for the
     * published manifest, `staged` the dirs written for this attempt
     * alone (dropped when its publish loses), `feed` the change feed
-    * published after it lands, and `reindex` the new data dir that
-    * inherits the head's skipping indexes ([[retrofitIndexes]]). */
+    * published after it lands, and `newDir` the data dir it staged,
+    * whose `_files.json` [[stageFacts]] writes before the publish. */
   private final case class Attempt[+A](next: Manifest,
       result: Manifest => A, staged: Seq[java.nio.file.Path] = Nil,
-      feed: Feed = Feed.Unchanged,
-      reindex: Option[(SparkSession, String)] = None)
+      feed: Feed = Feed.Unchanged, newDir: Option[NewDir] = None)
+
+  /** The file-skipping indexes a data dir asks for: stats-indexed
+    * columns, and bloom-indexed columns with the items per file each
+    * bloom is sized for. */
+  private final case class IndexSet(stats: Seq[String] = Nil,
+      blooms: Map[String, Long] = Map.empty)
+
+  /** The data dir an attempt staged: its id and the indexes it asks
+    * for, in PHYSICAL names — None inherits the head's
+    * ([[inheritedIndex]]). */
+  private final case class NewDir(spark: SparkSession, id: String,
+      index: Option[IndexSet] = None)
 
   /** THE optimistic commit protocol, written once for every versioned
     * writer (the Delta-log shape): read the head, answer `replay` if a
     * manifest ≤ head already carries `txn`, let `step` derive this
-    * attempt from the head version and its manifest, publish it at
-    * head+1 through [[publishManifest]], then publish its feed and
-    * indexes. A lost race drops what the attempt staged and derives
-    * again from the new head — a concurrent commit is never silently
+    * attempt from the head version and its manifest, write its new
+    * data dir's `_files.json` ([[stageFacts]]), publish it at head+1
+    * through [[publishManifest]], then publish its feed. A lost race
+    * drops what the attempt staged and derives again from the new
+    * head — a concurrent commit is never silently
     * overwritten, and a same-token racer turns the retry into a
     * replay. `step` may answer `Left(result)` to finish without a
     * commit (a delete that matched nothing). `what` names the writer
@@ -450,6 +465,8 @@ object Versioned {
         case Right(a) =>
           val m = a.next.copy(version = head + 1, txn = txn,
             ts = Some(System.currentTimeMillis()))
+          a.newDir.foreach(n => stageFacts(n.spark, path, m, n.id,
+            n.index.getOrElse(inheritedIndex(path, parent))))
           if (publishManifest(path, m)) {
             a.feed match {
               case Feed.Absent => ()
@@ -457,8 +474,6 @@ object Versioned {
                 Files.createDirectories(changeDirPath(path, m.version)): Unit
               case Feed.Rows(publish) => publish(m)
             }
-            a.reindex.foreach { case (spark, dir) =>
-              retrofitIndexes(spark, path, parent, dir) }
             return a.result(m)
           }
           a.staged.foreach(dropDirRec) // lost the race: re-derive
@@ -509,9 +524,9 @@ object Versioned {
 
   /** Commit `df` Z-CLUSTERED on two numeric columns as the next
     * version: the staged data dir is written in
-    * [[Clustered.clusteredFrame]] layout with its min/max stats
-    * sidecar INSIDE the dir, so clustered layout + skipping index
-    * ride the manifest — every version keeps its own index, and
+    * [[Clustered.clusteredFrame]] layout and its `_files.json` records
+    * per-file min/max of both columns, so clustered layout + skipping
+    * index ride the manifest — every version keeps its own index, and
     * [[readRangeClustered]] time-travels WITH file skipping. Commit
     * mechanics (atomicity, races, txn dedup, schema ledger) are
     * exactly [[commitTxn]]'s. */
@@ -519,24 +534,22 @@ object Versioned {
       files: Int, overwrite: Boolean, txn: Option[String] = None): Int =
     commitCore(_ => df, path, overwrite, txn,
       stage = clusteredStage(c1, c2, files),
+      index = Some(IndexSet(Seq(c1, c2))),
       // the ledger names the maintenance action, like "compact" —
       // DESCRIBE HISTORY should say what rewrote the snapshot
       modeOverride = if (overwrite) Some("cluster") else None)
 
-  /** [[Clustered]]'s z-ordered layout plus its min/max sidecar on
-    * `(c1, c2)` as a [[commitCore]] staging writer. */
+  /** [[Clustered]]'s z-ordered layout on `(c1, c2)` as a
+    * [[commitCore]] staging writer. */
   private def clusteredStage(c1: String, c2: String, files: Int)
       : (String, DataFrame, String => String) => Unit =
-    (dataDir, pdf, phys) => {
+    (dataDir, pdf, phys) =>
       Clustered.clusteredFrame(pdf, phys(c1), phys(c2), files)
         .write.mode("errorifexists").parquet(dataDir)
-      Clustered.writeStats(pdf.sparkSession, dataDir,
-        Seq(phys(c1), phys(c2)))
-    }
 
   /** STATS-INDEXED APPEND: a plain commit (no re-clustering, no
-    * sort — the rows land in arrival order) that also writes the
-    * per-file min/max sidecar for `cols`, so [[readRangeClustered]]
+    * sort — the rows land in arrival order) whose `_files.json` also
+    * records per-file min/max for `cols`, so [[readRangeClustered]]
     * prunes this dir's files too. The cheap middle ground between a
     * plain append (never skipped) and [[commitClustered]] (full
     * z-order rewrite): time-ordered ingest is usually ALREADY
@@ -545,11 +558,7 @@ object Versioned {
     * per commit and zero data movement. */
   def commitIndexed(df: DataFrame, path: String, cols: Seq[String],
       overwrite: Boolean, txn: Option[String] = None): Int =
-    commitCore(_ => df, path, overwrite, txn,
-      stage = (dataDir, pdf, phys) => {
-        pdf.write.mode("errorifexists").parquet(dataDir)
-        Clustered.writeStats(pdf.sparkSession, dataDir, cols.map(phys))
-      })
+    commitCore(_ => df, path, overwrite, txn, index = Some(IndexSet(cols)))
 
   /** BLOOM-INDEXED commit: a plain commit (arrival order, optionally
     * pre-bucketed by the caller) that also writes the per-file bloom
@@ -565,53 +574,46 @@ object Versioned {
       expectedPerFile: Long = 100000L, overwrite: Boolean = false,
       txn: Option[String] = None): Int =
     commitCore(_ => df, path, overwrite, txn,
-      stage = (dataDir, pdf, phys) => {
-        pdf.write.mode("errorifexists").parquet(dataDir)
-        Clustered.writeBloomIndex(pdf.sparkSession, dataDir, phys(c),
-          expectedPerFile)
-      })
+      index = Some(IndexSet(blooms = Map(c -> expectedPerFile))))
 
-  /** Build (or rebuild) the per-file min/max stats sidecar for
-    * `cols` over the head snapshot's data dirs IN PLACE — an INDEX
-    * build, not a commit: zero data bytes move, no version
-    * publishes, and every manifest referencing these dirs (past and
-    * future, until an overwrite drops them) gains range file
-    * skipping the moment the sidecar lands. The retrofit path for
+  /** Build (or rebuild) the per-file min/max index for `cols` over
+    * the head snapshot's data dirs IN PLACE — an INDEX build, not a
+    * commit: zero data bytes move, no version publishes, and every
+    * manifest referencing these dirs (past and future, until an
+    * overwrite drops them) gains range file skipping the moment each
+    * dir's rewritten `_files.json` lands. The retrofit path for
     * tables committed before anyone thought about skipping — the
     * expensive alternative is [[commitClustered]]'s full rewrite.
-    * Hive-partitioned dirs are left alone (their files live under
-    * partition subdirs the flat sidecar contract does not list;
-    * partition pruning already covers them). Sidecars describe file
-    * CONTENTS including DV-masked rows — bounds only ever over-keep.
-    * Returns the number of dirs indexed. */
+    * Hive-partitioned dirs are left alone (partition pruning already
+    * covers them). Bounds describe file CONTENTS including DV-masked
+    * rows — they only ever over-keep. Returns the number of dirs
+    * indexed. */
   def buildStatsIndex(spark: SparkSession, path: String,
       cols: Seq[String]): Int = {
-    val head = latestVersion(path)
-    require(head >= 0, s"versioned buildStatsIndex: no committed " +
-      s"version at $path")
-    val m = readManifest(path, head)
+    val m = pinManifest(path, None)
     val phys = cols.map(m.physOf)
     val dirs = m.dataDirs.filterNot(m.partSpecs.contains)
-    dirs.foreach(d =>
-      Clustered.writeStats(spark, s"$path/data/$d", phys))
+    dirs.foreach { d =>
+      val files = withBounds(spark, path, m, d, dirFacts(path, d).files, phys)
+      updateFacts(path, d)(_.copy(files = files, stats = phys))
+    }
     dirs.size
   }
 
   /** The bloom sibling of [[buildStatsIndex]]: build the per-file
     * bloom sidecar for equality key `c` over the head's (spec-free)
-    * data dirs in place — point lookups start skipping immediately,
-    * no rewrite, no new version. Returns the number of dirs
-    * indexed. */
+    * data dirs in place, then name it in each dir's `_files.json` —
+    * point lookups start skipping immediately, no rewrite, no new
+    * version. Returns the number of dirs indexed. */
   def buildBloomIndex(spark: SparkSession, path: String, c: String,
       expectedPerFile: Long = 100000L): Int = {
-    val head = latestVersion(path)
-    require(head >= 0, s"versioned buildBloomIndex: no committed " +
-      s"version at $path")
-    val m = readManifest(path, head)
+    val m = pinManifest(path, None)
     val cPhys = m.physOf(c)
     val dirs = m.dataDirs.filterNot(m.partSpecs.contains)
-    dirs.foreach(d => Clustered.writeBloomIndex(spark,
-      s"$path/data/$d", cPhys, expectedPerFile))
+    dirs.foreach { d =>
+      val bloom = writeBloom(spark, path, m, d, cPhys, expectedPerFile)
+      updateFacts(path, d)(f => f.copy(blooms = f.blooms + (cPhys -> bloom)))
+    }
     dirs.size
   }
 
@@ -898,9 +900,9 @@ object Versioned {
     * bucketed dir, ONLY the bucket directories the probe values hash
     * into — `pmod(hash(v), n)` evaluated driver-side with the SAME
     * Murmur3 expression the writer laid the dirs out with, so a point
-    * lookup on a 10⁶-file bucketed table walks 1/n of each dir before
-    * any file IO. Values hash under the column's DECLARED type (the
-    * staged layout hashed the typed column); a probe that cannot
+    * lookup on a 10⁶-file bucketed table reads 1/n of each dir.
+    * Values hash under the column's DECLARED type (the staged layout
+    * hashed the typed column); a probe that cannot
     * represent as that type keeps everything (sound, merely
     * unskipped). Dirs not bucket-partitioned on `c` read fully.
     *
@@ -943,12 +945,12 @@ object Versioned {
     * [[readPartitionPruned]] and [[readPartitionPrunedTime]]: per data
     * dir, parse its recorded partition spec ([[parsePartSpec]]) and
     * find the first entry on `c` (physical translation applied) that
-    * `matches`; if found, WALK the hive directory tree to that
-    * entry's depth and keep only the subtrees whose unescaped value
-    * passes `keep` — whole directories skipped before any file IO at
-    * whatever nesting the spec put them. Dirs without a usable entry
-    * read fully (unknown never justifies a skip); the DV mask
-    * overlays as usual. Returns (frame, filesRead, filesTotal). */
+    * `matches`; if found, keep only the files of `_files.json` whose
+    * hive directory at that entry's depth names a value passing `keep`
+    * — whole directories skipped before any file IO at whatever
+    * nesting the spec put them. Dirs without a usable entry read fully
+    * (unknown never justifies a skip); the DV mask overlays as usual.
+    * Returns (frame, filesRead, filesTotal). */
   private def specPrunedRead(spark: SparkSession, path: String,
       version: Option[Int], c: String,
       matches: PartField => Boolean,
@@ -960,67 +962,40 @@ object Versioned {
     var filesRead = 0
     var filesTotal = 0
     val picks = m.dataDirs.map { d =>
-      val dirPath = Paths.get(path, "data", d)
-      val dirTotal = countDataFiles(dirPath)
-      filesTotal += dirTotal
+      val files = dirFacts(path, d).files
+      filesTotal += files.size
       val spec = m.partSpecs.get(d).map(parsePartSpec)
         .getOrElse(Seq.empty)
       val idx = spec.indexWhere(f =>
         foldName(f.col) == foldName(cPhys) && matches(f))
       if (idx < 0) {
         // other layout: read fully, the caller's row filter applies
-        filesRead += dirTotal
+        filesRead += files.size
         d -> None
       } else {
+        // levels above the entry pass through, the entry's level
+        // filters by value, below it is kept whole
         val entry = spec(idx)
-        val prefix = s"${entry.dirName}="
-        // walk the hive tree: levels above the entry pass through,
-        // the entry's level filters by value, below it is kept whole
-        def walk(p: java.nio.file.Path, depth: Int)
-            : List[java.nio.file.Path] =
-          if (!Files.isDirectory(p)) Nil
-          else {
-            val ls = Files.list(p)
-            try ls.iterator().asScala.filter(Files.isDirectory(_))
-              .flatMap { ch =>
-                val n = ch.getFileName.toString
-                if (depth == idx) {
-                  if (n.startsWith(prefix) &&
-                      keep(entry, unescapePartVal(n.drop(prefix.length))))
-                    List(ch)
-                  else Nil
-                } else walk(ch, depth + 1)
-              }.toList
-            finally ls.close()
-          }
-        val kept = walk(dirPath, 0).map(_.toString).sorted
-        kept.foreach(k => filesRead += countDataFiles(Paths.get(k)))
-        d -> Some(kept)
+        val kept = files.map(_.path.split('/'))
+          .filter(p => hiveValueAt(p, entry, idx).exists(keep(entry, _)))
+        filesRead += kept.size
+        d -> Some(kept.map(p => s"$path/data/$d/" +
+          p.take(idx + 1).mkString("/")).distinct.sorted)
       }
     }
     (liveRows(spark, path, m, picks), filesRead, filesTotal)
   }
 
-  /** Parquet data files under `p`, recursively (sidecars and hidden
-    * files excluded) — the pruning-proof denominator. */
-  private def countDataFiles(p: java.nio.file.Path): Int =
-    if (!Files.exists(p)) 0
-    else {
-      val w = Files.walk(p)
-      try w.iterator().asScala.count(q =>
-        Files.isRegularFile(q) && isDataFile(p.relativize(q)))
-      finally w.close()
-    }
-
-  /** Whether `rel`, a path below a data dir, is a data file: a parquet
-    * part none of whose path components is `_`- or `.`-prefixed — the
-    * parts of a `_graft_stats` / `_graft_bloom_*` sidecar table and
-    * hidden files are not data. */
-  private def isDataFile(rel: java.nio.file.Path): Boolean =
-    rel.toString.endsWith(".parquet") && rel.iterator().asScala.forall { c =>
-      val n = c.toString
-      !n.startsWith("_") && !n.startsWith(".")
-    }
+  /** The unescaped value of spec `entry`'s hive directory at depth
+    * `idx` of a file's dir-relative path components; None when the
+    * file does not sit below such a directory. */
+  private def hiveValueAt(p: Array[String], entry: PartField,
+      idx: Int): Option[String] = {
+    val prefix = s"${entry.dirName}="
+    if (p.length > idx + 1 && p(idx).startsWith(prefix))
+      Some(unescapePartVal(p(idx).drop(prefix.length)))
+    else None
+  }
 
   /** Hive partition-dir value unescaping (percent-encoding). */
   private def unescapePartVal(s: String): String = {
@@ -1044,10 +1019,12 @@ object Versioned {
     * restaged only when the column mapping drifted under it — while a
     * head rewrite's frame is the head snapshot itself, so each attempt
     * restages it from the new head. An append publishes its rows as
-    * the insert feed; an overwrite publishes `overwriteFeed`. */
+    * the insert feed; an overwrite publishes `overwriteFeed`. The
+    * new dir asks for `index` (LOGICAL names), default the head's. */
   private def commitCore(rows: Int => DataFrame, path: String,
       overwrite: Boolean, txn: Option[String], what: String = "commit",
       stage: (String, DataFrame, String => String) => Unit = null,
+      index: Option[IndexSet] = None,
       modeOverride: Option[String] = None,
       partSpec: Option[Seq[PartField]] = None,
       tableProps: Option[Map[String, String]] = None,
@@ -1112,6 +1089,9 @@ object Versioned {
     commitLoop[Int](path, what, txn,
       replay = v => { dropStaged(); v }) { (head, parentMeta) =>
       val df = rows(head)
+      index.foreach(i => (i.stats ++ i.blooms.keys).foreach(c =>
+        require(df.columns.exists(foldName(_) == foldName(c)),
+          s"versioned $what: no column '$c' to index at $path")))
       // NAME CONTINUITY CROSSES OVERWRITES: the physical assignment
       // always derives from the actual head manifest, even when the
       // commit replaces the table's content. The data-dir chain resets
@@ -1364,103 +1344,13 @@ object Versioned {
         // loudly on them), the empty dir for head rewrites
         feed = if (overwrite) overwriteFeed else Feed.Rows(m =>
           insertFeed(df.sparkSession, path, m.version, m, Seq(dataId))),
-        // auto-index the new dir when the HEAD's dirs are indexed —
-        // parentMeta, not parent: an overwrite (compact/cluster/
-        // INSERT OVERWRITE) inherits the REPLACED snapshot's index
-        // policy too, so compaction no longer silently drops a
-        // table's file-skipping sidecars (index policy survives
-        // overwrites the way constraints and props do).
-        // Hive-partitioned commits skip (partition pruning covers
-        // them); sidecars the commit itself staged are detected and
-        // left alone inside retrofitIndexes.
-        reindex = if (partSpec.isEmpty) Some((df.sparkSession, dataId))
-          else None))
+        newDir = Some(NewDir(df.sparkSession, dataId, index.map { i =>
+          def phys(c: String) = mapping.getOrElse(c, c)
+          IndexSet(i.stats.map(phys), i.blooms.map { case (c, n) =>
+            phys(c) -> n })
+        }))))
     }
   }
-
-  /** The file-skipping index columns any of `m`'s spec-free data dirs
-    * carry: (stats-indexed cols, bloom-indexed cols), PHYSICAL names
-    * (sidecars live beside physical-named files). Cheap: directory
-    * listings plus memoized sidecar footers, no data IO; unreadable
-    * sidecars count as un-indexed. */
-  private def indexedColumns(spark: SparkSession, path: String,
-      m: Manifest): (Set[String], Set[String]) = {
-    var stats = Set.empty[String]
-    var blooms = Set.empty[String]
-    m.dataDirs.filterNot(m.partSpecs.contains).foreach { d =>
-      val dir = s"$path/data/$d"
-      stats ++= statsCols(spark, dir)
-      if (Files.isDirectory(Paths.get(dir))) eachEntry(Paths.get(dir)) {
-        p =>
-          val n = p.getFileName.toString
-          if (n.startsWith("_graft_bloom_") && Files.isDirectory(p))
-            blooms += n.stripPrefix("_graft_bloom_")
-      }
-    }
-    (stats, blooms)
-  }
-
-  /** Recover the per-file item sizing a PARENT bloom sidecar was
-    * built with, so an auto-indexed dir inherits the original
-    * capacity instead of a hardcoded default (a 10M-row file under a
-    * 100k-expected bloom saturates and its false-positive rate
-    * approaches 1 — skipping silently stops). Spark's BloomFilter
-    * with default 3% FPP allocates bits = -n·ln(p)/ln²2, so
-    * n ≈ bits × 0.1368; one sidecar row read, degrade to the default
-    * on any failure. */
-  private def parentBloomExpected(spark: SparkSession, path: String,
-      m: Manifest, c: String): Long =
-    try {
-      m.dataDirs.filterNot(m.partSpecs.contains).iterator
-        .map(d => Clustered.bloomPath(s"$path/data/$d", c))
-        .find(bp => Files.isDirectory(Paths.get(bp)))
-        .flatMap { bp =>
-          spark.read.parquet(bp).select("bloom").limit(1)
-            .collect().headOption.map { r =>
-              val bits = org.apache.spark.util.sketch.BloomFilter
-                .readFrom(new java.io.ByteArrayInputStream(
-                  r.getAs[Array[Byte]](0))).bitSize()
-              math.max(100000L, (bits * 0.1368).toLong)
-            }
-        }.getOrElse(100000L)
-    } catch { case scala.util.control.NonFatal(_) => 100000L }
-
-  /** AUTO-INDEX a freshly committed data dir: when the PARENT head's
-    * dirs already carry stats/bloom sidecars on some column, the new
-    * dir gets the same sidecars at commit time — without this,
-    * point-lookup/range pruning DECAYS as data arrives (every append
-    * would sit un-indexed until a manual `CALL index`). Runs
-    * post-publish and in place, exactly like the
-    * [[buildStatsIndex]]/[[buildBloomIndex]] retrofit verbs; sidecars
-    * the commit itself staged (commitIndexed / commitBloomIndexed /
-    * commitClustered) are detected and left alone. BEST-EFFORT by
-    * design: the commit is already published, so an index-build
-    * failure (e.g. the indexed column was dropped from the new
-    * schema) degrades to an un-indexed dir — readers keep every file
-    * of un-indexed dirs, never wrong — and logs instead of failing
-    * the committed write. */
-  private def retrofitIndexes(spark: SparkSession, path: String,
-      parent: Option[Manifest], dirId: String): Unit =
-    parent.foreach { pm =>
-      try {
-        val dir = s"$path/data/$dirId"
-        if (listDataFiles(dir).nonEmpty) {
-          val (stats, blooms) = indexedColumns(spark, path, pm)
-          if (stats.nonEmpty &&
-              !Files.isDirectory(Paths.get(Clustered.statsPath(dir))))
-            Clustered.writeStats(spark, dir, stats.toSeq.sorted)
-          blooms.toSeq.sorted.foreach { c =>
-            if (!Files.isDirectory(Paths.get(Clustered.bloomPath(dir, c))))
-              Clustered.writeBloomIndex(spark, dir, c,
-                parentBloomExpected(spark, path, pm, c))
-          }
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] auto-index of $path/data/" +
-            s"$dirId skipped: ${e.getMessage}")
-      }
-    }
 
   /** Snapshot read: the table as of `version` (default: latest).
     * The manifest is resolved BEFORE any data is opened — commits
@@ -1646,27 +1536,10 @@ object Versioned {
   def dvDirIds(path: String, v: Int): Seq[String] =
     readManifest(path, v).dvDirs
 
-  /** Non-recursive data-file listing of one committed data dir
-    * (parquet parts only — `_`-prefixed sidecar tables and dot-files
-    * excluded). Local listing here; an HDFS/object-store deployment
-    * swaps this for FileSystem.listStatus — same contract. */
-  private def listDataFiles(dir: String): Vector[String] = {
-    val ls = Files.list(Paths.get(dir))
-    try {
-      val out = Vector.newBuilder[String]
-      val fs = ls.iterator()
-      while (fs.hasNext) {
-        val f = fs.next().getFileName
-        if (isDataFile(f)) out += s"$dir/$f"
-      }
-      out.result()
-    } finally ls.close()
-  }
-
-  /** The shared sidecar-pruned snapshot read behind
-    * [[readRangeClustered]] (min/max stats) and
+  /** The shared index-pruned snapshot read behind
+    * [[readRangeClustered]] (min/max bounds) and
     * [[readEqualityClustered]] (bloom): resolve `version`'s manifest,
-    * pick each data dir's surviving files ([[sidecarPicks]]), read
+    * pick each data dir's surviving files ([[indexPicks]]), read
     * them through [[readSnapshot]], re-apply the exact predicate
     * row-level and overlay the deletion-vector mask (mask rows for
     * pruned files simply never match the anti-join). Skipping
@@ -1675,110 +1548,103 @@ object Versioned {
     * that mixes partitioned history with indexed appends keeps file
     * skipping on its indexed dirs. Returns (frame, filesRead,
     * filesTotal). */
-  private def sidecarPrunedRead(spark: SparkSession, path: String,
-      version: Option[Int],
-      pruneDir: (String, Manifest) => Option[(Seq[String], Int)],
+  private def indexPrunedRead(spark: SparkSession, path: String,
+      version: Option[Int], pruneDir: DirPrune,
       predLogical: Column): (DataFrame, Int, Int) = {
     val m = pinManifest(path, version)
-    val (picks, read, total, _) = sidecarPicks(path, m, pruneDir)
+    val (picks, read, total, _) = indexPicks(path, m, pruneDir)
     (liveRows(spark, path, m, picks).filter(predLogical), read, total)
   }
 
-  /** Per data dir of `m`, the files a sidecar prune keeps: `pruneDir`
-    * answers (survivors, total) for a spec-free dir, or None when the
-    * dir carries no usable index for the asked column — then EVERY
-    * file stays (unknown never justifies a skip) and the dir reads
-    * whole. Hive-partitioned dirs have no flat sidecar contract and
-    * read whole too. Returns (picks, filesRead, filesTotal, whether
-    * any dir pruned on an index). */
-  private def sidecarPicks(path: String, m: Manifest,
-      pruneDir: (String, Manifest) => Option[(Seq[String], Int)])
+  /** A per-dir index prune: given the dir path, its `_files.json` and
+    * the manifest, the files it keeps — None when the dir carries no
+    * index for the asked column. */
+  private type DirPrune = (String, DirFacts, Manifest) => Option[Seq[FileFacts]]
+
+  /** Per data dir of `m`, the files an index prune keeps: `pruneDir`
+    * answers the survivors, or None when the dir carries no usable
+    * index for the asked column — then EVERY file stays (unknown
+    * never justifies a skip) and the dir reads whole. Hive-partitioned
+    * dirs carry no index and read whole too. Returns (picks,
+    * filesRead, filesTotal, whether any dir pruned on an index). */
+  private def indexPicks(path: String, m: Manifest, pruneDir: DirPrune)
       : (Seq[DirPick], Int, Int, Boolean) = {
     var read = 0
     var total = 0
     var indexed = false
     val picks = m.dataDirs.map { d =>
       val dir = s"$path/data/$d"
-      val parted = m.partSpecs.contains(d)
-      (if (parted) None else pruneDir(dir, m)) match {
-        case Some((kept, t)) =>
+      val facts = dirFacts(path, d)
+      total += facts.files.size
+      pruneDir(dir, facts, m) match {
+        case Some(kept) =>
           indexed = true
-          read += kept.size; total += t
-          d -> Some(kept)
+          read += kept.size
+          d -> Some(kept.map(f => s"$dir/${f.path}"))
         case None =>
-          val n = if (parted) countDataFiles(Paths.get(dir))
-            else listDataFiles(dir).size
-          read += n; total += n
+          read += facts.files.size
           d -> None
       }
     }
     (picks, read, total, indexed)
   }
 
-  /** An INDEX read must never fail a read that can proceed
-    * un-indexed: a sidecar mid-rebuild ([[buildStatsIndex]] mutates
-    * published dirs with a small overwrite window), truncated, or
-    * otherwise unreadable degrades to "un-indexed — keep every file"
-    * (always sound; pruning is an optimization). */
-  private def pruneOrKeepAll(f: => Option[(Seq[String], Int)])
-      : Option[(Seq[String], Int)] =
+  /** A bloom read must never fail a read that can proceed un-indexed:
+    * a sidecar mid-rebuild ([[buildBloomIndex]] overwrites it in
+    * place), truncated, or otherwise unreadable degrades to
+    * "un-indexed — keep every file" (always sound; pruning is an
+    * optimization). */
+  private def pruneOrKeepAll[A](f: => Option[A]): Option[A] =
     try f catch { case scala.util.control.NonFatal(_) => None }
 
-  /** Per-dir min/max prune, column-tolerant: a dir whose stats
-    * sidecar indexes OTHER columns (e.g. a later [[commitIndexed]] on
-    * a different key) counts as un-indexed for `cPhys` instead of
-    * erroring — the memoized sidecar schema decides, and the prune
-    * reads the sidecar under it. */
-  private def statsPruneDir(spark: SparkSession, dir: String,
-      cPhys: String, lo: Double, hi: Double): Option[(Seq[String], Int)] =
-    pruneOrKeepAll {
-      statsSchema(spark, dir).filter(st => statsColsOf(st)(cPhys))
-        .map(st => Clustered.pruneRange(spark, dir, cPhys, lo, hi, Some(st)))
-    }
-
-  /** Snapshot read WITH file skipping: per data dir prune on its own
-    * min/max sidecar when one indexes `c` ([[Clustered.pruneRange]] —
-    * distributed filter, survivors-only collect) and keep every file
-    * of un-indexed dirs (plain appends after a clustered commit stay
-    * readable). Stats sidecars and file bytes carry PHYSICAL names —
-    * the manifest's column mapping translates. Returns (frame,
-    * filesRead, filesTotal). */
+  /** Snapshot read WITH file skipping: per data dir prune on the
+    * per-file min/max its `_files.json` records for `c` — interval
+    * arithmetic on the driver, no Spark job — and keep every file of
+    * dirs not indexed on `c` (plain appends after a clustered commit
+    * stay readable). An infinite bound is open: `hi` = +Infinity keeps
+    * NaN rows, which Spark orders above every number. Bounds and file
+    * bytes carry PHYSICAL names — the manifest's column mapping
+    * translates. Returns (frame, filesRead, filesTotal). */
   def readRangeClustered(spark: SparkSession, path: String, c: String,
       lo: Double, hi: Double,
       version: Option[Int] = None): (DataFrame, Int, Int) = {
-    import org.apache.spark.sql.functions.col
-    sidecarPrunedRead(spark, path, version,
-      (dir, m) => statsPruneDir(spark, dir, m.physOf(c), lo, hi),
-      col(c) >= lo && col(c) <= hi)
+    import org.apache.spark.sql.functions.{col, lit}
+    indexPrunedRead(spark, path, version,
+      (_, facts, m) => Some(m.physOf(c)).filter(facts.stats.contains)
+        .map(facts.rangeKeep(_, lo, hi)),
+      (if (lo == Double.NegativeInfinity) lit(true) else col(c) >= lo) &&
+        (if (hi == Double.PositiveInfinity) lit(true) else col(c) <= hi))
   }
 
   /** Snapshot read with BLOOM file skipping — the equality sibling of
     * [[readRangeClustered]]: per data dir probe its per-file bloom
-    * sidecar for `c` when one exists ([[Clustered.pruneEquality]] —
-    * "definitely not here" drops the file before IO; false positives
-    * cost one extra read and the exact predicate removes their rows),
-    * keep every file of un-indexed dirs. The point-lookup layout
-    * min/max ranges cannot prune (high-cardinality keys hash-spread
-    * across files) is exactly where this wins. Returns (frame,
-    * filesRead, filesTotal). */
+    * sidecar for `c` when its `_files.json` names one
+    * ([[Clustered.pruneEquality]] — "definitely not here" drops the
+    * file before IO; false positives cost one extra read and the exact
+    * predicate removes their rows), keep every file of un-indexed
+    * dirs. The point-lookup layout min/max ranges cannot prune
+    * (high-cardinality keys hash-spread across files) is exactly where
+    * this wins. Returns (frame, filesRead, filesTotal). */
   def readEqualityClustered(spark: SparkSession, path: String,
       c: String, value: Any,
       version: Option[Int] = None): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.{col, lit}
-    sidecarPrunedRead(spark, path, version, bloomPruneDir(spark, c, value),
+    indexPrunedRead(spark, path, version, bloomPruneDir(spark, c, value),
       col(c) === lit(value))
   }
 
   /** Per-dir bloom prune on logical column `c`: the dir's survivors
-    * for `value` when it carries a bloom sidecar for `c`, None
-    * (un-indexed) otherwise. */
+    * for `value` when it carries a bloom for `c`, probed with the type
+    * the bloom hashed; None (un-indexed) otherwise. */
   private def bloomPruneDir(spark: SparkSession, c: String, value: Any)
-      : (String, Manifest) => Option[(Seq[String], Int)] =
-    (dir, m) => pruneOrKeepAll {
+      : DirPrune =
+    (dir, facts, m) => {
       val cPhys = m.physOf(c)
-      if (Files.isDirectory(Paths.get(Clustered.bloomPath(dir, cPhys))))
-        Some(Clustered.pruneEquality(spark, dir, cPhys, value))
-      else None
+      facts.blooms.get(cPhys).flatMap(b => pruneOrKeepAll {
+        val keep = Clustered.pruneEquality(spark, dir, cPhys, value,
+          b.dataType).toSet
+        Some(facts.files.filter(f => keep(f.path)))
+      })
     }
 
   /** File accounting of the most recent bloom-pruned DML mask scan
@@ -1814,7 +1680,7 @@ object Versioned {
               .find(n => foldName(n) == foldName(rawName)))
             .getOrElse(rawName)
           val (picks, read, total, indexed) =
-            sidecarPicks(path, m, bloomPruneDir(spark, logical, v))
+            indexPicks(path, m, bloomPruneDir(spark, logical, v))
           if (!indexed) None
           else { lastDmlScan.set((path, read, total)); Some(picks) }
         }
@@ -1822,80 +1688,152 @@ object Versioned {
       bloomPicks.getOrElse(whole(m.dataDirs)), withIds = true))
   }
 
-  /** THE stats-sidecar schema memo, keyed by sidecar dir and VALUED
-    * with the sidecar mtime it was read at: data dirs are immutable,
-    * but [[buildStatsIndex]] can REBUILD a sidecar in place — an mtime
-    * mismatch re-reads and REPLACES the entry, so a rebuild can never
-    * serve a stale answer and stale generations never accumulate.
-    * Entries for dropped/vacuumed tables still linger, so a size
-    * backstop clears the whole memo past a bound no healthy session
-    * reaches (a clear costs one re-read per live sidecar, never a
-    * wrong answer). Every reader of a sidecar's columns goes through
-    * it — the planning gate ([[hasSkippingIndex]]), the range prune
-    * ([[statsPruneDir]]) and the per-commit auto-index
-    * ([[indexedColumns]]) — so each sidecar footer is read once per
-    * generation, not per query or per commit (a real planning tax on
-    * a 10⁶-file table). None = unreadable (mid-rebuild): un-indexed. */
-  private val statsSchemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Long, Option[org.apache.spark.sql.types.StructType])]()
-  private val StatsIndexMemoCap = 1 << 16
-
-  /** The stats sidecar schema of data dir `dir`, through
-    * [[statsSchemaMemo]]; None when the dir has no readable sidecar. */
-  private def statsSchema(spark: SparkSession, dir: String)
-      : Option[org.apache.spark.sql.types.StructType] = {
-    val sp = Paths.get(Clustered.statsPath(dir))
-    if (!Files.isDirectory(sp)) None
-    else {
-      val mtime =
-        try Files.getLastModifiedTime(sp).toMillis
-        catch { case scala.util.control.NonFatal(_) => -1L }
-      statsSchemaMemo.get(sp.toString) match {
-        case (`mtime`, st) => st
-        case _ =>
-          if (statsSchemaMemo.size > StatsIndexMemoCap)
-            statsSchemaMemo.clear()
-          val st = try Some(spark.read.parquet(sp.toString).schema)
-            catch { case scala.util.control.NonFatal(_) => None }
-          statsSchemaMemo.put(sp.toString, (mtime, st))
-          st
-      }
-    }
-  }
-
-  /** The PHYSICAL columns a stats sidecar schema indexes (both bounds). */
-  private def statsColsOf(st: org.apache.spark.sql.types.StructType)
-      : Set[String] = {
-    val names = st.fieldNames.toSet
-    names.filter(_.startsWith("lo_")).map(_.drop(3))
-      .filter(c => names("hi_" + c))
-  }
-
-  private def statsCols(spark: SparkSession, dir: String): Set[String] =
-    statsSchema(spark, dir).map(statsColsOf).getOrElse(Set.empty)
-
-  /** Whether `v`'s snapshot carries a usable file-skipping sidecar
-    * for logical column `c` — the SQL scan's PLANNING gate
-    * ([[GraftCatalog]] consults it before routing a pushed filter
-    * through the sidecar read paths). `kind` is "stats" or "bloom".
-    * Cheap on purpose: directory existence checks plus memoized
-    * sidecar schemas ([[statsSchemaMemo]]), no data IO.
-    * Hive-partitioned dirs do not count (no flat sidecar contract)
-    * but no longer disqualify the whole table — [[sidecarPicks]]
-    * reads them whole beside the pruned flat dirs, so ONE indexed
-    * spec-free dir is enough to route the skipping path. */
-  def hasSkippingIndex(spark: SparkSession, path: String, v: Int,
-      c: String, kind: String): Boolean = {
+  /** Whether `v`'s snapshot carries a file-skipping index for logical
+    * column `c` — the SQL scan's PLANNING gate ([[GraftCatalog]]
+    * consults it before routing a pushed filter through the index
+    * read paths). `kind` is "stats" or "bloom". Cheap on purpose:
+    * memoized `_files.json` reads ([[dirFacts]]), no data IO. ONE
+    * indexed dir is enough to route the skipping path —
+    * [[indexPicks]] reads the other dirs whole. */
+  def hasSkippingIndex(path: String, v: Int, c: String,
+      kind: String): Boolean = {
     val m = readManifest(path, v)
     val cPhys = m.physOf(c)
-    m.dataDirs.filterNot(m.partSpecs.contains)
-      .map(d => s"$path/data/$d").exists { dir =>
-      kind match {
-        case "bloom" =>
-          Files.isDirectory(Paths.get(Clustered.bloomPath(dir, cPhys)))
-        case _ => statsCols(spark, dir)(cPhys)
-      }
+    m.dataDirs.exists { d =>
+      val f = dirFacts(path, d)
+      if (kind == "bloom") f.blooms.contains(cPhys)
+      else f.stats.contains(cPhys)
     }
+  }
+
+  /** THE reader of data-dir file manifests: `dirId`'s `_files.json`
+    * ([[DirFacts]]), memoized per file and VALUED with the file's
+    * identity (inode, mtime, size) — a data dir's files never change,
+    * but [[buildStatsIndex]] / [[buildBloomIndex]] rewrite its
+    * `_files.json` by rename, so a rebuild is never served stale and
+    * stale generations never accumulate. Entries for dropped tables
+    * still linger, so a size backstop clears the whole memo past a
+    * bound no healthy session reaches (a clear costs one re-read per
+    * live dir, never a wrong answer). A dir without a readable
+    * `_files.json` fails loudly, naming it — like a corrupt manifest. */
+  private[sources] def dirFacts(path: String, dirId: String): DirFacts = {
+    val f = Paths.get(path, "data", dirId, DirFacts.FileName)
+    val attrs = try Files.readAttributes(f,
+        classOf[java.nio.file.attribute.BasicFileAttributes])
+      catch { case _: java.nio.file.NoSuchFileException =>
+        sys.error(s"versioned table at $path: data dir $dirId has no " +
+          s"${DirFacts.FileName} (written before per-dir file " +
+          "manifests — see MIGRATION.md)") }
+    val stamp = (attrs.fileKey, attrs.lastModifiedTime, attrs.size)
+    factsMemo.get(f.toString) match {
+      case (`stamp`, facts) => facts
+      case _ =>
+        val facts =
+          try DirFacts.parse(new String(Files.readAllBytes(f), "UTF-8"))
+          catch { case scala.util.control.NonFatal(e) =>
+            throw new IllegalStateException(
+              s"versioned table at $path: unreadable $f: ${e.getMessage}", e) }
+        if (factsMemo.size > FactsMemoCap) factsMemo.clear()
+        factsMemo.put(f.toString, (stamp, facts))
+        facts
+    }
+  }
+  private val factsMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, (Any, DirFacts)]()
+  private val FactsMemoCap = 1 << 16
+
+  /** Rewrite `dirId`'s `_files.json` as `f` of the current one — the
+    * retrofit verbs' read-modify-write, one at a time in this JVM. */
+  private def updateFacts(path: String, dirId: String)(
+      f: DirFacts => DirFacts): Unit = factsMemo.synchronized {
+    DirFacts.write(Paths.get(path, "data", dirId), f(dirFacts(path, dirId)))
+  }
+
+  /** The PHYSICAL schema of `m` — what its data files carry. */
+  private def physSchema(m: Manifest)
+      : Option[org.apache.spark.sql.types.StructType] =
+    m.schemaDdl.map(d => physStruct(m,
+      org.apache.spark.sql.types.StructType.fromDDL(d)))
+
+  /** The files of data dir `dirId` as a frame under `m`'s physical
+    * schema — no schema inference. */
+  private def scanDir(spark: SparkSession, path: String, m: Manifest,
+      dirId: String): DataFrame =
+    physSchema(m).fold(spark.read)(spark.read.schema(_))
+      .parquet(s"$path/data/$dirId")
+
+  /** `files` of flat dir `dirId` with their bounds on `cols`: ONE
+    * aggregate over the dir, collected at one row per file, each bound
+    * TRY-cast to double (a non-numeric column's bounds null out and
+    * keep their file). NaN and ±Infinity bounds are unknown too —
+    * JSON cannot carry them, and a NaN `hi` (Spark orders NaN above
+    * every number) must never let a range skip the file. */
+  private def withBounds(spark: SparkSession, path: String, m: Manifest,
+      dirId: String, files: Seq[FileFacts], cols: Seq[String])
+      : Seq[FileFacts] = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode}
+    if (cols.isEmpty) return files.map(_.copy(bounds = Map.empty))
+    def tryDouble(cl: Column): Column =
+      org.apache.spark.sql.GraftBridge.column(Cast(
+        org.apache.spark.sql.GraftBridge.expression(cl),
+        org.apache.spark.sql.types.DoubleType, None, EvalMode.TRY))
+    val aggs = cols.flatMap(c =>
+      Seq(tryDouble(min(col(c))), tryDouble(max(col(c)))))
+    def bound(r: org.apache.spark.sql.Row, i: Int): Option[Double] =
+      if (r.isNullAt(i)) None
+      else Some(r.getDouble(i)).filterNot(d => d.isNaN || d.isInfinite)
+    val byName = scanDir(spark, path, m, dirId)
+      .groupBy(col("_metadata.file_name")).agg(aggs.head, aggs.tail: _*)
+      .collect().map(r => r.getString(0) -> cols.indices.map(i =>
+        cols(i) -> (bound(r, 1 + 2 * i), bound(r, 2 + 2 * i))).toMap).toMap
+    files.map(f => f.copy(bounds = cols.map(_ -> (None, None)).toMap ++
+      byName.getOrElse(f.path, Map.empty)))
+  }
+
+  /** Build flat dir `dirId`'s bloom sidecar on PHYSICAL column `c`,
+    * hashing the column under `m`'s type. */
+  private def writeBloom(spark: SparkSession, path: String, m: Manifest,
+      dirId: String, c: String, expectedPerFile: Long): BloomFacts = {
+    val files = scanDir(spark, path, m, dirId)
+    Clustered.writeBloomIndex(files, s"$path/data/$dirId", c, expectedPerFile)
+    BloomFacts(expectedPerFile, files.schema(c).dataType)
+  }
+
+  /** The index set a new dir inherits when its writer asks for none:
+    * the union of what the head's dirs carry (a bloom sized as the
+    * last dir naming it), so pruning does not DECAY as data arrives,
+    * and an overwrite (compact, INSERT OVERWRITE) keeps the replaced
+    * snapshot's index policy the way constraints and props survive. */
+  private def inheritedIndex(path: String,
+      parent: Option[Manifest]): IndexSet =
+    parent.toSeq.flatMap(_.dataDirs).map(d => indexOf(dirFacts(path, d)))
+      .foldLeft(IndexSet())((a, b) =>
+        IndexSet((a.stats ++ b.stats).distinct, a.blooms ++ b.blooms))
+
+  private def indexOf(f: DirFacts): IndexSet =
+    IndexSet(f.stats, f.blooms.map { case (c, b) => c -> b.expectedPerFile })
+
+  /** Write new data dir `dirId`'s `_files.json` before `m` publishes:
+    * one listing, plus — for the indexes `want` names on columns `m`
+    * carries — one bounds aggregate and one bloom sidecar per bloom
+    * column. Hive-partitioned dirs carry no index (partition pruning
+    * covers them). A retry whose dir already records the same index
+    * set writes nothing. */
+  private def stageFacts(spark: SparkSession, path: String, m: Manifest,
+      dirId: String, want: IndexSet): Unit = {
+    val dir = Paths.get(path, "data", dirId)
+    val byFold = physSchema(m).toSeq.flatMap(_.fieldNames)
+      .map(n => foldName(n) -> n).toMap
+    def known(c: String) = byFold.get(foldName(c))
+    val idx = if (m.partSpecs.contains(dirId)) IndexSet()
+      else IndexSet(want.stats.flatMap(known).distinct,
+        want.blooms.flatMap { case (c, n) => known(c).map(_ -> n) })
+    if (!Files.exists(dir.resolve(DirFacts.FileName)) ||
+        indexOf(dirFacts(path, dirId)) != idx) DirFacts.write(dir, DirFacts(
+      withBounds(spark, path, m, dirId, DirFacts.list(dir), idx.stats),
+      idx.stats, idx.blooms.map { case (c, n) =>
+        c -> writeBloom(spark, path, m, dirId, c, n) }))
   }
 
   /** Compaction: rewrite the head snapshot as ONE overwrite commit of
@@ -1930,7 +1868,8 @@ object Versioned {
       c2: String, files: Int): Int =
     commitCore(head => read(spark, path, Some(head)), path,
       overwrite = true, txn = None, what = "clusterRewrite",
-      stage = clusteredStage(c1, c2, files), modeOverride = Some("cluster"),
+      stage = clusteredStage(c1, c2, files),
+      index = Some(IndexSet(Seq(c1, c2))), modeOverride = Some("cluster"),
       // THIS rewrite stages the masked head snapshot — zero logical
       // row changes — so its feed is the committed EMPTY dir, like
       // compact (commitClustered with caller-supplied content rightly
@@ -1949,7 +1888,7 @@ object Versioned {
   /** PARTITION-SCOPED compaction — OPTIMIZE one partition, not the
     * table: merges exactly the data dirs PROVABLY covered by the
     * `partEqs` scope (the [[replaceWhere]] dir proof: recorded spec +
-    * hive subtree listing, metadata IO only) into one dir of
+    * the dir's `_files.json` paths, metadata IO only) into one dir of
     * `targetFiles` files, applying — and thereby materializing away —
     * the deletion-vector masks of the rewritten scope; every other
     * dir carries BY REFERENCE. At 100 TB the nightly OPTIMIZE runs
@@ -1987,8 +1926,8 @@ object Versioned {
   }
 
   /** PARTITION-SCOPED clustering — OPTIMIZE ZORDER one partition:
-    * the covered dirs rewrite z-ordered on `(c1, c2)` with the
-    * min/max stats sidecar (range filters skip the scope's files
+    * the covered dirs rewrite z-ordered on `(c1, c2)` with per-file
+    * min/max of both (range filters skip the scope's files
     * immediately), the scope's DV masks materialize away, everything
     * else carries by reference — [[compactWhere]]'s scope mechanics
     * with [[Clustered]]'s layout. The clustered dir stages FLAT (the
@@ -2001,28 +1940,28 @@ object Versioned {
       targetFiles: Int): CompactResult =
     rewriteScope(spark, path, partEqs, "clusterWhere", "cluster",
       skipWhenTidy = None,
+      index = m => Some(IndexSet(Seq(c1, c2).map(m.physOf))),
       stage = (m, scopeDf, dataDir, _) => {
         val pdf = toPhysical(m, scopeDf)
         Clustered.clusteredFrame(pdf, m.physOf(c1), m.physOf(c2),
           targetFiles).write.mode("errorifexists").parquet(dataDir)
-        Clustered.writeStats(spark, dataDir,
-          Seq(m.physOf(c1), m.physOf(c2)))
-        false // flat + sidecar: no hive spec recorded
+        false // flat + min/max: no hive spec recorded
       })
 
   /** The shared scope-selection → masked-read → stage → publish loop
     * behind [[compactWhere]] and [[clusterWhere]]: `stage` writes the
     * scope's masked snapshot (PHYSICAL names) at `dataDir` — given
     * the shared hive spec when one exists clock-compatibly — and
-    * answers whether the new dir RECORDS that spec. Physical-only
+    * answers whether the new dir RECORDS that spec; the new dir asks
+    * for `index` of the head (default: inherit). Physical-only
     * rewrites: content is byte-identical, the feed is the committed
     * empty dir, kept dirs' masks stay live (rewritten files' mask
     * rows dangle harmlessly). */
   private def rewriteScope(spark: SparkSession, path: String,
       partEqs: Seq[(String, Set[String])], what: String, mode: String,
       skipWhenTidy: Option[Int],
-      stage: (Manifest, DataFrame, String, Option[Seq[PartField]]) => Boolean)
-      : CompactResult = {
+      stage: (Manifest, DataFrame, String, Option[Seq[PartField]]) => Boolean,
+      index: Manifest => Option[IndexSet] = _ => None): CompactResult = {
     commitLoop[CompactResult](path, what) { (_, parent) =>
       val m = headOf(parent, what, path)
       val zone = spark.sessionState.conf.sessionLocalTimeZone
@@ -2033,14 +1972,13 @@ object Versioned {
             val cPhys = m.physOf(cLog)
             val idx = spec.indexWhere(f => f.unit.isEmpty &&
               foldName(f.col) == foldName(cPhys))
-            idx >= 0 && hiveSubtreesCovered(
-              Paths.get(path, "data", d), spec, idx, vals)
+            idx >= 0 && hiveSubtreesCovered(dirFacts(path, d), spec, idx,
+              vals)
           }
         })
       }
       val carried = m.dataDirs.filterNot(selected.toSet)
-      val filesBefore = selected
-        .map(d => countDataFiles(Paths.get(path, "data", d))).sum
+      val filesBefore = selected.map(dirFacts(path, _).files.size).sum
       // per-DV-dir data-dir prefixes its mask rows reference (masks
       // are deleted-rows-sized, the distinct prefix set dirs-sized):
       // feeds the SCOPE-AWARE tidy gate and the dv-retirement below.
@@ -2100,11 +2038,11 @@ object Versioned {
             partSpecs = m.specsFor(carried) ++ (if (recordedSpec)
               keepSpec.map(sp => dataId -> renderPartSpec(sp)) else None)),
           v => CompactResult(v.version, selected.size, carried.size,
-            filesBefore, countDataFiles(dataDir)),
+            filesBefore, dirFacts(path, dataId).files.size),
           staged = Seq(dataDir),
           // physical rewrites change no logical rows: the feed is the
           // committed EMPTY dir (the default, like the full compact)
-          reindex = if (recordedSpec) None else Some((spark, dataId))))
+          newDir = Some(NewDir(spark, dataId, index(m)))))
       }
     }
   }
@@ -2402,8 +2340,8 @@ object Versioned {
     } else publishFeed(path, v) { stage =>
       val ins = stage.resolve("ct=insert")
       Files.createDirectories(ins)
-      dirs.foreach(d => listDataFiles(s"$path/data/$d").foreach { f =>
-        val p = Paths.get(f)
+      dirs.foreach(d => dirFacts(path, d).files.foreach { f =>
+        val p = Paths.get(path, "data", d, f.path)
         Files.createLink(ins.resolve(s"$d-${p.getFileName}"), p): Unit
       })
     }
@@ -3418,7 +3356,7 @@ object Versioned {
           target, updates, keys, deleteWhen)),
         // the merge's upsert dir inherits the head's indexes, so
         // point-lookup pruning does not decay under CDC traffic
-        reindex = Some((spark, dataId))))
+        newDir = Some(NewDir(spark, dataId))))
     }
   }
 
@@ -3442,8 +3380,8 @@ object Versioned {
     *  - **Dir drop (metadata-only)**: when `partEqs` is supplied — a
     *    structured rendering of the predicate as a conjunction of
     *    `col IN values` over identity-partitioned columns — every
-    *    data dir whose hive subtrees PROVABLY all match (directory
-    *    listing only, no data IO) is dropped from the manifest's dir
+    *    data dir whose hive subtrees PROVABLY all match (its
+    *    `_files.json` paths, no data IO) is dropped from the manifest's dir
     *    chain. Replacing a whole region/day that landed as its own
     *    commit moves zero existing bytes.
     *  - **DV mask (merge-on-read)**: matching rows in the remaining
@@ -3603,8 +3541,8 @@ object Versioned {
               val idx = spec.indexWhere(f => f.unit == pf.unit &&
                 foldName(f.col) == foldName(cPhys) &&
                 (f.unit.isEmpty || f.zone.forall(_ == zone)))
-              idx >= 0 && hiveSubtreesCovered(
-                Paths.get(path, "data", d), spec, idx, vals)
+              idx >= 0 && hiveSubtreesCovered(dirFacts(path, d), spec, idx,
+                vals)
             }
           }
         }.toSet
@@ -3654,36 +3592,21 @@ object Versioned {
               .withColumn("ct", lit("insert")))
             .reduce(_.unionByName(_)), path, next.version)
         },
-        // the new dir inherits the head's indexes (hive-partitioned
-        // staging skips, like commitCore: pruning covers it)
-        reindex = if (zoned.isEmpty) Some((spark, dataId)) else None))
+        // the new dir inherits the head's indexes (a hive-partitioned
+        // one carries none: pruning covers it)
+        newDir = Some(NewDir(spark, dataId))))
     }
   }
 
-  /** Does EVERY data file under `dirPath` sit inside a depth-`idx`
-    * hive subtree whose (unescaped) value is in `vals`? Directory
-    * listing only — the dir-drop proof of [[replaceWhere]]. A stray
-    * data file above the entry depth, a non-matching subtree, or an
-    * empty dir all answer false: unknown never justifies a drop. */
-  private def hiveSubtreesCovered(dirPath: java.nio.file.Path,
-      spec: Seq[PartField], idx: Int, vals: Set[String]): Boolean = {
-    val prefix = s"${spec(idx).dirName}="
-    def walk(p: java.nio.file.Path, depth: Int): Boolean = {
-      val ls = Files.list(p)
-      try ls.iterator().asScala.forall { ch =>
-        val n = ch.getFileName.toString
-        if (n.startsWith("_") || n.startsWith(".")) true // sidecars
-        else if (Files.isDirectory(ch)) {
-          if (depth == idx)
-            n.startsWith(prefix) &&
-              vals.contains(unescapePartVal(n.drop(prefix.length)))
-          else walk(ch, depth + 1)
-        } else !n.endsWith(".parquet") // stray data file: unproven
-      } finally ls.close()
-    }
-    Files.isDirectory(dirPath) && countDataFiles(dirPath) > 0 &&
-      walk(dirPath, 0)
-  }
+  /** Does EVERY data file of `facts` sit inside a depth-`idx` hive
+    * subtree whose (unescaped) value is in `vals`? Metadata only —
+    * the dir-drop proof of [[replaceWhere]] and [[compactWhere]]. A
+    * stray data file above the entry depth, a non-matching subtree, or
+    * an empty dir all answer false: unknown never justifies a drop. */
+  private def hiveSubtreesCovered(facts: DirFacts, spec: Seq[PartField],
+      idx: Int, vals: Set[String]): Boolean =
+    facts.files.nonEmpty && facts.files.forall(f =>
+      hiveValueAt(f.path.split('/'), spec(idx), idx).exists(vals))
 
   /** Result of a row-level DML commit ([[deleteWhereDV]],
     * [[updateWhereDV]]): the committed version
@@ -3894,9 +3817,8 @@ object Versioned {
               Paths.get(path, "data", dataId)),
             feed = Feed.Rows(v => publishWrittenFeed(
               stagedBack.withColumn("ct", lit("update")), path, v.version)),
-            // the post-image dir inherits the head's indexes (the
-            // update-DV dir the r14 advice named)
-            reindex = Some((spark, dataId))))
+            // the post-image dir inherits the head's indexes
+            newDir = Some(NewDir(spark, dataId))))
       }
     }
   }
@@ -3937,98 +3859,45 @@ object Versioned {
     * SQL scan reports to Catalyst's join planner
     * ([[GraftCatalog.frameScan]] SupportsReportStatistics), so
     * small versioned tables BROADCAST instead of defaulting to
-    * Long.MaxValue and shuffling every dim⨝fact join. Memoized: a
-    * version's dir chain is immutable, so one filesystem walk per
-    * (table, version) per session; the memo clears past a bound like
-    * [[statsSchemaMemo]] (an estimate re-walk, never a wrong answer).
-    * Vacuumed versions answer from the memo if present — stats are
-    * planning estimates, staleness is harmless. */
-  def versionBytes(path: String, v: Int): Long = {
-    val key = (path, v)
-    val cached = versionBytesMemo.get(key)
-    if (cached != null) return cached
-    val m = readManifest(path, v)
-    val bytes = m.dataDirs.map { d =>
-      val p = Paths.get(path, "data", d)
-      if (!Files.exists(p)) 0L
-      else {
-        val w = Files.walk(p)
-        try w.iterator().asScala.map { q =>
-          val n = q.getFileName.toString
-          if (Files.isRegularFile(q) && n.endsWith(".parquet") &&
-              !n.startsWith("_") && !n.startsWith(".")) Files.size(q)
-          else 0L
-        }.sum
-        finally w.close()
-      }
-    }.sum
-    if (versionBytesMemo.size > StatsIndexMemoCap)
-      versionBytesMemo.clear()
-    versionBytesMemo.put(key, bytes)
-    bytes
-  }
-  private val versionBytesMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int), java.lang.Long]()
+    * Long.MaxValue and shuffling every dim⨝fact join. The sum of the
+    * dirs' `_files.json` entries ([[dirFacts]], memoized) — exactly
+    * the bytes `<table>.files` lists, no filesystem walk. */
+  def versionBytes(path: String, v: Int): Long =
+    readManifest(path, v).dataDirs
+      .map(d => dirFacts(path, d).files.map(_.bytes).sum).sum
 
   /** `<table>.files` — one row per physical data FILE of the head
     * snapshot (dir id, dir-relative file path, size, the dir's
-    * partition spec if any). The listing is DISTRIBUTED: the
-    * manifest's dir list parallelizes across executors and each task
-    * walks its dirs, so a 10⁶-file table lists at cluster width and
-    * the driver never materializes the file list (unlike `.history`,
-    * this table is files-sized by definition — the scan shape must
-    * scale with it). Sidecar tables (`_graft_*`) and hidden files
-    * are excluded; hive-partitioned dirs list their nested files.
-    * Local filesystem walk here — an HDFS/object-store deployment
-    * swaps in FileSystem.listStatus, same contract as every listing
-    * in this format. */
+    * partition spec if any), read from each dir's `_files.json`:
+    * sidecars and hidden files are not data, hive-partitioned dirs
+    * list their nested files. */
   def filesDetail(spark: SparkSession, path: String): DataFrame =
     filesDetailPruned(spark, path, (_, _) => true)._1
 
   /** [[filesDetail]] with DIRECTORY pruning: `dirPred(dirId,
-    * partSpec)` decides which manifest dirs are walked at all — the
+    * partSpec)` decides which manifest dirs are listed at all — the
     * `<t>.files` SQL pushdown surface routes `dir_id` / `part_spec`
     * filters here so `SELECT sum(size_bytes) FROM t.files WHERE
-    * part_spec LIKE 'days%'` walks ONLY matching dirs instead of the
-    * whole table tree. Returns (frame, dirsWalked, dirsTotal) — the
-    * accounting the spec gates on. */
+    * part_spec LIKE 'days%'` opens ONLY matching dirs' `_files.json`.
+    * Returns (frame, dirsListed, dirsTotal) — the accounting the spec
+    * gates on. */
   def filesDetailPruned(spark: SparkSession, path: String,
       dirPred: (String, String) => Boolean): (DataFrame, Int, Int) = {
-    val head = latestVersion(path)
-    require(head >= 0, s"versioned files: no committed version at $path")
-    val m = readManifest(path, head)
+    val m = pinManifest(path, None)
     import spark.implicits._
-    val dirsTotal = m.dataDirs.size
-    val dirs = m.dataDirs.map(d =>
-      (d, s"$path/data/$d", m.partSpecs.getOrElse(d, "")))
-      .filter { case (d, _, spec) => dirPred(d, spec) }
-    val df = spark.sparkContext
-      .parallelize(dirs, math.max(1, math.min(math.max(dirs.size, 1), 64)))
-      .flatMap { case (id, dir, spec) =>
-        val root = java.nio.file.Paths.get(dir)
-        if (!java.nio.file.Files.isDirectory(root)) Iterator.empty
-        else {
-          val w = java.nio.file.Files.walk(root)
-          try w.iterator().asScala.filter { p =>
-            val n = p.getFileName.toString
-            java.nio.file.Files.isRegularFile(p) &&
-              n.endsWith(".parquet") && !n.startsWith("_") &&
-              !n.startsWith(".") &&
-              !root.relativize(p).toString.contains("_graft_")
-          }.map(p => (id, root.relativize(p).toString,
-            java.nio.file.Files.size(p), spec))
-            .toVector.iterator // materialize before the stream closes
-          finally w.close()
-        }
-      }.toDF("dir_id", "file", "size_bytes", "part_spec")
-    (df, dirs.size, dirsTotal)
+    val dirs = m.dataDirs.map(d => d -> m.partSpecs.getOrElse(d, ""))
+      .filter { case (d, spec) => dirPred(d, spec) }
+    val rows = dirs.flatMap { case (d, spec) =>
+      dirFacts(path, d).files.map(f => (d, f.path, f.bytes, spec)) }
+    (rows.toDF("dir_id", "file", "size_bytes", "part_spec"), dirs.size,
+      m.dataDirs.size)
   }
 
   /** SHALLOW CLONE (zero-copy table fork): materialize `srcPath`'s
     * head snapshot as a brand-new independent table at `dstPath` —
     * every data file arrives as a HARDLINK (O(files) metadata ops,
-    * zero copied bytes; stats/bloom sidecars ride along so skipping
-    * reads keep working on the clone), and the clone's v0 manifest
+    * zero copied bytes; `_files.json` and bloom sidecars ride along so
+    * skipping reads keep working on the clone), and the clone's v0 manifest
     * re-carries the source's schema baseline and constraint ledger.
     * From then on the tables evolve independently: commits to either
     * never touch the other, and because links pin inodes, vacuuming
@@ -4054,8 +3923,8 @@ object Versioned {
       val src = Paths.get(srcRoot, sub, d)
       val dst = Paths.get(dstPath, sub, d)
       Files.createDirectories(dst)
-      // link every regular file, recursively (parquet parts AND any
-      // _graft_stats/_graft_bloom sidecar tables inside the dir)
+      // link every regular file, recursively (parquet parts, the
+      // dir's _files.json and any _graft_bloom sidecar tables)
       Files.walk(src).filter(Files.isRegularFile(_)).forEach { p =>
         val rel = src.relativize(p)
         val out = dst.resolve(rel)

@@ -18,10 +18,11 @@ import org.apache.spark.sql.execution.datasources.v2.{
   * SupportsReportStatistics ([[GraftCatalog.frameScan]]) is
   * invisible to `DataSourceV2ScanRelation.computeStats`, which then
   * answers defaultSizeInBytes = Long.MaxValue and join selection can
-  * never pick broadcast on its own. The size check is the REAL file
-  * listing of the pinned version ([[Versioned.versionBytes]],
-  * memoized), the exact evidence a file-source relation would have
-  * offered; existing hints are never overridden, a disabled
+  * never pick broadcast on its own. The size check is the pinned
+  * version's data-file bytes as its dirs' file manifests record them
+  * ([[Versioned.versionBytes]]), the exact evidence a file-source
+  * relation would have offered; existing hints are never overridden,
+  * a disabled
   * threshold (≤ 0) disables the rule, and an unhonorable hint (wrong
   * join side for the type) is simply ignored by join selection —
   * never wrong, merely unhinted. Runs from

@@ -211,6 +211,23 @@ class GraftCatalogSpec extends SparkSpec {
     assert(specN.isEmpty && filesN >= 1, "plain dir under NULL spec")
   }
 
+  test("versionBytes equals the sum of <t>.files on a stats- and bloom-indexed table") {
+    val wh = java.nio.file.Files
+      .createTempDirectory("graft_cat_bytes").toString
+    val path = s"$wh/t"
+    Versioned.commitIndexed(spark.range(0, 2000).selectExpr("id AS k",
+      "id * 3 AS v").repartitionByRange(4, col("k")), path, Seq("k"),
+      overwrite = false)
+    Versioned.commitBloomIndexed(spark.range(2000, 4000).selectExpr(
+      "id AS k", "id * 3 AS v").repartition(4), path, "k",
+      expectedPerFile = 1000L)
+    GraftCatalog.register(spark, "gbytes", wh)
+    val files = spark.sql("SELECT sum(size_bytes) FROM gbytes.t.files")
+      .head.getLong(0)
+    assert(Versioned.versionBytes(path, 1) == files,
+      s"versionBytes ${Versioned.versionBytes(path, 1)} vs .files $files")
+  }
+
   test("small versioned tables broadcast-join: the size hint sees the real file listing") {
     val wh = java.nio.file.Files
       .createTempDirectory("graft_cat_stats").toString

@@ -600,13 +600,15 @@ class GraftSqlDmlSpec extends SparkSpec {
     spark.sql(s"INSERT INTO $cat.t SELECT id AS k, id * 7 % 1000 AS v " +
       "FROM range(0, 2000)")
     // cluster = OPTIMIZE ZORDER: one overwrite commit, ledger mode
-    // 'cluster', min/max sidecar staged inside the new data dir
+    // 'cluster', min/max of both columns in the new dir's _files.json
     assert(spark.sql(s"CALL $cat.system.cluster(`table` => 't', " +
       "c1 => 'k', c2 => 'v', files => 8)").head.getInt(0) == 2)
     assert(spark.sql(s"SELECT mode FROM $cat.t.history " +
       "WHERE version = 2").head.getString(0) == "cluster")
-    val dir = s"$wh/t/data/${Versioned.dataDirIds(s"$wh/t", 2).head}"
-    assert(new java.io.File(Clustered.statsPath(dir)).isDirectory)
+    val facts = Versioned.dirFacts(s"$wh/t",
+      Versioned.dataDirIds(s"$wh/t", 2).head)
+    assert(facts.stats == Seq("k", "v") &&
+      facts.files.forall(_.bounds("k")._1.isDefined))
     // the clustered layout now prunes SQL range filters (files = 8,
     // k restricted to <2% of the domain → some files must skip)
     GraftCatalog.lastVersionedScan.set(("", -1, -1))
@@ -675,7 +677,7 @@ class GraftSqlDmlSpec extends SparkSpec {
     val wh = freshWarehouse()
     val path = s"$wh/t"
     // dir 0: hive-partitioned (nested files, spec recorded); dir 1:
-    // clustered (carries a _graft_stats sidecar that must NOT list)
+    // clustered (its _files.json and any sidecar must NOT list)
     Versioned.commitPartitioned(Seq((1L, "a"), (2L, "b"), (3L, "a"))
       .toDF("k", "d"), path, "d", overwrite = false)
     Versioned.commitClustered((10L to 200L).map(i => (i, i % 9))
@@ -687,7 +689,8 @@ class GraftSqlDmlSpec extends SparkSpec {
     val dirIds = Versioned.dataDirIds(path, 1).toSet
     assert(rows.map(_.getString(0)).toSet == dirIds)
     assert(rows.forall(_.getLong(2) > 0), "every file carries its size")
-    assert(!rows.exists(_.getString(1).contains("_graft_")),
+    assert(!rows.exists(r => r.getString(1).contains("_graft_") ||
+      r.getString(1).contains(DirFacts.FileName)),
       "sidecar tables must not appear in the inventory")
     // the partitioned dir's files nest under their hive value dirs
     val parted = rows.filter(_.getString(3) == "d")

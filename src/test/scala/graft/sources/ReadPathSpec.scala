@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 /** Differential fence over every versioned read path: ONE table that
   * mixes every layout a snapshot can hold — a plain dir, a
-  * `commitIndexed` dir that also carries a bloom sidecar, an
+  * `commitIndexed` dir, both bloom-indexed in place, an
   * identity-partitioned dir, a `days(ts)` dir, a `bucket(4, b)` dir —
   * under a renamed column and a deletion-vector mask. Every pruned
   * read, the SQL `SELECT` routed to it, a point-key `DELETE` and the
@@ -30,7 +30,8 @@ class ReadPathSpec extends SparkSpec {
   private var seq = 0
 
   /** A fresh warehouse holding the mixed-layout table `t`, registered
-    * as its own catalog. v0 plain, v1 stats+bloom indexed, v2
+    * as its own catalog. v0 plain, v1 stats indexed, then a bloom
+    * index built over both in place (no version), v2
     * identity(region), v3 days(ts), v4 bucket(4, b), v5 RENAME region
     * → area, v6 DV delete of every k ending in 3. */
   private def build(): (String, String) = {
@@ -41,8 +42,7 @@ class ReadPathSpec extends SparkSpec {
     Versioned.commit(rows(1, 200), path, overwrite = false)
     Versioned.commitIndexed(rows(201, 400).repartitionByRange(4, col("k")),
       path, Seq("k"), overwrite = false)
-    val indexed = Versioned.dataDirIds(path, 1).last
-    Clustered.writeBloomIndex(spark, s"$path/data/$indexed", "k", 1000L)
+    Versioned.buildBloomIndex(spark, path, "k", 1000L)
     Versioned.commitPartitioned(rows(401, 600), path, "region")
     Versioned.commitPartitionedSpec(rows(601, 800), path,
       Seq(Versioned.PartField("ts", Some("days"))))
@@ -83,8 +83,10 @@ class ReadPathSpec extends SparkSpec {
         "TIMESTAMP '2024-01-04 23:59:00'", 24, 40),
     ("bucket", () => Versioned.readPartitionPrunedBucket(spark, path,
       "b", Seq(7L)), col("b") === 7L, "b = 7", 34, 40),
+    // the in-place bloom build indexed the plain dir too: its two
+    // files, which lack k = 255, prune with the indexed dir's three
     ("bloom", () => Versioned.readEqualityClustered(spark, path, "k",
-      255L), col("k") === 255L, "k = 255", 37, 40),
+      255L), col("k") === 255L, "k = 255", 35, 40),
     ("stats", () => Versioned.readRangeClustered(spark, path, "k",
       250.0, 270.0), col("k").between(250L, 270L),
       "k BETWEEN 250 AND 270", 38, 40))
@@ -164,7 +166,7 @@ class ReadPathSpec extends SparkSpec {
     assert(doomed.size == 1)
     Versioned.lastDmlScan.set(("", -1, -1))
     spark.sql(s"DELETE FROM $cat.t WHERE k = 255")
-    assert(Versioned.lastDmlScan.get() == ((path, 37, 40)),
+    assert(Versioned.lastDmlScan.get() == ((path, 35, 40)),
       s"mask scan accounting ${Versioned.lastDmlScan.get()}")
     assert(sorted(Versioned.read(spark, path)) == before.diff(doomed))
     val v = Versioned.latestVersion(path)
@@ -189,14 +191,44 @@ class ReadPathSpec extends SparkSpec {
   test("job fence: SQL range SELECT on a masked stats-indexed table") {
     val (_, cat) = fixture
     val q = s"SELECT * FROM $cat.t WHERE k BETWEEN 250 AND 270"
-    spark.sql(q).collect() // warm the sidecar memos
+    spark.sql(q).collect() // warm the _files.json memo
     val (got, jobs) = JobCounter(spark) { spark.sql(q).collect() }
     assert(got.length == 19)
-    assert(jobs.size == 5, jobs.mkString("\n"))
-    // the data files are read under the manifest schema and the stats
-    // sidecar under its memoized one: nothing infers a schema
+    // the prune is driver-side arithmetic over _files.json: both jobs
+    // are the masked read itself
+    assert(jobs.size == 2, jobs.mkString("\n"))
+    // the data files are read under the manifest schema: nothing
+    // infers a schema
     val inferring = jobs.filter(_.isReaderJob)
     assert(inferring.isEmpty, inferring.mkString("\n"))
+  }
+
+  test("job fence: readRangeClustered on 4 indexed dirs starts no job before its frame runs") {
+    val path = java.nio.file.Files.createTempDirectory("graft_readpath")
+      .toString + "/r"
+    (0 until 4).foreach(i => Versioned.commitIndexed(
+      rows(i * 100L + 1, i * 100L + 100).repartitionByRange(4, col("k")),
+      path, Seq("k"), overwrite = false))
+    val ((df, read, total), jobs) = JobCounter(spark) {
+      Versioned.readRangeClustered(spark, path, "k", 150.0, 170.0)
+    }
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+    assert((read, total) == ((2, 16)))
+    assert(df.count() == 21L)
+  }
+
+  test("job fence: a bloom-pruned point read runs its probe only — no count, no reader job") {
+    val path = java.nio.file.Files.createTempDirectory("graft_readpath")
+      .toString + "/b"
+    Versioned.commitBloomIndexed(rows(1, 400).repartition(4), path, "k",
+      expectedPerFile = 1000L)
+    val ((df, read, total), jobs) = JobCounter(spark) {
+      Versioned.readEqualityClustered(spark, path, "k", 42L)
+    }
+    assert(jobs.size == 1, jobs.mkString("\n"))
+    assert(jobs.forall(!_.isReaderJob), jobs.mkString("\n"))
+    assert(read < total && total == 4, s"($read, $total)")
+    assert(df.count() == 1L)
   }
 
   test("job fence: .changes WHERE _commit_version >= N") {

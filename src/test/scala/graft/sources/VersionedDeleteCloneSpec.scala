@@ -112,6 +112,25 @@ class VersionedDeleteCloneSpec extends SparkSpec {
     assert(Versioned.read(spark, dst, Some(0)).count() == 60)
   }
 
+  test("a clone's index-pruned reads open the clone's own files, even once the source is gone") {
+    val src = tmpTable()
+    val dst = tmpTable() + "/clone"
+    Versioned.commitBloomIndexed((1L to 4000L).map(k => (k, k * 2))
+      .toDF("k", "v").repartition(4, col("k")), src, "k",
+      expectedPerFile = 1000L)
+    Versioned.buildStatsIndex(spark, src, Seq("v"))
+    Versioned.cloneTable(src, dst)
+    java.nio.file.Files.walk(java.nio.file.Paths.get(src))
+      .sorted(java.util.Comparator.reverseOrder())
+      .forEach(f => { java.nio.file.Files.deleteIfExists(f): Unit })
+    val (eq, eqRead, eqTotal) =
+      Versioned.readEqualityClustered(spark, dst, "k", 42L)
+    assert(eqRead < eqTotal && eqTotal == 4, s"($eqRead, $eqTotal)")
+    assert(eq.select("v").as[Long].collect().toSeq == Seq(84L))
+    val (rg, _, _) = Versioned.readRangeClustered(spark, dst, "v", 10, 20)
+    assert(rg.count() == 6L)
+  }
+
   test("clone refuses a non-empty destination; repair backfills a clone's missing birth feed") {
     val src = tmpTable()
     Versioned.commit(Seq((1L, "a")).toDF("k", "v"), src, overwrite = false)

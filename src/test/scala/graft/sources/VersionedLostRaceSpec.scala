@@ -14,7 +14,9 @@ import org.apache.spark.sql.functions._
   *    racer, it returned the racer's version as a replay);
   *  - the ledger is contiguous (no version slot skipped);
   *  - no `data/` or `dv/` dir is left that no manifest references —
-  *    a lost attempt drops what it staged. */
+  *    a lost attempt drops what it staged;
+  *  - every data dir the head names is published with a complete
+  *    `_files.json`: exactly the dir's parquet data files. */
 class VersionedLostRaceSpec extends SparkSpec {
   import spark.implicits._
 
@@ -82,6 +84,9 @@ class VersionedLostRaceSpec extends SparkSpec {
       racer = p => Versioned.commitTxn(rows("AP", 99, 99), p,
         overwrite = false, txn = Some("app:7")),
       replay = true),
+    Row("commitIndexed", plain,
+      p => Versioned.commitIndexed(rows("AP", 50, 53).repartition(2), p,
+        Seq("k"), overwrite = false)),
     Row("compact", plain, p => Versioned.compact(spark, p, 1)),
     Row("clusterRewrite", plain,
       p => Versioned.clusterRewrite(spark, p, "k", "v", 1)))
@@ -98,6 +103,18 @@ class VersionedLostRaceSpec extends SparkSpec {
       val head = Versioned.latestVersion(path)
       onDisk -- (0 to head).flatMap(referenced)
     }
+  }
+
+  /** The dir-relative parquet data files under `dir`, hidden
+    * components (sidecars, `_files.json`) excluded. */
+  private def parquetFiles(dir: java.nio.file.Path): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    val w = java.nio.file.Files.walk(dir)
+    try w.iterator().asScala.map(dir.relativize(_).toString)
+      .filter(r => r.endsWith(".parquet") &&
+        !r.split('/').exists(c => c.startsWith("_") || c.startsWith(".")))
+      .toSet
+    finally w.close()
   }
 
   table.foreach { row =>
@@ -135,6 +152,18 @@ class VersionedLostRaceSpec extends SparkSpec {
         "a staged data dir was left behind")
       assert(orphans(path, "dv", Versioned.dvDirIds(path, _)).isEmpty,
         "a staged mask dir was left behind")
+      Versioned.dataDirIds(path, head).foreach { d =>
+        val files = Versioned.dirFacts(path, d).files
+        assert(files.map(_.path).toSet ==
+          parquetFiles(java.nio.file.Paths.get(path, "data", d)),
+          s"dir $d: incomplete ${DirFacts.FileName}")
+      }
+      if (row.name == "commitIndexed") {
+        val facts = Versioned.dirFacts(path, Versioned.dataDirIds(path, v).last)
+        assert(facts.stats == Seq("k") &&
+          facts.files.forall(_.bounds("k")._1.isDefined),
+          s"the winning dir's bounds: $facts")
+      }
     }
   }
 

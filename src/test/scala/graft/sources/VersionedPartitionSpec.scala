@@ -253,8 +253,8 @@ class VersionedPartitionSpec extends SparkSpec {
       (1000L to 4999L).map(k => (k, "x", k)).toDF("k", "grp", "val")
         .repartition(8, col("k")), path, "k",
       expectedPerFile = 1000L, overwrite = false)
-    assert(Versioned.hasSkippingIndex(spark,
-      path, 1, "k", "bloom"), "mixed layout must keep the index route")
+    assert(Versioned.hasSkippingIndex(path, 1, "k", "bloom"),
+      "mixed layout must keep the index route")
     val (df, read, tot) = Versioned.readEqualityClustered(
       spark, path, "k", 3000L)
     // the hive dir reads fully, the indexed dir prunes — net skip

@@ -281,8 +281,9 @@ class VersionedSpec extends SparkSpec {
       .toDF("k", "v").repartition(4, col("k")), path, "k",
       expectedPerFile = 2000L, overwrite = false)
     Versioned.buildStatsIndex(spark, path, Seq("v"))
-    // a PLAIN append: the new dir must get BOTH sidecars at commit
-    // time (pre-r15 it sat un-indexed until a manual CALL index)
+    // a PLAIN append: the new dir's _files.json must name BOTH
+    // indexes at commit time (pre-r15 it sat un-indexed until a
+    // manual CALL index), the bloom sized as the head's
     Versioned.commit((4001L to 8000L).map(i => (i, i * 2))
       .toDF("k", "v").repartition(4, col("k")), path,
       overwrite = false)
@@ -290,9 +291,12 @@ class VersionedSpec extends SparkSpec {
     assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(
       Clustered.bloomPath(s"$path/data/$newDir", "k"))),
       "appended dir did not inherit the bloom sidecar")
-    assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(
-      Clustered.statsPath(s"$path/data/$newDir"))),
-      "appended dir did not inherit the stats sidecar")
+    val facts = Versioned.dirFacts(path, newDir)
+    assert(facts.blooms.get("k").map(_.expectedPerFile).contains(2000L),
+      "appended dir did not inherit the bloom index")
+    assert(facts.stats == Seq("v") &&
+      facts.files.forall(_.bounds("v")._1.isDefined),
+      "appended dir did not inherit the stats index")
     // the point lookup prunes files of the NEW dir too — a key in
     // the appended range skips most of both dirs' files
     val (df, read, tot) = Versioned.readEqualityClustered(
@@ -311,6 +315,8 @@ class VersionedSpec extends SparkSpec {
     assert(java.nio.file.Files.isDirectory(java.nio.file.Paths.get(
       Clustered.bloomPath(s"$path/data/$mergeDir", "k"))),
       "merge-dv dir did not inherit the bloom sidecar")
+    assert(Versioned.dirFacts(path, mergeDir).blooms.contains("k"),
+      "merge-dv dir did not inherit the bloom index")
     assert(Versioned.read(spark, path)
       .filter(col("k") === 2L).select("v").as[Long].head() == 999L)
   }
@@ -547,7 +553,7 @@ class VersionedSpec extends SparkSpec {
     assert(Versioned.constraints(path, Some(1)) == Seq("v >= 0"))
   }
 
-  test("a corrupt/mid-rebuild sidecar degrades to un-indexed — reads keep all files, never fail") {
+  test("a corrupt/mid-rebuild bloom sidecar degrades to un-indexed; a garbage _files.json fails pruned reads loudly") {
     val path = tmpTable()
     Versioned.commitIndexed((0 until 1000).map(i => (i.toLong, i.toLong))
       .toDF("id", "x").repartitionByRange(4, col("x")), path, Seq("x"),
@@ -555,20 +561,9 @@ class VersionedSpec extends SparkSpec {
     // healthy index prunes
     val (_, k0, t0) = Versioned.readRangeClustered(spark, path, "x", 0, 99)
     assert(k0 < t0)
-    // clobber the sidecar with garbage bytes (the mid-rebuild /
-    // truncated-upload shape): the read must fall back to keep-all,
-    // not throw — pruning is an optimization, never a correctness gate
-    val dir = s"$path/data/${Versioned.dataDirIds(path, 0).head}"
-    val sp = java.nio.file.Paths.get(Clustered.statsPath(dir))
-    java.nio.file.Files.walk(sp).sorted(
-      java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p): Unit)
-    java.nio.file.Files.createDirectories(sp)
-    java.nio.file.Files.write(sp.resolve("part-junk.parquet"),
-      "not parquet".getBytes("UTF-8"))
-    val (df1, k1, t1) = Versioned.readRangeClustered(spark, path, "x", 0, 99)
-    assert(k1 == t1, s"corrupt sidecar must keep all files ($k1/$t1)")
-    assert(df1.count() == 100)
+    val dirId = Versioned.dataDirIds(path, 0).head
+    val dir = s"$path/data/$dirId"
+    Versioned.buildBloomIndex(spark, path, "id", 1000L)
     // bloom twin: garbage bloom sidecar also degrades to keep-all
     val bp = java.nio.file.Paths.get(Clustered.bloomPath(dir, "id"))
     java.nio.file.Files.createDirectories(bp)
@@ -578,6 +573,41 @@ class VersionedSpec extends SparkSpec {
       spark, path, "id", 42L)
     assert(k2 == t2, s"corrupt bloom must keep all files ($k2/$t2)")
     assert(df2.count() == 1)
+    // the dir's file manifest is the ledger itself, like a manifest:
+    // garbage there fails a pruned read, naming the file — and a
+    // plain read, which never opens it, still works
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir,
+      DirFacts.FileName), "not json".getBytes("UTF-8"))
+    val e = intercept[IllegalStateException] {
+      Versioned.readRangeClustered(spark, path, "x", 0, 99)
+    }
+    assert(e.getMessage.contains(s"$dirId/${DirFacts.FileName}"),
+      e.getMessage)
+    assert(Versioned.read(spark, path).count() == 1000L)
+  }
+
+  test("an index rebuild racing pruned reads never exposes a torn _files.json") {
+    val path = tmpTable()
+    Versioned.commitIndexed((0 until 2000).map(i => (i.toLong, i.toLong))
+      .toDF("id", "x").repartitionByRange(8, col("x")), path, Seq("x"),
+      overwrite = false)
+    val failure = new java.util.concurrent.atomic.AtomicReference[Throwable]
+    val indexer = new Thread(() =>
+      try (0 until 6).foreach { i =>
+        if (i % 2 == 0) Versioned.buildStatsIndex(spark, path, Seq("x", "id"))
+        else Versioned.buildStatsIndex(spark, path, Seq("x"))
+      } catch { case t: Throwable => failure.set(t) })
+    indexer.start()
+    var reads = 0
+    while (indexer.isAlive || reads < 3) {
+      val (df, kept, total) =
+        Versioned.readRangeClustered(spark, path, "x", 0, 99)
+      assert(kept < total && total == 8, s"($kept, $total)")
+      assert(df.count() == 100L)
+      reads += 1
+    }
+    indexer.join()
+    assert(failure.get == null, String.valueOf(failure.get))
   }
 
   test("vacuum reclaims orphaned streaming stage dirs by age; a live query's stage survives") {
