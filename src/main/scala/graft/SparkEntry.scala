@@ -7397,8 +7397,8 @@ object SparkEntry {
     // catalog table that has been CTAS-created, column-RENAMED
     // (metadata-only mapping), and row-DELETED (DV mask), and the
     // Q22-style hierarchy rollup still reads it with the date filter
-    // pushed into the inner parquet scans and the mask anti-joined
-    // before aggregation. The oracle folds the rename and delete into
+    // pushed into the inner parquet scans and the mask applied inside
+    // them before aggregation. The oracle folds the rename and delete into
     // arithmetic over the source table.
     "q_sql_ds_lakerollup" -> ((s, dir) => {
       val V = graft.sources.Versioned

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, NumericType}
+import scala.jdk.CollectionConverters._
 
 /** Z-order clustered layout + per-file bloom indexes — the
   * data-skipping pieces every large-scale table format (Delta OPTIMIZE
@@ -111,12 +112,19 @@ object Clustered {
     * hashed, then every file's bloom is deserialized and probed
     * DISTRIBUTED on the index table (read under its known schema — no
     * inference); only surviving file names return. Empty/null blooms
-    * KEEP their file. */
+    * KEEP their file. The table is read through its part files: Spark
+    * treats the `_`-prefixed dir itself as a hidden root. */
   def pruneEquality(spark: SparkSession, dir: String, c: String,
       value: Any, dt: DataType): Seq[String] = {
     val h = graft.ops.Bloom.hash64(value, dt)
     import spark.implicits._
-    spark.read.schema("file STRING, bloom BINARY").parquet(bloomPath(dir, c))
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(bloomPath(dir, c)))
+    val parts = try ls.iterator().asScala.map(_.getFileName.toString)
+      .filter(n => n.endsWith(".parquet") && !n.startsWith("_") &&
+        !n.startsWith(".")).toVector.sorted
+    finally ls.close()
+    spark.read.schema("file STRING, bloom BINARY")
+      .parquet(parts.map(n => s"${bloomPath(dir, c)}/$n"): _*)
       .as[(String, Array[Byte])]
       .filter { fb =>
         fb._2 == null || fb._2.isEmpty ||

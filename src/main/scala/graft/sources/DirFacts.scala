@@ -6,7 +6,8 @@ import scala.jdk.CollectionConverters._
 /** One data file of a versioned data dir: its dir-relative path, its
   * bytes, and per stats-indexed column its (lo, hi) bounds as doubles
   * — None where the bound is unknown (all-null chunk, a value that
-  * does not cast to double, NaN or ±Infinity), which keeps the file. */
+  * does not cast to double, NaN or ±Infinity), which prunes as an open
+  * bound. */
 private[sources] final case class FileFacts(path: String, bytes: Long,
     bounds: Map[String, (Option[Double], Option[Double])] = Map.empty)
 
@@ -28,11 +29,20 @@ private[sources] final case class DirFacts(files: Seq[FileFacts],
   /** Driver-side range prune on stats column `c`: the files whose
     * [lo, hi] may hold a value in [qlo, qhi], under Spark's ordering
     * (NaN above every number, so a NaN query bound never wrongly
-    * drops a file). A file with an unknown bound is kept. */
-  def rangeKeep(c: String, qlo: Double, qhi: Double): Seq[FileFacts] = {
+    * drops a file). On a `numeric` column an unknown bound is open:
+    * `lo` reads as -Infinity and `hi` as +Infinity — a NaN max
+    * (stored unknown) thus keeps every range above the file's min, as
+    * Spark's ordering requires. On any other column (lexical min/max
+    * that may not cast) a file with an unknown bound is kept, as is a
+    * file without the column's bounds. */
+  def rangeKeep(c: String, qlo: Double, qhi: Double,
+      numeric: Boolean = false): Seq[FileFacts] = {
     def le(a: Double, b: Double) = b.isNaN || (!a.isNaN && a <= b)
     files.filter(_.bounds.get(c) match {
       case Some((Some(lo), Some(hi))) => le(qlo, hi) && le(lo, qhi)
+      case Some((lo, hi)) if numeric =>
+        le(qlo, hi.getOrElse(Double.PositiveInfinity)) &&
+          le(lo.getOrElse(Double.NegativeInfinity), qhi)
       case _ => true
     })
   }

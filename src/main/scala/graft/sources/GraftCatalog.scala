@@ -36,8 +36,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * re-deriving one: every table here reads through one [[V1Scan]]
   * bridge ([[GraftCatalog.frameScan]]); for a versioned table its
   * relation builds `Versioned.read(...)` or one of its pruned reads
-  * ([[VersionedPrune]]) — the union of explicit-schema parquet scans
-  * plus the deletion-vector anti-join — so DV-masked and evolved
+  * ([[VersionedPrune]]) — the union of explicit-schema parquet scans,
+  * deletion vectors applied inside them — so DV-masked and evolved
   * snapshots are exactly as correct through SQL as through the Scala
   * API, and the physical work stays whole-stage-codegen parquet
   * batches on executors (the RDD handoff carries no driver
@@ -1479,7 +1479,7 @@ object GraftCatalog {
 
   /** THE scan bridge every graft SQL table reads through: a [[V1Scan]]
     * whose relation hands Spark the DISTRIBUTED row RDD of a
-    * driver-BUILT frame (parquet batches, DV anti-joins and all run
+    * driver-BUILT frame (parquet batches, in-scan DV masks and all run
     * on executors — nothing collects on the driver). The V2 pushdown
     * lands on that frame: filters `accept` takes are handed to
     * `frame` (to prune directories or files with) and then REPLAYED

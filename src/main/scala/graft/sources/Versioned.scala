@@ -51,7 +51,12 @@ object Versioned {
       dataDirs: Seq[String], txn: Option[String] = None,
       schemaDdl: Option[String] = None, ts: Option[Long] = None,
       constraints: Seq[String] = Seq.empty,
-      dvDirs: Seq[String] = Seq.empty,
+      // DELETION-VECTOR ledger: each mask dir with its row count and
+      // the data files (table-relative) it names positions in — what
+      // a scan needs to load only its own files' masks
+      // ([[graft.plans.DvMaskFilter]]) and compaction needs to retire
+      // a mask, with no job
+      masks: Seq[Mask] = Seq.empty,
       // PARTITION EVOLUTION ledger: dirId → the hive-layout partition
       // column that dir was written under ([[commitPartitioned]]).
       // Per-DIR, not per-table, so commits under different specs (or
@@ -93,6 +98,8 @@ object Versioned {
       // droppedCols always hold PHYSICAL names; schemaDdl and
       // constraints always hold LOGICAL names.
       colMap: Map[String, String] = Map.empty) {
+    /** The mask dir ids, in commit order. */
+    def dvDirs: Seq[String] = masks.map(_.id)
     /** `partSpecs` restricted to dirs a derived manifest carries. */
     def specsFor(dirs: Seq[String]): Map[String, String] =
       partSpecs.filter { case (d, _) => dirs.contains(d) }
@@ -143,9 +150,11 @@ object Versioned {
       (if (m.constraints.isEmpty) ""
        else s""","constraints":[${
          m.constraints.map(ManifestJson.quote).mkString(",")}]""") +
-      (if (m.dvDirs.isEmpty) ""
-       else s""","dvDirs":[${
-         m.dvDirs.map(ManifestJson.quote).mkString(",")}]""") +
+      (if (m.masks.isEmpty) ""
+       else s""","masks":[${m.masks.map(k =>
+         s"""{"id":${ManifestJson.quote(k.id)},"rows":${k.rows},""" +
+           s""""rels":[${k.rels.map(ManifestJson.quote).mkString(",")}]}"""
+       ).mkString(",")}]""") +
       (if (m.partSpecs.isEmpty) ""
        else s""","partSpecs":{${
          m.partSpecs.toSeq.sortBy(_._1).map { case (d, c) =>
@@ -165,8 +174,15 @@ object Versioned {
            s"${ManifestJson.quote(l)}:${ManifestJson.quote(p)}"
          }.mkString(",")}}""") + "}"
 
-  private def parse(s: String): Manifest = {
+  private def parse(path: String, s: String): Manifest = {
     val m = ManifestJson.parseObject(s)
+    // masks written before the ledger recorded their files cannot be
+    // applied in the scan: refuse them rather than read them unmasked
+    m.get("dvDirs").collect { case d :: _ => d }.foreach(d => sys.error(
+      s"versioned table at $path: manifest v${m("version")} carries " +
+        s"deletion-vector mask dir $d without the record of the files " +
+        "it masks, which the in-scan mask needs; a table written " +
+        "before that record cannot be read (MIGRATION.md)"))
     Manifest(
       version = m("version").asInstanceOf[Long].toInt,
       mode = m("mode").asInstanceOf[String],
@@ -179,8 +195,12 @@ object Versioned {
       ts = m.get("ts").map(_.asInstanceOf[Long]),
       constraints = m.getOrElse("constraints", List.empty[Any])
         .asInstanceOf[List[Any]].map(_.asInstanceOf[String]),
-      dvDirs = m.getOrElse("dvDirs", List.empty[Any])
-        .asInstanceOf[List[Any]].map(_.asInstanceOf[String]),
+      masks = m.getOrElse("masks", List.empty[Any])
+        .asInstanceOf[List[Any]].map { e =>
+          val k = e.asInstanceOf[Map[String, Any]]
+          Mask(k("id").asInstanceOf[String], k("rows").asInstanceOf[Long],
+            k("rels").asInstanceOf[List[Any]].map(_.asInstanceOf[String]))
+        },
       partSpecs = m.getOrElse("partSpecs", Map.empty[String, Any])
         .asInstanceOf[Map[String, Any]]
         .map { case (d, c) => d -> c.asInstanceOf[String] },
@@ -357,7 +377,7 @@ object Versioned {
   }
 
   private def readManifest(path: String, v: Int): Manifest =
-    parse(new String(Files.readAllBytes(manifestPath(path, v)), "UTF-8"))
+    parse(path, new String(Files.readAllBytes(manifestPath(path, v)), "UTF-8"))
 
   /** Data-dir count of a version's manifest (test/observability
     * hook — the ledger-bloat metric [[compact]] exists to reset). */
@@ -1319,7 +1339,7 @@ object Versioned {
       val next = Manifest(head + 1,
         modeOverride.getOrElse(if (overwrite) "overwrite" else "append"),
         parentDirs :+ dataId, schemaDdl = Some(ddl), constraints = cons,
-        dvDirs = parent.map(_.dvDirs).getOrElse(Seq.empty),
+        masks = parent.map(_.masks).getOrElse(Seq.empty),
         // carry the CARRIED dirs' partition specs; the new dir adds
         // its own spec iff this is a partitioned-layout commit
         // partSpecs hold PHYSICAL names (directories on disk are
@@ -1377,8 +1397,8 @@ object Versioned {
 
   /** THE snapshot reader every versioned read goes through: the picked
     * subset of `m`'s data dirs as ONE frame under the manifest's
-    * LOGICAL names, deletion-vector mask NOT applied. Plain dirs
-    * batch into one read under the manifest's authoritative schema:
+    * LOGICAL names. Plain dirs batch into one read under the
+    * manifest's authoritative schema:
     * files written before a column was added null-fill it under the
     * explicit read schema — no mergeSchema footer scan, the ledger
     * already knows (manifests from before schema tracking fall back
@@ -1395,20 +1415,34 @@ object Versioned {
     * the partition spec never rewrites history. Files carry PHYSICAL
     * names (column mapping), so ONE rename projection at the end
     * restores the logical names — identity (and absent from the plan)
-    * for tables that never renamed. `withIds` appends each row's
-    * (`__dv_rel`, `__dv_pos`) identity ON the scans, where `_metadata`
-    * resolves. When nothing is picked the result is one zero-row
-    * frame — no IO. */
+    * for tables that never renamed. `masks` apply ON the scans as one
+    * [[graft.plans.DvMaskFilter]] over each row's file and physical
+    * row index: `keep = false` drops the positions they name (the
+    * live rows), `keep = true` keeps only those positions (a staged
+    * mask's pre-images); masks that touch no picked dir are left out,
+    * and with none left the scans take no filter. `withIds` appends
+    * each row's (`__dv_rel`, `__dv_pos`) identity ON the scans too,
+    * where `_metadata` resolves. When nothing is picked the result is
+    * one zero-row frame — no IO. */
   private def readSnapshot(spark: SparkSession, path: String,
-      m: Manifest, picks: Seq[DirPick],
-      withIds: Boolean = false): DataFrame = {
+      m: Manifest, picks: Seq[DirPick], withIds: Boolean = false,
+      masks: Seq[Mask] = Seq.empty, keep: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.GraftBridge.{column, expression}
+    import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val schema = m.schemaDdl.map(StructType.fromDDL)
     val physOpt = schema.map(physStruct(m, _))
     val ids = if (withIds) Seq("__dv_rel", "__dv_pos") else Seq.empty
+    val picked = picks.map(_._1).toSet
+    val touched = masks.flatMap(k => k.rels
+      .filter(r => picked(r.takeWhile(_ != '/'))).map(_ -> k.id))
+      .groupMap(_._1)(_._2)
+    val maskFilter = Option.when(touched.nonEmpty || keep)(column(
+      graft.plans.DvMaskFilter(expression(col("_metadata.file_path")),
+        expression(col("_metadata.row_index")), path, touched, keep)))
     def scan(reader: org.apache.spark.sql.DataFrameReader,
         paths: Seq[String]): DataFrame = {
-      val df = reader.parquet(paths: _*)
+      val df = maskFilter.foldLeft(reader.parquet(paths: _*))(_.filter(_))
       if (withIds) withRowId(df) else df
     }
     val (parted, plain) = picks.filter(_._2.forall(_.nonEmpty))
@@ -1439,14 +1473,11 @@ object Versioned {
   }
 
   /** The LIVE rows of `picks`: [[readSnapshot]] with the manifest's
-    * deletion-vector mask applied (the row ids ride only when a mask
-    * exists), logical columns only. */
+    * deletion-vector masks applied in the scan, logical columns
+    * only. */
   private def liveRows(spark: SparkSession, path: String, m: Manifest,
       picks: Seq[DirPick]): DataFrame =
-    if (m.dvDirs.isEmpty) readSnapshot(spark, path, m, picks)
-    else maskByPos(spark, path, m.dvDirs,
-        readSnapshot(spark, path, m, picks, withIds = true))
-      .drop("__dv_rel", "__dv_pos")
+    readSnapshot(spark, path, m, picks, masks = m.masks)
 
   /** Null-fill evolved columns and cast to the manifest's types in
     * its column order (the per-branch analog of the explicit-schema
@@ -1467,16 +1498,17 @@ object Versioned {
     * RELATIVE to the table root (`<dirId>/<fileName>`, stable across
     * [[cloneTable]] links and table moves) and its parquet row index
     * (`_metadata.row_index`, a scan-time constant of the immutable
-    * file). This (rel, pos) pair is the key deletion vectors mask. */
+    * file). This (rel, pos) pair is the key deletion vectors mask;
+    * [[graft.plans.DvMaskFilter]] derives the same rel in the scan. */
   private def withRowId(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, regexp_extract}
     // `(.+)` not `([^/]+/[^/]+)`: a hive-partitioned dir's files sit
     // one level deeper (<dirId>/<col>=<v>/<file>) — the greedy tail
-    // yields the same `<dirId>/<file>` for plain dirs (old masks stay
-    // valid) and the full nested path for partitioned ones. The
-    // greedy `^.*` prefix anchors to the LAST '/data/' occurrence: a
-    // table rooted under a path that itself contains '/data/' (e.g.
-    // /warehouse/data/t) must not bleed the prefix into the rel key
+    // yields `<dirId>/<file>` for plain dirs and the full nested path
+    // for partitioned ones. The greedy `^.*` prefix anchors to the
+    // LAST '/data/' occurrence: a table rooted under a path that
+    // itself contains '/data/' (e.g. /warehouse/data/t) must not
+    // bleed the prefix into the rel key
     // (partition values percent-escape '/', so no later '/data/'
     // segment can appear inside the rel path itself).
     df.select(col("*"),
@@ -1485,30 +1517,10 @@ object Versioned {
       col("_metadata.row_index").as("__dv_pos"))
   }
 
-  /** MERGE-ON-READ deletion-vector overlay: anti-join a frame's
-    * (`__dv_rel`, `__dv_pos`) row identities against the manifest's
-    * accumulated mask. The mask is proportional to DELETED rows, never
-    * the table — Catalyst/AQE broadcasts it when small (the normal
-    * case), so the big side never reshuffles. Mask rows referencing
-    * dirs outside the frame's read set simply never match — applying
-    * a table-wide mask to a pruned read is sound. */
-  private def maskByPos(spark: SparkSession, path: String,
-      dvDirs: Seq[String], withPos: DataFrame): DataFrame = {
-    if (dvDirs.isEmpty) return withPos
-    val dv = readMasks(spark, path, dvDirs)
-    withPos.join(dv,
-      withPos("__dv_rel") === dv("rel") && withPos("__dv_pos") === dv("pos"),
-      "left_anti")
-  }
-
-  /** The `(rel, pos)` rows of mask dirs `dvIds`, read under the one
-    * schema [[stageMask]] writes — opening a mask infers nothing. */
-  private def readMasks(spark: SparkSession, path: String,
-      dvIds: Seq[String]): DataFrame = spark.read.schema(
-    "rel STRING, pos BIGINT").parquet(dvIds.map(d => s"$path/dv/$d"): _*)
-
-  /** A staged mask: its dir id, row count and distinct `rel` files. */
-  private final case class StagedMask(id: String, rows: Long, rels: Seq[String])
+  /** A deletion-vector mask dir as the manifest records it: its id,
+    * its row count and the distinct data files (`rel`) it names
+    * positions in. */
+  private final case class Mask(id: String, rows: Long, rels: Seq[String])
 
   /** The one mask writer behind every DV DML: stage the `(__dv_rel,
     * __dv_pos)` ids of `hits` as a fresh mask dir. Count and file set
@@ -1516,7 +1528,7 @@ object Versioned {
     * so no job re-reads the mask, and they cannot drift from it under
     * a nondeterministic predicate. None when nothing matched (the
     * empty dir is dropped); a lost race is the caller's to drop. */
-  private def stageMask(path: String, hits: DataFrame): Option[StagedMask] = {
+  private def stageMask(path: String, hits: DataFrame): Option[Mask] = {
     import org.apache.spark.sql.functions.{col, collect_set, count, lit}
     val id = java.util.UUID.randomUUID().toString
     val obs = org.apache.spark.sql.Observation()
@@ -1527,7 +1539,7 @@ object Versioned {
     val got = obs.get
     val rows = got("rows").asInstanceOf[Long]
     if (rows == 0L) { dropDirRec(Paths.get(path, "dv", id)); None }
-    else Some(StagedMask(id, rows, got("rels").asInstanceOf[Seq[String]]))
+    else Some(Mask(id, rows, got("rels").asInstanceOf[Seq[String]]))
   }
 
   /** Deletion-vector dir ids referenced by `v`'s manifest
@@ -1541,8 +1553,8 @@ object Versioned {
     * [[readEqualityClustered]] (bloom): resolve `version`'s manifest,
     * pick each data dir's surviving files ([[indexPicks]]), read
     * them through [[readSnapshot]], re-apply the exact predicate
-    * row-level and overlay the deletion-vector mask (mask rows for
-    * pruned files simply never match the anti-join). Skipping
+    * row-level and apply the deletion-vector masks in the scan (masks
+    * of pruned files are never loaded). Skipping
     * therefore composes with schema evolution AND time travel — each
     * version prunes on the index it was committed with, and a table
     * that mixes partitioned history with indexed appends keeps file
@@ -1602,16 +1614,21 @@ object Versioned {
     * arithmetic on the driver, no Spark job — and keep every file of
     * dirs not indexed on `c` (plain appends after a clustered commit
     * stay readable). An infinite bound is open: `hi` = +Infinity keeps
-    * NaN rows, which Spark orders above every number. Bounds and file
-    * bytes carry PHYSICAL names — the manifest's column mapping
+    * NaN rows, which Spark orders above every number; so is a numeric
+    * column's unknown file bound ([[DirFacts.rangeKeep]]). Bounds and
+    * file bytes carry PHYSICAL names — the manifest's column mapping
     * translates. Returns (frame, filesRead, filesTotal). */
   def readRangeClustered(spark: SparkSession, path: String, c: String,
       lo: Double, hi: Double,
       version: Option[Int] = None): (DataFrame, Int, Int) = {
     import org.apache.spark.sql.functions.{col, lit}
+    def numeric(m: Manifest) = m.schemaDdl.exists(ddl =>
+      org.apache.spark.sql.types.StructType.fromDDL(ddl).fields
+        .find(f => foldName(f.name) == foldName(c))
+        .exists(_.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]))
     indexPrunedRead(spark, path, version,
       (_, facts, m) => Some(m.physOf(c)).filter(facts.stats.contains)
-        .map(facts.rangeKeep(_, lo, hi)),
+        .map(facts.rangeKeep(_, lo, hi, numeric(m))),
       (if (lo == Double.NegativeInfinity) lit(true) else col(c) >= lo) &&
         (if (hi == Double.PositiveInfinity) lit(true) else col(c) <= hi))
   }
@@ -1666,8 +1683,8 @@ object Versioned {
     * impossible). The point-lookup DELETE/UPDATE — the GDPR erasure
     * shape — stops scanning the whole table. Un-prunable predicates,
     * hive-partitioned manifests, and un-indexed dirs fall back to the
-    * full [[readSnapshot]] scan. The existing DV mask overlays either
-    * way. */
+    * full [[readSnapshot]] scan. The existing DV masks apply in the
+    * scan either way. */
   private def dmlLiveRows(spark: SparkSession, path: String,
       m: Manifest, predicate: Column): DataFrame = {
     val bloomPicks: Option[Seq[DirPick]] =
@@ -1684,8 +1701,8 @@ object Versioned {
           if (!indexed) None
           else { lastDmlScan.set((path, read, total)); Some(picks) }
         }
-    maskByPos(spark, path, m.dvDirs, readSnapshot(spark, path, m,
-      bloomPicks.getOrElse(whole(m.dataDirs)), withIds = true))
+    readSnapshot(spark, path, m, bloomPicks.getOrElse(whole(m.dataDirs)),
+      withIds = true, masks = m.masks)
   }
 
   /** Whether `v`'s snapshot carries a file-skipping index for logical
@@ -1766,8 +1783,10 @@ object Versioned {
     * aggregate over the dir, collected at one row per file, each bound
     * TRY-cast to double (a non-numeric column's bounds null out and
     * keep their file). NaN and ±Infinity bounds are unknown too —
-    * JSON cannot carry them, and a NaN `hi` (Spark orders NaN above
-    * every number) must never let a range skip the file. */
+    * JSON cannot carry them; a numeric column's unknown bound prunes
+    * as open ([[DirFacts.rangeKeep]]), so a NaN `hi` (Spark orders NaN
+    * above every number) never lets a range above the min skip the
+    * file. */
   private def withBounds(spark: SparkSession, path: String, m: Manifest,
       dirId: String, files: Seq[FileFacts], cols: Seq[String])
       : Seq[FileFacts] = {
@@ -1979,41 +1998,30 @@ object Versioned {
       }
       val carried = m.dataDirs.filterNot(selected.toSet)
       val filesBefore = selected.map(dirFacts(path, _).files.size).sum
-      // per-DV-dir data-dir prefixes its mask rows reference (masks
-      // are deleted-rows-sized, the distinct prefix set dirs-sized):
-      // feeds the SCOPE-AWARE tidy gate and the dv-retirement below.
-      // None on a read error — treated conservatively as "touches the
-      // scope, not retirable" (retiring wrongly would resurrect
-      // deleted rows; a dangling dir kept wrongly is harmless).
-      lazy val dvInfo: Seq[(String, Option[Set[String]])] = m.dvDirs.map {
-        dvd => dvd -> (
-          try {
-            import org.apache.spark.sql.functions.{col, regexp_extract}
-            Some(readMasks(spark, path, Seq(dvd))
-              .select(regexp_extract(col("rel"), "^([^/]+)/", 1).as("d"))
-              .distinct().collect().map(_.getString(0)).toSet)
-          } catch { case scala.util.control.NonFatal(_) => None })
-      }
+      // per mask, the data dirs its rows reference — read off the
+      // manifest's mask record, no job: feeds the SCOPE-AWARE tidy
+      // gate and the mask retirement below
+      val maskDirs = m.masks.map(k =>
+        k -> k.rels.map(_.takeWhile(_ != '/')).toSet)
       // a mask chain on OTHER partitions must not force this scope to
       // re-rewrite (the nightly-maintenance churn bug: one DV row
       // anywhere made every already-compact partition rewrite forever)
-      def maskTouchesScope = dvInfo.exists { case (_, p) =>
-        p.forall(_.exists(selected.toSet)) }
+      def maskTouchesScope = maskDirs.exists(_._2.exists(selected.toSet))
       // nothing in scope, or already tidy AND no mask row targets the
       // scope: no-op, no commit
       if (selected.isEmpty || skipWhenTidy.exists(t =>
           selected.sizeIs == 1 && filesBefore <= t) && !maskTouchesScope)
         Left(CompactResult(-1, 0, carried.size, filesBefore, filesBefore))
       else {
-        // DV RETIREMENT: a dv dir whose every mask row references only
-        // dirs absent from the NEXT manifest (rewritten away now, or
+        // DV RETIREMENT: a mask whose every row references only dirs
+        // absent from the NEXT manifest (rewritten away now, or
         // dangling from an earlier rewrite) can never mask anything
         // again — drop it from the chain so maintenance loops converge
         // instead of re-absorbing an eternally-nonempty mask list; the
         // orphaned dv dir itself is the vacuum sweep's to reclaim
         val carriedSet = carried.toSet
-        val retainedDv = dvInfo.collect {
-          case (dvd, p) if !p.exists(_.forall(d => !carriedSet(d))) => dvd
+        val retainedDv = maskDirs.collect {
+          case (k, ds) if ds.exists(carriedSet) => k
         }
         // the scope's masked snapshot — DV rows for the rewritten files
         // materialize away; kept dirs' mask entries stay live
@@ -2034,7 +2042,7 @@ object Versioned {
         val dataDir = Paths.get(path, "data", dataId)
         val recordedSpec = stage(m, scopeDf, dataDir.toString, keepSpec)
         Right(Attempt(m.copy(mode = mode, dataDirs = carried :+ dataId,
-            dvDirs = retainedDv,
+            masks = retainedDv,
             partSpecs = m.specsFor(carried) ++ (if (recordedSpec)
               keepSpec.map(sp => dataId -> renderPartSpec(sp)) else None)),
           v => CompactResult(v.version, selected.size, carried.size,
@@ -3283,8 +3291,8 @@ object Versioned {
     * 100 TB table stages kilobytes of mask plus the batch itself.
     * (The read side still scans the table once to FIND the matched
     * positions — the unavoidable cost every merge pays — and later
-    * reads pay the usual mask anti-join until [[compact]]
-    * materializes it away.)
+    * scans load the mask's positions for the files it touches until
+    * [[compact]] materializes it away.)
     *
     * Semantics: rows of the head snapshot whose key appears in
     * `updates` are replaced, unmatched update rows are inserted,
@@ -3339,15 +3347,15 @@ object Versioned {
       // by [[stageMask]]: batch-matched-sized, never table-sized; a
       // batch of all-new keys adds no mask dir
       val touched = updates.select(keys.map(col): _*).distinct()
-      val live = maskByPos(spark, path, m.dvDirs,
-        readSnapshot(spark, path, m, whole(m.dataDirs), withIds = true))
+      val live = readSnapshot(spark, path, m, whole(m.dataDirs),
+        withIds = true, masks = m.masks)
       val mask = stageMask(path,
         live.join(touched, keys.toIndexedSeq, "left_semi"))
       val dataId = java.util.UUID.randomUUID().toString
       toPhysical(m, upserts)
         .write.mode("errorifexists").parquet(s"$path/data/$dataId")
       Right(Attempt(m.copy(mode = "merge-dv", dataDirs = m.dataDirs :+ dataId,
-          dvDirs = m.dvDirs ++ mask.map(_.id)),
+          masks = m.masks ++ mask),
         _.version,
         // both staged dirs derive from this head: a lost race drops them
         staged = mask.map(k => Paths.get(path, "dv", k.id)).toSeq :+
@@ -3567,7 +3575,7 @@ object Versioned {
           .write.mode("errorifexists").parquet(dataDir)
       }
       Right(Attempt(m.copy(mode = "replace", dataDirs = kept :+ dataId,
-          dvDirs = m.dvDirs ++ mask.map(_.id),
+          masks = m.masks ++ mask,
           partSpecs = m.specsFor(kept) ++ zoned.map(sp =>
             dataId -> renderPartSpec(sp.map(f =>
               f.copy(col = m.physOf(f.col)))))),
@@ -3628,14 +3636,14 @@ object Versioned {
     * matching rows' physical identities — (file path relative to the
     * table, parquet row index) pairs — are written as a tiny mask
     * sidecar under `<table>/dv/<uuid>/`, the new manifest carries the
-    * SAME data dirs plus the grown mask chain, and every read overlays
-    * the mask as an anti-join (broadcast when the mask is small — the
-    * normal case). ZERO data files are rewritten: deleting one hot row
-    * from a 100 TB table costs one mask row plus one manifest, even
-    * when a matching row sits in every dir. The read-side overhead
-    * grows with the accumulated mask; [[compact]] materializes it away
-    * (it stages the MASKED snapshot under an overwrite manifest, which
-    * resets `dvDirs`).
+    * SAME data dirs plus the grown mask chain (each mask recorded with
+    * the files it touches), and every read drops the masked positions
+    * inside the scan ([[graft.plans.DvMaskFilter]]). ZERO data files
+    * are rewritten: deleting one hot row from a 100 TB table costs one
+    * mask row plus one manifest, even when a matching row sits in
+    * every dir. The read-side overhead grows with the accumulated
+    * mask; [[compact]] materializes it away (it stages the MASKED
+    * snapshot and retires the masks of the dirs it rewrote).
     *
     * SQL DELETE semantics: rows where the predicate is NULL are KEPT
     * (only TRUE deletes). Concurrency: derive from head, publish at
@@ -3677,7 +3685,7 @@ object Versioned {
       stageMask(path, scope(dmlLiveRows(spark, path, m, prune))) match {
         case None => Left(DeleteResult(head, 0L)) // no commit
         case Some(mask) => Right(Attempt(
-          m.copy(mode = "delete-dv", dvDirs = m.dvDirs :+ mask.id),
+          m.copy(mode = "delete-dv", masks = m.masks :+ mask),
           next => DeleteResult(next.version, mask.rows),
           staged = Seq(Paths.get(path, "dv", mask.id)),
           // stored feed: pre-image delete rows derived from the STAGED
@@ -3697,28 +3705,20 @@ object Versioned {
   /** The LIVE pre-image rows a staged `mask` names, under the
     * manifest's LOGICAL column names: one bounded read of ONLY the
     * files in its `rels` (per-dir basePath for hive-partitioned dirs
-    * so the partition column re-derives from the path), semi-joined
-    * to the staged (rel, pos) pairs. Deriving from the staged mask
-    * instead of re-running the predicate makes the result provably
-    * consistent with the committed mask even under a
+    * so the partition column re-derives from the path), keeping in
+    * the scan only the positions the mask names. Deriving from the
+    * staged mask instead of re-running the predicate makes the result
+    * provably consistent with the committed mask even under a
     * nondeterministic predicate — the one sound row source for
     * delete feeds ([[deleteWhereDV]]) and update post-images
     * ([[updateWhereDV]]). Cost ∝ files-with-matches, never the
     * table. */
   private def stagedMaskRows(spark: SparkSession, path: String,
-      m: Manifest, mask: StagedMask): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    val staged = readMasks(spark, path, Seq(mask.id))
+      m: Manifest, mask: Mask): DataFrame = {
     val picks = mask.rels.sorted.groupBy(_.takeWhile(_ != '/')).toSeq
       .sortBy(_._1).map { case (d, rels) =>
         d -> Some(rels.map(f => s"$path/data/$f")) }
-    val frame = readSnapshot(spark, path, m, picks, withIds = true)
-    val cols = frame.columns.toIndexedSeq
-      .filterNot(Set("__dv_rel", "__dv_pos"))
-    frame.join(staged,
-      frame("__dv_rel") === staged("rel") &&
-        frame("__dv_pos") === staged("pos"), "left_semi")
-      .select(cols.map(col): _*)
+    readSnapshot(spark, path, m, picks, masks = Seq(mask), keep = true)
   }
 
   /** Row-level UPDATE … SET … WHERE as ONE merge-on-read commit — the
@@ -3804,7 +3804,7 @@ object Versioned {
           toPhysical(m, post)
             .write.mode("errorifexists").parquet(s"$path/data/$dataId")
           val next = m.copy(mode = "update-dv",
-            dataDirs = m.dataDirs :+ dataId, dvDirs = m.dvDirs :+ mask.id)
+            dataDirs = m.dataDirs :+ dataId, masks = m.masks :+ mask)
           // gate + feed read the immutable STAGED bytes back, so what
           // was checked and what was fed is exactly what the manifest
           // commits

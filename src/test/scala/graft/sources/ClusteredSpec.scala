@@ -164,6 +164,33 @@ class ClusteredSpec extends SparkSpec {
     assert(err.getMessage.contains("must be numeric"))
   }
 
+  test("a bloom-pruned read logs no ignored-paths warning for its sidecar") {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    val path = tmpTable()
+    Versioned.commitBloomIndexed((0 until 2000).map(i => (i.toLong, s"p$i"))
+      .toDF("id", "payload").repartition(4, col("id")), path, "id",
+      expectedPerFile = 1000L)
+    val lines = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val capture = new AbstractAppender("bloom-warn", null, null, true,
+        Array.empty) {
+      override def append(e: LogEvent): Unit =
+        lines.add(e.getMessage.getFormattedMessage): Unit
+    }
+    val root = LogManager.getRootLogger.asInstanceOf[Logger]
+    capture.start()
+    root.addAppender(capture)
+    val (df, kept, total) = try
+      Versioned.readEqualityClustered(spark, path, "id", 777L)
+    finally { root.removeAppender(capture); capture.stop() }
+    assert(kept < total, s"expected a bloom-pruned read, kept $kept of $total")
+    assert(df.select("payload").as[String].collect().toSeq == Seq("p777"))
+    val ignored = lines.toArray.map(_.toString)
+      .filter(_.contains("All paths were ignored"))
+    assert(ignored.isEmpty, ignored.mkString("\n"))
+  }
+
   test("string stat values (quotes included) round-trip through _files.json and never prune") {
     // a quote-bearing string column in the indexed set: its name and
     // the file paths travel through ManifestJson's escaping, and its
@@ -210,11 +237,12 @@ class ClusteredSpec extends SparkSpec {
     def want(where: String) =
       rows(Versioned.read(spark, path).filter(expr(where)))
     // {1.0, 5.5, NaN} has hi = NaN under Spark's ordering: [5, 6]
-    // must read it; every file with an unknown bound is kept, only
-    // [10, 30] skips
+    // must read it. An unknown lo reads as -Infinity and an unknown hi
+    // as +Infinity, so [10, 30], {-inf, -5, -1} and {7, 8, inf} skip;
+    // the all-NaN file keeps both bounds unknown and stays
     val (r, kept, total) = Versioned.readRangeClustered(spark, path, "x",
       5.0, 6.0)
-    assert((kept, total) == ((4, 5)))
+    assert((kept, total) == ((2, 5)))
     assert(rows(r) == want("x BETWEEN 5 AND 6") && rows(r).size == 1)
     // an infinite bound is open: NaN rows satisfy x >= 25 in Spark
     val (open, _, _) = Versioned.readRangeClustered(spark, path, "x",

@@ -143,6 +143,32 @@ class CompactWhereSpec extends SparkSpec {
     assert(r4.version == -1, s"got $r4")
   }
 
+  test("job fence: compactWhere reads its masks' files off the manifest, two mask dirs, no mask job") {
+    val path = tmpTable()
+    Versioned.commitPartitionedSpec(rows("EU", 1, 10), path, spec)
+    Versioned.commitPartitionedSpec(rows("EU", 11, 20), path, spec)
+    Versioned.commitPartitionedSpec(rows("US", 21, 30), path, spec)
+    Versioned.deleteWhereDV(spark, path, col("k") === 5L)
+    Versioned.deleteWhereDV(spark, path, col("k") === 25L)
+    val head = Versioned.latestVersion(path)
+    assert(Versioned.dvDirIds(path, head).size == 2)
+    val (r1, rewrite) = graft.JobCounter(spark) {
+      Versioned.compactWhere(spark, path, Seq("region" -> Set("EU")), 1)
+    }
+    assert(r1.version == head + 1 && r1.rewrittenDirs == 2, s"got $r1")
+    // the one job is the scope's rewrite
+    assert(rewrite.size == 1, rewrite.mkString("\n"))
+    // the EU mask retired with its dirs; the US one stays
+    assert(Versioned.dvDirIds(path, r1.version).size == 1)
+    val (r2, noop) = graft.JobCounter(spark) {
+      Versioned.compactWhere(spark, path, Seq("region" -> Set("EU")), 1)
+    }
+    assert(r2.version == -1, s"got $r2")
+    assert(noop.isEmpty, noop.mkString("\n"))
+    assert(Versioned.read(spark, path).select("k").as[Long].collect().toSet ==
+      (1L to 30L).filterNot(k => k == 5L || k == 25L).toSet)
+  }
+
   test("CALL cluster with scope routes through clusterWhere") {
     val wh = java.nio.file.Files
       .createTempDirectory("graft_clusterw_sql").toString

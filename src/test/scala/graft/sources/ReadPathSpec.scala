@@ -194,9 +194,9 @@ class ReadPathSpec extends SparkSpec {
     spark.sql(q).collect() // warm the _files.json memo
     val (got, jobs) = JobCounter(spark) { spark.sql(q).collect() }
     assert(got.length == 19)
-    // the prune is driver-side arithmetic over _files.json: both jobs
-    // are the masked read itself
-    assert(jobs.size == 2, jobs.mkString("\n"))
+    // the prune is driver-side arithmetic over _files.json and the
+    // mask applies inside the scan: the one job is the read itself
+    assert(jobs.size == 1, jobs.mkString("\n"))
     // the data files are read under the manifest schema: nothing
     // infers a schema
     val inferring = jobs.filter(_.isReaderJob)

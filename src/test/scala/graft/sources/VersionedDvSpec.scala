@@ -305,21 +305,43 @@ class VersionedDvSpec extends SparkSpec {
       path, overwrite = false)
     Versioned.commit((201L to 400L).map(k => (k, k % 5)).toDF("k", "m"),
       path, overwrite = false)
+    val (_, unmaskedRead) = JobCounter(spark) {
+      Versioned.read(spark, path).collect()
+    }
+    val (_, unmaskedCount) = JobCounter(spark) {
+      Versioned.read(spark, path).count()
+    }
     Versioned.deleteWhereDV(spark, path, col("m") === 0) // masked
     val (rows, readJobs) = JobCounter(spark) {
       Versioned.read(spark, path).collect()
     }
     assert(rows.length == 320)
+    val (n, countJobs) = JobCounter(spark) {
+      Versioned.read(spark, path).count()
+    }
+    assert(n == 320L)
     val (r, deleteJobs) = JobCounter(spark) {
       Versioned.deleteWhereDV(spark, path, col("m") === 1)
     }
     assert(r.deletedRows == 80L)
-    // measured: the read is the mask broadcast plus the collect; the
-    // delete is the mask write and the feed write, each with its
-    // broadcast — no job re-reads the staged mask
-    assert(readJobs.size <= 2, readJobs.mkString("\n"))
-    assert(deleteJobs.size <= 4, deleteJobs.mkString("\n"))
-    val inferring = (readJobs ++ deleteJobs).filter(_.isReaderJob)
+    val (u, updateJobs) = JobCounter(spark) {
+      Versioned.updateWhereDV(spark, path, col("m") === 2,
+        Seq("m" -> lit(9L)))
+    }
+    assert(u.deletedRows == 80L)
+    // measured: the mask applies inside the scan, so a masked read or
+    // count runs the jobs an unmasked one does (1 and 2); the delete
+    // is the mask write and the feed write, the update adds its
+    // post-image write — no mask scan, no broadcast, and no job
+    // re-reads the staged mask
+    assert(readJobs.size == 1 && readJobs.size == unmaskedRead.size,
+      readJobs.mkString("\n"))
+    assert(countJobs.size == 2 && countJobs.size == unmaskedCount.size,
+      countJobs.mkString("\n"))
+    assert(deleteJobs.size <= 2, deleteJobs.mkString("\n"))
+    assert(updateJobs.size <= 3, updateJobs.mkString("\n"))
+    val inferring = (readJobs ++ countJobs ++ deleteJobs ++ updateJobs)
+      .filter(_.isReaderJob)
     assert(inferring.isEmpty, inferring.mkString("\n"))
   }
 

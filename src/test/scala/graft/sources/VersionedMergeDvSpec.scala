@@ -191,10 +191,11 @@ class VersionedMergeDvSpec extends SparkSpec {
         deleteWhen = Some(col("v") === "DEAD"))
     }
     assert(Versioned.dvDirIds(path, v).size == 2)
-    // measured: the mask write (its scan, key shuffles and semi-join
-    // take four jobs), the upsert write, and the feed write (four);
-    // no job re-reads the staged mask
-    assert(jobs.size <= 9, jobs.mkString("\n"))
+    // measured: the mask write and the feed write with their key
+    // shuffles (three jobs each) and the upsert write; the head's mask
+    // applies inside the scans, so neither broadcasts it, and no job
+    // re-reads the staged mask
+    assert(jobs.size <= 7, jobs.mkString("\n"))
     val inferring = jobs.filter(_.isReaderJob)
     assert(inferring.isEmpty, inferring.mkString("\n"))
   }
